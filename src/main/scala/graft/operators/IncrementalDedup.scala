@@ -42,17 +42,27 @@ import org.apache.spark.sql.functions._
   *     carries the count atomically with the layout it describes.
   *
   * Scale design:
-  *   - The batch side (signatures + exploded band buckets) is BROADCAST
-  *     into the bucket join; the bipartite candidate volume is
+  *   - Three probe paths, routed by [[useStreamedProbe]] and the batch's
+  *     held size, all row-identical (specced, incl. against brute force).
+  *     Every one works on the bipartite candidate volume
   *     Σ_buckets |corpus ∩ bucket|·|batch ∩ bucket|, linear in bucket
   *     collisions (the self-join's m² hub blow-up cannot happen here).
-  *   - Micro-batch probes collapse multi-band collisions with one
-  *     `dropDuplicates` over the candidate set — candidates are
-  *     collision-bounded (≈ batch-sized), so this shuffle is tiny; the
-  *     estimate is per-pair either way. Corpus-scale batches (≥ 1/16 of
-  *     the corpus) instead stream the index through one broadcast join
-  *     with first-agree band dedup — no candidate materialization. The
-  *     two paths are row-identical (specced, incl. against brute force).
+  *   - Held-batch scan (indexes under [[StreamedCorpusDocsFloor]], or
+  *     corpus-scale batches, while the batch fits the heap-derived
+  *     broadcast budget): the signed batch is collected to the driver
+  *     once and its (band, bucket) → row map broadcast; the logical
+  *     index streams past it in ONE per-partition pass — `bands` hash
+  *     lookups per corpus doc, each colliding batch doc estimated once,
+  *     per-batch-doc partials merged on the driver into a local
+  *     relation. No explode, no bucket join, no shuffle.
+  *   - Past that budget the streamed probe is one bipartite shuffle join
+  *     on (band, bucket) with first-agree band dedup — the shape a batch
+  *     too big for one executor must take.
+  *   - Micro-batches against a LARGE index run the pruned probe: the
+  *     partition-pruned bucket scan yields candidate pairs, collapsed
+  *     with one `dropDuplicates` (candidates are collision-bounded, so
+  *     this shuffle is tiny), then signatures are fetched for
+  *     candidates only.
   *   - The duplicate decision is the k-minhash agreement estimate
   *     (LongArrayMatchCount / k ≥ threshold): signatures alone decide, so
   *     the index stores ~1 KB/doc and raw text is never read again.
@@ -238,47 +248,47 @@ object IncrementalDedup {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** One Bloom aggregate over the (band, bucket) keys of `sigRows`,
-    * with pinned (items, bits) so independently-built filters are
-    * mergeable (same parameters → same hash count and bitset size).
+  /** One Bloom filter over the (band, bucket) keys of `sigRows`, with
+    * pinned (items, bits) so independently-built filters are mergeable
+    * (same parameters → same hash count and bitset size); None when
+    * `sigRows` holds no keys.
     *
-    * BloomFilterAggregate silently clamps its parameters to the
-    * runtime-join-pruning conf maxima (Math.min against
-    * spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits —
-    * defaults 4M items / 67,108,864 bits, sized for Spark's own
-    * runtime-filter use, verified against the 4.1.2 bytecode). Past
-    * ~250k docs × 16 bands the clamp would break the sidecar's fpp
-    * promise — an 8 MB filter holding 80M keys gates nothing while the
-    * JSON meta claims otherwise — so the two confs are raised to the
-    * requested parameters for exactly this aggregate's build and
-    * restored after (they only CAP sizes; raising them scoped to this
-    * action cannot affect concurrent queries' semantics). */
-  private def bucketBloomBytes(sigRows: DataFrame, items: Long,
-      bits: Long): Array[Byte] = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    val bridge = org.apache.spark.sql.graft.ColumnBridge
+    * Built directly with the sketch library rather than through
+    * BloomFilterAggregate: the aggregate silently clamps its parameters
+    * to the runtime-join-pruning conf maxima
+    * (spark.sql.optimizer.runtime.bloomFilter.maxNumItems/maxNumBits —
+    * 4M items / 67,108,864 bits by default), which past ~250k docs ×
+    * 16 bands would break the sidecar's fpp promise, and lifting the
+    * clamp means writing session-global conf that concurrent queries
+    * race with. Each partition puts its xxhash64(band, bucket) keys into
+    * a `BloomFilter.create(items, bits)` filter — the aggregate's own
+    * buffer and update — and the driver merges the partials in place as
+    * they arrive, so the bytes equal the aggregate's for the same keys
+    * and parameters (specced) and existing sidecars still merge. */
+  private def bucketBloom(sigRows: DataFrame, items: Long,
+      bits: Long): Option[org.apache.spark.util.sketch.BloomFilter] = {
+    import org.apache.spark.util.sketch.BloomFilter
     val keys = sigRows
       .select(posexplode(col("bkts")).as(Seq("band", "bucket")))
-      .select(xxhash64(col("band"), col("bucket")).as("key"))
-    val agg = bridge.column(new BloomFilterAggregate(
-      bridge.expression(col("key")), Literal(items), Literal(bits))
-      .toAggregateExpression())
-    val conf = sigRows.sparkSession.conf
-    val itemsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumItems"
-    val bitsKey = "spark.sql.optimizer.runtime.bloomFilter.maxNumBits"
-    val prevItems = conf.getOption(itemsKey)
-    val prevBits = conf.getOption(bitsKey)
-    def restore(key: String, prev: Option[String]): Unit =
-      prev match { case Some(v) => conf.set(key, v) case None => conf.unset(key) }
-    try {
-      conf.set(itemsKey, math.max(items, 4000000L).toString)
-      conf.set(bitsKey, math.max(bits, 67108864L).toString)
-      keys.agg(agg.as("bf")).head.getAs[Array[Byte]]("bf")
-    } finally {
-      restore(itemsKey, prevItems)
-      restore(bitsKey, prevBits)
-    }
+      .select(xxhash64(col("band"), col("bucket")))
+    var merged = Option.empty[BloomFilter]
+    sigRows.sparkSession.sparkContext.runJob(keys.queryExecution.toRdd,
+      (rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]) =>
+        if (!rows.hasNext) None
+        else {
+          val part = BloomFilter.create(items, bits)
+          rows.foreach(r => part.putLong(r.getLong(0)))
+          Some(part)
+        },
+      (_: Int, part: Option[BloomFilter]) => part.foreach(p =>
+        merged = Some(merged.fold(p)(_.mergeInPlace(p)))))
+    merged
+  }
+
+  private def bloomBytes(filter: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    filter.writeTo(out)
+    out.toByteArray
   }
 
   /** Build (or rebuild) the bucket-Bloom sidecar for the CURRENT corpus
@@ -300,21 +310,20 @@ object IncrementalDedup {
         deltaSigs(spark, path).map(_.count()).getOrElse(0L)
     val items = math.max(1L, docs) * ps("bands")
     val bits = BloomDedup.optimalNumBits(items, fpp)
-    val bytes = bucketBloomBytes(all, items, bits)
-    if (bytes == null) {
-      // an EMPTY corpus aggregates to null (no key rows): there is no
-      // filter to write — remove any stale sidecar instead of NPEing in
-      // writeBytes. Absent sidecar = ungated probe, which on an empty
-      // corpus is trivially cheap and exact.
-      val f = fs(spark, path)
-      f.delete(new org.apache.hadoop.fs.Path(bloomBinPath(path)), false)
-      f.delete(new org.apache.hadoop.fs.Path(bloomMetaPath(path)), false)
-      org.slf4j.LoggerFactory.getLogger(getClass)
-        .info(s"writeBucketBloom($path): empty corpus — sidecar removed")
-    } else {
-      writeBytes(spark, bloomBinPath(path), bytes)
-      IndexMeta.writeText(spark, bloomMetaPath(path),
-        s"""{"format":${IndexMeta.FormatVersion},"items":$items,"bits":$bits}""")
+    bucketBloom(all, items, bits) match {
+      case None =>
+        // an EMPTY corpus has no keys: there is no filter to write —
+        // remove any stale sidecar instead. Absent sidecar = ungated
+        // probe, which on an empty corpus is trivially cheap and exact.
+        val f = fs(spark, path)
+        f.delete(new org.apache.hadoop.fs.Path(bloomBinPath(path)), false)
+        f.delete(new org.apache.hadoop.fs.Path(bloomMetaPath(path)), false)
+        org.slf4j.LoggerFactory.getLogger(getClass)
+          .info(s"writeBucketBloom($path): empty corpus — sidecar removed")
+      case Some(filter) =>
+        writeBytes(spark, bloomBinPath(path), bloomBytes(filter))
+        IndexMeta.writeText(spark, bloomMetaPath(path),
+          s"""{"format":${IndexMeta.FormatVersion},"items":$items,"bits":$bits}""")
     }
   }
 
@@ -334,28 +343,20 @@ object IncrementalDedup {
   /** Fold an appended batch's keys into the sidecar (no-op without one).
     * Built with the sidecar's pinned parameters, the batch filter is
     * bitset-compatible, so the merge is `BloomFilter.mergeInPlace` on
-    * the driver — two ~MB bitsets, no data pass beyond the batch agg. */
+    * the driver — two ~MB bitsets, no data pass beyond the batch's keys.
+    * An EMPTY batch (streamingIngest micro-batches can be) has no keys
+    * and leaves the sidecar untouched. */
   private def mergeBucketBloom(path: String, batchSigned: DataFrame): Unit = {
     val spark = batchSigned.sparkSession
     readBucketBloom(spark, path).foreach { case (bytes, items, bits) =>
-      val batchBytes = bucketBloomBytes(batchSigned, items, bits)
-      // an EMPTY batch aggregates to null bytes (no keys to add) — skip
-      // the merge instead of NPEing in readFrom; streamingIngest
-      // micro-batches can legitimately be empty
-      if (batchBytes != null && batchBytes.nonEmpty) {
-        val live = org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(bytes))
-        live.mergeInPlace(org.apache.spark.util.sketch.BloomFilter
-          .readFrom(new java.io.ByteArrayInputStream(batchBytes)))
-        val out = new java.io.ByteArrayOutputStream()
-        live.writeTo(out)
-        writeBytes(spark, bloomBinPath(path), out.toByteArray)
+      bucketBloom(batchSigned, items, bits).foreach { batchFilter =>
+        val live = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
+        live.mergeInPlace(batchFilter)
+        writeBytes(spark, bloomBinPath(path), bloomBytes(live))
       }
     }
   }
 
-  /** Per-row gate: true iff ANY of the doc's band buckets might be in
-    * the corpus filter — a codegen'd bitset test per band, no join. */
   /** Batch-row bound under which the bucket-Bloom gate is evaluated on
     * the driver (one narrow collect of (doc_id, bkts) — ≤ ~4 MB — plus
     * microsecond mightContain evals) instead of as a distributed filter
@@ -364,36 +365,41 @@ object IncrementalDedup {
     * form wins. */
   private[graft] val GateDriverMaxBatchRows = 1L << 16
 
-  /** Driver-side twin of [[bucketBloomGate]]: same keys
+  /** Driver-side per-row gate: true iff ANY of the row's band buckets
+    * might be in the corpus filter. Same keys as [[bucketBloomGate]]
     * (xxhash64(band_index, bucket), evaluated through the same catalyst
-    * expression so the bits agree), same no-false-negative contract.
-    * Returns the gated probe frame plus its surviving-row count — with
-    * the count known on the driver, the all-new short-circuit needs no
-    * extra job. */
-  private[graft] def driverGate(batch: DataFrame,
-      bytes: Array[Byte]): (DataFrame, Long) = {
+    * expression so the bits agree), same no-false-negative contract. */
+  private def mightShareBucket(filter: org.apache.spark.util.sketch.BloomFilter,
+      bkts: Array[Int]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
-    val spark = batch.sparkSession
-    val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bytes))
-    val keep = batch.select(col("doc_id"), col("bkts")).collect().flatMap { r =>
-      val bkts = r.getSeq[Int](1)
-      val hit = bkts.iterator.zipWithIndex.exists { case (b, i) =>
-        val key = new XxHash64(Seq(Literal(i), Literal(b)))
-          .eval(null).asInstanceOf[Long]
-        filter.mightContainLong(key)
-      }
-      if (hit) Some(r.getLong(0)) else None
-    }
-    if (keep.isEmpty) (batch.limit(0), 0L)
-    else {
-      import spark.implicits._
-      val keepDf = spark.createDataset(keep.toSeq).toDF("doc_id")
-      (batch.join(broadcast(keepDf), Seq("doc_id"), "left_semi"),
-        keep.length.toLong)
+    bkts != null && bkts.indices.exists { i =>
+      filter.mightContainLong(new XxHash64(Seq(Literal(i), Literal(bkts(i))))
+        .eval(null).asInstanceOf[Long])
     }
   }
 
+  /** Driver-side twin of [[bucketBloomGate]] for a batch that is not
+    * held: one narrow collect of (doc_id, bkts). Returns the gated probe
+    * frame plus its row count — with the count known on the driver, the
+    * all-new short-circuit needs no extra job. The frame semi-joins on
+    * the kept ids, so it keeps EVERY row of a kept id; the count is of
+    * those rows, not of distinct ids, and stays exact when doc_ids
+    * repeat. */
+  private[graft] def driverGate(batch: DataFrame,
+      bytes: Array[Byte]): (DataFrame, Long) = {
+    val spark = batch.sparkSession
+    import spark.implicits._
+    val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
+    val rows = batch.select("doc_id", "bkts").as[(Long, Array[Int])].collect()
+    val keep = rows.collect { case (id, b) if mightShareBucket(filter, b) => id }.toSet
+    if (keep.isEmpty) (batch.limit(0), 0L)
+    else (batch.join(broadcast(keep.toSeq.toDF("doc_id")), Seq("doc_id"), "left_semi"),
+      rows.count(r => keep(r._1)).toLong)
+  }
+
+  /** Distributed per-row gate: true iff ANY of the doc's band buckets
+    * might be in the corpus filter — a codegen'd bitset test per band,
+    * no join. */
   private[graft] def bucketBloomGate(bytes: Array[Byte]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.types.BinaryType
@@ -428,6 +434,22 @@ object IncrementalDedup {
     if (d.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(d))
       Some(spark.read.parquet(s"$path/delta"))
     else None
+  }
+
+  /** Rows in the `delta/` side table (0 without one), summed from the
+    * parquet footers of its files on the driver. */
+  private def deltaRows(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new org.apache.hadoop.fs.Path(s"$path/delta")
+    val f = d.getFileSystem(conf)
+    if (!f.exists(d)) 0L
+    else f.listStatus(d).iterator
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      }.sum
   }
 
   // ---- deletion (takedown propagation) ------------------------------
@@ -588,38 +610,43 @@ object IncrementalDedup {
     * probe: a corpus-scale batch touches every layout partition AND its
     * candidate-pair volume approaches batch×corpus collision density, so
     * materializing the pair set (the pruned path's shuffle) costs more
-    * than streaming the whole index through one broadcast join — measured
+    * than streaming the whole index past the batch once — measured
     * 8.9 s pruned vs ~0.5 s streamed for a 20%-of-corpus batch whose
     * candidate set hit 17.8M pairs. Micro-batches (the ingest design
     * point) stay pruned. */
   private[graft] val StreamingBatchFraction = 16L
 
-
   /** Below this corpus size the streamed probe wins for ANY batch size:
     * the pruned path's floor is ~6 driver-scheduled jobs plus the
     * layout-directory listings (256 + 64 dirs at the default caps) —
     * measured 1.8-2.2 s per 500-doc probe against a 46k-doc index —
-    * while the streamed path's one-scan cost is linear in the index
-    * (measured 0.44-0.54 s at the same 46k docs ≈ 46 MB of signatures).
-    * Extrapolating both curves puts the crossover near 150-200k docs;
-    * 2¹⁷ keeps a safety margin on the pruned side. Partition pruning is
-    * the 100-TB design — it just should not tax indexes small enough to
-    * scan outright. */
+    * while the streamed probe is one pass over the signature rows, linear
+    * in the index. The floor was set when that pass was an exploded
+    * broadcast bucket join (measured 0.44-0.54 s at the same 46k docs ≈
+    * 46 MB of signatures), which put the crossover near 150-200k docs;
+    * the held-batch scan that replaced the join for budget-sized batches
+    * reads the same rows with `bands` hash lookups per corpus doc instead
+    * of a 16× explode (a 500-doc probe of a ~7k-doc index: 0.45 s, 4
+    * jobs, against 1.1 s for the join form on the same 4-core box), so it
+    * should only move the crossover up — not re-measured at 46k docs —
+    * and 2¹⁷ keeps its safety margin on the pruned side. Partition pruning is the
+    * 100-TB design — it just should not tax indexes small enough to scan
+    * outright. */
   private[graft] val StreamedCorpusDocsFloor = 131072L
 
   /** The probe-path routing rule, extracted for direct spec coverage:
     * stream when the index is below [[StreamedCorpusDocsFloor]] (small
     * enough that one scan undercuts the pruned path's fixed job floor)
-    * OR the batch is a corpus-scale fraction of it. Batch SIZE no
-    * longer gates the route: [[streamedMatches]] broadcasts its
-    * exploded batch only while it fits the heap-derived budget and
-    * shuffle-joins past it, so a corpus-scale batch too big to
-    * broadcast streams through one bipartite shuffle instead of
-    * falling back to the pruned path — whose materialized candidate
-    * set is exactly what a corpus-scale batch makes enormous (the r14
-    * third-scale-point study measured the old cap routing a 100k-doc
-    * batch × 400k-doc index probe to the pruned path at 139.6 s; the
-    * shuffle-streamed form runs the same probe in one pass). */
+    * OR the batch is a corpus-scale fraction of it. Batch SIZE does not
+    * gate the route: [[streamedMatches]] holds the batch on the driver
+    * only while it fits the heap-derived budget and shuffle-joins past
+    * it, so a corpus-scale batch too big to hold streams through one
+    * bipartite shuffle instead of falling back to the pruned path —
+    * whose materialized candidate set is exactly what a corpus-scale
+    * batch makes enormous (the r14 third-scale-point study measured the
+    * old cap routing a 100k-doc batch × 400k-doc index probe to the
+    * pruned path at 139.6 s; the shuffle-streamed form runs the same
+    * probe in one pass). */
   private[graft] def useStreamedProbe(batchN: Long, corpusApprox: Long): Boolean =
     corpusApprox <= StreamedCorpusDocsFloor ||
       batchN * StreamingBatchFraction >= corpusApprox
@@ -631,12 +658,13 @@ object IncrementalDedup {
     * and the minhash agreement estimate ≥ `threshold` decides. Indexes
     * below [[StreamedCorpusDocsFloor]], and batches within
     * 1/[[StreamingBatchFraction]] of the corpus size, stream the whole
-    * index through one broadcast bucket join instead (first-agree band
-    * dedup, estimate inline — no candidate materialization, no pruning
-    * jobs); both paths are row-identical (specced), and
-    * [[useStreamedProbe]] is the measured routing rule.
+    * index past the batch once instead ([[streamedMatches]]: the
+    * held-batch scan while the batch fits the broadcast budget, one
+    * bipartite shuffle join past it — no candidate materialization, no
+    * pruning jobs). Every path is row-identical (specced, incl. against
+    * brute force), and [[useStreamedProbe]] is the measured routing rule.
     *
-    * Returns one row per `newDocs` id:
+    * Returns one row per `newDocs` row:
     * (doc_id, is_duplicate, dup_of, match_est) where `dup_of` is the
     * SMALLEST matching corpus id (the canonical-keeper convention of
     * Dedup.exact) and `match_est` the largest agreement estimate over all
@@ -647,14 +675,15 @@ object IncrementalDedup {
       threshold: Double = 0.9): DataFrame =
     // LAZY (r20): the router's batch count inside dedupAgainstSigned is
     // the first action and materializes the signed batch in its own job;
-    // every later reader (gate, probe, flag join) shares the blocks
+    // every later reader (hold, gate, probe, flag join) shares the blocks
     dedupAgainstSigned(index,
       signed(newDocs, index.k, index.bands).localCheckpoint(false), threshold)
 
   /** [[dedupAgainst]] over an ALREADY-SIGNED, CHECKPOINTED batch — the
     * ingest loop signs once and shares the frame between the probe and
     * the survivor append ([[appendSigned]]). `batch` must be
-    * materialized (the router counts and both probe paths read it). */
+    * materialized (the router counts and every probe path reads it).
+    * Repeated doc_ids are allowed: each row gets the answer of its id. */
   private[graft] def dedupAgainstSigned(index: SigIndex, batch: DataFrame,
       threshold: Double): DataFrame = {
     val spark = index.sigs.sparkSession
@@ -662,70 +691,83 @@ object IncrementalDedup {
     // the materializing action of the (lazily checkpointed) signed
     // batch: the count's job computes and caches the blocks every later
     // reader shares (r20 — the former eager checkpoint paid a dedicated
-    // job for the same materialization)
-    val batchN = batch.count()
+    // job for the same materialization). Counted over the physical rows:
+    // Dataset.count plans a global aggregate that AQE runs as two jobs
+    val batchN = batch.queryExecution.toRdd.count()
     // the base size comes from the build/compact-time row count in the
     // sidecar (partition counts may be pinned by the caller, so parts ×
     // rows-per-dir is unreliable); un-compacted deltas must be counted
-    // too (metadata-only parquet count), or an append-grown index would
-    // keep routing batches to the full-scan path its growth has made
-    // expensive. Pre-rows-sidecar indexes fall back to the old estimate.
-    val deltaN = deltaSigs(spark, index.path).map(_.count()).getOrElse(0L)
+    // too, or an append-grown index would keep routing batches to the
+    // full-scan path its growth has made expensive — from the delta
+    // files' parquet footers on the driver, no schema inference and no
+    // job. Pre-rows-sidecar indexes fall back to the old estimate.
+    val deltaN = deltaRows(spark, index.path)
     val baseN = IndexMeta.readDirRows(spark, s"${index.path}/sigs")
       .getOrElse(sp.toLong * DocsPerSigDir)
     // pending tombstones shrink the effective corpus the router sees
     // (metadata-only count; takedown-sized)
     val tombN = tombstoneIds(spark, index.path).map(_.count()).getOrElse(0L)
     val corpusApprox = math.max(0L, baseN + deltaN - tombN)
+    val streamed = useStreamedProbe(batchN, corpusApprox)
     // opt-in bucket-Bloom gate: shrink the probe input to the docs that
     // share at least one possibly-present band bucket with the corpus.
     // Exact by the candidate-pair condition (see the gate's comment) —
-    // a gated-out doc has no candidate pair on either probe path, so
-    // `matches` is unchanged and gated-out docs flag false through the
-    // final left join exactly as before.
-    val gated = readBucketBloom(spark, index.path) match {
-      case Some((bytes, _, _)) if batchN <= GateDriverMaxBatchRows =>
-        // micro-batch gate runs ON THE DRIVER: the distributed form ships
-        // the filter bytes as a plan literal into every task and pays two
-        // scheduler jobs (filter + count) — measured SLOWER than the
-        // pruned probe it tries to skip once the sidecar grows past ~MB
-        // (46k-doc index: gated 0.85 s vs plain 0.35 s on an all-new
-        // batch). Collecting the batch's (doc_id, bkts) instead is one
-        // narrow batch-sized job (the same bound as prunedMatches' pb
-        // collect), and the ~batch×bands mightContain evals are
-        // microseconds. Key hashing replays the gate expression exactly:
-        // xxhash64(band_index, bucket) via the same catalyst evaluator.
-        Some(driverGate(batch, bytes))
-      case Some((bytes, _, _)) =>
-        // one narrow count over the checkpointed batch decides the
-        // short-circuit below; it is the price of the all-new fast path
-        val p = batch.filter(bucketBloomGate(bytes))
-        Some(p -> p.count())
-      case None => None
-    }
-    val probeIn = gated.map(_._1).getOrElse(batch)
-    val matches = gated match {
-      // the ALL-NEW fast path: every batch doc gated out means no batch
-      // doc shares any band bucket with the corpus — the candidate-pair
-      // condition — so the probe's answer is already known to be empty.
-      // Skipping it skips the corpus-side scan entirely: the steady-state
-      // cost of a fully-new micro-batch is the gate's codegen bitset pass
-      // plus this count, never a corpus pass. (Build the sidecar with a
-      // small fpp — e.g. 1e-5 — if this regime matters: at the default 1%,
-      // a 500-doc batch leaks ~5 false positives into the probe and the
-      // short-circuit rarely fires.)
-      case Some((_, 0L)) =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Double)].toDF("doc_id", "dup_of", "match_est")
-      case _ =>
-        // r21: the probe-input row count is already known on every path
-        // (the ungated batch count, or the gate's own count) — pass it
-        // down so neither probe pays a per-invocation count() job for a
-        // number the router just computed
-        val probeN = gated.map(_._2).getOrElse(batchN)
-        if (useStreamedProbe(batchN, corpusApprox))
-          streamedMatches(index, probeIn, threshold, probeN)
-        else prunedMatches(index, probeIn, sp, threshold, probeN)
+    // a gated-out doc has no candidate pair on any probe path, so its
+    // match set is empty either way and it flags false.
+    val bloom = readBucketBloom(spark, index.path).map(_._1)
+    val matches = if (streamed && fitsHeld(index, batch, batchN)) {
+      // the held-batch route: ONE collect of the checkpointed batch feeds
+      // the gate and the scan — the gate runs per held row (no second
+      // collect), an all-gated-out batch skips the corpus scan, and the
+      // matches come back as a local relation
+      val held = holdBatch(batch)
+      val probe = bloom.fold(held) { bytes =>
+        val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
+        held.filterRows(i => mightShareBucket(filter, held.bkts(i)))
+      }
+      matchesFrame(spark, heldMatches(index, probe, threshold))
+    } else {
+      val gated = bloom match {
+        case Some(bytes) if batchN <= GateDriverMaxBatchRows =>
+          // micro-batch gate runs ON THE DRIVER: the distributed form
+          // ships the filter bytes as a plan literal into every task and
+          // pays two scheduler jobs (filter + count) — measured SLOWER
+          // than the pruned probe it tries to skip once the sidecar grows
+          // past ~MB (46k-doc index: gated 0.85 s vs plain 0.35 s on an
+          // all-new batch). Collecting the batch's (doc_id, bkts) instead
+          // is one narrow batch-sized job (the same bound as
+          // prunedMatches' pb collect), and the ~batch×bands mightContain
+          // evals are microseconds.
+          Some(driverGate(batch, bytes))
+        case Some(bytes) =>
+          // one narrow count over the checkpointed batch decides the
+          // short-circuit below; it is the price of the all-new fast path
+          val p = batch.filter(bucketBloomGate(bytes))
+          Some(p -> p.count())
+        case None => None
+      }
+      val probeIn = gated.map(_._1).getOrElse(batch)
+      gated match {
+        // the ALL-NEW fast path: every batch doc gated out means no batch
+        // doc shares any band bucket with the corpus — the candidate-pair
+        // condition — so the probe's answer is already known to be empty.
+        // Skipping it skips the corpus-side scan entirely: the
+        // steady-state cost of a fully-new micro-batch is the gate's
+        // codegen bitset pass plus this count, never a corpus pass.
+        // (Build the sidecar with a small fpp — e.g. 1e-5 — if this
+        // regime matters: at the default 1%, a 500-doc batch leaks ~5
+        // false positives into the probe and the short-circuit rarely
+        // fires.)
+        case Some((_, 0L)) => matchesFrame(spark, Map.empty)
+        case _ =>
+          // r21: the probe-input row count is already known on every
+          // path (the ungated batch count, or the gate's own count) —
+          // pass it down so neither probe pays a per-invocation count()
+          // job for a number the router just computed
+          val probeN = gated.map(_._2).getOrElse(batchN)
+          if (streamed) streamedMatches(index, probeIn, threshold, probeN)
+          else prunedMatches(index, probeIn, sp, threshold, probeN)
+      }
     }
     // matches is at most batch-sized (one row per flagged new doc), so
     // the flag join broadcasts too instead of shuffling the batch
@@ -806,29 +848,225 @@ object IncrementalDedup {
       .agg(min(col("c_id")).as("dup_of"), max(col("est")).as("match_est"))
   }
 
-  /** The one-scan streaming probe (corpus-scale-batch path): the logical
-    * index (base + delta) streams exploded through one bucket join with
-    * the batch; (corpus, batch) pairs colliding in several bands are
-    * kept only at the FIRST agreeing band — flat element_at arithmetic
-    * over the two carried bucket arrays, in whole-stage codegen, no
-    * distinct over the candidate stream — and the agreement estimate
-    * runs inline. Nothing is materialized: the candidate volume
-    * (≈ batch × corpus collision density for a corpus-scale batch) flows
-    * through codegen instead of a shuffle.
-    *
-    * The exploded batch side (bands rows/doc, each carrying the k-long
-    * signature + bucket array ≈ bands·(k+bands)·8 B/doc ≈ 18 KB/doc at
-    * the defaults) BROADCASTS while it fits the heap-derived budget
-    * (MinHashLsh.maxBroadcastVerifyBytes — ~15k docs at the 256 MB
-    * floor); past that the join runs as one bipartite SHUFFLE on
-    * (band, bucket) — the same rows, with shuffle volume ≈ one pass of
-    * each side's exploded signatures, which is how a probe whose batch
-    * is a material fraction of a large corpus must flow on a cluster
-    * (neither side fits one executor, and the pruned path's
-    * materialized candidate set is batch × collision density —
-    * measured 139.6 s vs this path at a 100k × 400k probe, r14). */
+  /** The one-scan streaming probe: the logical index (base + delta,
+    * tombstones removed) is read once and every (corpus, batch) pair
+    * sharing a band bucket is estimated — no candidate materialization.
+    * Two forms, routed by the batch's held size ([[fitsHeld]]):
+    *   - while the batch fits the heap-derived broadcast budget
+    *     (MinHashLsh.maxBroadcastVerifyBytes), the HELD-BATCH SCAN
+    *     ([[heldMatches]]): the batch is collected to the driver once
+    *     and the corpus streams past it in one per-partition pass, with
+    *     no explode, no join and no shuffle;
+    *   - past the budget, one bipartite SHUFFLE join on (band, bucket)
+    *     ([[shuffledMatches]]) — the shape a probe whose batch is a
+    *     material fraction of a large corpus must take on a cluster
+    *     (neither side fits one executor, and the pruned path's
+    *     materialized candidate set is batch × collision density —
+    *     measured 139.6 s vs the streamed form at a 100k × 400k probe,
+    *     r14).
+    * Both forms return (doc_id, dup_of, match_est), one row per flagged
+    * batch doc, and are row-identical (specced, with the pruned path,
+    * against brute force). */
   private[graft] def streamedMatches(index: SigIndex, batch: DataFrame,
       threshold: Double, knownBatchN: Long = -1L): DataFrame = {
+    // r21: the count rides in from dedupAgainstSigned (it just computed
+    // it) — no per-probe count job; the fallback stays for direct (spec)
+    // callers, whose batches are checkpointed so it is near-instant
+    val batchN = if (knownBatchN >= 0L) knownBatchN else batch.count()
+    if (fitsHeld(index, batch, batchN))
+      matchesFrame(batch.sparkSession,
+        heldMatches(index, holdBatch(batch), threshold))
+    else shuffledMatches(index, batch, threshold)
+  }
+
+  /** Whether a batch of `batchN` docs is held for the scan: its driver
+    * bytes — the rows (k signature longs, `bands` bucket ints and the id,
+    * ≈ 8·k + 4·bands + 16 B) plus the (band, bucket) postings the scan
+    * probes (one int per row and band, and a half-full 12-byte slot
+    * table, ≤ 28·bands B), ≈ 1.5 KB per doc at the defaults — fit the
+    * same heap-derived budget every other batch-side broadcast in the
+    * repo obeys (~170k docs at its 256 MB floor; `graft.broadcastBudgetBytes`
+    * pins it, which forces the shuffle form in specs). */
+  private def fitsHeld(index: SigIndex, batch: DataFrame, batchN: Long): Boolean =
+    batchN * (8L * index.k + 32L * index.bands + 16L) <=
+      MinHashLsh.maxBroadcastVerifyBytes(batch)
+
+  /** A probe batch held on the driver: row-aligned ids, signatures and
+    * band buckets from one collect of the (checkpointed) signed batch. */
+  private[graft] final case class HeldBatch(ids: Array[Long],
+      sigs: Array[Array[Long]], bkts: Array[Array[Int]]) {
+    def filterRows(keep: Int => Boolean): HeldBatch = {
+      val rows = ids.indices.filter(keep)
+      HeldBatch(rows.map(i => ids(i)).toArray, rows.map(i => sigs(i)).toArray,
+        rows.map(i => bkts(i)).toArray)
+    }
+  }
+
+  private[graft] def holdBatch(batch: DataFrame): HeldBatch = {
+    val rows = batch.select("doc_id", "sig", "bkts").queryExecution.toRdd
+      .map(r => (r.getLong(0),
+        if (r.isNullAt(1)) null else r.getArray(1).toLongArray,
+        if (r.isNullAt(2)) null else r.getArray(2).toIntArray))
+      .collect()
+    HeldBatch(rows.map(_._1), rows.map(_._2), rows.map(_._3))
+  }
+
+  /** (band, bucket) → held-batch row indices: an open-addressing table
+    * over the distinct keys (Fibonacci-hashed, load ≤ ½) with CSR
+    * postings, so probing a corpus doc costs `bands` primitive lookups —
+    * no boxing and no allocation per lookup. Within one key the rows
+    * ascend, and a row appears at most once. */
+  private[graft] final class BucketPostings private (keys: Array[Long],
+      ids: Array[Int], shift: Int, val starts: Array[Int], val rows: Array[Int])
+      extends Serializable {
+
+    /** The distinct-key id of (band, bucket), or -1 if no row has it; its
+      * rows are `rows(starts(id) until starts(id + 1))`. */
+    def find(band: Int, bucket: Int): Int =
+      ids(BucketPostings.slotOf(keys, ids, shift, BucketPostings.key(band, bucket)))
+  }
+
+  private[graft] object BucketPostings {
+    private def key(band: Int, bucket: Int): Long =
+      (band.toLong << 32) | (bucket & 0xffffffffL)
+
+    /** The slot holding key `k`, or the empty slot where it belongs. */
+    private def slotOf(keys: Array[Long], ids: Array[Int], shift: Int,
+        k: Long): Int = {
+      var s = ((k * 0x9E3779B97F4A7C15L) >>> shift).toInt
+      while (ids(s) >= 0 && keys(s) != k) s = (s + 1) & (keys.length - 1)
+      s
+    }
+
+    def apply(bkts: Array[Array[Int]]): BucketPostings = {
+      val pairs = bkts.iterator.map(b => if (b == null) 0 else b.length).sum
+      val cap = Integer.highestOneBit(math.max(2, 2 * pairs - 1)) << 1
+      val shift = 64 - Integer.numberOfTrailingZeros(cap)
+      val keys = new Array[Long](cap)
+      val ids = Array.fill(cap)(-1)
+      val counts = new Array[Int](pairs + 1)
+      var distinct = 0
+      // pass 1: assign each distinct key an id and count its rows
+      for (b <- bkts if b != null; band <- b.indices) {
+        val k = key(band, b(band))
+        val s = slotOf(keys, ids, shift, k)
+        if (ids(s) < 0) { keys(s) = k; ids(s) = distinct; distinct += 1 }
+        counts(ids(s)) += 1
+      }
+      // pass 2: prefix sums, then fill the postings in row order
+      val starts = new Array[Int](distinct + 1)
+      for (i <- 0 until distinct) starts(i + 1) = starts(i) + counts(i)
+      val fill = starts.clone()
+      val rows = new Array[Int](pairs)
+      for (r <- bkts.indices if bkts(r) != null; band <- bkts(r).indices) {
+        val id = ids(slotOf(keys, ids, shift, key(band, bkts(r)(band))))
+        rows(fill(id)) = r
+        fill(id) += 1
+      }
+      new BucketPostings(keys, ids, shift, starts, rows)
+    }
+  }
+
+  /** The held-batch scan: the batch's signatures and (band, bucket)
+    * postings are broadcast, and `index.sigs` (base + delta, tombstones
+    * removed) is read ONCE in a per-partition pass. For each corpus doc,
+    * its `bands` buckets are looked up and every colliding batch row is
+    * visited once — a per-row stamp replaces the SQL forms' first-agree
+    * band filter — and scored with the shared early-exit estimate kernel
+    * (LongArrayMatchCountMin against MinHashLsh.estMinCount, so
+    * `count ≥ minCount` ⇔ `count/k ≥ threshold` and survivors carry their
+    * exact counts). Each partition keeps per-batch-row partials (min
+    * corpus id, max count) in arrays and ships only the matched rows;
+    * the driver merges them by doc_id into doc_id → (dup_of, match_est).
+    * An empty `held` skips the scan. */
+  private[graft] def heldMatches(index: SigIndex, held: HeldBatch,
+      threshold: Double): Map[Long, (Long, Double)] =
+    if (held.ids.isEmpty) Map.empty
+    else {
+      import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      import org.apache.spark.sql.graft.LongArrayMatchCountMin
+      val k = index.k
+      val minCount = MinHashLsh.estMinCount(k, threshold)
+      val sc = index.sigs.sparkSession.sparkContext
+      val probe = sc.broadcast((held.sigs, BucketPostings(held.bkts)))
+      val partials = try {
+        index.sigs.select("doc_id", "sig", "bkts").queryExecution.toRdd
+          .mapPartitions { corpus =>
+            val (sigs, postings) = probe.value
+            val n = sigs.length
+            val qSigs = sigs.map(s =>
+              if (s == null) null else UnsafeArrayData.fromPrimitiveArray(s))
+            val stamp = new Array[Long](n)
+            val dupOf = Array.fill(n)(Long.MaxValue)
+            val best = Array.fill(n)(-1) // ≥ 0 once a pair passes
+            var t = 0L
+            corpus.foreach { r =>
+              t += 1
+              if (!r.isNullAt(1) && !r.isNullAt(2)) {
+                val cId = r.getLong(0)
+                val sig = r.getArray(1)
+                val bkts = r.getArray(2)
+                var band = 0
+                while (band < bkts.numElements()) {
+                  val key = postings.find(band, bkts.getInt(band))
+                  if (key >= 0) {
+                    var j = postings.starts(key)
+                    while (j < postings.starts(key + 1)) {
+                      val q = postings.rows(j)
+                      if (stamp(q) != t && qSigs(q) != null) {
+                        stamp(q) = t
+                        val c = LongArrayMatchCountMin.compute(sig, qSigs(q), minCount)
+                        if (c >= minCount) {
+                          dupOf(q) = math.min(dupOf(q), cId)
+                          best(q) = math.max(best(q), c)
+                        }
+                      }
+                      j += 1
+                    }
+                  }
+                  band += 1
+                }
+              }
+            }
+            val hit = (0 until n).filter(i => best(i) >= 0).toArray
+            Iterator.single((hit, hit.map(i => dupOf(i)), hit.map(i => best(i))))
+          }.collect()
+      } finally probe.destroy()
+      // merge by doc_id: partitions and repeated batch ids fold into one
+      // answer per id, as the SQL forms' groupBy(q_id) does
+      val byId = scala.collection.mutable.HashMap.empty[Long, (Long, Int)]
+      for ((hit, dupOf, best) <- partials; i <- hit.indices) {
+        val id = held.ids(hit(i))
+        byId(id) = byId.get(id).fold((dupOf(i), best(i))) { case (d, c) =>
+          (math.min(d, dupOf(i)), math.max(c, best(i)))
+        }
+      }
+      byId.iterator.map { case (id, (d, c)) => id -> (d, c.toDouble / k) }.toMap
+    }
+
+  /** doc_id → (dup_of, match_est) as the probes' `matches` frame, a local
+    * relation. */
+  private def matchesFrame(spark: SparkSession,
+      m: Map[Long, (Long, Double)]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val rows = m.iterator.map { case (id, (d, e)) =>
+      org.apache.spark.sql.Row(id, d, e) }.toSeq
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("dup_of", LongType, nullable = false),
+      StructField("match_est", DoubleType, nullable = false))))
+  }
+
+  /** The past-budget streamed form: the logical index streams exploded
+    * through one bipartite shuffle join with the exploded batch on
+    * (band, bucket); (corpus, batch) pairs colliding in several bands
+    * are kept only at the FIRST agreeing band — flat element_at
+    * arithmetic over the two carried bucket arrays, in whole-stage
+    * codegen, no distinct over the candidate stream — and the agreement
+    * estimate runs inline. Shuffle volume ≈ one pass of each side's
+    * exploded signatures. */
+  private[graft] def shuffledMatches(index: SigIndex, batch: DataFrame,
+      threshold: Double): DataFrame = {
     val bands = index.bands
     val batchB = batch.select(col("doc_id").as("q_id"), col("sig").as("q_sig"),
       col("bkts").as("q_bkts"), posexplode(col("bkts")).as(Seq("band", "bucket")))
@@ -841,14 +1079,7 @@ object IncrementalDedup {
         lit(1L << b)).otherwise(lit(0L))
     }.reduce(_ + _)
     val earlierMask = expr("shiftleft(CAST(1 AS BIGINT), band)") - lit(1L)
-    // r21: the count rides in from dedupAgainstSigned (it just computed
-    // it) — no per-probe count job; the fallback stays for direct (spec)
-    // callers, whose batches are checkpointed so it is near-instant
-    val batchBytes =
-      (if (knownBatchN >= 0L) knownBatchN else batch.count()) *
-        bands * (8L * (index.k + bands) + 48L)
-    corpusB.join(MinHashLsh.maybeBroadcast(batchB, batchBytes),
-        Seq("band", "bucket"))
+    corpusB.join(batchB, Seq("band", "bucket"))
       .filter(agreeBits.bitwiseAND(earlierMask) === 0L)
       .withColumn("est",
         org.apache.spark.sql.graft.ColumnBridge

@@ -297,9 +297,27 @@ case class LongArrayMatchCountMin(left: Expression, right: Expression,
 
   override def prettyName: String = "long_array_match_count_min"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    LongArrayMatchCountMin.compute(a.asInstanceOf[ArrayData],
+      b.asInstanceOf[ArrayData], minCount)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = org.apache.spark.sql.graft.LongArrayMatchCountMin" +
+        s".compute($a, $b, $minCount);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LongArrayMatchCountMin =
+    copy(left = newLeft, right = newRight)
+}
+
+object LongArrayMatchCountMin {
+  import org.apache.spark.sql.catalyst.util.ArrayData
+
+  /** The early-exit agreement loop — the one copy behind the
+    * interpreted eval, the generated code and IncrementalDedup's
+    * held-batch scan, so every caller gets the same contract. */
+  def compute(x: ArrayData, y: ArrayData, minCount: Int): Int = {
     val n = math.min(x.numElements(), y.numElements())
     val maxMiss = n - minCount
     if (maxMiss < 0) return 0 // can never reach minCount
@@ -316,33 +334,6 @@ case class LongArrayMatchCountMin(left: Expression, right: Expression,
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      val miss = ctx.freshName("miss")
-      val maxMiss = ctx.freshName("maxMiss")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $c = 0;
-         |int $maxMiss = $n - $minCount;
-         |if ($maxMiss >= 0) {
-         |  int $miss = 0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$a.isNullAt($i) && !$b.isNullAt($i)
-         |        && $a.getLong($i) == $b.getLong($i)) { $c++; }
-         |    else if (++$miss > $maxMiss) { break; }
-         |  }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongArrayMatchCountMin =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Native codegen expression: full MinHash signature in one pass.

@@ -66,15 +66,25 @@ class DeletionSpec extends AnyFunSuite {
     val idx = IncrementalDedup.openSignatures(spark, path)
     def planOf(df: org.apache.spark.sql.DataFrame) =
       df.queryExecution.optimizedPlan.toString
-    val clean = planOf(IncrementalDedup.dedupAgainst(idx, batch))
-    assert(!clean.contains("LeftAnti") && !clean.contains("tombstones"),
-      s"clean-index probe plan carries tombstone-mask work:\n$clean")
+    // the probe's corpus-side plans on both streamed routes: the
+    // held-batch scan runs eagerly over `idx.sigs` (its matches are a
+    // local relation), the shuffle route — forced through the
+    // broadcast-budget property — returns its corpus read inside the
+    // probe plan
+    def probePlans(idx: IncrementalDedup.SigIndex): Seq[String] = {
+      System.setProperty("graft.broadcastBudgetBytes", "1")
+      val shuffled = try planOf(IncrementalDedup.dedupAgainst(idx, batch))
+        finally System.clearProperty("graft.broadcastBudgetBytes")
+      Seq(planOf(idx.sigs), shuffled)
+    }
+    for (clean <- probePlans(idx))
+      assert(!clean.contains("LeftAnti") && !clean.contains("tombstones"),
+        s"clean-index probe plan carries tombstone-mask work:\n$clean")
     // …and the mask appears exactly when a deletion is pending
     IncrementalDedup.deleteDocs(spark, path, Seq(3L))
-    val masked = planOf(IncrementalDedup.dedupAgainst(
-      IncrementalDedup.openSignatures(spark, path), batch))
-    assert(masked.contains("LeftAnti"),
-      "pending tombstones did not add the anti-join mask")
+    for (masked <- probePlans(IncrementalDedup.openSignatures(spark, path)))
+      assert(masked.contains("LeftAnti"),
+        "pending tombstones did not add the anti-join mask")
   }
 
   test("both probe paths suppress tombstoned ids identically") {

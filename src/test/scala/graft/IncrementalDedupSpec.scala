@@ -603,4 +603,252 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(graft.operators.IndexMeta.readDirRows(spark, s"$path/sigs")
       === Some(n))
   }
+
+  // ---- held-batch scan ---------------------------------------------
+
+  /** A high-collision synthetic corpus: every doc is one of six 10-word
+    * token sets over a 16-word vocabulary with 0-3 words swapped by id,
+    * so many docs share an exact token set and most pairs collide in
+    * some band. */
+  private def collidingText(id: Long): String = {
+    val base = (id % 6).toInt
+    val words = (0 until 10).map(j => s"v${(base + j) % 16}").toArray
+    for (s <- 0 until ((id / 6) % 4).toInt)
+      words((s * 3 + id.toInt) % 10) = s"v${(base + 10 + s) % 16}"
+    words.mkString(" ")
+  }
+
+  private def collidingDocs(ids: Seq[Long]) = {
+    import spark.implicits._
+    ids.map(id => (id, collidingText(id))).toDF("doc_id", "text")
+  }
+
+  /** (doc_id, dup_of, match_est) by brute force: every (corpus, batch)
+    * pair sharing ANY band bucket, full agreement count, est ≥ θ. */
+  private def bruteMatches(idx: IncrementalDedup.SigIndex,
+      batch: org.apache.spark.sql.DataFrame, threshold: Double): Set[Seq[Any]] =
+    batch.select(col("doc_id").as("q_id"), col("sig").as("q_sig"),
+        col("bkts").as("q_bkts"))
+      .crossJoin(idx.sigs.select(col("doc_id").as("c_id"), col("sig").as("c_sig"),
+        col("bkts").as("c_bkts")))
+      .filter(arrays_overlap(
+        zip_with(col("c_bkts"), col("q_bkts"), (a, b) => a === b), array(lit(true))))
+      .withColumn("est", org.apache.spark.sql.graft.ColumnBridge
+        .matchCount(col("c_sig"), col("q_sig")).cast("double") / lit(idx.k))
+      .filter(col("est") >= threshold)
+      .groupBy(col("q_id").as("doc_id"))
+      .agg(min("c_id").as("dup_of"), max("est").as("match_est"))
+      .collect().map(_.toSeq).toSet
+
+  /** The held-batch scan, the shuffle branch (forced through the
+    * broadcast-budget property) and the pruned probe on one signed
+    * batch, each checked against brute force. */
+  private def assertAllPathsMatchBruteForce(idx: IncrementalDedup.SigIndex,
+      signedBatch: org.apache.spark.sql.DataFrame, threshold: Double): Set[Seq[Any]] = {
+    val sp = graft.operators.IndexMeta.readDirMeta(spark, s"${idx.path}/sigs")
+    val heldDf = IncrementalDedup.streamedMatches(idx, signedBatch, threshold)
+    assert(heldDf.queryExecution.optimizedPlan.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "a budget-sized batch must take the held-batch scan")
+    val held = heldDf.collect().map(_.toSeq).toSet
+    val shuffledDf = {
+      System.setProperty("graft.broadcastBudgetBytes", "1")
+      try IncrementalDedup.streamedMatches(idx, signedBatch, threshold)
+      finally System.clearProperty("graft.broadcastBudgetBytes")
+    }
+    assert(shuffledDf.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.nonEmpty,
+      "the forced budget must take the shuffle-join branch")
+    val shuffled = shuffledDf.collect().map(_.toSeq).toSet
+    val pruned = IncrementalDedup.prunedMatches(idx, signedBatch, sp, threshold)
+      .collect().map(_.toSeq).toSet
+    val truth = bruteMatches(idx, signedBatch, threshold)
+    assert(held === truth, s"held-batch scan differs from brute force at θ=$threshold")
+    assert(shuffled === truth, s"shuffle branch differs from brute force at θ=$threshold")
+    assert(pruned === truth, s"pruned probe differs from brute force at θ=$threshold")
+    truth
+  }
+
+  test("held-batch scan, shuffle branch and pruned probe equal brute force on a high-collision index") {
+    import spark.implicits._
+    val path = tmp()
+    IncrementalDedup.saveSignatures(collidingDocs(1L to 240L), path)
+    // delta rows, appended twice: a replayed duplicate append
+    val delta = collidingDocs(1001L to 1040L)
+    IncrementalDedup.appendSignatures(IncrementalDedup.openSignatures(spark, path), delta)
+    IncrementalDedup.appendSignatures(IncrementalDedup.openSignatures(spark, path), delta)
+    // tombstoned ids in the base and in the delta: ids 1 and 7 are the
+    // smallest keepers of several token sets, so dup_of must move on
+    IncrementalDedup.deleteDocs(spark, path, Seq(1L, 7L, 1003L))
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    // the batch: near copies, fresh text, and a doc_id repeated with
+    // different text (every row of an id gets the id's merged answer)
+    val batchDocs = collidingDocs(5001L to 5060L)
+      .unionByName(Seq((5061L, "fresh words nobody indexed ever"),
+        (5001L, collidingText(2L))).toDF("doc_id", "text"))
+    val signedBatch = IncrementalDedup.signed(batchDocs, idx.k, idx.bands)
+      .localCheckpoint(true)
+    val at09 = assertAllPathsMatchBruteForce(idx, signedBatch, 0.9)
+    assert(at09.nonEmpty, "θ=0.9 must flag something on this corpus")
+    assert(!at09.exists(r => Set(1L, 7L, 1003L)(r(1).asInstanceOf[Long])),
+      "a tombstoned id survived as dup_of")
+    // θ exactly at an estMinCount boundary: a pair whose agreement count
+    // is exactly the decision floor must pass, one below must not
+    // (agreement counts of the CANDIDATE pairs — those sharing a band)
+    val k = idx.k
+    val counts = signedBatch.select(col("sig").as("q_sig"), col("bkts").as("q_bkts"))
+      .crossJoin(idx.sigs.select(col("sig").as("c_sig"), col("bkts").as("c_bkts")))
+      .filter(arrays_overlap(
+        zip_with(col("c_bkts"), col("q_bkts"), (a, b) => a === b), array(lit(true))))
+      .select(org.apache.spark.sql.graft.ColumnBridge
+        .matchCount(col("c_sig"), col("q_sig")).as("c"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    val c = counts.filter(c => c < k && counts(c - 1)).max
+    val theta = c.toDouble / k
+    assert(graft.operators.MinHashLsh.estMinCount(k, theta) === c)
+    assert(assertAllPathsMatchBruteForce(idx, signedBatch, theta).nonEmpty)
+    // dedupAgainst on the held route agrees row for row with the forced
+    // shuffle route, repeated id included
+    def flags() = IncrementalDedup.dedupAgainst(idx, batchDocs, 0.9)
+      .collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val heldFlags = flags()
+    System.setProperty("graft.broadcastBudgetBytes", "1")
+    val shuffledFlags = try flags() finally System.clearProperty("graft.broadcastBudgetBytes")
+    assert(heldFlags === shuffledFlags)
+    val repeated = heldFlags.filter(_.startsWith("5001,"))
+    assert(repeated.size === 2 && repeated.distinct.size === 1,
+      s"both rows of a repeated id must carry the id's answer: $repeated")
+  }
+
+  test("held-batch scan on an all-gated-out batch and on an empty corpus") {
+    import spark.implicits._
+    val path = tmp()
+    IncrementalDedup.saveSignatures(collidingDocs(1L to 120L), path)
+    IncrementalDedup.writeBucketBloom(spark, path, fpp = 1e-6)
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    val novel = (0 until 40).map(i =>
+      (70000L + i, s"unseen$i words$i nobody$i indexed$i")).toDF("doc_id", "text")
+    val novelSigned = IncrementalDedup.signed(novel, idx.k, idx.bands)
+      .localCheckpoint(true)
+    val bloom = IncrementalDedup.readBucketBloom(spark, path).get._1
+    val passed = IncrementalDedup.driverGate(novelSigned, bloom)._1
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    val gatedOut = novelSigned.filter(!col("doc_id").isin(passed.toSeq: _*))
+      .localCheckpoint(true)
+    assert(gatedOut.count() > 0, "test premise: some novel docs must fail the gate")
+    assert(IncrementalDedup.driverGate(gatedOut, bloom)._2 === 0L)
+    assert(assertAllPathsMatchBruteForce(idx, gatedOut, 0.9).isEmpty)
+    val flagged = IncrementalDedup.dedupAgainstSigned(idx, gatedOut, 0.9).collect()
+    assert(flagged.length.toLong === gatedOut.count())
+    assert(flagged.forall(r => !r.getBoolean(1) && r.isNullAt(2) && r.isNullAt(3)))
+    // an empty logical corpus: every indexed doc tombstoned
+    val emptyPath = tmp()
+    IncrementalDedup.saveSignatures(collidingDocs(1L to 5L), emptyPath)
+    IncrementalDedup.deleteDocs(spark, emptyPath, 1L to 5L)
+    val empty = IncrementalDedup.openSignatures(spark, emptyPath)
+    val batch = IncrementalDedup.signed(collidingDocs(1L to 12L), empty.k, empty.bands)
+      .localCheckpoint(true)
+    assert(assertAllPathsMatchBruteForce(empty, batch, 0.9).isEmpty)
+    assert(IncrementalDedup.dedupAgainstSigned(empty, batch, 0.9)
+      .filter(col("is_duplicate")).count() === 0L)
+  }
+
+  test("a 500-doc probe on a sub-floor index runs a pinned number of Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    // the benchmark ingest shape: an index with an un-compacted delta, a
+    // 500-doc batch with planted copies, the probe checkpointed as the
+    // ingest loop does it
+    val path = tmp()
+    val texts = (1L to 2000L).map(id => (id,
+      (0 until 30).map(j => s"t${(id * 7 + j * j) % 97}").mkString(" ")))
+    IncrementalDedup.saveSignatures(texts.take(1800).toDF("doc_id", "text"), path)
+    IncrementalDedup.appendSignatures(IncrementalDedup.openSignatures(spark, path),
+      texts.drop(1800).toDF("doc_id", "text"))
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    val batch = (0 until 500).map { i =>
+      if (i % 5 < 2) (100000L + i, texts(i * 4)._2.split(" ").reverse.mkString(" "))
+      else (100000L + i, s"fresh batch doc $i with words $i and more $i")
+    }.toDF("doc_id", "text").localCheckpoint(true)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def drain(): Unit = {
+      // listener bus drains asynchronously — poll until stable
+      var prev = -1
+      var stable = 0
+      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
+      while (stable < 3 && System.nanoTime < deadline) {
+        Thread.sleep(200)
+        val n = jobs.get
+        if (n == prev) stable += 1 else { stable = 0; prev = n }
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val flagged = try {
+      drain()
+      jobs.set(0)
+      val out = IncrementalDedup.dedupAgainst(idx, batch, 0.9).localCheckpoint(true)
+      drain()
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // the batch count (which signs), the hold collect, the corpus scan,
+    // the broadcast of the local matches and the flag join's checkpoint
+    val maxJobs = 5
+    assert(jobs.get <= maxJobs,
+      s"${jobs.get} Spark jobs for one sub-floor 500-doc probe (pinned at $maxJobs)")
+    assert(flagged.filter(col("is_duplicate")).count() === 200L)
+  }
+
+  test("bucket-Bloom sidecar bytes equal the SQL aggregate's and no session conf is written") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+    val docs = Tables.documents(spark, sf)
+    val path = tmp()
+    IncrementalDedup.saveSignatures(docs.filter(col("doc_id") % 5 =!= 0), path)
+    val confBefore = spark.conf.getAll
+    IncrementalDedup.writeBucketBloom(spark, path)
+    assert(spark.conf.getAll === confBefore, "writeBucketBloom wrote session conf")
+    val (bytes, items, bits) = IncrementalDedup.readBucketBloom(spark, path).get
+    // the aggregate the sidecar was formerly built with, at parameters
+    // under the runtime-filter conf maxima (so it is not clamped)
+    assert(items <= 4000000L && bits <= 67108864L)
+    val bridge = org.apache.spark.sql.graft.ColumnBridge
+    def aggBytes(sigRows: org.apache.spark.sql.DataFrame): Array[Byte] =
+      sigRows.select(posexplode(col("bkts")).as(Seq("band", "bucket")))
+        .select(xxhash64(col("band"), col("bucket")).as("key"))
+        .agg(bridge.column(new BloomFilterAggregate(bridge.expression(col("key")),
+          Literal(items), Literal(bits)).toAggregateExpression()).as("bf"))
+        .head.getAs[Array[Byte]]("bf")
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    assert(java.util.Arrays.equals(bytes, aggBytes(idx.sigs)),
+      "sidecar bytes differ from the SQL aggregate's for the same keys")
+    // an append merges its batch in, still byte-identical to the
+    // aggregate over the grown corpus, still without touching conf
+    IncrementalDedup.appendSignatures(idx, docs.filter(col("doc_id") % 5 === 0))
+    assert(spark.conf.getAll === confBefore, "the append's sidecar merge wrote session conf")
+    val merged = IncrementalDedup.readBucketBloom(spark, path).get._1
+    assert(java.util.Arrays.equals(merged,
+      aggBytes(IncrementalDedup.openSignatures(spark, path).sigs)))
+  }
+
+  test("driverGate counts probe rows, not distinct ids, when doc_ids repeat") {
+    import spark.implicits._
+    val path = tmp()
+    IncrementalDedup.saveSignatures(collidingDocs(1L to 60L), path)
+    IncrementalDedup.writeBucketBloom(spark, path, fpp = 1e-6)
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    val bloom = IncrementalDedup.readBucketBloom(spark, path).get._1
+    // id 900 twice: one row copies an indexed doc (passes the gate), the
+    // other is novel; the semi-join keeps both rows of the kept id
+    val batch = IncrementalDedup.signed(Seq((900L, collidingText(3L)),
+        (900L, "novel words nobody indexed here"), (901L, collidingText(4L)))
+      .toDF("doc_id", "text"), idx.k, idx.bands).localCheckpoint(true)
+    assert(batch.filter(IncrementalDedup.bucketBloomGate(bloom)).count() === 2L,
+      "test premise: exactly the novel row fails the gate")
+    val (frame, n) = IncrementalDedup.driverGate(batch, bloom)
+    assert(frame.count() === 3L)
+    assert(n === 3L, s"driverGate reported $n probe rows for a 3-row probe frame")
+  }
 }
