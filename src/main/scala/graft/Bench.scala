@@ -157,25 +157,30 @@ object Bench {
           s""""spread_x":${f3(secs.max / secs.min)},"cv":${f3(cv)},""" +
           s""""shuffle_secs":[${shuf.map(f3).mkString(",")}],""" +
           s""""shuffle_spread_x":${f3(shuf.max / shuf.min)}}"""
-      } catch { case _: Throwable => ""","noise":{"secs":[],"failed":true}""" }
+      } catch { case e: Throwable =>
+        s""","noise":{"secs":[],"failed":true,"error":${errorJson(e)}}""" }
     val results = SparkEntry.queries
       .filter { case (name, _) =>
         only.forall(_.contains(name)) && !skip.contains(name) }
       .map { case (name, fn) =>
       val runs = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
-        val ok = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true
+        val err = try {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
         }
-          catch { case _: Throwable => false }
-        ((System.nanoTime() - t0) / 1e9, ok)
+          catch { case e: Throwable => Some(e) }
+        ((System.nanoTime() - t0) / 1e9, err)
       }
-      name -> (if (runs.forall(_._2)) runs.map(_._1).min else -1.0)
+      name -> (if (runs.forall(_._2.isEmpty)) (runs.map(_._1).min, None)
+        else (-1.0, runs.flatMap(_._2).headOption))
     }
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val failed = results.filter(_._2 < 0).keys.toSeq.sorted
-    val total = results.values.filter(_ >= 0).sum
+    val failed = results.filter(_._2._1 < 0).keys.toSeq.sorted
+    // the first exception of each failed key, beside its -1 sentinel
+    val errors = failed.map(k => s"\"$k\":" + errorJson(results(k)._2.get))
+      .mkString("{", ",", "}")
+    val total = results.values.map(_._1).filter(_ >= 0).sum
     // sampled ANN recall@10 (100 queries vs brute force) rides along every
     // bench so tables/planes/nprobe drift is visible, not silent; runs
     // outside the timings. SPARK_GRAFT_RECALL=0 skips it.
@@ -185,7 +190,7 @@ object Bench {
         val r = RecallProbe.run(spark, sfDir).toSeq.sortBy(_._1)
           .map { case (k, v) => s"\"$k\":$v" }.mkString(",")
         s""","recall":{$r}"""
-      } catch { case _: Throwable => "" }
+      } catch { case e: Throwable => s""","recall":${failedJson(e)}""" }
     // per-batch ingest-loop slope (constant batches vs a growing
     // signature index) rides along too — near-flat batch_secs is the
     // measured form of the O(batch + collisions) ingest claim.
@@ -205,7 +210,7 @@ object Bench {
         s""","ingest":{"batch_rows":${r.batchRows.mkString("[", ",", "]")},""" +
           s""""batch_secs":$bs,"index_rows":${r.indexRows.mkString("[", ",", "]")},""" +
           s""""fresh_secs":${f3(r.freshSecs)},"fresh_gated_secs":${f3(r.freshGatedSecs)}}"""
-      } catch { case _: Throwable => "" }
+      } catch { case e: Throwable => s""","ingest":${failedJson(e)}""" }
     // the streaming form of the ingest loop (foreachBatch under the
     // streaming runtime + a stateful RocksDB leg) rides along full runs
     // under the same skip dial — per-batch secs from the query's own
@@ -224,9 +229,9 @@ object Bench {
           s""""state_rows_curve":${r.stateRowsCurve.mkString("[", ",", "]")},""" +
           s""""state_mem_curve":${r.stateMemCurve.mkString("[", ",", "]")},""" +
           s""""state_rows":${r.stateRowsTotal},"state_mem_bytes":${r.stateMemBytes}}"""
-      } catch { case _: Throwable => "" }
+      } catch { case e: Throwable => s""","ingest_streaming":${failedJson(e)}""" }
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"skipped":$skipped$recall$ingest$streamIngest$noise,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"errors":$errors,"skipped":$skipped$recall$ingest$streamIngest$noise,"sf":"$sfDir"}"""
     println(line)
     // the JSON also lands in a FILE: the driver's per-round artifact is a
     // captured stdout tail, and a 72-key line overflows the tail window —
@@ -250,4 +255,20 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf":"$sfDir","full":"${out.getOrElse("(not written: subset run)")}"}""")
     spark.stop()
   }
+
+  /** `"<class>: <message>"` of a failure, as a JSON string. */
+  private[graft] def errorJson(e: Throwable): String = {
+    val sb = new StringBuilder("\"")
+    s"${e.getClass.getName}: ${e.getMessage}".foreach {
+      case '"' => sb ++= "\\\""
+      case '\\' => sb ++= "\\\\"
+      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
+      case c => sb += c
+    }
+    (sb += '"').toString
+  }
+
+  /** A block that could not run: `{"failed":true,"error":"<class>: <message>"}`. */
+  private[graft] def failedJson(e: Throwable): String =
+    s"""{"failed":true,"error":${errorJson(e)}}"""
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorMath
+import graft.sources.Tables
 
 /** Approximate nearest neighbour via random-hyperplane LSH
   * (SURVEY.md §2 sim_ann_lsh) — the 100-TB route where brute force
@@ -251,7 +252,7 @@ object AnnLsh {
     * (Java-serialized `params.bin`) is rejected with a rebuild message. */
   def openIndex(spark: org.apache.spark.sql.SparkSession, path: String): LshIndex = {
     val ps = IndexMeta.readParams(spark, path, Seq("tables", "planes"))
-    LshIndex(spark.read.parquet(s"$path/corpus"), ps("tables"), ps("planes"))
+    LshIndex(Tables.parquet(spark, s"$path/corpus"), ps("tables"), ps("planes"))
   }
 
   /** The query vector's per-table bucket ids, computed by the SAME kernel

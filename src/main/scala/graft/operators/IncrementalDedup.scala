@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Incremental (batch-vs-corpus) near-duplicate detection over a
   * PERSISTED MinHash signature index — the shape a production ingest
   * pipeline actually runs: the historical corpus is signed ONCE, each new
@@ -161,11 +163,11 @@ object IncrementalDedup {
     // probe routing must not infer corpus size from the partition count,
     // which callers may pin explicitly (e.g. the bench)
     val nRows =
-      if (n0 >= 0L) n0 else spark.read.parquet(s"$path/sigs").count()
+      if (n0 >= 0L) n0 else Tables.parquet(spark, s"$path/sigs").count()
     IndexMeta.writeDirMeta(spark, s"$path/sigs", sp, nRows)
     // bucket rows derive from the just-written sigs — one cheap re-read
     // instead of a second signing pass over the raw documents
-    writeBuckets(spark.read.parquet(s"$path/sigs"), s"$path/buckets", p,
+    writeBuckets(Tables.parquet(spark, s"$path/sigs"), s"$path/buckets", p,
       "overwrite", files = p)
     IndexMeta.writeDirMeta(spark, s"$path/buckets", p)
     IndexMeta.writeParams(spark, path, Map("k" -> k, "bands" -> bands))
@@ -182,7 +184,7 @@ object IncrementalDedup {
       throw new IllegalStateException(
         s"$path has no buckets/ layout (pre-v2 signature index); rebuild " +
           "it with saveSignatures to get the partition-pruned probe layout")
-    val base = spark.read.parquet(s"$path/sigs").drop("sp")
+    val base = Tables.parquet(spark, s"$path/sigs").drop("sp")
     val all = deltaSigs(spark, path).map(base.unionByName(_)).getOrElse(base)
     SigIndex(minusTombstones(spark, path, all), path, ps("k"), ps("bands"))
   }
@@ -303,7 +305,7 @@ object IncrementalDedup {
     // drop the layout column before unioning with the (layout-free) delta
     // rows, as every other base+delta call site does — without it the
     // documented base+delta path throws whenever a delta/ exists
-    val base = spark.read.parquet(s"$path/sigs").drop("sp")
+    val base = Tables.parquet(spark, s"$path/sigs").drop("sp")
     val all = deltaSigs(spark, path).map(base.unionByName(_)).getOrElse(base)
     val docs = if (expectedDocs > 0) expectedDocs else
       IndexMeta.readDirRows(spark, s"$path/sigs").getOrElse(base.count()) +
@@ -432,7 +434,7 @@ object IncrementalDedup {
   private def deltaSigs(spark: SparkSession, path: String): Option[DataFrame] = {
     val d = new org.apache.hadoop.fs.Path(s"$path/delta")
     if (d.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(d))
-      Some(spark.read.parquet(s"$path/delta"))
+      Some(Tables.parquet(spark, s"$path/delta"))
     else None
   }
 
@@ -524,7 +526,7 @@ object IncrementalDedup {
     // crash between the two renames leaves the only full copies in
     // `*_new`/`*_old`, and sweeping before checking would lose the base)
     IndexSwap.recover(fs, path, Seq("sigs", "buckets"))
-    val base = spark.read.parquet(s"$path/sigs").drop("sp")
+    val base = Tables.parquet(spark, s"$path/sigs").drop("sp")
     // tombstones fold here: the anti-join drops deleted docs' rows for
     // real (base AND delta AND any pre-compact re-append), so the
     // rewritten layouts are exactly an index built without them
@@ -537,7 +539,7 @@ object IncrementalDedup {
     withSp(deduped, sp2).repartition(numFiles, col("sp"))
       .write.mode("overwrite").partitionBy("sp").parquet(s"$path/sigs_new")
     IndexMeta.writeDirMeta(spark, s"$path/sigs_new", sp2, n)
-    writeBuckets(spark.read.parquet(s"$path/sigs_new"), s"$path/buckets_new",
+    writeBuckets(Tables.parquet(spark, s"$path/sigs_new"), s"$path/buckets_new",
       p2, "overwrite", files = numFiles)
     IndexMeta.writeDirMeta(spark, s"$path/buckets_new", p2)
     IndexSwap.swap(fs, path, "buckets")
@@ -575,7 +577,7 @@ object IncrementalDedup {
   private[graft] def candidates(spark: SparkSession, path: String,
       batchB: DataFrame, pbs: Seq[Int],
       delta: Option[DataFrame] = None, batchBRows: Long = 0L): DataFrame = {
-    val base = spark.read.parquet(s"$path/buckets")
+    val base = Tables.parquet(spark, s"$path/buckets")
       .filter(col("pb").isin(pbs.map(Int.box): _*))
       .select("doc_id", "band", "bucket")
     val all = delta.map { d =>
@@ -601,7 +603,7 @@ object IncrementalDedup {
     * projected to (c_id, sig). Lazy. */
   private[graft] def prunedSigs(spark: SparkSession, path: String,
       sps: Seq[Int]): DataFrame =
-    spark.read.parquet(s"$path/sigs")
+    Tables.parquet(spark, s"$path/sigs")
       .filter(col("sp").isin(sps.map(Int.box): _*))
       .select(col("doc_id").as("c_id"), col("sig"))
 

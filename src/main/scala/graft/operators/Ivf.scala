@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.functions.VectorMath
+import graft.sources.Tables
 
 /** IVF approximate nearest neighbour (SURVEY.md sim_* scale path,
   * complementing the random-hyperplane AnnLsh): the corpus is coarsely
@@ -456,7 +457,7 @@ object Ivf {
     // the cheap pruned re-read is also one pass over the caller's
     // (possibly expensive) plan instead of two (the saveSignatures
     // precedent)
-    withIdBucket(spark.read.parquet(s"$path/corpus").drop("cell"),
+    withIdBucket(Tables.parquet(spark, s"$path/corpus").drop("cell"),
         idBuckets(centroids))
       .write.mode("overwrite").partitionBy("idb").parquet(s"$path/corpus_by_id")
     save(centroids, s"$path/centroids.json", spark)
@@ -464,7 +465,7 @@ object Ivf {
     // layout): append/compact compare the grown corpus against it to
     // warn when the frozen geometry is outdated (docs/indexes.md)
     IndexMeta.writeDirMeta(spark, s"$path/corpus", centroids.length,
-      spark.read.parquet(s"$path/corpus").count())
+      Tables.parquet(spark, s"$path/corpus").count())
   }
 
   // ---- deletion (takedown propagation) ------------------------------
@@ -506,11 +507,11 @@ object Ivf {
   def openIndex(spark: SparkSession, path: String): IvfIndex = {
     val byIdPath = new org.apache.hadoop.fs.Path(s"$path/corpus_by_id")
     val fs = byIdPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IvfIndex(minusTombstones(spark, path, spark.read.parquet(s"$path/corpus")),
+    IvfIndex(minusTombstones(spark, path, Tables.parquet(spark, s"$path/corpus")),
       load(centroidsPath(spark, path), spark),
       byId = if (fs.exists(byIdPath))
         Some(minusTombstones(spark, path,
-          spark.read.parquet(byIdPath.toString))) else None)
+          Tables.parquet(spark, byIdPath.toString))) else None)
   }
 
   /** The live centroid sidecar under an index directory; a legacy
@@ -573,7 +574,7 @@ object Ivf {
       path: String): Option[String] =
     IndexMeta.readDirRows(spark, s"$path/corpus").collect {
       case built if built > 0 =>
-        val now = spark.read.parquet(s"$path/corpus").count()
+        val now = Tables.parquet(spark, s"$path/corpus").count()
         (built, now)
     }.collect {
       case (built, now) if now > built * GeometryOutgrowFactor =>
@@ -611,7 +612,7 @@ object Ivf {
     val hasById = fs.exists(new org.apache.hadoop.fs.Path(s"$path/corpus_by_id"))
     // tombstones fold here: the rewrite drops deleted vectors for real
     val corpus = minusTombstones(spark, path,
-      spark.read.parquet(s"$path/corpus"))
+      Tables.parquet(spark, s"$path/corpus"))
     corpus.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus_new")
     // the BUILD-TIME sidecar travels across the swap unchanged: compact
@@ -625,7 +626,7 @@ object Ivf {
     // anywhere leaves both live layouts untouched and consistent
     if (hasById) {
       minusTombstones(spark, path,
-        spark.read.parquet(s"$path/corpus_by_id"))
+        Tables.parquet(spark, s"$path/corpus_by_id"))
         .repartition(col("idb"))
         .write.mode("overwrite").partitionBy("idb")
         .parquet(s"$path/corpus_by_id_new")

@@ -67,7 +67,7 @@ object Medallion {
     // each layer consumes the previous layer's storage) — the four gold
     // aggregates scan the compact silver parquet once each instead of
     // re-running the customer⋈orders aggregation four times
-    val metrics = spark.read.parquet(s"$outRoot/silver/entity_metrics")
+    val metrics = Tables.parquet(spark, s"$outRoot/silver/entity_metrics")
       .drop("_transformed_at")
     Benchmarking.groupSummary(metrics)
       .write.mode("overwrite").parquet(s"$outRoot/gold/segment_summary")

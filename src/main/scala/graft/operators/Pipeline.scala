@@ -316,7 +316,19 @@ object Pipeline {
 
 /** Day-partitioned parquet alert store (the db.py analog). Appends are
   * atomic per task; readers prune partitions on day-range predicates, so a
-  * dashboard query over one week never touches the other years. */
+  * dashboard query over one week never touches the other years.
+  *
+  * Reads open the lake through [[graft.sources.Tables.parquet]], which
+  * keeps the resolved relation (day-directory listing, `epoch_day`
+  * partition spec, inferred schema) per session and conf while the
+  * lake's files are unchanged. A request over an unchanged lake therefore
+  * runs only its own query job, not a schema-inference job first.
+  * [[append]] writes new UUID-named files and [[clearRange]] deletes day
+  * directories; either changes the lake's (path, length, mtime)
+  * fingerprint, so the next read re-resolves and sees the write. Pruning
+  * is unchanged: the reused relation is the same `HadoopFsRelation` a
+  * fresh read builds, so day predicates (and the ts_us bounds
+  * graft.plans.AlertStorePruning derives) prune it the same way. */
 object AlertStore {
 
   def append(alerts: DataFrame, path: String): Unit =
@@ -325,7 +337,7 @@ object AlertStore {
       .write.mode("append").partitionBy("epoch_day").parquet(path)
 
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    Tables.parquet(spark, path)
 
   /** Range scan with optional severity / rule / entity filters — the
     * query_anomalies shape (db.py:113, each filter independently

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Deterministic corpus sampling (SURVEY.md §2 ds_sample): reproducible,
   * engine-neutral subsetting for a training-data pipeline — ablation
   * subsets, eval holdouts, per-source mixture weighting ("sample web at
@@ -225,7 +227,7 @@ object Sampling {
     * training-data artifact). */
   def writeShardManifest(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
-    val back = spark.read.parquet(path)
+    val back = Tables.parquet(spark, path)
     require(back.columns.contains("shard"),
       s"$path is not a shard layout (no `shard` partition column)")
     val (dataCols, rowHash) = shardRowHash(back)
@@ -283,7 +285,7 @@ object Sampling {
       s.get("shard").asLong() ->
         ((s.get("rows").asLong(), s.get("checksum").asText()))
     }.toMap
-    val back = spark.read.parquet(path)
+    val back = Tables.parquet(spark, path)
     val (dataCols, rowHash) = shardRowHash(back)
     if (dataCols != wantCols)
       return err("columns", "columns_mismatch")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.Tables
+
 /** Shared tombstone side-table machinery behind index deletion
   * (IncrementalDedup.deleteDocs / Ivf.deleteFromIndex) — one
   * implementation of the takedown lifecycle, parameterized on the id
@@ -37,7 +39,7 @@ private[operators] object Tombstones {
     * The set is takedown-sized, so the distinct is a few-row shuffle. */
   def ids(spark: SparkSession, path: String): Option[DataFrame] = {
     val t = new org.apache.hadoop.fs.Path(dir(path))
-    if (fs(spark, path).exists(t)) Some(spark.read.parquet(dir(path)).distinct())
+    if (fs(spark, path).exists(t)) Some(Tables.parquet(spark, dir(path)).distinct())
     else None
   }
 

@@ -1,26 +1,97 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType,
   DateType, DoubleType, FloatType, IntegerType, LongType, ShortType,
   StringType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.graft.FileRelations
 
 /** Typed access to the test-corpus tables (TPC-H-ish star schema plus
   * `events`/`documents`/`embeddings`), mirroring the reference's loaders
   * (reference: benchmarking/model.py:82 `load_benchmark_data`,
   * src/pipeline_batch.py:13 `load_raw_data` — CSV/Parquet ingestion).
   *
-  * Scale notes: all loaders are plain declarative `spark.read.parquet`
-  * scans, so Catalyst pushes filters/projections into the scan and
-  * partition-prunes on a real cluster. Dimension tables (region, nation,
-  * supplier, part, customer) are small relative to the facts and should be
-  * broadcast at join sites — helpers here never force a shuffle.
+  * Scale notes: every parquet read in graft.sources and graft.operators
+  * goes through [[parquet]], which returns the same declarative scan as
+  * `spark.read.parquet`, so Catalyst pushes filters/projections into the
+  * scan and prunes partitions as before. Dimension tables (region,
+  * nation, supplier, part, customer) are small relative to the facts and
+  * should be broadcast at join sites — helpers here never force a
+  * shuffle.
+  *
+  * What [[parquet]] caches: a plain read lists the files and runs a
+  * one-task Spark job to infer the schema from a footer (93–103 ms per
+  * open of an sf0.1 table, local[4] on a 4-core box; a reuse takes
+  * 2–7 ms), even when nothing on disk changed. The front door keeps the
+  * resolved relation (file listing, partition spec, schema) per
+  * [[SessionScoped]] session, keyed by (path, the session's
+  * `spark.conf.getAll`), since runtime conf changes what a read infers
+  * (`binaryAsString`, partition-type inference, the nanos flag). A
+  * repeated open of unchanged files runs no Spark job.
+  *
+  * How staleness is detected: each open fingerprints the files under the
+  * path — the sorted (path, length, mtime) of every file — and reuses the
+  * relation only when the fingerprint equals the one it was resolved
+  * under. A write (AlertStore.append/clearRange, appendSignatures, an
+  * overwrite, an index swap) changes the fingerprint — Spark names every
+  * written file after its job's UUID — so the next open re-resolves; no
+  * invalidation hook is needed. The fingerprint is taken before the
+  * plain read, so a write racing the read can only make the stored
+  * fingerprint older than the relation (a later miss), never newer.
+  *
+  * Why the walk uses `FileSystem.listStatus`: it is one call per
+  * directory (3.7 ms for a 30-file, day-partitioned alert lake on the
+  * same box), where `listFiles(path, true)` fetches block locations per
+  * file and took 267 ms on that lake — more than the inference it
+  * replaces.
   */
 object Tables {
 
+  /** The front door for parquet reads: `spark.read.parquet(path)`, with
+    * the resolved relation reused while the files under `path` are
+    * unchanged (see Scale notes above). A missing path, a glob or a
+    * failed walk takes the plain read, so errors are those of
+    * `spark.read.parquet`; a read that throws caches nothing. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val files = fingerprint(spark, path)
+    val key = (path, spark.conf.getAll)
+    val cache = resolved(spark)
+    files.flatMap(f => Option(cache.get(key)).filter(_.files == f)) match {
+      case Some(hit) => FileRelations.reopen(spark, hit.relation)
+      case None =>
+        val df = spark.read.parquet(path)
+        for (f <- files; r <- FileRelations.of(df)) cache.put(key, Resolved(f, r))
+        df
+    }
+  }
+
+  private final case class Resolved(files: Vector[(String, Long, Long)],
+      relation: LogicalRelation)
+
+  private val resolved = new SessionScoped(
+    new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), Resolved]())
+
+  /** Sorted (path, length, mtime) of every file under `path`, walked with
+    * one `listStatus` per directory; None for a glob or a failed walk. */
+  private def fingerprint(spark: SparkSession,
+      path: String): Option[Vector[(String, Long, Long)]] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else scala.util.Try {
+      val root = new Path(path)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def walk(st: FileStatus): Iterator[FileStatus] =
+        if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(walk)
+        else Iterator(st)
+      walk(fs.getFileStatus(root))
+        .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+        .toVector.sorted
+    }.toOption
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")

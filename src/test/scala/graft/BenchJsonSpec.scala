@@ -1,0 +1,23 @@
+package graft
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.scalatest.funsuite.AnyFunSuite
+
+/** graft.Bench records a failure as a failure: a block that throws
+  * becomes `{"failed":true,"error":"<class>: <message>"}`, valid JSON
+  * whatever the message holds. */
+class BenchJsonSpec extends AnyFunSuite {
+
+  test("a failed block carries its exception class and message as valid JSON") {
+    val e = new IllegalStateException("bad \"quote\" \\ back\nslash\ttab \u0001")
+    val node = new ObjectMapper().readTree(Bench.failedJson(e))
+    assert(node.get("failed").asBoolean())
+    assert(node.get("error").asText() ===
+      "java.lang.IllegalStateException: bad \"quote\" \\ back\nslash\ttab \u0001")
+  }
+
+  test("a null message still names the class") {
+    val node = new ObjectMapper().readTree(Bench.errorJson(new RuntimeException()))
+    assert(node.asText() === "java.lang.RuntimeException: null")
+  }
+}

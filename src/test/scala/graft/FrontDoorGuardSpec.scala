@@ -1,0 +1,76 @@
+package graft
+
+import java.io.File
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Every parquet read in graft.operators and graft.sources goes through
+  * `Tables.parquet`, so it shares the session's resolved-relation cache: a
+  * direct `spark.read.parquet(...)` (or a `read` chain ending in
+  * `.parquet(` / `.format("parquet")`) anywhere else in those packages
+  * fails this spec with its file and line. The front door's own plain
+  * read is the one exemption. The tool mains under graft/ are out of
+  * scope. */
+class FrontDoorGuardSpec extends AnyFunSuite {
+
+  private val root = new File("src/main/scala/graft")
+
+  /** A `read` chain that ends in a parquet scan; `readStream` does not
+    * match (`read\b`). */
+  private val ParquetRead =
+    """\bread\b\s*(\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""".r
+
+  /** `src` with comments blanked out, line breaks kept. */
+  private def code(src: String): String = {
+    val noBlocks = """(?s)/\*.*?\*/""".r.replaceAllIn(src,
+      m => m.matched.replaceAll("[^\n]", " "))
+    """(?m)(^|[ \t])//[^\n]*""".r.replaceAllIn(noBlocks, m => " " * m.matched.length)
+  }
+
+  private def sites(f: File): Seq[Int] = {
+    val text = code(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+    ParquetRead.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
+  }
+
+  private def scalaFiles(d: File): Seq[File] =
+    Option(d.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap { f =>
+      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    }
+
+  /** Line range of `Tables.parquet`'s body, the one exempt read. */
+  private def frontDoor(tables: File): Range = {
+    val lines = scala.io.Source.fromFile(tables, "UTF-8").getLines().toIndexedSeq
+    val start = lines.indexWhere(_.trim.startsWith("def parquet(spark: SparkSession, path: String)"))
+    assert(start >= 0, s"no front door in $tables")
+    val end = lines.indexWhere(_ == "  }", start)
+    (start + 1) to (end + 1)
+  }
+
+  test("no parquet read in graft.operators or graft.sources bypasses Tables.parquet") {
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    val tables = new File(root, "sources/Tables.scala")
+    val exempt = frontDoor(tables)
+    val all = Seq("operators", "sources").flatMap(d => scalaFiles(new File(root, d)))
+      .flatMap(f => sites(f).map(f -> _))
+    val (door, bypass) = all.partition { case (f, line) =>
+      f.getCanonicalPath == tables.getCanonicalPath && exempt.contains(line) }
+    assert(door.size === 1, s"the front door should hold exactly one plain read: $door")
+    assert(bypass.isEmpty, "parquet reads outside Tables.parquet (route them through it):\n" +
+      bypass.map { case (f, l) => s"  ${root.toPath.relativize(f.toPath)}:$l" }.mkString("\n"))
+  }
+
+  test("the scan catches the read forms it claims to, and skips comments") {
+    val f = java.nio.file.Files.createTempFile("guard", ".scala")
+    java.nio.file.Files.write(f, Seq(
+      "// spark.read.parquet(p) in a comment",
+      "/** spark.read.parquet(p) in a doc */",
+      "val a = spark.read.parquet(p)",
+      "val b = spark.read",
+      "  .option(\"mergeSchema\", \"true\")",
+      "  .schema(s).parquet(p)",
+      "val c = spark.readStream.parquet(p)",
+      "val d = spark.read.format(\"parquet\").load(p)",
+      "val e = df.write.parquet(p)").mkString("\n").getBytes("UTF-8"))
+    assert(sites(f.toFile) === Seq(3, 4, 8))
+  }
+}
