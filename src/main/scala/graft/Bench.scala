@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.{JobProbe, Jobs}
+import Mains.f3
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // disk-headroom preflight (r18, verdict ask #3): the r17 sf10 sweep
     // lost q_approx_distinct and the streaming block to a transient
     // disk-full when a co-resident DuckDB oracle spill collided with
@@ -44,13 +44,7 @@ object Bench {
           f"${soft.toDouble / gb}%.1f GB soft threshold for a " +
           f"${data.toDouble / gb}%.1f GB dataset — watch disk during the run")
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session()
     // steady-state warm-up: JIT + codegen + parquet reader init on the
     // tiny sf so the first timed query isn't billed for JVM startup
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
@@ -71,15 +65,9 @@ object Bench {
     // totals before r12 carried the pruned numbers for the pure
     // per-row keys; aggregation/join/window keys were never prunable
     // and are comparable across rounds.)
-    // optional comma-separated filter for local iteration; the driver
-    // leaves it unset and benches everything. Unknown names fail loudly —
-    // a silent zero-query bench reads as a suspiciously fast run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    only.foreach { names =>
-      val unknown = names.diff(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
+    // optional key filter for local iteration; a full run leaves it
+    // unset and benches everything
+    val only = Mains.only()
     // sweep skip-list (r17): frozen correctness INSTRUMENTS leave full
     // sweeps once the corpus outgrows their purpose. dd_embedding_anchor
     // pins planes=6 at any size so the oracle can bit-check the verify
@@ -151,8 +139,6 @@ object Bench {
         val shuf = (1 to 5).map(_ => shuffleProbe())
         val mean = secs.sum / secs.size
         val cv = math.sqrt(secs.map(s => (s - mean) * (s - mean)).sum / secs.size) / mean
-        val f3 = (x: Double) =>
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
         s""","noise":{"secs":[${secs.map(f3).mkString(",")}],""" +
           s""""spread_x":${f3(secs.max / secs.min)},"cv":${f3(cv)},""" +
           s""""shuffle_secs":[${shuf.map(f3).mkString(",")}],""" +
@@ -163,19 +149,32 @@ object Bench {
       .filter { case (name, _) =>
         only.forall(_.contains(name)) && !skip.contains(name) }
       .map { case (name, fn) =>
+      // each run under the job probe: the run's Spark jobs (count and
+      // summed seconds) split its wall time into serial actions and
+      // driver-side work. The probe drains the listener bus after the
+      // body returns, outside the timed region.
       val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val err = try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
+        val ((secs, err), jobs) = JobProbe(spark) {
+          val t0 = System.nanoTime()
+          val err = try {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save(); None
+          }
+            catch { case e: Throwable => Some(e) }
+          ((System.nanoTime() - t0) / 1e9, err)
         }
-          catch { case e: Throwable => Some(e) }
-        ((System.nanoTime() - t0) / 1e9, err)
+        (secs, err, jobs)
       }
-      name -> (if (runs.forall(_._2.isEmpty)) (runs.map(_._1).min, None)
-        else (-1.0, runs.flatMap(_._2).headOption))
+      name -> (if (runs.forall(_._2.isEmpty)) {
+        val (secs, _, jobs) = runs.minBy(_._1)
+        (secs, None, jobs)
+      } else (-1.0, runs.flatMap(_._2).headOption, Jobs(-1, -1.0)))
     }
-    val qs = results.map { case (k, (v, _)) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
+    def perKey(v: ((Double, Option[Throwable], Jobs)) => String): String =
+      results.map { case (k, r) => s"\"" + k + "\":" + v(r) }.mkString("{", ",", "}")
+    val qs = perKey(_._1.toString)
+    // the minimum run's jobs; -1 beside a failed key's -1 sentinel
+    val jobs = perKey(_._3.count.toString)
+    val jobSecs = perKey(r => if (r._3.count < 0) "-1" else f3(r._3.seconds))
     val failed = results.filter(_._2._1 < 0).keys.toSeq.sorted
     // the first exception of each failed key, beside its -1 sentinel
     val errors = failed.map(k => s"\"$k\":" + errorJson(results(k)._2.get))
@@ -199,17 +198,9 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_INGEST").contains("0") || only.nonEmpty) ""
       else try {
         val r = IngestBench.run(spark, sfDir)
-        // Locale.ROOT: the f-interpolator honors the default locale, and a
-        // comma decimal separator would corrupt the machine-parsed JSON
-        val bs = r.batchSecs.map(s =>
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(s)))
-          .mkString("[", ",", "]")
-        val f3 = (xs: Seq[Double]) => xs.map(s =>
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(s)))
-          .mkString("[", ",", "]")
         s""","ingest":{"batch_rows":${r.batchRows.mkString("[", ",", "]")},""" +
-          s""""batch_secs":$bs,"index_rows":${r.indexRows.mkString("[", ",", "]")},""" +
-          s""""fresh_secs":${f3(r.freshSecs)},"fresh_gated_secs":${f3(r.freshGatedSecs)}}"""
+          s""""batch_secs":${secsJson(r.batchSecs)},"index_rows":${r.indexRows.mkString("[", ",", "]")},""" +
+          s""""fresh_secs":${secsJson(r.freshSecs)},"fresh_gated_secs":${secsJson(r.freshGatedSecs)}}"""
       } catch { case e: Throwable => s""","ingest":${failedJson(e)}""" }
     // the streaming form of the ingest loop (foreachBatch under the
     // streaming runtime + a stateful RocksDB leg) rides along full runs
@@ -219,19 +210,16 @@ object Bench {
       if (sys.env.get("SPARK_GRAFT_INGEST").contains("0") || only.nonEmpty) ""
       else try {
         val r = StreamingIngestBench.run(spark, sfDir)
-        val f3 = (xs: Seq[Double]) => xs.map(s =>
-          String.format(java.util.Locale.ROOT, "%.3f", Double.box(s)))
-          .mkString("[", ",", "]")
         s""","ingest_streaming":{"batch_rows":${r.batchRows.mkString("[", ",", "]")},""" +
-          s""""batch_secs":${f3(r.batchSecs)},"index_rows":${r.indexRows},""" +
+          s""""batch_secs":${secsJson(r.batchSecs)},"index_rows":${r.indexRows},""" +
           s""""flagged_dups":${r.flaggedDups},"provider":"rocksdb",""" +
-          s""""state_batch_secs":${f3(r.stateBatchSecs)},""" +
+          s""""state_batch_secs":${secsJson(r.stateBatchSecs)},""" +
           s""""state_rows_curve":${r.stateRowsCurve.mkString("[", ",", "]")},""" +
           s""""state_mem_curve":${r.stateMemCurve.mkString("[", ",", "]")},""" +
           s""""state_rows":${r.stateRowsTotal},"state_mem_bytes":${r.stateMemBytes}}"""
       } catch { case e: Throwable => s""","ingest_streaming":${failedJson(e)}""" }
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"errors":$errors,"skipped":$skipped$recall$ingest$streamIngest$noise,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":$jobs,"job_s":$jobSecs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"errors":$errors,"skipped":$skipped$recall$ingest$streamIngest$noise,"sf":"$sfDir"}"""
     println(line)
     // the JSON also lands in a FILE: the driver's per-round artifact is a
     // captured stdout tail, and a 72-key line overflows the tail window —
@@ -257,16 +245,11 @@ object Bench {
   }
 
   /** `"<class>: <message>"` of a failure, as a JSON string. */
-  private[graft] def errorJson(e: Throwable): String = {
-    val sb = new StringBuilder("\"")
-    s"${e.getClass.getName}: ${e.getMessage}".foreach {
-      case '"' => sb ++= "\\\""
-      case '\\' => sb ++= "\\\\"
-      case c if c < ' ' => sb ++= f"\\u${c.toInt}%04x"
-      case c => sb += c
-    }
-    (sb += '"').toString
-  }
+  private[graft] def errorJson(e: Throwable): String =
+    Mains.jsonString(s"${e.getClass.getName}: ${e.getMessage}")
+
+  /** Seconds as a JSON array, three decimals each. */
+  private def secsJson(xs: Seq[Double]): String = xs.map(f3).mkString("[", ",", "]")
 
   /** A block that could not run: `{"failed":true,"error":"<class>: <message>"}`. */
   private[graft] def failedJson(e: Throwable): String =

@@ -35,13 +35,7 @@ object IngestBench {
     * without paying for the full Bench sweep. */
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session()
     try {
       val r = run(spark, sfDir)
       println(s"[ingestbench] rows=${r.batchRows.mkString(",")}")

@@ -2,20 +2,52 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps `.explain("formatted")` for the headline plans into PLANS.md —
-  * the audit artifact behind PlanQualitySpec's assertions. Regenerate with
-  * `sbt 'runMain graft.Plans'`. */
+/** Dumps `.explain("formatted")` of query plans, in two modes:
+  *
+  *   - `runMain graft.Plans` writes the headline plans into PLANS.md —
+  *     the audit artifact behind PlanQualitySpec's assertions.
+  *   - `runMain graft.Plans <sfDir> <outDir> <suffix> [key,key,...]`
+  *     writes every registered key's plan (or the listed keys') to
+  *     `<outDir>/<key>_<suffix>.txt` — the evidence files optimization
+  *     write-ups cite (plans/r20, plans/r21).
+  *
+  * Both run on the session every main shares ([[Mains.session]]), so
+  * the dumped plans are the benched plans.
+  */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    require(args.isEmpty || args.length >= 3,
+      "usage: Plans [<sfDir> <outDir> <suffix> [key,key,...]]")
+    val spark = Mains.session(logLevel = "ERROR")
+    try {
+      if (args.isEmpty) writePlansMd(spark)
+      else dumpKeys(spark, args(0), args(1), args(2),
+        args.lift(3).map(_.split(",").toSet))
+    } finally spark.stop()
+  }
+
+  private def explain(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  private def dumpKeys(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, only: Option[Set[String]]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      if (only.forall(_.contains(name))) {
+        val plan =
+          try explain(fn(spark, sfDir))
+          catch { case e: Throwable => s"PLAN FAILED: $e" }
+        Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
+          plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        println(s"[plans] $name -> $outDir/${name}_$suffix.txt")
+      }
+    }
+  }
+
+  private def writePlansMd(spark: SparkSession): Unit = {
     val dir = "/root/testdata/sf0.01"
 
     val picks = Seq(
@@ -128,12 +160,10 @@ object Plans {
     picks.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, dirOverrides.getOrElse(name, dir))
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode))
+      sb.append(explain(df))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println(s"wrote PLANS.md (${sb.length} chars)")
-    spark.stop()
   }
 }

@@ -1,13 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, MinHashLsh}
 import graft.sources.Tables
+import Mains.timed
 
 /** Stage profiler for dd_embedding (`Dedup.embeddingNearDupTopM`) — the
-  * same measure-first harness as [[ProfileLsh]]: each stage timed in
+  * same measure-first harness as [[ProfileText]]: each stage timed in
   * isolation over a pre-materialized input, noop-sink evaluation.
   *
   * Stages (key defaults: threshold=0.3, m=10, tables=8, planes=auto,
@@ -23,24 +24,11 @@ import graft.sources.Tables
   */
 object ProfileEmb {
 
-  private def timed(reps: Int)(df: => DataFrame): Double =
-    (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileEmb <sfDir> [reps]")
     val sfDir = args(0)
     val reps = if (args.length > 1) args(1).toInt else 3
-    val spark = SparkSession.builder()
-      .appName("graft-profile-emb").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session()
     try run(spark, sfDir, reps) finally spark.stop()
   }
 

@@ -1,11 +1,12 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Contamination, Dedup, MinHashLsh, SimHash}
 import graft.sources.Tables
+import Mains.timed
 
 /** Three-scale-point density study for the TEXT dedup family (r17 —
   * the text analog of [[ProfileEmb]]'s embedding study): per-stage
@@ -15,8 +16,8 @@ import graft.sources.Tables
   * TEXT_DENSITY.json and gates the per-decade slopes.
   *
   * The scale points come from IN-MEMORY replication of a source
-  * documents table using ScaleUp's exact salt scheme (every replica's
-  * tokens prefixed `r<id>§`, ScaleUp.scala:118-140): each replica's
+  * documents table through [[ScaleUp.replicateDocuments]] (every
+  * replica's tokens prefixed `r<id>§`): each replica's
   * internal near-duplicate structure is identical to the original while
   * cross-replica token overlap is zero, so TRUE duplicate density is
   * constant by construction and any measured candidate-density growth
@@ -27,48 +28,19 @@ import graft.sources.Tables
   */
 object ProfileText {
 
-  private def timed(reps: Int)(df: => DataFrame): Double =
-    (1 to reps).map { _ =>
-      val t0 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileText <sfDir> [factor] [reps]")
     val sfDir = args(0)
     val factor = if (args.length > 1) args(1).toInt else 1
     val reps = if (args.length > 2) args(2).toInt else 2
-    val spark = SparkSession.builder()
-      .appName("graft-profile-text").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session()
     try run(spark, sfDir, factor, reps) finally spark.stop()
-  }
-
-  /** ScaleUp's documents replication, in memory (ScaleUp.scala:135-140
-    * verbatim semantics: per-replica doc_id shift, every token salted
-    * with `r<replica>§`). */
-  private[graft] def replicateDocs(docs: DataFrame, factor: Int): DataFrame = {
-    if (factor <= 1) docs
-    else {
-      val off = docs.agg(max(col("doc_id")).cast("long")).head.getLong(0) + 1L
-      (0 until factor).map { r =>
-        docs
-          .withColumn("doc_id", col("doc_id") + lit(off * r))
-          .withColumn("text", array_join(
-            transform(split(col("text"), " "), t => concat(lit(s"r$r§"), t)), " "))
-          .withColumn("n_chars", length(col("text")).cast("long"))
-      }.reduce(_ unionByName _)
-    }
   }
 
   def run(spark: SparkSession, sfDir: String, factor: Int, reps: Int): Unit = {
     val k = 128; val bands = 8; val maxBucket = 4096
-    val docs = replicateDocs(Tables.documents(spark, sfDir), factor)
+    val source = Tables.documents(spark, sfDir)
+    val docs = (if (factor <= 1) source else ScaleUp.replicateDocuments(source, factor))
       // 32 blocks regardless of factor — the same realistic-layout rule
       // as ScaleUp's writer (a one-partition union caps scans at 1 task)
       .repartition(32)
@@ -95,8 +67,8 @@ object ProfileText {
     // --- dd_containment: prefix-filter candidates → gram-hash verify ---
     // candidate stage replayed from Dedup.containment:450-520 (the same
     // df-ranked prefix + positional PPJoin prune, stopping at the
-    // distinct that feeds the verify) — a measurement twin, like
-    // ProfileLsh's estimate stage
+    // distinct that feeds the verify) — a measurement twin of the
+    // operator's own stage, kept in step with it by hand
     val t100 = 80L
     val toks = Contamination.gramSets(docs, 3)
       .select(col("doc_id"), array_sort(col("grams")).as("toks"))

@@ -41,22 +41,11 @@ object ScaleUp {
     require(args.length >= 2, "usage: ScaleUp <srcDir> <destDir> [factor]")
     val (src, dest) = (args(0), args(1))
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder()
-      .appName("graft-scale-up").master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Mains.session()
     try run(spark, src, dest, factor) finally spark.stop()
   }
 
-  def run(spark: SparkSession, src: String, dest: String, factor: Int): Unit =
-    // (the events read's NANOS fallback is conf-scoped inside
-    // Tables.tableAdaptive since r12 — no session conf to save/restore)
-    runInner(spark, src, dest, factor)
-
-  private def runInner(spark: SparkSession, src: String, dest: String,
-      factor: Int): Unit = {
+  def run(spark: SparkSession, src: String, dest: String, factor: Int): Unit = {
     def read(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
     def write(df: DataFrame, name: String): Unit = {
       // REALISTIC FILE LAYOUT: the replicate union inherits the source's
@@ -65,26 +54,13 @@ object ScaleUp {
       // the r12 honest-bench audit caught per-row keys running 10× data
       // on 1 of 32 cores (tx_normalize slope 10.7×) purely from this
       // generator artifact. Real corpora arrive as many files at every
-      // scale; write the scaled tables the same way (32 files matches
-      // the bench session's core count; small dims stay 1 file).
+      // scale; write the scaled tables the same way: a fixed 32 files
+      // whatever the session's core count, small dims 1 file.
       val parts = if (Set("region", "nation").contains(name)) 1 else 32
       df.repartition(parts)
         .write.mode("overwrite").parquet(s"$dest/$name.parquet")
       println(s"[scaleup] $name: ${spark.read.parquet(s"$dest/$name.parquet").count()} rows")
     }
-    // one key-domain offset per shifted id, from the source data itself
-    def off(df: DataFrame, c: String): Long =
-      df.agg(max(col(c)).cast("long")).head.getLong(0) + 1L
-
-    def replicate(df: DataFrame, shifts: Map[String, Long],
-        extra: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
-      (0 until factor).map { r =>
-        val shifted = shifts.foldLeft(df) { case (d, (c, o)) =>
-          d.withColumn(c, (col(c) + lit(o * r)).cast(d.schema(c).dataType))
-        }
-        extra(shifted, r)
-      }.reduce(_ unionByName _)
-
     // fixed-size dimensions: single copy
     write(read("region"), "region")
     write(read("nation"), "nation")
@@ -98,12 +74,12 @@ object ScaleUp {
     val partOff = off(part, "p_partkey")
     val suppOff = off(supplier, "s_suppkey")
 
-    write(replicate(customer, Map("c_custkey" -> custOff)), "customer")
-    write(replicate(supplier, Map("s_suppkey" -> suppOff)), "supplier")
-    write(replicate(part, Map("p_partkey" -> partOff)), "part")
-    write(replicate(orders,
+    write(replicate(customer, factor, Map("c_custkey" -> custOff)), "customer")
+    write(replicate(supplier, factor, Map("s_suppkey" -> suppOff)), "supplier")
+    write(replicate(part, factor, Map("p_partkey" -> partOff)), "part")
+    write(replicate(orders, factor,
       Map("o_orderkey" -> orderOff, "o_custkey" -> custOff)), "orders")
-    write(replicate(read("lineitem"),
+    write(replicate(read("lineitem"), factor,
       Map("l_orderkey" -> orderOff, "l_partkey" -> partOff,
         "l_suppkey" -> suppOff)), "lineitem")
 
@@ -111,11 +87,10 @@ object ScaleUp {
     // the adaptive eventsRaw read handles either) so the written table
     // round-trips through Tables.events unchanged
     val events = graft.sources.Tables.eventsRaw(spark, src)
-    write(replicate(events,
+    write(replicate(events, factor,
       Map("event_id" -> off(events, "event_id"),
         "user_id" -> off(events, "user_id"))), "events")
 
-    val documents = read("documents")
     // the salt ends in '§' so tokens from different replicas can only
     // collide if a source token itself starts with "r<digit>§" — without
     // the separator, an original token like "r1x" would equal replica 1's
@@ -132,12 +107,7 @@ object ScaleUp {
     // slopes read 43-68× instead of the corpus's real growth. With no
     // identity replica, composed salt prefixes are distinct for every
     // (inner, outer) pair by construction, at any nesting depth.
-    write(replicate(documents, Map("doc_id" -> off(documents, "doc_id")),
-      extra = (d, r) => d
-        .withColumn("text", array_join(
-          transform(split(col("text"), " "), t => concat(lit(s"r$r§"), t)), " "))
-        .withColumn("n_chars", length(col("text")).cast("long"))),
-      "documents")
+    write(replicateDocuments(read("documents"), factor), "documents")
 
     val embeddings = read("embeddings")
     val dim = embeddings.select(size(col("embedding"))).head.getInt(0)
@@ -163,7 +133,7 @@ object ScaleUp {
       z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
       if (((z ^ (z >>> 31)) & 1L) == 0L) 1f else -1f
     }
-    write(replicate(embeddings, Map("vec_id" -> off(embeddings, "vec_id")),
+    write(replicate(embeddings, factor, Map("vec_id" -> off(embeddings, "vec_id")),
       extra = (d, r) => {
         val shift = if (r == 0 || dim < 2) 0 else ((r - 1) % (dim - 1)) + 1
         val rotated =
@@ -175,4 +145,28 @@ object ScaleUp {
           zip_with(rotated, typedLit(signMask(r)), (x, m) => x * m))
       }), "embeddings")
   }
+
+  /** One key-domain offset per shifted id, from the source data itself. */
+  private def off(df: DataFrame, c: String): Long =
+    df.agg(max(col(c)).cast("long")).head.getLong(0) + 1L
+
+  /** `factor` replicas of `df`: replica r shifts each `shifts` column by
+    * r × its offset, then applies `extra`. */
+  private def replicate(df: DataFrame, factor: Int, shifts: Map[String, Long],
+      extra: (DataFrame, Int) => DataFrame = (d, _) => d): DataFrame =
+    (0 until factor).map { r =>
+      val shifted = shifts.foldLeft(df) { case (d, (c, o)) =>
+        d.withColumn(c, (col(c) + lit(o * r)).cast(d.schema(c).dataType))
+      }
+      extra(shifted, r)
+    }.reduce(_ unionByName _)
+
+  /** The documents table replicated `factor`x with the salt scheme
+    * [[run]] explains: replica r shifts doc_id and prefixes every token
+    * with `r<r>§`. */
+  private[graft] def replicateDocuments(docs: DataFrame, factor: Int): DataFrame =
+    replicate(docs, factor, Map("doc_id" -> off(docs, "doc_id")), (d, r) => d
+      .withColumn("text", array_join(
+        transform(split(col("text"), " "), t => concat(lit(s"r$r§"), t)), " "))
+      .withColumn("n_chars", length(col("text")).cast("long")))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedConf
 
 import graft.sources.Tables
 
@@ -69,17 +70,17 @@ object Pipeline {
     // AdaptiveSparkPlanExec reports UnknownPartitioning before execution,
     // so a checkpoint built under AQE LOSES the partitioning metadata the
     // whole scheme exists to carry (measured: every branch re-exchanged).
-    // Conf-scoped save/restore, the Tables.tableAdaptive precedent; the
-    // downstream rule queries still plan under the session's AQE setting.
-    val adaptiveBefore = spark.conf.get("spark.sql.adaptive.enabled")
-    val events =
-      try {
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        TimeSeries.base(spark, dir)
-          .repartition(col("user_id"))
-          .sortWithinPartitions("user_id", "ts_us", "event_id")
-          .localCheckpoint(false)
-      } finally spark.conf.set("spark.sql.adaptive.enabled", adaptiveBefore)
+    // It is planned under a conf-scoped clone, never on the caller's conf:
+    // a key set there, even restored, changes Tables.parquet's cache key
+    // and strands every relation resolved before. The read uses the
+    // caller's session and relation cache; the checkpoint is re-homed
+    // there, so the rule queries plan under the session's own AQE setting.
+    val scoped = ScopedConf.session(spark, "spark.sql.adaptive.enabled" -> "false")
+    val events = ScopedConf.rehome(spark,
+      ScopedConf.rehome(scoped, TimeSeries.base(spark, dir))
+        .repartition(col("user_id"))
+        .sortWithinPartitions("user_id", "ts_us", "event_id")
+        .localCheckpoint(false))
     detectAll(events, TimeSeries.rollingFeaturesUnsorted(events))
   }
 

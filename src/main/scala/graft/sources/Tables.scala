@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType,
   DateType, DoubleType, FloatType, IntegerType, LongType, ShortType,
   StringType, TimestampNTZType, TimestampType}
-import org.apache.spark.sql.graft.FileRelations
+import org.apache.spark.sql.graft.{FileRelations, ScopedConf}
 
 /** Typed access to the test-corpus tables (TPC-H-ish star schema plus
   * `events`/`documents`/`embeddings`), mirroring the reference's loaders
@@ -209,19 +209,10 @@ object Tables {
     catch {
       case e: Exception if e.getMessage != null &&
           e.getMessage.contains("PARQUET_TYPE") =>
-        val scoped = spark.newSession()
-        // newSession() starts from the INITIAL conf — replay the caller's
-        // runtime conf (session timezone, AQE/shuffle settings, case
-        // sensitivity, …) so the fallback read plans under the same
-        // SQLConf as sibling frames; only then pin the nanos flag.
-        // Non-runtime (static/core) keys reject sets — skip them.
-        spark.conf.getAll.foreach { case (k, v) =>
-          if (scoped.conf.getOption(k) != Some(v))
-            try scoped.conf.set(k, v)
-            catch { case _: org.apache.spark.sql.AnalysisException => () }
-        }
-        scoped.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        table(scoped, dir, name)
+        // the clone copies the caller's conf, so the fallback read plans
+        // under the same SQLConf as sibling frames plus the nanos flag
+        table(ScopedConf.session(spark,
+          "spark.sql.legacy.parquet.nanosAsLong" -> "true"), dir, name)
     }
 
   /** Data contract for the fact tables' date-valued columns

@@ -16,6 +16,13 @@ class BenchJsonSpec extends AnyFunSuite {
       "java.lang.IllegalStateException: bad \"quote\" \\ back\nslash\ttab \u0001")
   }
 
+  test("the one JSON string escaper round-trips every control character") {
+    // Verify's oracle_sql.json cases (newline, CR, tab) beside the rest
+    val raw = "SELECT 1\n\tFROM t\r\nWHERE s = \"x\\y\" \u0000\u001f end"
+    assert(new ObjectMapper().readTree(Mains.jsonString(raw)).asText() === raw)
+    assert(Mains.jsonString("a\nb\rc\td") === "\"a\\nb\\rc\\td\"")
+  }
+
   test("a null message still names the class") {
     val node = new ObjectMapper().readTree(Bench.errorJson(new RuntimeException()))
     assert(node.asText() === "java.lang.RuntimeException: null")

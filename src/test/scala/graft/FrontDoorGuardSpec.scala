@@ -10,7 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * `.parquet(` / `.format("parquet")`) anywhere else in those packages
   * fails this spec with its file and line. The front door's own plain
   * read is the one exemption. The tool mains under graft/ are out of
-  * scope. */
+  * scope.
+  *
+  * The same scan keeps one session front door: a `SparkSession.builder`
+  * anywhere in src/main/scala outside `Mains.session` fails with its
+  * file and line. */
 class FrontDoorGuardSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala/graft")
@@ -20,6 +24,8 @@ class FrontDoorGuardSpec extends AnyFunSuite {
   private val ParquetRead =
     """\bread\b\s*(\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""".r
 
+  private val SessionBuilder = """\bSparkSession\s*\.\s*builder\b""".r
+
   /** `src` with comments blanked out, line breaks kept. */
   private def code(src: String): String = {
     val noBlocks = """(?s)/\*.*?\*/""".r.replaceAllIn(src,
@@ -27,9 +33,10 @@ class FrontDoorGuardSpec extends AnyFunSuite {
     """(?m)(^|[ \t])//[^\n]*""".r.replaceAllIn(noBlocks, m => " " * m.matched.length)
   }
 
-  private def sites(f: File): Seq[Int] = {
+  /** Lines of `f` where `pattern` matches outside comments. */
+  private def sites(f: File, pattern: scala.util.matching.Regex = ParquetRead): Seq[Int] = {
     val text = code(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-    ParquetRead.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
+    pattern.findAllMatchIn(text).map(m => text.take(m.start).count(_ == '\n') + 1).toSeq
   }
 
   private def scalaFiles(d: File): Seq[File] =
@@ -59,6 +66,16 @@ class FrontDoorGuardSpec extends AnyFunSuite {
       bypass.map { case (f, l) => s"  ${root.toPath.relativize(f.toPath)}:$l" }.mkString("\n"))
   }
 
+  test("no SparkSession.builder in src/main/scala outside Mains.session") {
+    val main = new File("src/main/scala")
+    val helper = new File(root, "Mains.scala")
+    val all = scalaFiles(main).flatMap(f => sites(f, SessionBuilder).map(f -> _))
+    val (own, stray) = all.partition(_._1.getCanonicalPath == helper.getCanonicalPath)
+    assert(own.size === 1, s"Mains.scala should hold exactly one session builder: $own")
+    assert(stray.isEmpty, "sessions built outside Mains.session (use it):\n" +
+      stray.map { case (f, l) => s"  ${main.toPath.relativize(f.toPath)}:$l" }.mkString("\n"))
+  }
+
   test("the scan catches the read forms it claims to, and skips comments") {
     val f = java.nio.file.Files.createTempFile("guard", ".scala")
     java.nio.file.Files.write(f, Seq(
@@ -70,7 +87,12 @@ class FrontDoorGuardSpec extends AnyFunSuite {
       "  .schema(s).parquet(p)",
       "val c = spark.readStream.parquet(p)",
       "val d = spark.read.format(\"parquet\").load(p)",
-      "val e = df.write.parquet(p)").mkString("\n").getBytes("UTF-8"))
+      "val e = df.write.parquet(p)",
+      "// SparkSession.builder() in a comment",
+      "val s = SparkSession.builder().getOrCreate()",
+      "val t = SparkSession",
+      "  .builder()").mkString("\n").getBytes("UTF-8"))
     assert(sites(f.toFile) === Seq(3, 4, 8))
+    assert(sites(f.toFile, SessionBuilder) === Seq(11, 12))
   }
 }

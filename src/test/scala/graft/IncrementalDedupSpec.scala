@@ -754,7 +754,6 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("a 500-doc probe on a sub-floor index runs a pinned number of Spark jobs") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import spark.implicits._
     // the benchmark ingest shape: an index with an un-compacted delta, a
     // 500-doc batch with planted copies, the probe checkpointed as the
@@ -770,34 +769,14 @@ class IncrementalDedupSpec extends AnyFunSuite {
       if (i % 5 < 2) (100000L + i, texts(i * 4)._2.split(" ").reverse.mkString(" "))
       else (100000L + i, s"fresh batch doc $i with words $i and more $i")
     }.toDF("doc_id", "text").localCheckpoint(true)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    val (flagged, jobs) = org.apache.spark.sql.graft.JobProbe(spark) {
+      IncrementalDedup.dedupAgainst(idx, batch, 0.9).localCheckpoint(true)
     }
-    def drain(): Unit = {
-      // listener bus drains asynchronously — poll until stable
-      var prev = -1
-      var stable = 0
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime < deadline) {
-        Thread.sleep(200)
-        val n = jobs.get
-        if (n == prev) stable += 1 else { stable = 0; prev = n }
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val flagged = try {
-      drain()
-      jobs.set(0)
-      val out = IncrementalDedup.dedupAgainst(idx, batch, 0.9).localCheckpoint(true)
-      drain()
-      out
-    } finally spark.sparkContext.removeSparkListener(listener)
     // the batch count (which signs), the hold collect, the corpus scan,
     // the broadcast of the local matches and the flag join's checkpoint
     val maxJobs = 5
-    assert(jobs.get <= maxJobs,
-      s"${jobs.get} Spark jobs for one sub-floor 500-doc probe (pinned at $maxJobs)")
+    assert(jobs.count <= maxJobs,
+      s"${jobs.count} Spark jobs for one sub-floor 500-doc probe (pinned at $maxJobs)")
     assert(flagged.filter(col("is_duplicate")).count() === 200L)
   }
 

@@ -7,11 +7,11 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.JobProbe
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -64,32 +64,8 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     p
   }
 
-  /** Spark jobs started on this thread while `body` runs. */
-  private def jobsOf(body: => Unit): Int = {
-    val group = s"front-door-${System.nanoTime}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "front door spec")
-      try body finally spark.sparkContext.clearJobGroup()
-      // listener bus drains asynchronously — poll until stable
-      var prev = -1
-      var stable = 0
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime < deadline) {
-        Thread.sleep(200)
-        val n = jobs.get
-        if (n == prev) stable += 1 else { stable = 0; prev = n }
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
-  }
+  /** Spark jobs `body` runs. */
+  private def jobsOf(body: => Unit): Int = JobProbe(spark)(body)._2.count
 
   /** Write one file with the parquet example writer: no Spark schema in
     * its footer, so inference reads the parquet types themselves, as for
@@ -222,6 +198,20 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // the first open resolves the relation: one schema-inference job
     assert(jobsOf(Tables.events(spark, dir)) === 1)
     assert(jobsOf(Tables.events(spark, dir)) === 0)
+  }
+
+  test("a relation resolved before detectAllShared is reused after it") {
+    val dir = tmp()
+    Tables.eventsRaw(spark, sf).write.parquet(s"$dir/events.parquet")
+    assert(jobsOf(Tables.events(spark, dir)) === 1)
+    graft.operators.Pipeline.detectAllShared(spark, dir)
+    assert(jobsOf(Tables.events(spark, dir)) === 0)
+  }
+
+  test("detectAllShared writes no session conf") {
+    val before = spark.conf.getAll
+    graft.operators.Pipeline.detectAllShared(spark, sf).collect()
+    assert(spark.conf.getAll === before)
   }
 
   test("a queryRange over an unchanged lake runs exactly one job") {

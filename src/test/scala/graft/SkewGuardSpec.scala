@@ -242,15 +242,8 @@ class SkewGuardSpec extends AnyFunSuite {
       assert(!forced.queryExecution.optimizedPlan.toString.contains("Window"))
       val rows = forced.collect()
       assert(rows.length === 400)
-      // listener bus drains asynchronously — poll until stable
-      var prev = -1
-      var stable = 0
-      val deadline = System.nanoTime + 10L * 1000 * 1000 * 1000
-      while (stable < 3 && System.nanoTime < deadline) {
-        Thread.sleep(200)
-        val n = records.size
-        if (n == prev) stable += 1 else { stable = 0; prev = n }
-      }
+      // every task-end event posted by now reaches the listener
+      org.apache.spark.sql.graft.JobProbe.drain(spark)
     } finally spark.sparkContext.removeSparkListener(listener)
     val maxTask = records.toArray(Array.empty[java.lang.Long])
       .map(_.longValue).foldLeft(0L)(math.max)

@@ -19,8 +19,9 @@ Gates (exit 1 on violation):
   - capped per-decade TIME slope <= 11x on every adjacent pair — i.e.
     near-linear: 10x data on a fixed box may cost up to ~11x, anything
     above is super-linear work the cap exists to remove;
-  - --recall R (dd_embedding_capped_planted at a scale point, from
-    RecallRun) gates at >= 0.95 when supplied.
+  - --recall R (dd_embedding_capped_planted at a scale point, from the
+    "recall" block of graft.Bench's full JSON line) gates at >= 0.95
+    when supplied.
 """
 import json
 import math
