@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.graft.{JobProbe, Jobs}
-import Mains.f3
+import Mains.{f3, secsJson, timed}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -112,36 +112,27 @@ object Bench {
     val noise =
       if (only.nonEmpty) ""
       else try {
-        def probe(): Double = {
-          val t0 = System.nanoTime()
-          spark.range(200L * 1000 * 1000).selectExpr("sum(id * 3 + 1) AS s")
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        def probe(): Double =
+          timed(1)(spark.range(200L * 1000 * 1000).selectExpr("sum(id * 3 + 1) AS s"))
         // second flavor (r16): a fixed SHUFFLE workload — exchange
         // serialization + memory bandwidth + sort, the resources a
         // co-tenant eating I/O/memory steals that the pure-CPU range
         // aggregate cannot see (this session's r16 sf1 sweep measured
         // real keys 1.5x slower while the CPU probe stayed at 1.2x
         // spread — the probe's measured blind spot)
-        def shuffleProbe(): Double = {
-          val t0 = System.nanoTime()
-          spark.range(30L * 1000 * 1000)
-            .selectExpr("pmod(id * 2654435761, 1000003) AS k", "id")
-            .repartition(32, org.apache.spark.sql.functions.col("k"))
-            .sortWithinPartitions("k", "id")
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
+        def shuffleProbe(): Double = timed(1)(spark.range(30L * 1000 * 1000)
+          .selectExpr("pmod(id * 2654435761, 1000003) AS k", "id")
+          .repartition(32, org.apache.spark.sql.functions.col("k"))
+          .sortWithinPartitions("k", "id"))
         probe() // untimed: the probe's own codegen/JIT warm-up
         shuffleProbe()
         val secs = (1 to 5).map(_ => probe())
         val shuf = (1 to 5).map(_ => shuffleProbe())
         val mean = secs.sum / secs.size
         val cv = math.sqrt(secs.map(s => (s - mean) * (s - mean)).sum / secs.size) / mean
-        s""","noise":{"secs":[${secs.map(f3).mkString(",")}],""" +
+        s""","noise":{"secs":${secsJson(secs)},""" +
           s""""spread_x":${f3(secs.max / secs.min)},"cv":${f3(cv)},""" +
-          s""""shuffle_secs":[${shuf.map(f3).mkString(",")}],""" +
+          s""""shuffle_secs":${secsJson(shuf)},""" +
           s""""shuffle_spread_x":${f3(shuf.max / shuf.min)}}"""
       } catch { case e: Throwable =>
         s""","noise":{"secs":[],"failed":true,"error":${errorJson(e)}}""" }
@@ -167,12 +158,13 @@ object Bench {
       name -> (if (runs.forall(_._2.isEmpty)) {
         val (secs, _, jobs) = runs.minBy(_._1)
         (secs, None, jobs)
-      } else (-1.0, runs.flatMap(_._2).headOption, Jobs(-1, -1.0)))
+      } else (-1.0, runs.flatMap(_._2).headOption, Jobs.Unknown))
     }
     def perKey(v: ((Double, Option[Throwable], Jobs)) => String): String =
       results.map { case (k, r) => s"\"" + k + "\":" + v(r) }.mkString("{", ",", "}")
     val qs = perKey(_._1.toString)
-    // the minimum run's jobs; -1 beside a failed key's -1 sentinel
+    // the minimum run's jobs; -1 beside a failed key's -1 sentinel, and
+    // for a run whose listener bus did not drain in time
     val jobs = perKey(_._3.count.toString)
     val jobSecs = perKey(r => if (r._3.count < 0) "-1" else f3(r._3.seconds))
     val failed = results.filter(_._2._1 < 0).keys.toSeq.sorted
@@ -196,28 +188,16 @@ object Bench {
     // SPARK_GRAFT_INGEST=0 skips it.
     val ingest =
       if (sys.env.get("SPARK_GRAFT_INGEST").contains("0") || only.nonEmpty) ""
-      else try {
-        val r = IngestBench.run(spark, sfDir)
-        s""","ingest":{"batch_rows":${r.batchRows.mkString("[", ",", "]")},""" +
-          s""""batch_secs":${secsJson(r.batchSecs)},"index_rows":${r.indexRows.mkString("[", ",", "]")},""" +
-          s""""fresh_secs":${secsJson(r.freshSecs)},"fresh_gated_secs":${secsJson(r.freshGatedSecs)}}"""
-      } catch { case e: Throwable => s""","ingest":${failedJson(e)}""" }
+      else try s""","ingest":${IngestBench.run(spark, sfDir).json}"""
+      catch { case e: Throwable => s""","ingest":${failedJson(e)}""" }
     // the streaming form of the ingest loop (foreachBatch under the
     // streaming runtime + a stateful RocksDB leg) rides along full runs
     // under the same skip dial — per-batch secs from the query's own
     // progress records, state rows/bytes from the stateful operator.
     val streamIngest =
       if (sys.env.get("SPARK_GRAFT_INGEST").contains("0") || only.nonEmpty) ""
-      else try {
-        val r = StreamingIngestBench.run(spark, sfDir)
-        s""","ingest_streaming":{"batch_rows":${r.batchRows.mkString("[", ",", "]")},""" +
-          s""""batch_secs":${secsJson(r.batchSecs)},"index_rows":${r.indexRows},""" +
-          s""""flagged_dups":${r.flaggedDups},"provider":"rocksdb",""" +
-          s""""state_batch_secs":${secsJson(r.stateBatchSecs)},""" +
-          s""""state_rows_curve":${r.stateRowsCurve.mkString("[", ",", "]")},""" +
-          s""""state_mem_curve":${r.stateMemCurve.mkString("[", ",", "]")},""" +
-          s""""state_rows":${r.stateRowsTotal},"state_mem_bytes":${r.stateMemBytes}}"""
-      } catch { case e: Throwable => s""","ingest_streaming":${failedJson(e)}""" }
+      else try s""","ingest_streaming":${StreamingIngestBench.run(spark, sfDir).json}"""
+      catch { case e: Throwable => s""","ingest_streaming":${failedJson(e)}""" }
     val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"jobs":$jobs,"job_s":$jobSecs,"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},"errors":$errors,"skipped":$skipped$recall$ingest$streamIngest$noise,"sf":"$sfDir"}"""
     println(line)
@@ -247,9 +227,6 @@ object Bench {
   /** `"<class>: <message>"` of a failure, as a JSON string. */
   private[graft] def errorJson(e: Throwable): String =
     Mains.jsonString(s"${e.getClass.getName}: ${e.getMessage}")
-
-  /** Seconds as a JSON array, three decimals each. */
-  private def secsJson(xs: Seq[Double]): String = xs.map(f3).mkString("[", ",", "]")
 
   /** A block that could not run: `{"failed":true,"error":"<class>: <message>"}`. */
   private[graft] def failedJson(e: Throwable): String =

@@ -28,7 +28,13 @@ object IngestBench {
 
   final case class Result(batchRows: Seq[Long], batchSecs: Seq[Double],
       indexRows: Seq[Long],
-      freshSecs: Seq[Double] = Nil, freshGatedSecs: Seq[Double] = Nil)
+      freshSecs: Seq[Double] = Nil, freshGatedSecs: Seq[Double] = Nil) {
+    /** The record as JSON: Bench's `"ingest"` block. */
+    def json: String =
+      s"""{"batch_rows":${batchRows.mkString("[", ",", "]")},""" +
+        s""""batch_secs":${Mains.secsJson(batchSecs)},"index_rows":${indexRows.mkString("[", ",", "]")},""" +
+        s""""fresh_secs":${Mains.secsJson(freshSecs)},"fresh_gated_secs":${Mains.secsJson(freshGatedSecs)}}"""
+  }
 
   /** Standalone runner for scale profiling: `runMain graft.IngestBench
     * <sfDir>` (set SPARK_GRAFT_INGEST_PROF=1 for the per-stage split)
@@ -36,14 +42,7 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = Mains.session()
-    try {
-      val r = run(spark, sfDir)
-      println(s"[ingestbench] rows=${r.batchRows.mkString(",")}")
-      println(s"[ingestbench] secs=${r.batchSecs.map(s => f"$s%.2f").mkString(",")}")
-      println(s"[ingestbench] index=${r.indexRows.mkString(",")}")
-      println(s"[ingestbench] fresh=${r.freshSecs.map(s => f"$s%.2f").mkString(",")}")
-      println(s"[ingestbench] fresh_gated=${r.freshGatedSecs.map(s => f"$s%.2f").mkString(",")}")
-    } finally spark.stop()
+    try println(run(spark, sfDir).json) finally spark.stop()
   }
 
   /** Docs per timed batch (degraded only when the sf dir is too small to
@@ -113,8 +112,6 @@ object IngestBench {
       // dedupAgainst's short-circuit skips the corpus scan entirely).
       // The same batches probe both modes and nothing is appended, so
       // the two timings compare against an identical index.
-      val freshSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      val freshGatedSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
       val fresh = (0 until 2).map { j =>
         docs.filter(col("doc_id") < bs)
           .select((col("doc_id") + lit(1000000L * (j + 1))).as("doc_id"),
@@ -129,11 +126,10 @@ object IngestBench {
           .write.mode("append").parquet(s"$path/fresh_flags")
         (System.nanoTime() - t0) / 1e9
       }
-      fresh.foreach(b => freshSecs += cycle(b))
+      val freshSecs = fresh.map(cycle)
       IncrementalDedup.writeBucketBloom(spark, path, fpp = 1e-5)
-      fresh.foreach(b => freshGatedSecs += cycle(b))
-      Result(rows.toSeq, secs.toSeq, idxRows.toSeq,
-        freshSecs.toSeq, freshGatedSecs.toSeq)
+      val freshGatedSecs = fresh.map(cycle)
+      Result(rows.toSeq, secs.toSeq, idxRows.toSeq, freshSecs, freshGatedSecs)
     } finally {
       // the scratch index is a full corpus signature set plus per-batch
       // appends — left behind on every bench run it would accumulate

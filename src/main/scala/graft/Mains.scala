@@ -10,19 +10,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * run the same core count and shuffle width. */
 object Mains {
 
-  /** Local cores for every main: `SPARK_GRAFT_CPUS`, default 4. */
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-
-  /** The local session every main runs on: `local[cpus]`, one shuffle
-    * partition per core, UTC session time zone, no UI. */
-  def session(logLevel: String = "WARN"): SparkSession = {
+  /** The local session every main runs on: `local[$SPARK_GRAFT_CPUS]`
+    * (default 4 cores), one shuffle partition per core, UTC session time
+    * zone, no UI, WARN logging. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel(logLevel)
+    spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
@@ -67,4 +66,7 @@ object Mains {
     * machine-parsed JSON. */
   def f3(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+
+  /** Seconds as a JSON array, three decimals each. */
+  def secsJson(xs: Seq[Double]): String = xs.map(f3).mkString("[", ",", "]")
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` of query plans, in two modes:
@@ -21,7 +21,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     require(args.isEmpty || args.length >= 3,
       "usage: Plans [<sfDir> <outDir> <suffix> [key,key,...]]")
-    val spark = Mains.session(logLevel = "ERROR")
+    val spark = Mains.session()
     try {
       if (args.isEmpty) writePlansMd(spark)
       else dumpKeys(spark, args(0), args(1), args(2),
@@ -29,16 +29,13 @@ object Plans {
     } finally spark.stop()
   }
 
-  private def explain(df: DataFrame): String =
-    df.queryExecution.explainString(FormattedMode)
-
   private def dumpKeys(spark: SparkSession, sfDir: String, outDir: String,
       suffix: String, only: Option[Set[String]]): Unit = {
     Files.createDirectories(Paths.get(outDir))
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       if (only.forall(_.contains(name))) {
         val plan =
-          try explain(fn(spark, sfDir))
+          try fn(spark, sfDir).queryExecution.explainString(FormattedMode)
           catch { case e: Throwable => s"PLAN FAILED: $e" }
         Files.write(Paths.get(outDir, s"${name}_$suffix.txt"),
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -160,7 +157,7 @@ object Plans {
     picks.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, dirOverrides.getOrElse(name, dir))
       sb.append(s"\n## $name\n\n$note\n\n```\n")
-      sb.append(explain(df))
+      sb.append(df.queryExecution.explainString(FormattedMode))
       sb.append("```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, MinHashLsh}
 import graft.sources.Tables

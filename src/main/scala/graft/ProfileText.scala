@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Contamination, Dedup, MinHashLsh, SimHash}
@@ -65,48 +64,18 @@ object ProfileText {
     val simFull = timed(reps)(SimHash.nearDupPairs(docs))
 
     // --- dd_containment: prefix-filter candidates → gram-hash verify ---
-    // candidate stage replayed from Dedup.containment:450-520 (the same
-    // df-ranked prefix + positional PPJoin prune, stopping at the
-    // distinct that feeds the verify) — a measurement twin of the
-    // operator's own stage, kept in step with it by hand
-    val t100 = 80L
+    // candidate stage: the operator's own (Dedup.containmentCandidates at
+    // its default threshold 0.8), over a materialized tokenization
     val toks = Contamination.gramSets(docs, 3)
       .select(col("doc_id"), array_sort(col("grams")).as("toks"))
       .withColumn("n", size(col("toks")).cast("long"))
       .localCheckpoint(true)
-    val tokRows = toks.select(col("doc_id"), col("n"),
-      explode(col("toks")).as("token"))
-      .select(col("doc_id"), col("n"), xxhash64(col("token")).as("tok_h"))
-    val dfTab = tokRows.groupBy("tok_h").agg(count(lit(1)).as("df"))
-    val prefLen = (col("n")
-      - floor((lit(t100) * col("n") + lit(99L)) / lit(100.0)).cast("long")
-      + lit(1L))
-    val wPref = Window.partitionBy("doc_id").orderBy(col("df"), col("tok_h"))
-    val ranked = tokRows.join(dfTab, "tok_h")
-      .withColumn("rn", row_number().over(wPref))
-      .select("doc_id", "n", "tok_h", "rn")
-    val prefix = ranked.filter(col("rn") <= prefLen)
-      .select(col("doc_id").as("doc_a"), col("n").as("n_a"),
-        col("tok_h"), col("rn").as("rn_a"))
-    val ctCand = prefix
-      .join(ranked.select(col("doc_id").as("doc_b"), col("n").as("n_b"),
-        col("tok_h"), col("rn").as("rn_b")), "tok_h")
-      .filter(col("doc_a") =!= col("doc_b") &&
-        col("n_b") * lit(100L) >= lit(t100) * col("n_a") &&
-        (lit(1L) + least(col("n_a") - col("rn_a"), col("n_b") - col("rn_b")))
-          * lit(100L) >= lit(t100) * col("n_a"))
-      .select("doc_a", "doc_b").distinct().count()
+    val ctCand = Dedup.containmentCandidates(toks, t100 = 80L).count()
     val ctOut = Dedup.containment(docs).count()
     val ctFull = timed(reps)(Dedup.containment(docs))
 
     // --- dd_cluster: exact collapse → rep-corpus LSH edges → CC ---
-    val clToks = MinHashLsh.tokenize(docs)
-      .withColumn("norm_hash",
-        md5(concat_ws(" ", col("toks")).cast("binary")))
-      .withColumn("rep_id",
-        min(col("doc_id")).over(Window.partitionBy(col("norm_hash"))))
-      .select("doc_id", "rep_id", "toks", "n")
-      .localCheckpoint(true)
+    val clToks = Dedup.clusterTokens(docs).localCheckpoint(true)
     val repToks = clToks.filter(col("doc_id") === col("rep_id"))
       .select("doc_id", "toks", "n").localCheckpoint(true)
     val clReps = repToks.count()

@@ -95,17 +95,11 @@ object RecallProbe {
     // the capped point at ≥ 0.95.
     val plantedPairs: Map[Long, Set[Long]] = qids.map(q =>
       q -> (1 to dups).map(j => 1000000000L + q * 64L + j.toLong).toSet).toMap
-    def nearDupPlantedRecall(cap: Int): Double = {
-      val out = graft.operators.Dedup
-        .embeddingNearDupTopM(augmented, densityCap = cap)
+    def nearDupPlantedRecall(cap: Int): Double = recallOf(collectHits(
+      graft.operators.Dedup.embeddingNearDupTopM(augmented, densityCap = cap)
         .filter(col("vec_id").isin(qids: _*))
-        .select("vec_id", "neighbor_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      val per = plantedPairs.map { case (q, t) =>
-        out.getOrElse(q, Set.empty).intersect(t).size.toDouble / t.size }
-      if (per.isEmpty) 0.0 else per.sum / per.size
-    }
+        .select(col("vec_id").as("q_id"), col("neighbor_id").as("vec_id"))),
+      plantedPairs)
 
     val cells = math.max(2, math.ceil(math.sqrt(n.toDouble)).toInt)
     val cents = Ivf.kmeansCentroids(emb, cells, 8, inputMaterialized = true)

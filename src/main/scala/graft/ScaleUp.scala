@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of a driver-generated sf directory — the data
@@ -110,7 +110,7 @@ object ScaleUp {
     write(replicateDocuments(read("documents"), factor), "documents")
 
     val embeddings = read("embeddings")
-    val dim = embeddings.select(size(col("embedding"))).head.getInt(0)
+    val dim = embeddings.select(size(col("embedding"))).head().getInt(0)
     // Every replica (including r = 0) gets rotation ∘ sign-flip — both
     // orthogonal, so norms and within-replica cosine structure are
     // preserved EXACTLY while cross-replica cosines fall to the
@@ -148,7 +148,7 @@ object ScaleUp {
 
   /** One key-domain offset per shifted id, from the source data itself. */
   private def off(df: DataFrame, c: String): Long =
-    df.agg(max(col(c)).cast("long")).head.getLong(0) + 1L
+    df.agg(max(col(c)).cast("long")).head().getLong(0) + 1L
 
   /** `factor` replicas of `df`: replica r shifts each `shifts` column by
     * r × its offset, then applies `extra`. */

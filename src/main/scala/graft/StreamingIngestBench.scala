@@ -30,10 +30,20 @@ import graft.streaming.StreamingAlerts
 object StreamingIngestBench {
 
   final case class Result(batchRows: Seq[Long], batchSecs: Seq[Double],
-      indexRows: Long, flaggedDups: Long, provider: String,
+      indexRows: Long, flaggedDups: Long,
       stateBatchSecs: Seq[Double], stateRowsTotal: Long,
       stateMemBytes: Long, stateRowsCurve: Seq[Long],
-      stateMemCurve: Seq[Long])
+      stateMemCurve: Seq[Long]) {
+    /** The record as JSON: Bench's `"ingest_streaming"` block. */
+    def json: String =
+      s"""{"batch_rows":${batchRows.mkString("[", ",", "]")},""" +
+        s""""batch_secs":${Mains.secsJson(batchSecs)},"index_rows":$indexRows,""" +
+        s""""flagged_dups":$flaggedDups,"provider":"rocksdb",""" +
+        s""""state_batch_secs":${Mains.secsJson(stateBatchSecs)},""" +
+        s""""state_rows_curve":${stateRowsCurve.mkString("[", ",", "]")},""" +
+        s""""state_mem_curve":${stateMemCurve.mkString("[", ",", "]")},""" +
+        s""""state_rows":$stateRowsTotal,"state_mem_bytes":$stateMemBytes}"""
+  }
 
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
@@ -63,17 +73,7 @@ object StreamingIngestBench {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val spark = Mains.session()
-    try {
-      val r = run(spark, sfDir)
-      println(s"[streamingest] rows=${r.batchRows.mkString(",")}")
-      println(s"[streamingest] secs=${r.batchSecs.map(s => f"$s%.2f").mkString(",")}")
-      println(s"[streamingest] index=${r.indexRows} dups=${r.flaggedDups}")
-      println(s"[streamingest] state: provider=${r.provider} " +
-        s"rows=${r.stateRowsTotal} mem=${r.stateMemBytes} " +
-        s"secs=${r.stateBatchSecs.map(s => f"$s%.2f").mkString(",")}")
-      println(s"[streamingest] state curves: rows=" +
-        s"${r.stateRowsCurve.mkString(",")} mem=${r.stateMemCurve.mkString(",")}")
-    } finally spark.stop()
+    try println(run(spark, sfDir).json) finally spark.stop()
   }
 
   def run(spark: SparkSession, sfDir: String, nBatches: Int = 8,
@@ -162,8 +162,8 @@ object StreamingIngestBench {
         else p.stateOperators.map(_.memoryUsedBytes).max)
       val stateRows = if (rowsCurve.isEmpty) 0L else rowsCurve.max
       val stateMem = if (memCurve.isEmpty) 0L else memCurve.max
-      Result(batchRows, batchSecs, idxRows, dups, RocksProvider,
-        stateSecs, stateRows, stateMem, rowsCurve, memCurve)
+      Result(batchRows, batchSecs, idxRows, dups, stateSecs, stateRows,
+        stateMem, rowsCurve, memCurve)
     } finally {
       oldProvider match {
         case Some(v) => spark.conf.set(confKey, v)

@@ -496,60 +496,7 @@ object Dedup {
       // materializes the tokenization inside its own job; the former
       // eager checkpoint paid a standalone job for the same blocks
       .localCheckpoint(false)
-    // the whole candidate stage runs on xxhash64(gram) LONG keys, never
-    // the ~30-char gram strings: same gram ⇒ same hash, so no candidate
-    // is ever lost, and a (vanishingly rare) cross-gram collision only
-    // adds a candidate the exact verify rejects — results identical,
-    // while the df join + window + candidate join shuffle/sort 8-byte
-    // keys instead of strings (measured 4.7 s → ~1 s on the df join at
-    // the 2.6M-gram sf1 corpus)
-    val tokRows = toks.select(col("doc_id"), col("n"),
-      explode(col("toks")).as("token"))
-      .select(col("doc_id"), col("n"), xxhash64(col("token")).as("tok_h"))
-    val dfTab = tokRows.groupBy("tok_h").agg(count(lit(1)).as("df"))
-    // rebuild each doc's tokens ordered by (df, tok_h); keep the
-    // n − ⌈τ·n⌉ + 1 rarest as probe keys (exact in double: values ≪ 2^53)
-    // (rank via a row_number window, not a per-doc collect_list +
-    // array_sort + slice rebuild: same one shuffle on doc_id, none of
-    // the array churn — measured 3.9 s → 2.5 s at sf0.1)
-    val prefLen = (col("n")
-      - floor((lit(t100) * col("n") + lit(99L)) / lit(100.0)).cast("long")
-      + lit(1L))
-    val wPref = Window.partitionBy("doc_id").orderBy(col("df"), col("tok_h"))
-    // every doc's tokens ranked in the ONE global (df, tok_h) order; both
-    // candidate-join sides read this frame, so ranks are comparable across
-    // docs. Deliberately NOT materialized: the df join + window runs once
-    // per join side, but stays fully pipelined into the candidate join —
-    // measured faster at both scales than a localCheckpoint barrier
-    // (sf0.1 3.6→2.6 s), and the positional prune it feeds cuts the sf1
-    // candidate stage ~35% (10.4→6.9 s same-session vs the rank-free form)
-    val ranked = tokRows.join(dfTab, "tok_h")
-      .withColumn("rn", row_number().over(wPref))
-      .select("doc_id", "n", "tok_h", "rn") // df served its ordering role
-    val prefix = ranked
-      .filter(col("rn") <= prefLen)
-      .select(col("doc_id").as("doc_a"), col("n").as("n_a"),
-        col("tok_h"), col("rn").as("rn_a"))
-    // two exact candidate prunes INSIDE the join, before the distinct:
-    //  - size bound: A∩B ≤ |B|, so containment ≥ τ needs |B|·100 ≥ τ₁₀₀·|A|
-    //    (~25% of candidate volume on the salted sf1 corpus);
-    //  - PPJoin positional bound: a token matching at 1-based ranks
-    //    (rn_a, rn_b) caps the overlap at 1 + min(n_a−rn_a, n_b−rn_b) —
-    //    every other common token sorts AFTER it on both sides in the
-    //    shared global order. A pair with true overlap ≥ α = ⌈τ·n_a⌉
-    //    always survives: its first common token (which prefix filtering
-    //    guarantees is inside A's prefix) has all common tokens at ranks
-    //    ≥ (rn_a, rn_b), so that match's bound ≥ α. Hash collisions only
-    //    loosen the bound (extra "common" rows), never tighten it — zero
-    //    false negatives, and the exact verify still decides.
-    val cand = prefix
-      .join(ranked.select(col("doc_id").as("doc_b"), col("n").as("n_b"),
-        col("tok_h"), col("rn").as("rn_b")), "tok_h")
-      .filter(col("doc_a") =!= col("doc_b") &&
-        col("n_b") * lit(100L) >= lit(t100) * col("n_a") &&
-        (lit(1L) + least(col("n_a") - col("rn_a"), col("n_b") - col("rn_b")))
-          * lit(100L) >= lit(t100) * col("n_a"))
-      .select("doc_a", "doc_b").distinct()
+    val cand = containmentCandidates(toks, t100)
     // verify on sorted 64-bit GRAM-HASH arrays, not the ~30-char gram
     // strings (the dd_cluster recipe, r11): 8-byte elements and primitive
     // compares through the per-pair joins. Exactness is preserved, not
@@ -615,6 +562,68 @@ object Dedup {
       .orderBy("contained_id", "container_id")
   }
 
+  /** dd_containment's candidate stage over sorted per-doc gram sets
+    * (`doc_id`, `toks`, `n`): every distinct (doc_a, doc_b) that can reach
+    * containment ≥ `t100`/100 of doc_a, by df-ranked prefix filtering with
+    * the size and PPJoin positional prunes. ProfileText times this same
+    * stage. */
+  private[graft] def containmentCandidates(toks: DataFrame, t100: Long): DataFrame = {
+    // the whole candidate stage runs on xxhash64(gram) LONG keys, never
+    // the ~30-char gram strings: same gram ⇒ same hash, so no candidate
+    // is ever lost, and a (vanishingly rare) cross-gram collision only
+    // adds a candidate the exact verify rejects — results identical,
+    // while the df join + window + candidate join shuffle/sort 8-byte
+    // keys instead of strings (measured 4.7 s → ~1 s on the df join at
+    // the 2.6M-gram sf1 corpus)
+    val tokRows = toks.select(col("doc_id"), col("n"),
+      explode(col("toks")).as("token"))
+      .select(col("doc_id"), col("n"), xxhash64(col("token")).as("tok_h"))
+    val dfTab = tokRows.groupBy("tok_h").agg(count(lit(1)).as("df"))
+    // rebuild each doc's tokens ordered by (df, tok_h); keep the
+    // n − ⌈τ·n⌉ + 1 rarest as probe keys (exact in double: values ≪ 2^53)
+    // (rank via a row_number window, not a per-doc collect_list +
+    // array_sort + slice rebuild: same one shuffle on doc_id, none of
+    // the array churn — measured 3.9 s → 2.5 s at sf0.1)
+    val prefLen = (col("n")
+      - floor((lit(t100) * col("n") + lit(99L)) / lit(100.0)).cast("long")
+      + lit(1L))
+    val wPref = Window.partitionBy("doc_id").orderBy(col("df"), col("tok_h"))
+    // every doc's tokens ranked in the ONE global (df, tok_h) order; both
+    // candidate-join sides read this frame, so ranks are comparable across
+    // docs. Deliberately NOT materialized: the df join + window runs once
+    // per join side, but stays fully pipelined into the candidate join —
+    // measured faster at both scales than a localCheckpoint barrier
+    // (sf0.1 3.6→2.6 s), and the positional prune it feeds cuts the sf1
+    // candidate stage ~35% (10.4→6.9 s same-session vs the rank-free form)
+    val ranked = tokRows.join(dfTab, "tok_h")
+      .withColumn("rn", row_number().over(wPref))
+      .select("doc_id", "n", "tok_h", "rn") // df served its ordering role
+    val prefix = ranked
+      .filter(col("rn") <= prefLen)
+      .select(col("doc_id").as("doc_a"), col("n").as("n_a"),
+        col("tok_h"), col("rn").as("rn_a"))
+    // two exact candidate prunes INSIDE the join, before the distinct:
+    //  - size bound: A∩B ≤ |B|, so containment ≥ τ needs |B|·100 ≥ τ₁₀₀·|A|
+    //    (~25% of candidate volume on the salted sf1 corpus);
+    //  - PPJoin positional bound: a token matching at 1-based ranks
+    //    (rn_a, rn_b) caps the overlap at 1 + min(n_a−rn_a, n_b−rn_b) —
+    //    every other common token sorts AFTER it on both sides in the
+    //    shared global order. A pair with true overlap ≥ α = ⌈τ·n_a⌉
+    //    always survives: its first common token (which prefix filtering
+    //    guarantees is inside A's prefix) has all common tokens at ranks
+    //    ≥ (rn_a, rn_b), so that match's bound ≥ α. Hash collisions only
+    //    loosen the bound (extra "common" rows), never tighten it — zero
+    //    false negatives, and the exact verify still decides.
+    prefix
+      .join(ranked.select(col("doc_id").as("doc_b"), col("n").as("n_b"),
+        col("tok_h"), col("rn").as("rn_b")), "tok_h")
+      .filter(col("doc_a") =!= col("doc_b") &&
+        col("n_b") * lit(100L) >= lit(t100) * col("n_a") &&
+        (lit(1L) + least(col("n_a") - col("rn_a"), col("n_b") - col("rn_b")))
+          * lit(100L) >= lit(t100) * col("n_a"))
+      .select("doc_a", "doc_b").distinct()
+  }
+
   /** Full exact dedup-cluster sweep at `threshold`, with exact-duplicate
     * collapse first: docs sharing a normalized token set are represented
     * by their min doc_id, the (much smaller) representative corpus runs
@@ -638,12 +647,7 @@ object Dedup {
     // window min, AND — through exactPairsFromToks — the minhash
     // signatures and the token-verify joins. Materialized once; no stage
     // re-scans or re-tokenizes the corpus.
-    val toks = MinHashLsh.tokenize(documents)
-      .withColumn("norm_hash",
-        md5(concat_ws(" ", col("toks")).cast("binary")))
-      .withColumn("rep_id",
-        min(col("doc_id")).over(Window.partitionBy(col("norm_hash"))))
-      .select("doc_id", "rep_id", "toks", "n")
+    val toks = clusterTokens(documents)
       // LAZY (r20): the banding guard inside exactPairsFromToks is the
       // first action and materializes this frame in the same job
       .localCheckpoint(false)
@@ -661,6 +665,17 @@ object Dedup {
       .withColumn("keep", col("doc_id") === col("component"))
       .orderBy("doc_id")
   }
+
+  /** dd_cluster's tokenization: (doc_id, rep_id, toks, n), rep_id the
+    * min doc_id among docs with the same sorted distinct token set (md5
+    * norm hash). ProfileText times the cluster stages over this frame. */
+  private[graft] def clusterTokens(documents: DataFrame): DataFrame =
+    MinHashLsh.tokenize(documents)
+      .withColumn("norm_hash",
+        md5(concat_ws(" ", col("toks")).cast("binary")))
+      .withColumn("rep_id",
+        min(col("doc_id")).over(Window.partitionBy(col("norm_hash"))))
+      .select("doc_id", "rep_id", "toks", "n")
 
   /** Cross-document repeated-substring spans — the POSITION-RESOLVED
     * form of substring-level dedup (Lee et al. 2022, "Deduplicating

@@ -13,6 +13,12 @@ import org.apache.spark.sql.SparkSession
   * analysis, planning, codegen, broadcast builds. */
 final case class Jobs(count: Int, seconds: Double)
 
+object Jobs {
+  /** Counts that could not be taken: a failed run, or a listener bus
+    * that did not drain in time. */
+  val Unknown: Jobs = Jobs(-1, -1.0)
+}
+
 /** Counts the Spark jobs a body runs, exactly and without sleeping.
   *
   * The body runs under a job group of its own, so a job counts when its
@@ -30,7 +36,9 @@ final case class Jobs(count: Int, seconds: Double)
   * the counts are complete once the bus is empty. A failed job's end may
   * arrive later; its seconds are then left out, but it still counts.
   * Each probe has its own listener, so nothing a body leaves behind
-  * reaches a later probe.
+  * reaches a later probe. A bus that has not drained within 10 s gives
+  * [[Jobs.Unknown]] beside the body's result, never a throw: a slow
+  * listener elsewhere must not cost the caller the result it timed.
   */
 object JobProbe {
 
@@ -53,8 +61,10 @@ object JobProbe {
       sc.setLocalProperty(SparkContext.SPARK_JOB_GROUP_ID, group)
       val out =
         try body finally sc.setLocalProperty(SparkContext.SPARK_JOB_GROUP_ID, previous)
-      drain(spark)
-      (out, Jobs(started.size, millis.sum / 1e3))
+      val jobs =
+        try { drain(spark); Jobs(started.size, millis.sum / 1e3) }
+        catch { case _: java.util.concurrent.TimeoutException => Jobs.Unknown }
+      (out, jobs)
     } finally sc.removeSparkListener(listener)
   }
 

@@ -1,8 +1,9 @@
 package graft
 
-import java.util.concurrent.CountDownLatch
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
-import org.apache.spark.sql.graft.JobProbe
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.graft.{JobProbe, Jobs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `JobProbe` counts exactly the Spark jobs its body runs, with no
@@ -74,6 +75,26 @@ class JobProbeSpec extends AnyFunSuite {
       spark.range(10)
         .selectExpr("IF(id = 7, raise_error('task failed'), id)").collect()
     })
+    assert(JobProbe(spark)(spark.range(10).collect())._2.count === 1)
+  }
+
+  test("a listener bus that does not drain gives Jobs.Unknown beside the body's result") {
+    // a listener stuck on the first job start holds the shared queue past
+    // the probe's 10 s drain timeout
+    val release = new CountDownLatch(1)
+    val stuck = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        release.await(60, TimeUnit.SECONDS)
+    }
+    spark.sparkContext.addSparkListener(stuck)
+    try {
+      val (rows, jobs) = JobProbe(spark)(spark.range(10).collect())
+      assert(rows.length === 10)
+      assert(jobs === Jobs.Unknown)
+    } finally {
+      release.countDown()
+      spark.sparkContext.removeSparkListener(stuck)
+    }
     assert(JobProbe(spark)(spark.range(10).collect())._2.count === 1)
   }
 }

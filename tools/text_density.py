@@ -11,8 +11,8 @@ containing it): {"profile":"text_dedup","docs":N,"minhash":{...},...}.
 Points are sorted by corpus size; the report prints per-point candidate
 DENSITY (candidates / docs) and per-decade time slopes per family.
 
-The corpus generator (ProfileText.replicateDocs = ScaleUp's salt
-scheme) holds TRUE duplicate density constant by construction, so any
+The corpus generator (ScaleUp.replicateDocuments, ScaleUp's salt
+scheme, which ProfileText calls) holds TRUE duplicate density constant by construction, so any
 density growth measured here is the algorithm's own.
 
 Gates (exit 1 on violation):
