@@ -150,7 +150,14 @@ object Plans {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the headline queries\n\n")
     sb.append("Generated by `sbt 'runMain graft.Plans'` at sf0.01; the\n")
-    sb.append("properties called out here are pinned by PlanQualitySpec.\n")
+    sb.append("properties called out here are pinned by PlanQualitySpec.\n\n")
+    sb.append("Every sf0.01 table is one file split, so `Tables.table` returns\n")
+    sb.append("each table read as one partition (`Coalesce 1` over the scan), and\n")
+    sb.append("the aggregates, windows and sorts above those reads plan no\n")
+    sb.append("exchange; the exchanges left sit above a checkpoint (`Scan\n")
+    sb.append("ExistingRDD`). The exchanges the notes name are those of a read of\n")
+    sb.append("several splits (sf0.1's lineitem, a `ScaleUp` copy): PlanQualitySpec\n")
+    sb.append("pins them on such reads.\n")
     // sim_ivf dumps at sf0.1: nprobe < cells there, so the pinned
     // PartitionFilters evidence shows a strict-subset INSET
     val dirOverrides = Map("sim_ivf" -> "/root/testdata/sf0.1")

@@ -165,8 +165,9 @@ object SparkEntry {
     // key's own orderBy supplies the presentation order.
     "al_join_features" -> ((s, dir) => {
       // LAZY: the broadcast build of the alerts side is the first action
-      // and materializes the feature blocks; the probe side reads them
-      val features = TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(s, dir))
+      // and materializes the feature blocks; the probe side reads them.
+      // Keyed first, so the join keeps its partitions over a one-split read.
+      val features = TimeSeries.rollingFeaturesUnsorted(TimeSeries.baseByKey(s, dir))
         .localCheckpoint(false)
       Alerts.joinFeatures(AnomalyRules.thresholdAlertsUnsorted(features), features)
     }),

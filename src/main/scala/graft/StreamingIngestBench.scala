@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ScopedConf
 
 import graft.operators.IncrementalDedup
 import graft.sources.Tables
@@ -48,6 +49,8 @@ object StreamingIngestBench {
   private val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+
   /** Per-trigger wall seconds from a progress record. `durationMs` is a
     * java Map whose `triggerExecution` phase can be ABSENT on some
     * trigger shapes — the former bare `.get(...)` NPE'd there (r16
@@ -86,8 +89,10 @@ object StreamingIngestBench {
     val pool = bs * nBatches
     val rootDir = java.nio.file.Files.createTempDirectory("graft-stream-ingest")
     val root = rootDir.toString
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val oldProvider = spark.conf.getOption(confKey)
+    // both legs run on a clone of the caller's session with the RocksDB
+    // provider set on the clone only: the caller's conf, and with it
+    // Tables.parquet's cache key, is the same before, during and after
+    val streaming = ScopedConf.session(spark, ProviderKey -> RocksProvider)
     try {
       IncrementalDedup.saveSignatures(docs.filter(col("doc_id") >= pool),
         s"$root/index", parts = 256, sigParts = 64)
@@ -101,11 +106,10 @@ object StreamingIngestBench {
         docs.filter(col("doc_id") >= i * bs && col("doc_id") < (i + 1) * bs)
           .select("doc_id", "text")
           .coalesce(1).write.parquet(s"$root/incoming/b=$i")
-      spark.conf.set(confKey, RocksProvider)
 
       // --- leg 1: the foreachBatch ingest loop (stateless sink; the
       // provider conf rides along so the whole record is one regime) ---
-      val stream = spark.readStream
+      val stream = streaming.readStream
         .schema("doc_id LONG, text STRING")
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
@@ -144,7 +148,7 @@ object StreamingIngestBench {
       // any legacy nanos annotation to what Spark itself writes)
       val tsType = spark.read.parquet(s"$root/events_in")
         .schema("ts").dataType
-      val ev = StreamingAlerts.replayEvents(spark, s"$root/events_in", tsType)
+      val ev = StreamingAlerts.replayEvents(streaming, s"$root/events_in", tsType)
       val q2 = StreamingAlerts.windowedCounts(ev).writeStream
         .format("noop")
         .outputMode("append")
@@ -165,10 +169,6 @@ object StreamingIngestBench {
       Result(batchRows, batchSecs, idxRows, dups, stateSecs, stateRows,
         stateMem, rowsCurve, memCurve)
     } finally {
-      oldProvider match {
-        case Some(v) => spark.conf.set(confKey, v)
-        case None => spark.conf.unset(confKey)
-      }
       org.apache.commons.io.FileUtils.deleteQuietly(rootDir.toFile)
       ()
     }

@@ -277,7 +277,9 @@ object IsolationForest {
     // otherwise materialize rollingFeatures' presentation sort — a global
     // exchange+sort whose order neither fit (hash-ordered sample) nor
     // score (re-sorted output) uses. Measured 1.9 -> 1.1 s on this stage.
-    val features = TimeSeries.rollingFeaturesUnsorted(TimeSeries.base(spark, dir))
+    // Partitioned on the window key first, so fit and scoring run one
+    // task per partition even when the events read is one split.
+    val features = TimeSeries.rollingFeaturesUnsorted(TimeSeries.baseByKey(spark, dir))
       // LAZY (r20): fit's training-sample collect is the first action
       // and materializes the feature blocks in its own job; scoring
       // re-reads the checkpointed RDD exactly as before

@@ -39,6 +39,15 @@ object TimeSeries {
       .withColumn("ts_us", unix_micros(col("ts")))
       .select("event_id", "user_id", "ts_us", "event_type", "value")
 
+  /** [[base]] hash-partitioned on `user_id` across the session's shuffle
+    * partitions: the exchange the per-key windows plan over a multi-split
+    * read anyway, placed ahead of them. For consumers that checkpoint the
+    * window output and then run heavy work on it: over a one-split table
+    * read (see Tables' Scale notes) the windows would otherwise need no
+    * exchange, and the checkpoint would hold one partition. */
+  def baseByKey(spark: SparkSession, dir: String): DataFrame =
+    base(spark, dir).repartition(col("user_id"))
+
   private def keyOrder: WindowSpec =
     Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
 

@@ -15,12 +15,23 @@ import org.apache.spark.sql.graft.{FileRelations, ScopedConf}
   * src/pipeline_batch.py:13 `load_raw_data` — CSV/Parquet ingestion).
   *
   * Scale notes: every parquet read in graft.sources and graft.operators
-  * goes through [[parquet]], which returns the same declarative scan as
-  * `spark.read.parquet`, so Catalyst pushes filters/projections into the
-  * scan and prunes partitions as before. Dimension tables (region,
-  * nation, supplier, part, customer) are small relative to the facts and
-  * should be broadcast at join sites — helpers here never force a
-  * shuffle.
+  * goes through [[parquet]] (directly or through [[table]]), which
+  * returns the declarative scan `spark.read.parquet` builds, so Catalyst
+  * pushes filters/projections into the scan and prunes partitions as
+  * before. A table read ([[table]]: every named loader below) differs in
+  * one case: when Spark would plan its scan as one file split (one
+  * unpartitioned file within `FilePartition.maxSplitBytes` of the
+  * session's `spark.sql.files.*` conf: 4 MB, `openCostInBytes`, at the
+  * defaults), the scan is returned under a `coalesce(1)`. Its output then
+  * reports a single
+  * partition, so `EnsureRequirements` inserts no exchange for the
+  * aggregates, windows, sorts and sort-merge joins above it, and a query
+  * over such tables runs as one Spark job rather than one per AQE stage
+  * (the data already sat in one task). A larger file, a multi-file
+  * directory or a lowered `maxPartitionBytes` gets exactly the plain
+  * read's plan. Dimension tables (region, nation, supplier, part,
+  * customer) are small relative to the facts and should be broadcast at
+  * join sites — helpers here never force a shuffle.
   *
   * What [[parquet]] caches: a plain read lists the files and runs a
   * one-task Spark job to infer the schema from a footer (93–103 ms per
@@ -55,21 +66,38 @@ object Tables {
     * unchanged (see Scale notes above). A missing path, a glob or a
     * failed walk takes the plain read, so errors are those of
     * `spark.read.parquet`; a read that throws caches nothing. */
-  def parquet(spark: SparkSession, path: String): DataFrame = {
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    open(spark, path, onePartition = false)
+
+  /** `<dir>/<name>.parquet` through the front door, as one partition when
+    * Spark would read it as one split (see Scale notes above). */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    open(spark, s"$dir/$name.parquet", onePartition = true)
+
+  private def open(spark: SparkSession, path: String, onePartition: Boolean): DataFrame = {
     val files = fingerprint(spark, path)
     val key = (path, spark.conf.getAll)
     val cache = resolved(spark)
     files.flatMap(f => Option(cache.get(key)).filter(_.files == f)) match {
-      case Some(hit) => FileRelations.reopen(spark, hit.relation)
+      case Some(hit) => hit.open(spark, onePartition)
       case None =>
         val df = spark.read.parquet(path)
-        for (f <- files; r <- FileRelations.of(df)) cache.put(key, Resolved(f, r))
-        df
+        val fresh = for (f <- files; r <- FileRelations.of(df)) yield Resolved(f, r)
+        fresh.foreach(cache.put(key, _))
+        fresh.filter(onePartition && _.oneSplit).fold(df)(_.open(spark, onePartition))
     }
   }
 
+  /** A resolved relation and the fingerprint it was resolved under.
+    * Whether its scan is one split is decided once, at the first table
+    * read of it, under the conf its cache key holds. */
   private final case class Resolved(files: Vector[(String, Long, Long)],
-      relation: LogicalRelation)
+      relation: LogicalRelation) {
+    lazy val oneSplit: Boolean = FileRelations.oneSplit(relation)
+
+    def open(spark: SparkSession, onePartition: Boolean): DataFrame =
+      FileRelations.reopen(spark, relation, onePartition && oneSplit)
+  }
 
   private val resolved = new SessionScoped(
     new java.util.concurrent.ConcurrentHashMap[(String, Map[String, String]), Resolved]())
@@ -89,9 +117,6 @@ object Tables {
         .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
         .toVector.sorted
     }.toOption
-
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    parquet(spark, s"$dir/$name.parquet")
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")

@@ -39,10 +39,15 @@ class FloatDotProductSpec extends AnyFunSuite {
   }
 
   test("expression stays inside whole-stage codegen") {
-    val e = Tables.embeddings(spark, sf)
-    val plan = e.select(
+    def plan(s: org.apache.spark.sql.SparkSession) = Tables.embeddings(s, sf).select(
         ColumnBridge.floatDot(col("embedding"), col("embedding")).as("d"))
       .queryExecution.executedPlan.toString
-    assert(plan.contains("*(1) Project"), plan.take(500)) // *(n) marks whole-stage codegen
+    // a multi-split read: the project fuses with the scan's stage
+    val multi = plan(TestSpark.multiSplit)
+    assert(multi.contains("*(1) Project"), multi.take(500)) // *(n) marks whole-stage codegen
+    // a one-split read: the coalesce(1) above the scan ends stage 1, and
+    // the project is codegen'd in stage 2 above it
+    val one = plan(spark)
+    assert(one.contains("*(2) Project") && one.contains("Coalesce 1"), one.take(500))
   }
 }

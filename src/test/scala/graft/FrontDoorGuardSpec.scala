@@ -14,7 +14,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The same scan keeps one session front door: a `SparkSession.builder`
   * anywhere in src/main/scala outside `Mains.session` fails with its
-  * file and line. */
+  * file and line. And no session conf is written: a `conf.set(`,
+  * `conf.unset(` or `setConf(` anywhere in src/main/scala outside
+  * `ScopedConf` (which sets keys on a clone only) fails with its file and
+  * line. A written key changes `Tables.parquet`'s cache key for every
+  * read on that session, and leaks into every query planned while it is
+  * set. */
 class FrontDoorGuardSpec extends AnyFunSuite {
 
   private val root = new File("src/main/scala/graft")
@@ -25,6 +30,8 @@ class FrontDoorGuardSpec extends AnyFunSuite {
     """\bread\b\s*(\.\s*\w+\s*\((?:[^()]|\([^()]*\))*\)\s*)*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""".r
 
   private val SessionBuilder = """\bSparkSession\s*\.\s*builder\b""".r
+
+  private val ConfWrite = """\bconf\s*\.\s*(?:set|unset)\s*\(|\bsetConf\s*\(""".r
 
   /** `src` with comments blanked out, line breaks kept. */
   private def code(src: String): String = {
@@ -44,10 +51,11 @@ class FrontDoorGuardSpec extends AnyFunSuite {
       if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil
     }
 
-  /** Line range of `Tables.parquet`'s body, the one exempt read. */
+  /** Line range of `Tables.open`'s body, the one exempt read (behind
+    * `Tables.parquet` and `Tables.table`). */
   private def frontDoor(tables: File): Range = {
     val lines = scala.io.Source.fromFile(tables, "UTF-8").getLines().toIndexedSeq
-    val start = lines.indexWhere(_.trim.startsWith("def parquet(spark: SparkSession, path: String)"))
+    val start = lines.indexWhere(_.trim.startsWith("private def open(spark: SparkSession, path: String,"))
     assert(start >= 0, s"no front door in $tables")
     val end = lines.indexWhere(_ == "  }", start)
     (start + 1) to (end + 1)
@@ -74,6 +82,34 @@ class FrontDoorGuardSpec extends AnyFunSuite {
     assert(own.size === 1, s"Mains.scala should hold exactly one session builder: $own")
     assert(stray.isEmpty, "sessions built outside Mains.session (use it):\n" +
       stray.map { case (f, l) => s"  ${main.toPath.relativize(f.toPath)}:$l" }.mkString("\n"))
+  }
+
+  test("no session conf write in src/main/scala outside ScopedConf") {
+    val main = new File("src/main/scala")
+    val scoped = new File(main, "org/apache/spark/sql/graft/ScopedConf.scala")
+    val all = scalaFiles(main).flatMap(f => sites(f, ConfWrite).map(f -> _))
+    val (own, stray) = all.partition(_._1.getCanonicalPath == scoped.getCanonicalPath)
+    assert(own.size === 1, s"ScopedConf.scala should hold exactly one conf write: $own")
+    assert(stray.isEmpty, "session conf written outside ScopedConf (plan on a " +
+      "ScopedConf.session clone):\n" +
+      stray.map { case (f, l) => s"  ${main.toPath.relativize(f.toPath)}:$l" }.mkString("\n"))
+  }
+
+  test("the conf-write scan catches set, unset and setConf, and skips reads and comments") {
+    val f = java.nio.file.Files.createTempFile("guard", ".scala")
+    java.nio.file.Files.write(f, Seq(
+      "// spark.conf.set(k, v) in a comment",
+      "/** spark.conf.unset(k) in a doc */",
+      "spark.conf.set(\"k\", \"v\")",
+      "spark.conf",
+      "  .unset(\"k\")",
+      "spark.sqlContext.setConf(\"k\", \"v\")",
+      "val v = spark.conf.get(\"k\")",
+      "val o = spark.conf.getOption(\"k\")",
+      "val b = SparkSession.builder().config(\"k\", \"v\")",
+      "sparkConf.set(\"k\", \"v\")",
+      "scoped.conf.set(k, v)").mkString("\n").getBytes("UTF-8"))
+    assert(sites(f.toFile, ConfWrite) === Seq(3, 4, 6, 11))
   }
 
   test("the scan catches the read forms it claims to, and skips comments") {

@@ -7,11 +7,12 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.JobProbe
+import org.apache.spark.sql.graft.{JobProbe, ScopedConf}
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,7 +24,14 @@ import graft.sources.Tables
   * schema and rows as a fresh `spark.read.parquet` of the same files —
   * across appends, partition drops, schema-changing overwrites and conf
   * changes that alter inference — and a repeated open of unchanged files
-  * runs no Spark job. */
+  * runs no Spark job.
+  *
+  * The one-split route: a `Tables.table` read that Spark plans as one
+  * file split comes back as one partition (`coalesce(1)` over the scan),
+  * so a query over such tables plans no exchange and runs as one job;
+  * above the split bound, for a multi-file table, and for every other
+  * front-door read (the alert lake, the signature index), the plan is a
+  * plain read's. */
 class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.{sf, spark}
 
@@ -66,6 +74,24 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   /** Spark jobs `body` runs. */
   private def jobsOf(body: => Unit): Int = JobProbe(spark)(body)._2.count
+
+  /** Whether `df`'s analyzed plan holds the one-partition wrapper. */
+  private def onePartition(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.exists {
+      case r: Repartition => r.numPartitions == 1 && !r.shuffle
+      case _ => false
+    }
+
+  /** `df`'s physical plan with expression and plan ids blanked, to
+    * compare plans of two separately analyzed frames. */
+  private def planShape(df: DataFrame): String =
+    df.queryExecution.executedPlan.toString
+      .replaceAll("#\\d+L?", "#").replaceAll("plan_id=\\d+", "plan_id=")
+
+  /** A per-source row count over `frame(session)`: an aggregate whose
+    * exchange is the multi-partition plan's only one. */
+  private def perSource(frame: SparkSession => DataFrame)(s: SparkSession): DataFrame =
+    frame(s).groupBy("source").count()
 
   /** Write one file with the parquet example writer: no Spark schema in
     * its footer, so inference reads the parquet types themselves, as for
@@ -212,6 +238,103 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val before = spark.conf.getAll
     graft.operators.Pipeline.detectAllShared(spark, sf).collect()
     assert(spark.conf.getAll === before)
+  }
+
+  test("a one-split table reads as one partition; a query over it runs as one job") {
+    SparkEntry.queries("q_pricing_summary")(spark, sf).count()
+    SparkEntry.queries("ts_rolling")(spark, sf).count()
+    def run(key: String): Int =
+      jobsOf(SparkEntry.queries(key)(spark, sf).write.format("noop").mode("overwrite").save())
+    // aggregate + global sort over lineitem; per-key window + global sort
+    // over events: no exchange, so no stage boundary and no range sample
+    assert(run("q_pricing_summary") === 1)
+    assert(run("ts_rolling") === 1)
+    val p = SparkEntry.queries("ts_rolling")(spark, sf).queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange"), p)
+    assert(onePartition(Tables.table(spark, sf, "lineitem")))
+  }
+
+  test("above the split bound a table read plans as a plain read") {
+    val docs = s"$sf/documents.parquet"
+    val split = TestSpark.multiSplit
+    assert(!onePartition(Tables.table(split, sf, "documents")))
+    val viaTable = perSource(Tables.table(_, sf, "documents"))(split)
+    val plain = perSource(_.read.parquet(docs))(split)
+    assert(planShape(viaTable) === planShape(plain))
+    assert(planShape(viaTable).contains("Exchange hashpartitioning(source"), planShape(viaTable))
+    // the same file at the default split size: one partition, no exchange
+    val one = perSource(Tables.table(_, sf, "documents"))(spark)
+    assert(onePartition(Tables.table(spark, sf, "documents")))
+    assert(!planShape(one).contains("Exchange"), planShape(one))
+    assert(rows(one) === rows(plain))
+  }
+
+  test("a multi-file table directory plans as a plain read") {
+    val dir = tmp()
+    Tables.table(spark, sf, "documents").repartition(3)
+      .write.parquet(s"$dir/documents.parquet")
+    val viaTable = perSource(Tables.table(_, dir, "documents"))(spark)
+    val plain = perSource(_.read.parquet(s"$dir/documents.parquet"))(spark)
+    assert(!onePartition(Tables.table(spark, dir, "documents")))
+    assert(planShape(viaTable) === planShape(plain))
+    assert(rows(viaTable) === rows(plain))
+  }
+
+  test("a conf change flips the one-split verdict; the cache is keyed on the conf") {
+    val dir = tmp()
+    Tables.table(spark, sf, "customer").write.parquet(s"$dir/customer.parquet")
+    assert(jobsOf(assert(onePartition(Tables.table(spark, dir, "customer")))) === 1)
+    val key = "spark.sql.files.maxPartitionBytes"
+    spark.conf.set(key, "1024")
+    try {
+      // a new cache key: one schema-inference job, then the plain plan
+      assert(jobsOf(assert(!onePartition(Tables.table(spark, dir, "customer")))) === 1)
+      assert(jobsOf(assert(!onePartition(Tables.table(spark, dir, "customer")))) === 0)
+    } finally spark.conf.unset(key)
+    assert(jobsOf(assert(onePartition(Tables.table(spark, dir, "customer")))) === 0)
+  }
+
+  test("front-door reads that are not table reads keep the plain plan") {
+    // the same one-split file through Tables.parquet: no wrapper
+    val path = s"$sf/customer.parquet"
+    assert(onePartition(Tables.table(spark, sf, "customer")))
+    assert(!onePartition(Tables.parquet(spark, path)))
+    assert(planShape(Tables.parquet(spark, path).groupBy("c_mktsegment").count()) ===
+      planShape(spark.read.parquet(path).groupBy("c_mktsegment").count()))
+    // the alert lake and the signature index
+    val p = lake()
+    assert(!onePartition(AlertStore.read(spark, p)))
+    assert(planShape(AlertStore.read(spark, p).groupBy("rule_name").count()) ===
+      planShape(spark.read.parquet(p).groupBy("rule_name").count()))
+    val idx = s"${tmp()}/index"
+    graft.operators.IncrementalDedup.saveSignatures(
+      Tables.documents(spark, sf), idx, parts = 4, sigParts = 2)
+    val sigs = graft.operators.IncrementalDedup.openSignatures(spark, idx).sigs
+    assert(!onePartition(sigs), sigs.queryExecution.analyzed)
+  }
+
+  test("StreamingIngestBench writes no session conf and strands no resolved relation") {
+    val dir = tmp()
+    Tables.eventsRaw(spark, sf).write.parquet(s"$dir/events.parquet")
+    assert(jobsOf(Tables.events(spark, dir)) === 1)
+    val before = spark.conf.getAll
+    // the caller's conf as each of the run's jobs starts: never written,
+    // not even for the duration of the run
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(spark.conf.getAll.get(provider))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      StreamingIngestBench.run(spark, sf, nBatches = 2)
+      JobProbe.drain(spark)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(!seen.isEmpty)
+    assert(seen.toArray.toSet === Set(before.get(provider)))
+    assert(spark.conf.getAll === before)
+    assert(jobsOf(Tables.events(spark, dir)) === 0)
   }
 
   test("a queryRange over an unchanged lake runs exactly one job") {

@@ -12,9 +12,22 @@ import graft.sources.Tables
   * scale design (SURVEY.md §5) depends on; a regression that silently
   * introduces an extra shuffle, loses a pushdown, or drops a broadcast
   * fails here, not on a cluster.
+  *
+  * The plans are those of a multi-split input, the only kind at scale:
+  * every test reads through [[TestSpark.multiSplit]], where the sf0.001
+  * tables are several file splits each. Over the default session they
+  * are one split each, `Tables.table` returns them as one partition, and
+  * the plans need no exchange at all; the tests whose pins are about
+  * exchanges check that one-split form beside the multi-split one.
   */
 class PlanQualitySpec extends AnyFunSuite {
-  import TestSpark.{sf, spark}
+  import TestSpark.sf
+
+  private def spark = TestSpark.multiSplit
+
+  /** The same plan over one-split reads. */
+  private def onePlan(df: org.apache.spark.sql.SparkSession => DataFrame): String =
+    plan(df(TestSpark.spark))
 
   /** Physical plan WITHOUT cache substitution: another suite caching a
     * matching subtree (e.g. ScalePathSpec caches rollingFeatures) would
@@ -163,6 +176,11 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("hashpartitioning(shard"), p)
     assert("windowspecdefinition\\(shard".r.findFirstIn(p).nonEmpty,
       s"prefix-sum window is not partitioned by shard:\n$p")
+    // one-split documents: the window still partitions by shard, in the
+    // read's one partition, with no exchange
+    val one = onePlan(s => Packing.packSequences(Tables.documents(s, sf)))
+    assert("windowspecdefinition\\(shard".r.findFirstIn(one).nonEmpty, one)
+    assert(!one.contains("Exchange"), one)
   }
 
   test("containment candidate stage joins on hashed gram longs, not gram strings") {
@@ -172,6 +190,10 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(p.contains("xxhash64"), p)
     assert("hashpartitioning\\(tok_h".r.findFirstIn(p).nonEmpty,
       s"candidate exchanges are not keyed on the gram hash:\n$p")
+    // one-split documents: still the gram-hash keys, with no hash exchange
+    val one = onePlan(s => Dedup.containment(Tables.documents(s, sf)))
+    assert(one.contains("xxhash64"), one)
+    assert(!one.contains("Exchange hashpartitioning"), one)
   }
 
   test("ANN index buckets come from the native kernel, not interpreted HOFs") {
@@ -286,6 +308,12 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(hashEx === 1, s"$hashEx hash exchanges:\n$pBp")
     val exBp = pBp.linesIterator.filter(_.contains("Exchange")).mkString("\n")
     assert(!exBp.contains("text#"), pBp)
+    // one-split documents: the roll-ups need no exchange
+    val oneFrames = onePlan(s =>
+      Multimodal.frameDedup(Multimodal.binaryColumns(Tables.documents(s, sf))))
+    assert(!oneFrames.contains("Exchange hashpartitioning"), oneFrames)
+    val oneBp = onePlan(s => TextAnalysis.boilerplate(Tables.documents(s, sf)))
+    assert(!oneBp.contains("Exchange"), oneBp)
   }
 
   test("the detector union reads the events table exactly once (shared scan)") {
@@ -357,6 +385,10 @@ class PlanQualitySpec extends AnyFunSuite {
     assert("windowspecdefinition\\(shard".r.findFirstIn(p).nonEmpty,
       s"position window is not partitioned by shard:\n$p")
     assert(!p.contains("text#"), "shuffle reads the text column:\n" + p)
+    // one-split documents: the shard window runs in the one partition
+    val one = onePlan(s => Sampling.shuffleShards(Tables.documents(s, sf), 16))
+    assert("windowspecdefinition\\(shard".r.findFirstIn(one).nonEmpty, one)
+    assert(!one.contains("Exchange hashpartitioning"), one)
   }
 
   test("mixture construction broadcasts the rates and never shuffles the corpus") {
@@ -477,8 +509,10 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("no registered key casts an unbounded decimal aggregate straight to double") {
     spark.sharedState.cacheManager.clearCache()
+    // analyzed plans only: the default session, whose per-session index
+    // caches the other suites have built already
     val flagged = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) => name -> directDecimalAggCasts(fn(spark, sf)).toSet
+      case (name, fn) => name -> directDecimalAggCasts(fn(TestSpark.spark, sf)).toSet
     }
     val offenders = flagged.flatMap { case (name, casts) =>
       val unwaived = casts -- boundedDecimalCastWaivers.getOrElse(name, Set.empty)

@@ -18,6 +18,15 @@ object TestSpark {
     s
   }
 
+  /** A clone of [[spark]] with `spark.sql.files.maxPartitionBytes` at
+    * 4 KB: every sf0.001 table but region, nation and supplier is then
+    * planned as several file splits, so `Tables.table` gives the plain
+    * read's multi-partition plan (at the defaults every sf0.001 table is
+    * one split and reads as one partition). For plan-shape assertions
+    * about the exchanges a multi-split input needs. */
+  lazy val multiSplit: SparkSession = org.apache.spark.sql.graft.ScopedConf.session(
+    spark, "spark.sql.files.maxPartitionBytes" -> "4096")
+
   /** Drain an AvailableNow query that cannot self-terminate (stateful
     * ProcessingTimeTimeout keeps the drift detector alive waiting for its
     * 1-hour state-GC timeout; processAllAvailable never settles for the

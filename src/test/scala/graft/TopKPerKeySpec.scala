@@ -24,10 +24,16 @@ class TopKPerKeySpec extends AnyFunSuite {
   }
 
   test("physical plan uses TopKPerKeyExec with a clustered exchange") {
-    val df = TopKPerKeyApi.topKPerKey(
-      metrics, Seq("c_mktsegment"), "intensity", 3)
+    // multi-split tables: the metrics arrive in several partitions
+    val df = TopKPerKeyApi.topKPerKey(Benchmarking.metricsFor(TestSpark.multiSplit, sf),
+      Seq("c_mktsegment"), "intensity", 3)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TopKPerKey") && plan.contains("Exchange hashpartitioning(c_mktsegment"), plan.take(800))
+    // one-split tables: one partition is clustered on any key already
+    val one = TopKPerKeyApi.topKPerKey(metrics, Seq("c_mktsegment"), "intensity", 3)
+      .queryExecution.executedPlan.toString
+    assert(one.contains("TopKPerKey") && !one.contains("Exchange hashpartitioning"),
+      one.take(800))
   }
 
   test("k larger than the group returns the whole group") {

@@ -20,6 +20,11 @@ change, flagged for isolated arbitration (tools/arbitrate.py).
   python3 tools/compare_rounds.py OLD_BENCH.json NEW_BENCH.json
       [--band 1.3] [--min-secs 0.5] [--json FILE]
 
+When both records carry Bench's per-key "jobs" map (the Spark job
+count of each key's minimum run), the table gains a "jobs" column,
+old -> new, and the summary sums them over the keys both sides counted
+(-1 marks a count that was not taken and is left out of the sums).
+
 Flags ONLY normalized-band violations; everything inside the envelope
 prints as host movement. --min-secs (default 0.5, both sides) keeps
 sub-scheduling-floor keys out — their ratios are scheduling jitter,
@@ -105,6 +110,8 @@ def main():
           f"{hi:.2f}] is host movement, outside is flagged\n")
 
     qa, qb = a["queries"], b["queries"]
+    ja, jb = a.get("jobs"), b.get("jobs")
+    jobs = ja is not None and jb is not None
     rows, flagged, skipped = [], [], []
     for k in sorted(set(qa) & set(qb)):
         ta, tb = qa[k], qb[k]
@@ -122,17 +129,25 @@ def main():
                             "ratio": round(r, 3), "direction": out,
                             "band": [round(lo, 3), round(hi, 3)]})
     rows.sort(reverse=True)
-    print("| key | old s | new s | ratio | vs band |")
-    print("|---|---|---|---|---|")
+    print("| key | old s | new s | ratio | vs band |"
+          + (" jobs |" if jobs else ""))
+    print("|---|---|---|---|---|" + ("---|" if jobs else ""))
     for r, k, ta, tb, out in rows:
         print(f"| {k} | {ta:.2f} | {tb:.2f} | {r:.2f}x "
-              f"| {out or 'host'} |")
+              f"| {out or 'host'} |"
+              + (f" {ja.get(k, '-')} -> {jb.get(k, '-')} |" if jobs else ""))
     only = set(qa) ^ set(qb)
     if only:
         print(f"\nkeys on one side only (not compared): {sorted(only)}")
     if skipped:
         print(f"\nskipped ({len(skipped)}): " + "; ".join(
             f"{k} ({why})" for k, why in skipped))
+    if jobs:
+        both = [k for k in sorted(set(qa) & set(qb))
+                if ja.get(k, -1) >= 0 and jb.get(k, -1) >= 0]
+        print(f"\njobs summed over the {len(both)} keys counted on both "
+              f"sides: {sum(ja[k] for k in both)} -> "
+              f"{sum(jb[k] for k in both)}")
     print(f"\n{len(flagged)} flagged beyond the normalized band"
           + (":" if flagged else ""))
     for f in flagged:
