@@ -47,25 +47,11 @@ object FileRelations {
     * `onePartition`, the read is wrapped in `Repartition(1, shuffle =
     * false)` (a `coalesce(1)`), so it reports a single output partition
     * and `EnsureRequirements` plans no exchange above it. For a
-    * [[oneSplit]] relation that is the partitioning its scan has anyway.
-    *
-    * The wrapped frame is built without a second analysis: `rel` was
-    * analyzed when its plain read resolved, and neither a copy of it with
-    * fresh ids nor a coalesce over it has anything left to resolve, so
-    * the plan is marked analyzed as it stands (as every Dataset's own
-    * plan is once analyzed). Analyzing the wrapper took a warm hit on the
-    * five sweep tables from 3.3 to 3.9 ms (median of 50, 4-core box). A
-    * plain reopen is analyzed as before. */
+    * [[oneSplit]] relation that is the partitioning its scan has anyway. */
   def reopen(spark: SparkSession, rel: LogicalRelation,
       onePartition: Boolean): DataFrame = {
     val read = rel.newInstance()
-    val plan =
-      if (!onePartition) read
-      else {
-        val coalesced = Repartition(1, shuffle = false, read)
-        coalesced.setAnalyzed()
-        coalesced
-      }
+    val plan = if (onePartition) Repartition(1, shuffle = false, read) else read
     Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
   }
 }

@@ -5,7 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution,
+  Partitioning}
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 
@@ -40,6 +41,9 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], ord: Expression,
   // co-locate each key's rows so the heap sees the whole group
   override def requiredChildDistribution: Seq[Distribution] =
     ClusteredDistribution(keys) :: Nil
+
+  // every output row stays in its input partition
+  override def outputPartitioning: Partitioning = child.outputPartitioning
 
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output

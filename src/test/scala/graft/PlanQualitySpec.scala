@@ -13,21 +13,14 @@ import graft.sources.Tables
   * introduces an extra shuffle, loses a pushdown, or drops a broadcast
   * fails here, not on a cluster.
   *
-  * The plans are those of a multi-split input, the only kind at scale:
-  * every test reads through [[TestSpark.multiSplit]], where the sf0.001
-  * tables are several file splits each. Over the default session they
-  * are one split each, `Tables.table` returns them as one partition, and
-  * the plans need no exchange at all; the tests whose pins are about
-  * exchanges check that one-split form beside the multi-split one.
+  * Over the test session every sf0.001 table is one file split, and
+  * `Tables.table` returns it as one partition, so those plans need no
+  * exchange. The tests that pin an exchange plan it over
+  * [[TestSpark.multiSplit]], where the tables are several splits each as
+  * they are at scale, and check the one-split form beside it.
   */
 class PlanQualitySpec extends AnyFunSuite {
-  import TestSpark.sf
-
-  private def spark = TestSpark.multiSplit
-
-  /** The same plan over one-split reads. */
-  private def onePlan(df: org.apache.spark.sql.SparkSession => DataFrame): String =
-    plan(df(TestSpark.spark))
+  import TestSpark.{multiSplit, sf, spark}
 
   /** Physical plan WITHOUT cache substitution: another suite caching a
     * matching subtree (e.g. ScalePathSpec caches rollingFeatures) would
@@ -169,7 +162,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("sequence packing windows on the shard key, never a single global partition") {
-    val p = plan(Packing.packSequences(Tables.documents(spark, sf)))
+    val p = plan(Packing.packSequences(Tables.documents(multiSplit, sf)))
     // the prefix-sum exchange must hash-partition on shard — a
     // SinglePartition exchange here means the whole corpus serializes
     // through one task's prefix sum at 100 TB
@@ -178,20 +171,20 @@ class PlanQualitySpec extends AnyFunSuite {
       s"prefix-sum window is not partitioned by shard:\n$p")
     // one-split documents: the window still partitions by shard, in the
     // read's one partition, with no exchange
-    val one = onePlan(s => Packing.packSequences(Tables.documents(s, sf)))
+    val one = plan(Packing.packSequences(Tables.documents(spark, sf)))
     assert("windowspecdefinition\\(shard".r.findFirstIn(one).nonEmpty, one)
     assert(!one.contains("Exchange"), one)
   }
 
   test("containment candidate stage joins on hashed gram longs, not gram strings") {
-    val p = plan(Dedup.containment(Tables.documents(spark, sf)))
+    val p = plan(Dedup.containment(Tables.documents(multiSplit, sf)))
     // the df join + candidate join must key on xxhash64(gram): string
     // keys shuffle/sort ~30-char grams and dominated the stage (r10)
     assert(p.contains("xxhash64"), p)
     assert("hashpartitioning\\(tok_h".r.findFirstIn(p).nonEmpty,
       s"candidate exchanges are not keyed on the gram hash:\n$p")
     // one-split documents: still the gram-hash keys, with no hash exchange
-    val one = onePlan(s => Dedup.containment(Tables.documents(s, sf)))
+    val one = plan(Dedup.containment(Tables.documents(spark, sf)))
     assert(one.contains("xxhash64"), one)
     assert(!one.contains("Exchange hashpartitioning"), one)
   }
@@ -296,7 +289,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("frame dedup and boilerplate shuffle narrow rows, never payload/text") {
-    val docs = Tables.documents(spark, sf)
+    val docs = Tables.documents(multiSplit, sf)
     val pFrames = plan(Multimodal.frameDedup(Multimodal.binaryColumns(docs)))
     // the digest roll-up shuffles Frame rows (doc_id + digest); the binary
     // payload is projected away inside the mapPartitions stage
@@ -309,10 +302,10 @@ class PlanQualitySpec extends AnyFunSuite {
     val exBp = pBp.linesIterator.filter(_.contains("Exchange")).mkString("\n")
     assert(!exBp.contains("text#"), pBp)
     // one-split documents: the roll-ups need no exchange
-    val oneFrames = onePlan(s =>
-      Multimodal.frameDedup(Multimodal.binaryColumns(Tables.documents(s, sf))))
+    val oneDocs = Tables.documents(spark, sf)
+    val oneFrames = plan(Multimodal.frameDedup(Multimodal.binaryColumns(oneDocs)))
     assert(!oneFrames.contains("Exchange hashpartitioning"), oneFrames)
-    val oneBp = onePlan(s => TextAnalysis.boilerplate(Tables.documents(s, sf)))
+    val oneBp = plan(TextAnalysis.boilerplate(oneDocs))
     assert(!oneBp.contains("Exchange"), oneBp)
   }
 
@@ -378,7 +371,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("global shuffle windows on the shard key with a pruned scan") {
-    val p = plan(Sampling.shuffleShards(Tables.documents(spark, sf), 16))
+    val p = plan(Sampling.shuffleShards(Tables.documents(multiSplit, sf), 16))
     // the ONLY hash exchange is the partition-by-shard the shard write
     // needs anyway; the window must never collapse to a single partition
     assert(p.contains("hashpartitioning(shard"), p)
@@ -386,7 +379,7 @@ class PlanQualitySpec extends AnyFunSuite {
       s"position window is not partitioned by shard:\n$p")
     assert(!p.contains("text#"), "shuffle reads the text column:\n" + p)
     // one-split documents: the shard window runs in the one partition
-    val one = onePlan(s => Sampling.shuffleShards(Tables.documents(s, sf), 16))
+    val one = plan(Sampling.shuffleShards(Tables.documents(spark, sf), 16))
     assert("windowspecdefinition\\(shard".r.findFirstIn(one).nonEmpty, one)
     assert(!one.contains("Exchange hashpartitioning"), one)
   }
@@ -509,10 +502,8 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("no registered key casts an unbounded decimal aggregate straight to double") {
     spark.sharedState.cacheManager.clearCache()
-    // analyzed plans only: the default session, whose per-session index
-    // caches the other suites have built already
     val flagged = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) => name -> directDecimalAggCasts(fn(TestSpark.spark, sf)).toSet
+      case (name, fn) => name -> directDecimalAggCasts(fn(spark, sf)).toSet
     }
     val offenders = flagged.flatMap { case (name, casts) =>
       val unwaived = casts -- boundedDecimalCastWaivers.getOrElse(name, Set.empty)

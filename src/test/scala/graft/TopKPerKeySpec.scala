@@ -36,6 +36,28 @@ class TopKPerKeySpec extends AnyFunSuite {
       one.take(800))
   }
 
+  test("the operator keeps its input's partitioning: q_topk_custom sorts with no range exchange") {
+    def key = SparkEntry.queries("q_topk_custom")(spark, sf)
+    // the key's own plan, not one over the metrics cached above
+    spark.sharedState.cacheManager.clearCache()
+    // one-split tables: the final orderBy sorts the operator's one
+    // partition, so no range sample re-reads customer
+    val plan = key.queryExecution.executedPlan.toString
+    assert(plan.contains("TopKPerKey") && !plan.contains("Exchange hashpartitioning") &&
+      !plan.contains("Exchange rangepartitioning"), plan)
+    key.count()
+    val (_, jobs) = org.apache.spark.sql.graft.JobProbe(spark)(
+      key.write.format("noop").mode("overwrite").save())
+    // the customer broadcast and the one job above it
+    assert(jobs.count === 2, jobs)
+    // multi-split tables: the clustered exchange's hash partitioning
+    // passes through the operator to the sort's range exchange
+    val split = SparkEntry.queries("q_topk_custom")(TestSpark.multiSplit, sf)
+      .queryExecution.executedPlan.toString
+    assert(split.contains("Exchange hashpartitioning(c_mktsegment") &&
+      split.contains("Exchange rangepartitioning"), split)
+  }
+
   test("k larger than the group returns the whole group") {
     val tiny = Seq(("a", 1L, 10.0), ("a", 2L, 20.0), ("b", 3L, 5.0))
       .toDF("seg", "id", "score")
