@@ -48,7 +48,7 @@ class TopKPerKeySpec extends AnyFunSuite {
     key.count()
     val (_, jobs) = org.apache.spark.sql.graft.JobProbe(spark)(
       key.write.format("noop").mode("overwrite").save())
-    // the customer broadcast and the one job above it
+    // the orders roll-up's broadcast and the one job above it
     assert(jobs.count === 2, jobs)
     // multi-split tables: the clustered exchange's hash partitioning
     // passes through the operator to the sort's range exchange
