@@ -478,16 +478,26 @@ object SparkEntry {
 
   /** DuckDB twin of Dedup.lshWeight∘lshBucket: table `t`'s plane-`p` dot
     * with the floor(x·10⁴) integer-quantized vector `iv` (pure Long
-    * arithmetic on both engines, so the sign bit can never diverge). */
-  private def lshDotSql(p: Int): String =
+    * arithmetic on both engines, so the sign bit can never diverge).
+    * `p` is a literal plane index or a lambda variable. */
+  private def lshDotSql(p: String): String =
     s"list_sum(list_transform(generate_series(1, len(iv)), i -> iv[i] * " +
       s"((((((t*1000003 + $p*8191 + (i-1)) * 1103515245 + 12345) % 2147483648) " +
       s"* 1103515245 + 12345) % 2147483648) % 65536 - 32768)))"
 
   private def lshBucketSql(planes: Int): String =
     (0 until planes)
-      .map(p => s"(CASE WHEN ${lshDotSql(p)} >= 0 THEN ${1L << (planes - 1 - p)} ELSE 0 END)")
+      .map(p => s"(CASE WHEN ${lshDotSql(p.toString)} >= 0 THEN ${1L << (planes - 1 - p)} ELSE 0 END)")
       .mkString(" + ")
+
+  /** The floor(x·10⁴) integer-quantized embeddings every LSH twin buckets
+    * (CTE base: vec_id, iv). */
+  private val quantizedCte: String =
+    """base AS MATERIALIZED (
+      |  SELECT vec_id,
+      |         list_transform(embedding,
+      |           x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS iv
+      |  FROM embeddings)""".stripMargin
 
   /** Shared DuckDB CTE mirroring Benchmarking.entityMetrics — the SQL twin
     * of the Spark plan, op-for-op, so doubles match bit-for-bit. */
@@ -546,7 +556,23 @@ object SparkEntry {
       |         w12 AS (PARTITION BY user_id ORDER BY ts_us, event_id
       |                 ROWS BETWEEN 11 PRECEDING AND CURRENT ROW))""".stripMargin
 
-  /** SQL twins of the other three rules (CTE chains over e/f). */
+  /** Events plus their rolling features (e, f). */
+  private val featuresCtes: String = s"$eventsCte,\n$rollingCte"
+
+  /** e, f and the SQL twin of AnomalyRules.thresholdAlerts over f (a). */
+  private val thresholdCtes: String =
+    s"""$featuresCtes,
+       |a AS (
+       |  SELECT event_id, user_id, ts_us, event_type, value,
+       |         'value' AS metric,
+       |         value / 150.0 AS score,
+       |         'threshold_high' AS rule_name,
+       |         CASE WHEN value > 250 THEN 'high' ELSE 'medium' END AS severity
+       |  FROM f WHERE value > 150 AND mean_3 > 100)""".stripMargin
+
+  /** SQL twins of the other three rules (CTE chains over e). Each ends in
+    * its alert rows — ak, ao, az — in the union shape of `a` plus the
+    * event value and the rule's own measure. */
   private val consecutiveCtes: String =
     """c AS (SELECT e.*, CASE WHEN value > 100 THEN 1 ELSE 0 END AS exceeds FROM e),
       |r AS (SELECT c.*,
@@ -554,7 +580,11 @@ object SparkEntry {
       |               - row_number() OVER (PARTITION BY user_id, exceeds ORDER BY ts_us, event_id) AS grp
       |      FROM c),
       |k AS (SELECT r.*, CAST(count(*) OVER (PARTITION BY user_id, grp) AS BIGINT) AS run_len
-      |      FROM r WHERE exceeds = 1)""".stripMargin
+      |      FROM r WHERE exceeds = 1),
+      |ak AS (SELECT event_id, user_id, ts_us, value, run_len, 'value' AS metric,
+      |              CAST(run_len AS DOUBLE) AS score, 'consecutive_drift' AS rule_name,
+      |              CASE WHEN value > 200 THEN 'high' ELSE 'medium' END AS severity
+      |       FROM k WHERE run_len >= 3)""".stripMargin
 
   private val oscillationCtes: String =
     """d AS (SELECT e.*, value - lag(value) OVER wu AS delta FROM e
@@ -564,7 +594,11 @@ object SparkEntry {
       |o AS (SELECT s.*,
       |             CAST(sum(chg) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
       |                                 ROWS BETWEEN 11 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_changes
-      |      FROM s)""".stripMargin
+      |      FROM s),
+      |ao AS (SELECT event_id, user_id, ts_us, value, n_changes, 'value' AS metric,
+      |              CAST(n_changes AS DOUBLE) AS score, 'oscillating_control' AS rule_name,
+      |              'medium' AS severity
+      |       FROM o WHERE n_changes > 8)""".stripMargin
 
   private val zscoreCtes: String =
     """st AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
@@ -575,31 +609,212 @@ object SparkEntry {
       |             sqrt(greatest(
       |               (CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) / n)
       |               / (CASE WHEN n > 1 THEN n - 1 END), 0.0)) AS std_v
-      |      FROM st)""".stripMargin
+      |      FROM st),
+      |az AS (SELECT event_id, user_id, ts_us, value, 'value' AS metric, zscore AS score,
+      |              'zscore' AS rule_name,
+      |              CASE WHEN abs(zscore) > 3.5 THEN 'high' ELSE 'medium' END AS severity
+      |       FROM (SELECT e.*, (value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END) AS zscore
+      |             FROM e JOIN z ON e.user_id = z.user_id)
+      |       WHERE abs(zscore) > 2.5)""".stripMargin
 
-  /** SQL twin of AnomalyRules.thresholdAlerts over f (named a). */
-  private val alertsCte: String =
-    """a AS (
-      |  SELECT event_id, user_id, ts_us, event_type, value,
-      |         'value' AS metric,
-      |         value / 150.0 AS score,
-      |         'threshold_high' AS rule_name,
-      |         CASE WHEN value > 250 THEN 'high' ELSE 'medium' END AS severity
-      |  FROM f WHERE value > 150 AND mean_3 > 100)""".stripMargin
+  /** Every rule's CTEs plus au, the twin of Pipeline.detectAll: the four
+    * rules' alert rows in one union. */
+  private val allAlertsCtes: String = {
+    val cols = "event_id, user_id, ts_us, metric, score, rule_name, severity"
+    s"""$thresholdCtes,
+       |$consecutiveCtes,
+       |$oscillationCtes,
+       |$zscoreCtes,
+       |au AS (
+       |  ${Seq("a", "ak", "ao", "az").map(t => s"SELECT $cols FROM $t").mkString("\n  UNION ALL ")})""".stripMargin
+  }
 
-  /** SQL twin of MinHashLsh.candidatePairs(threshold = 0.95) — possible
-    * because every stage of the chain is ENGINE-NEUTRAL by construction
-    * (TokenHashes's doc): 31-poly token hash mod 2³¹−1, the SAME 128
-    * Carter-Wegman (a,b) constants embedded as literals, the seeded-LCG
-    * band fold, DISTINCT co-bucket pairs (≡ the Spark side's first-agree
-    * dedup), and the signature-agreement estimate m/128 (exact in
-    * binary). Hub-star degradation cannot fire at oracle scale (bucket
-    * cap 4096 > corpus), so the guarded and exhaustive forms coincide. */
+  private val twelveHoursUs = 43200000000L
+
+  /** Twin of the gap sessionization behind ts_sessionize and st_session
+    * (CTE s: e plus a running per-user session_id). A session starts at
+    * a user's first event or after a gap of at least `breakUs` µs. */
+  private def sessionCtes(breakUs: Long): String =
+    s"""s AS (
+       |  SELECT *,
+       |         CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
+       |                                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
+       |  FROM (SELECT *, CASE WHEN prev_us IS NULL OR ts_us - prev_us >= $breakUs THEN 1 ELSE 0 END AS new_sess
+       |        FROM (SELECT e.*, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us
+       |              FROM e)))""".stripMargin
+
+  /** The word n-gram windows of TextAnalysis's gram kernel over `text`:
+    * short docs yield one truncated gram in both engines (the
+    * word_ngrams contract). */
+  private def gramsSql(n: Int): String =
+    s"list_transform(generate_series(0, greatest(len(string_split(text, ' ')) - $n, 0)), " +
+      s"i -> array_to_string((string_split(text, ' '))[i+1:i+$n], ' '))"
+
+  /** Twin of TextAnalysis.withQuality over documents (CTE q adds
+    * n_tokens, alpha_ratio, stop_ratio, score and quality_band). The
+    * score keeps the Spark side's associativity shape; the band tests
+    * the computed score. */
+  private val qualityCte: String =
+    """q AS (
+      |  SELECT *, CASE WHEN score >= 0.8 THEN 'high'
+      |                 WHEN score >= 0.6 THEN 'medium' ELSE 'low' END AS quality_band
+      |  FROM (SELECT *, 0.5 * alpha_ratio + 0.3 * (1.0 - stop_ratio)
+      |                    + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) AS score
+      |  FROM (SELECT *, CAST(alpha AS DOUBLE) / n_chars_calc AS alpha_ratio,
+      |                 CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio
+      |  FROM (SELECT *,
+      |         CAST(length(text) AS BIGINT) AS n_chars_calc,
+      |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
+      |         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT) AS alpha,
+      |         CAST(len(list_filter(string_split(text, ' '),
+      |                  t -> t IN ('the','a','of','to','and','in'))) AS BIGINT) AS n_stop
+      |        FROM documents))))""".stripMargin
+
+  /** Twin of TextAnalysis.withRepetition over `src` (CTE rp adds toks,
+    * grams, n_2grams, the two mode counts, their fractions and
+    * `repetitive`): integer mode counts and single divisions, so
+    * bit-identical cross-engine. */
+  private def repetitionCte(src: String): String = {
+    def top(xs: String) =
+      s"CAST(list_max(list_transform(list_distinct($xs), y -> len(list_filter($xs, x -> x = y)))) AS BIGINT)"
+    s"""rp AS (
+       |  SELECT *, (top_2gram_fraction > 0.18 OR top_token_fraction > 0.3) AS repetitive
+       |  FROM (SELECT *, CAST(top_token_count AS DOUBLE) / len(toks) AS top_token_fraction,
+       |                 CAST(top_2gram_count AS DOUBLE) / n_2grams AS top_2gram_fraction
+       |  FROM (SELECT *, CAST(len(grams) AS BIGINT) AS n_2grams,
+       |               ${top("toks")} AS top_token_count,
+       |               ${top("grams")} AS top_2gram_count
+       |  FROM (SELECT *, string_split(text, ' ') AS toks, ${gramsSql(2)} AS grams
+       |        FROM $src))))""".stripMargin
+  }
+
+  /** TextAnalysis.piiPatterns in their redaction order (url, email, ip,
+    * phone): the Java/RE2-agreeing regex subset. */
+  private val piiPatterns = Seq(
+    ("url", """https?://[^ ]+""", "<URL>"),
+    ("email", """[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}""", "<EMAIL>"),
+    ("ip", """[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}""", "<IP>"),
+    ("phone", """[0-9]{3}-[0-9]{3}-[0-9]{4}""", "<PHONE>"))
+
+  /** Twin of TextAnalysis.withPiiCounts over `src` (CTE pii adds the
+    * four n_<class> match counts and n_pii). */
+  private def piiCte(src: String): String = {
+    val counts = piiPatterns.map { case (name, pat, _) =>
+      s"CAST(len(regexp_extract_all(text, '$pat')) AS BIGINT) AS n_$name"
+    }.mkString(",\n               ")
+    s"""pii AS (
+       |  SELECT *, n_url + n_email + n_ip + n_phone AS n_pii
+       |  FROM (SELECT *, $counts
+       |        FROM $src))""".stripMargin
+  }
+
+  /** Twin of Sampling.sampleKey: the Lehmer/MINSTD key of `id` — plain
+    * BIGINT arithmetic, so sampled subsets and shuffles are
+    * bit-identical cross-engine. */
+  private def lehmerSql(id: String): String = s"($id * 48271) % 2147483647"
+
+  /** Twin of Sampling's 50:30:20 weight CASE over `src` (CTE base: the
+    * rows of the named sources plus their weight wgt; W = 100). */
+  private def weightedCte(src: String): String =
+    s"""base AS (
+       |  SELECT * FROM (
+       |    SELECT *, CASE WHEN source = 'src0' THEN CAST(50 AS BIGINT)
+       |                   WHEN source = 'src2' THEN CAST(30 AS BIGINT)
+       |                   WHEN source = 'src4' THEN CAST(20 AS BIGINT) END AS wgt
+       |    FROM $src)
+       |  WHERE wgt IS NOT NULL)""".stripMargin
+
+  /** Twin of Sampling.mixToTarget's integer arithmetic over base, with
+    * per-source supply `supply` (count(*) for documents, sum(n_tokens)
+    * for tokens). `//` is DuckDB integer division, matching Spark's
+    * `div` on positive longs: T* = min(n·W // w), take = w·T* // W,
+    * rate_ppm = take·10⁶ // n. CTE mixed: the Lehmer-residue members
+    * with their rate_ppm. */
+  private def mixCtes(supply: String): String =
+    s"""mcounts AS (
+       |  SELECT source, wgt, CAST($supply AS BIGINT) AS n_source
+       |  FROM base GROUP BY source, wgt),
+       |mrates AS (
+       |  SELECT source, ((wgt * t_star) // 100) * 1000000 // n_source AS rate_ppm
+       |  FROM mcounts, (SELECT min(n_source * 100 // wgt) AS t_star FROM mcounts)),
+       |mixed AS (
+       |  SELECT b.*, r.rate_ppm
+       |  FROM base b JOIN mrates r ON b.source = r.source
+       |  WHERE ${lehmerSql("b.doc_id")} % 1000000 < r.rate_ppm)""".stripMargin
+
+  /** Twin of Sampling.epochPlan over `src` (rows carrying source and
+    * wgt), in the same integer arithmetic: take = min(w·budget // W,
+    * n·maxEpochs), full epochs take // n, and a partial epoch at rate
+    * (take % n)·10⁶ // n by Lehmer residue. CTE inst holds one row per
+    * (doc, epoch); generate_series(1, 0) is empty in DuckDB, matching the
+    * Spark side's n_ep >= 1 guard. */
+  private def epochCtes(src: String, budget: Long, maxEpochs: Int): String =
+    s"""eplan AS (
+       |  SELECT source, take_n // n_source AS full_ep,
+       |         (take_n % n_source) * 1000000 // n_source AS rate_ppm
+       |  FROM (SELECT source, n_source, least(wgt * $budget // 100, n_source * $maxEpochs) AS take_n
+       |        FROM (SELECT source, wgt, CAST(count(*) AS BIGINT) AS n_source
+       |              FROM $src GROUP BY source, wgt))),
+       |inst AS (
+       |  SELECT *, unnest(generate_series(1, n_ep)) AS epoch
+       |  FROM (SELECT s.*, p.full_ep + CASE WHEN ${lehmerSql("s.doc_id")} % 1000000
+       |                                          < p.rate_ppm THEN 1 ELSE 0 END AS n_ep
+       |        FROM $src s JOIN eplan p ON s.source = p.source)
+       |  WHERE n_ep >= 1)""".stripMargin
+
+  /** Twin of Sampling.shuffleInstances over `src` (CTE shuf adds
+    * shuffle_key, shard and pos): the Lehmer key of `id` is the
+    * permutation, pos the row number within its shard under the
+    * (key, id) total order the Spark window uses. */
+  private def shuffleCte(src: String, id: String, nShards: Int): String =
+    s"""shuf AS (
+       |  SELECT *, shuffle_key % $nShards AS shard,
+       |         row_number() OVER (PARTITION BY shuffle_key % $nShards
+       |                            ORDER BY shuffle_key, $id) AS pos
+       |  FROM (SELECT *, ${lehmerSql(id)} AS shuffle_key FROM $src))""".stripMargin
+
+  /** Twin of Packing.assignSequences over `src` rows carrying (shard,
+    * n_tokens), ordered within a shard by `order` (CTE packd adds
+    * start_tok, seq_id, seq_offset, n_seqs): a shard-local token prefix
+    * sum in integer arithmetic, so bit-reproducible. */
+  private def packCte(src: String, order: String, budget: Long): String =
+    s"""packd AS (
+       |  SELECT *, CAST(start_tok // $budget AS BIGINT) AS seq_id,
+       |         CAST(start_tok % $budget AS BIGINT) AS seq_offset,
+       |         CAST((start_tok + n_tokens - 1) // $budget
+       |           - start_tok // $budget + 1 AS BIGINT) AS n_seqs
+       |  FROM (SELECT *, CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY $order)
+       |                      - n_tokens AS BIGINT) AS start_tok
+       |        FROM $src))""".stripMargin
+
+  /** Byte-exact twin of Multimodal.extractFeatures(16) (CTE c: doc_id,
+    * n_bytes, counts). A byte's %16 bucket is the low nibble of its hex
+    * rendering (see mm_features). */
+  private val hexCountsCte: String =
+    """c AS (
+      |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
+      |         list_transform(generate_series(0, 15), b ->
+      |           len(list_filter(regexp_extract_all(hex(encode(text)), '..'),
+      |               p -> right(p, 1) = substring('0123456789ABCDEF', b + 1, 1)))) AS counts
+      |  FROM documents)""".stripMargin
+
+  /** Byte-exact twin of Multimodal.frameSample (CTE f: doc_id, byte
+    * offset ob, frame_md5): frames start every 64 bytes, and a 16-byte
+    * frame at byte offset ob is the 32-char hex slice at 2·ob+1. */
+  private val framesCte: String =
+    """f AS (
+      |  SELECT doc_id, ob, md5(substring(h, CAST(ob AS INTEGER) * 2 + 1, 32)) AS frame_md5
+      |  FROM (SELECT doc_id,
+      |               unnest(generate_series(0, greatest(octet_length(encode(text)) - 1, 0), 64)) AS ob,
+      |               hex(encode(text)) AS h
+      |        FROM documents))""".stripMargin
+
   /** The shared hs → sigs → banded CTE chain at the given banding (128
     * hashes split into `bands` bands of 128/bands rows) — the bit-exact
-    * DuckDB twin of MinHashLsh.signatures + bandBuckets. Composed by the
-    * self-join (dd_minhash_lsh, 8 bands) and bipartite (dd_incremental,
-    * 16 bands — saveSignatures' default) oracles. */
+    * DuckDB twin of MinHashLsh.signatures + bandBuckets, possible
+    * because every stage is ENGINE-NEUTRAL by construction (TokenHashes's
+    * doc): 31-poly token hash mod 2³¹−1, the SAME 128 Carter-Wegman
+    * (a,b) constants embedded as literals, and the seeded-LCG band fold. */
   private def minhashCtes(bands: Int, prelude: String = "",
       src: String = "documents", recursive: Boolean = false): String = {
     val p = 2147483647L
@@ -613,7 +828,7 @@ object SparkEntry {
     // sigs/banded are each referenced 2-3x downstream (candidate join +
     // both sides of the estimate join); MATERIALIZED stops DuckDB's
     // inlining from recomputing the 128-hash signature chain per
-    // reference (r18 — ~3x off the dd_cluster twin's 65-minute sf1 run)
+    // reference (~3x off the dd_cluster twin's sf1 run)
     s"""WITH $rec$prelude hs AS MATERIALIZED (
        |  SELECT doc_id,
        |    list_transform(list_distinct(string_split(text, ' ')), t ->
@@ -635,33 +850,74 @@ object SparkEntry {
        |  FROM sigs CROSS JOIN (SELECT unnest(range($bands)) AS band))""".stripMargin
   }
 
-  /** dd_minhash_lsh twin, narrow-row form (r19). The r18 shape — DISTINCT
-    * candidate pairs joined back to `sigs` twice and compared with
-    * `list_filter` — carried two 1 KB signature lists per candidate
-    * through the join stack; at sf10 (500k docs, 187M distinct
-    * candidates) DuckDB materialized >63 GB of spill and died at any
-    * quota this box can grant. This form computes the SAME output with
-    * no list payload ever crossing a >500k-row join, via exact integer
-    * arithmetic:
+  /** The narrow-row signature-agreement estimate over the candidate pairs
+    * of CTE cand2 (columns `a`, `b`), shared by dd_minhash_lsh,
+    * dd_incremental and dd_cluster. No signature list crosses a join
+    * (the list-payload form spilled tens of GB at sf10); instead, exact
+    * integer arithmetic:
     *
-    *  1. `cand2`: candidate pairs colliding in >= 2 bands. Lossless for
-    *     the 0.95 threshold by pigeonhole: est >= 0.95 means >= 122 of
-    *     128 positions match, so <= 6 mismatches, so >= 2 of the 8
-    *     16-row bands match in FULL — and a fully-matching band's bucket
-    *     (a deterministic function of the band slice) collides.
-    *  2. `cm`: per-pair count of matching 4-position chunks, each chunk
-    *     packed EXACTLY into a HUGEINT (4 x 31-bit values, 124 bits) —
-    *     chunk equality iff all 4 positions equal, no hashing. Keep
-    *     pairs with >= 26 matching chunks (<= 6 position mismatches can
-    *     spoil at most 6 chunks).
-    *  3. `rep`: for survivors, re-count matches INSIDE their <= 6
-    *     mismatched chunks position-by-position.
-    *     matches = 4*cm + rep, and est = matches::DOUBLE / 128 is the
-    *     identical IEEE value (integer cast + power-of-two divide).
+    *  1. `chunks`: each signature cut into 128/`width` chunks of `width`
+    *     positions, each chunk packed EXACTLY into one integer (31 bits
+    *     per position: BIGINT up to 2 positions, HUGEINT beyond) — chunk
+    *     equality iff all its positions are equal, no hashing.
+    *  2. `cm`: per-pair count of equal chunks, kept from `floor` up. A
+    *     pair at estimate ≥ θ has at most m = ⌊128·(1−θ)⌋ mismatched
+    *     positions, which spoil at most m chunks, so floor = chunks − m
+    *     is lossless.
+    *  3. `mm`/`rep`: pairs below `repairBelow` equal chunks re-count
+    *     their spoiled chunks position by position (`pos`).
+    *  4. `est`: matches = width·cm + repaired, so est = matches / 128 is
+    *     the identical IEEE value (integer cast, power-of-two divide).
     *
-    * Measured at sf10: the old form never finished (63 GB spill wall);
-    * this one is all narrow streams with sub-3 GB aggregation states. */
-  private lazy val minhashOracleSql: String = {
+    * A key that outputs the estimate repairs every pair (repairBelow
+    * above the chunk count); one that only filters on it can let pairs
+    * whose width·cm alone passes skip the repair join. */
+  private def chunkEstimateCtes(width: Int, floor: Int, a: String, b: String,
+      repairBelow: Int): String = {
+    val ty = if (width <= 2) "BIGINT" else "HUGEINT"
+    val cv = (2 to width).foldLeft(s"sig[ci*$width+1]::$ty") { (acc, j) =>
+      s"($acc) * 2147483648 + sig[ci*$width+$j]"
+    }
+    s"""chunks AS MATERIALIZED (
+       |  SELECT doc_id, ci, $cv AS cv
+       |  FROM sigs CROSS JOIN (SELECT unnest(range(${128 / width})) AS ci)),
+       |cm AS MATERIALIZED (
+       |  SELECT c.$a, c.$b, count(*) AS cm
+       |  FROM cand2 c
+       |  JOIN chunks ca ON ca.doc_id = c.$a
+       |  JOIN chunks cb ON cb.doc_id = c.$b
+       |    AND cb.ci = ca.ci AND cb.cv = ca.cv
+       |  GROUP BY 1, 2
+       |  HAVING count(*) >= $floor),
+       |pos AS MATERIALIZED (
+       |  SELECT doc_id, (i-1)//$width AS ci, i, sig[i] AS v
+       |  FROM sigs CROSS JOIN (SELECT unnest(range(1, 129)) AS i)),
+       |mm AS (
+       |  SELECT m.$a, m.$b, ca.ci
+       |  FROM cm m
+       |  JOIN chunks ca ON ca.doc_id = m.$a
+       |  LEFT JOIN chunks cb ON cb.doc_id = m.$b
+       |    AND cb.ci = ca.ci AND cb.cv = ca.cv
+       |  WHERE m.cm < $repairBelow AND cb.doc_id IS NULL),
+       |rep AS (
+       |  SELECT mm.$a, mm.$b, count(*) FILTER (WHERE pa.v = pb.v) AS r
+       |  FROM mm
+       |  JOIN pos pa ON pa.doc_id = mm.$a AND pa.ci = mm.ci
+       |  JOIN pos pb ON pb.doc_id = mm.$b AND pb.i = pa.i
+       |  GROUP BY 1, 2),
+       |est AS (
+       |  SELECT m.$a, m.$b, $width * m.cm + coalesce(r.r, 0) AS matches
+       |  FROM cm m LEFT JOIN rep r ON r.$a = m.$a AND r.$b = m.$b)""".stripMargin
+  }
+
+  /** dd_minhash_lsh twin. `cand2` keeps pairs colliding in >= 2 of the 8
+    * bands — lossless for 0.95 by pigeonhole: est >= 0.95 allows <= 6
+    * mismatched positions, so >= 2 of the 8 16-row bands match in FULL,
+    * and a fully-matching band's bucket collides. The same 6 mismatches
+    * spoil <= 6 of the 32 4-position chunks (floor 26). DISTINCT pairs
+    * ≡ the Spark side's first-agree dedup; hub-star degradation cannot
+    * fire at oracle scale (bucket cap 4096 > corpus). */
+  private lazy val minhashOracleSql: String =
     s"""${minhashCtes(8)},
        |cand2 AS MATERIALIZED (
        |  SELECT x.doc_id AS doc_a, y.doc_id AS doc_b
@@ -669,42 +925,11 @@ object SparkEntry {
        |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
        |  GROUP BY 1, 2
        |  HAVING count(*) >= 2),
-       |chunks AS MATERIALIZED (
-       |  SELECT doc_id, ci,
-       |    ((sig[ci*4+1]::HUGEINT * 2147483648 + sig[ci*4+2]) * 2147483648
-       |      + sig[ci*4+3]) * 2147483648 + sig[ci*4+4] AS cv
-       |  FROM sigs CROSS JOIN (SELECT unnest(range(32)) AS ci)),
-       |cm AS MATERIALIZED (
-       |  SELECT c.doc_a, c.doc_b, count(*) AS cm
-       |  FROM cand2 c
-       |  JOIN chunks ca ON ca.doc_id = c.doc_a
-       |  JOIN chunks cb ON cb.doc_id = c.doc_b
-       |    AND cb.ci = ca.ci AND cb.cv = ca.cv
-       |  GROUP BY 1, 2
-       |  HAVING count(*) >= 26),
-       |pos AS MATERIALIZED (
-       |  SELECT doc_id, (i-1)//4 AS ci, i, sig[i] AS v
-       |  FROM sigs CROSS JOIN (SELECT unnest(range(1, 129)) AS i)),
-       |mm AS (
-       |  SELECT m.doc_a, m.doc_b, ca.ci
-       |  FROM cm m
-       |  JOIN chunks ca ON ca.doc_id = m.doc_a
-       |  LEFT JOIN chunks cb ON cb.doc_id = m.doc_b
-       |    AND cb.ci = ca.ci AND cb.cv = ca.cv
-       |  WHERE cb.doc_id IS NULL),
-       |rep AS (
-       |  SELECT mm.doc_a, mm.doc_b, count(*) FILTER (WHERE pa.v = pb.v) AS r
-       |  FROM mm
-       |  JOIN pos pa ON pa.doc_id = mm.doc_a AND pa.ci = mm.ci
-       |  JOIN pos pb ON pb.doc_id = mm.doc_b AND pb.i = pa.i
-       |  GROUP BY 1, 2)
-       |SELECT m.doc_a, m.doc_b,
-       |  (4 * m.cm + coalesce(r.r, 0))::DOUBLE / 128 AS jaccard_est
-       |FROM cm m
-       |LEFT JOIN rep r ON r.doc_a = m.doc_a AND r.doc_b = m.doc_b
-       |WHERE (4 * m.cm + coalesce(r.r, 0))::DOUBLE / 128 >= 0.95
-       |ORDER BY m.doc_a, m.doc_b""".stripMargin
-  }
+       |${chunkEstimateCtes(width = 4, floor = 26, "doc_a", "doc_b", repairBelow = 33)}
+       |SELECT doc_a, doc_b, matches::DOUBLE / 128 AS jaccard_est
+       |FROM est
+       |WHERE matches::DOUBLE / 128 >= 0.95
+       |ORDER BY doc_a, doc_b""".stripMargin
 
   /** The HUB-MODE minhash twin (dd_minhash_lsh_hub): same banding, but
     * candidate generation replicates the hot-bucket guard exactly at
@@ -748,10 +973,8 @@ object SparkEntry {
     * `i`) keep the arithmetic identical to the unrolled form; the
     * weight for bit p is 2^(planes−1−p) via a BIGINT shift. */
   private val dynLshBucketSql: String =
-    "list_sum(list_transform(generate_series(0, planes - 1), p -> " +
-      "CASE WHEN list_sum(list_transform(generate_series(1, len(iv)), i -> iv[i] * " +
-      "((((((t*1000003 + p*8191 + (i-1)) * 1103515245 + 12345) % 2147483648) " +
-      "* 1103515245 + 12345) % 2147483648) % 65536 - 32768))) >= 0 " +
+    s"list_sum(list_transform(generate_series(0, planes - 1), p -> " +
+      s"CASE WHEN ${lshDotSql("p")} >= 0 " +
       "THEN (CAST(1 AS BIGINT) << (planes - 1 - p)) ELSE 0 END))"
 
   /** CTE twin of Dedup.resolvePlanes(0, n): 6 + the count of
@@ -816,11 +1039,7 @@ object SparkEntry {
           |  SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
           |  FROM bk a JOIN bk b
           |    ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id < b.vec_id),""".stripMargin
-    s"""WITH ${planesCte}base AS MATERIALIZED (
-       |  SELECT vec_id,
-       |         list_transform(embedding,
-       |           x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS iv
-       |  FROM embeddings),
+    s"""WITH $planesCte$quantizedCte,
        |bk AS MATERIALIZED (
        |  SELECT vec_id, t, $bucketExpr AS bucket
        |  FROM $bkFrom),
@@ -868,42 +1087,6 @@ object SparkEntry {
     embeddingTopMSql(dynamicPlanes = true,
       densityCap = graft.operators.Dedup.DefaultDensityCap)
 
-  /** The batched-IVF oracle SQL, shared by sim_ivf_batch (hash-exact)
-    * and sim_ivf_auto (rows+schema contract — see the map entry): the
-    * full IVF pipeline replayed via [[ivfCtes]], per-query cell ranks
-    * over the learned centroids, probed cells fanned out through the
-    * final assignment, one top-5 window per query. */
-  private lazy val ivfBatchOracleSql: String = {
-    val qq = dotDoubleSql("qb.qe", "qb.qe")
-    val ee = dotDoubleSql("e.embedding", "e.embedding")
-    val eq = dotDoubleSql("e.embedding", "qb.qe")
-    s"""${ivfCtes(8)},
-       |qb AS (SELECT vec_id AS q_id, embedding AS qe
-       |       FROM embeddings WHERE vec_id >= 0 AND vec_id < 64),
-       |crb AS (
-       |  SELECT q_id, cell FROM (
-       |    SELECT qb.q_id, c.cell,
-       |           row_number() OVER (PARTITION BY qb.q_id ORDER BY
-       |             (list_sum(list_transform(generate_series(1, len(c.cd)),
-       |                j -> c.cd[j] * CAST(qb.qe[j] AS DOUBLE)))
-       |              / (sqrt(list_sum(list_transform(c.cd, x -> x * x)))
-       |                 * sqrt($qq))) DESC, c.cell) AS rn
-       |    FROM qb CROSS JOIN cent8 c)
-       |  WHERE rn <= (SELECT np FROM np)),
-       |hits AS (
-       |  SELECT qb.q_id, e.vec_id, e.label,
-       |         $eq / (sqrt($ee) * sqrt($qq)) AS cosine
-       |  FROM embeddings e
-       |  JOIN afin USING (vec_id)
-       |  JOIN crb ON crb.cell = afin.cell
-       |  JOIN qb ON qb.q_id = crb.q_id
-       |  WHERE e.vec_id <> qb.q_id)
-       |SELECT q_id, vec_id, label, cosine FROM (
-       |  SELECT hits.*, row_number() OVER (PARTITION BY q_id
-       |           ORDER BY cosine DESC, vec_id) AS rn FROM hits)
-       |WHERE rn <= 5
-       |ORDER BY q_id, cosine DESC, vec_id""".stripMargin
-  }
 
   /** DuckDB twin of the full IVF pipeline behind sim_ivf / sim_ivf_batch:
     * Lloyd's k-means REPLAYED in SQL — Lehmer-key init (the engine-neutral
@@ -940,7 +1123,7 @@ object SparkEntry {
   private def ivfCtes(iters: Int): String = {
     val sb = new StringBuilder
     sb.append(
-      """WITH prm AS MATERIALIZED (
+      s"""WITH prm AS MATERIALIZED (
         |  SELECT CAST(greatest(2, ceil(sqrt(count(*)))) AS INTEGER) AS cells
         |  FROM embeddings),
         |np AS MATERIALIZED (
@@ -949,12 +1132,12 @@ object SparkEntry {
         |  FROM prm),
         |cent0 AS MATERIALIZED (
         |  SELECT CAST(row_number() OVER (
-        |           ORDER BY (vec_id * 48271) % 2147483647, vec_id) - 1
+        |           ORDER BY ${lehmerSql("vec_id")}, vec_id) - 1
         |         AS INTEGER) AS cell,
         |         list_transform(embedding, v -> CAST(v AS DOUBLE)) AS cd
         |  FROM embeddings
         |  QUALIFY row_number() OVER (
-        |            ORDER BY (vec_id * 48271) % 2147483647, vec_id)
+        |            ORDER BY ${lehmerSql("vec_id")}, vec_id)
         |          <= (SELECT cells FROM prm)),
         |qs AS MATERIALIZED (
         |  SELECT vec_id,
@@ -1061,47 +1244,99 @@ object SparkEntry {
        |ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** For each key in queries, equivalent SQL runnable by DuckDB on the
-    * same parquet tables. Omitted keys → driver records rows-only check. */
+  /** The IVF probe for queries 0 until `nq` over [[ivfCtes]] (CTE top:
+    * q_id, vec_id, label, cosine, rank ≤ `k`): per-query cell ranks
+    * over the learned centroids, the nprobe best cells fanned out
+    * through the final assignment, one top-k window per query under
+    * the (cosine DESC, vec_id) total order — the arithmetic of
+    * Ivf.topKIndexed and Ivf.topKBatch alike. */
+  private def ivfProbeCtes(nq: Int, k: Int): String = {
+    val qq = dotDoubleSql("qb.qe", "qb.qe")
+    val ee = dotDoubleSql("e.embedding", "e.embedding")
+    val eq = dotDoubleSql("e.embedding", "qb.qe")
+    s"""${ivfCtes(8)},
+       |qb AS (SELECT vec_id AS q_id, embedding AS qe
+       |       FROM embeddings WHERE vec_id >= 0 AND vec_id < $nq),
+       |crb AS (
+       |  SELECT q_id, cell FROM (
+       |    SELECT qb.q_id, c.cell,
+       |           row_number() OVER (PARTITION BY qb.q_id ORDER BY
+       |             (list_sum(list_transform(generate_series(1, len(c.cd)),
+       |                j -> c.cd[j] * CAST(qb.qe[j] AS DOUBLE)))
+       |              / (sqrt(list_sum(list_transform(c.cd, x -> x * x)))
+       |                 * sqrt($qq))) DESC, c.cell) AS rn
+       |    FROM qb CROSS JOIN cent8 c)
+       |  WHERE rn <= (SELECT np FROM np)),
+       |hits AS (
+       |  SELECT qb.q_id, e.vec_id, e.label,
+       |         $eq / (sqrt($ee) * sqrt($qq)) AS cosine
+       |  FROM embeddings e
+       |  JOIN afin USING (vec_id)
+       |  JOIN crb ON crb.cell = afin.cell
+       |  JOIN qb ON qb.q_id = crb.q_id
+       |  WHERE e.vec_id <> qb.q_id),
+       |top AS (
+       |  SELECT * FROM (
+       |    SELECT hits.*, row_number() OVER (PARTITION BY q_id
+       |             ORDER BY cosine DESC, vec_id) AS rn FROM hits)
+       |  WHERE rn <= $k)""".stripMargin
+  }
+
+  /** The sim_ivf_batch twin, shared by sim_ivf_auto (see its entry). */
+  private lazy val ivfBatchOracleSql: String =
+    s"""${ivfProbeCtes(64, 5)}
+       |SELECT q_id, vec_id, label, cosine FROM top
+       |ORDER BY q_id, cosine DESC, vec_id""".stripMargin
+
+  /** The AnnLsh probe for queries 0 until `nq` (CTE top: q_id, vec_id,
+    * label, cosine, rank ≤ `k`). AnnLsh's plane family (tables 64..87;
+    * 5 planes — anchorPlanes(24) = 5 at ANY corpus) buckets through the
+    * shared integer-LCG twin (lshBucketSql, as dd_embedding); the double
+    * cosine re-rank through the sequential-double twin (dotDoubleSql) in
+    * the kernel's exact op shape. */
+  private def annProbeCtes(nq: Int, k: Int): String =
+    s"""WITH $quantizedCte,
+       |bk AS (
+       |  SELECT vec_id, t, ${lshBucketSql(5)} AS bucket
+       |  FROM (SELECT vec_id, iv, unnest(generate_series(64, 87)) AS t FROM base)),
+       |qb AS (SELECT vec_id AS q_id, t, bucket FROM bk WHERE vec_id >= 0 AND vec_id < $nq),
+       |cand AS (
+       |  SELECT DISTINCT qb.q_id, b.vec_id
+       |  FROM bk b JOIN qb ON b.t = qb.t AND b.bucket = qb.bucket
+       |  WHERE b.vec_id <> qb.q_id),
+       |qe AS (SELECT vec_id AS q_id, embedding AS q_emb,
+       |              ${dotDoubleSql("embedding", "embedding")} AS q_nrm
+       |       FROM embeddings WHERE vec_id >= 0 AND vec_id < $nq),
+       |scored AS (
+       |  SELECT c.q_id, e.vec_id, e.label,
+       |         ${dotDoubleSql("e.embedding", "q_emb")}
+       |           / (sqrt(${dotDoubleSql("e.embedding", "e.embedding")}) * sqrt(q_nrm)) AS cosine
+       |  FROM cand c JOIN embeddings e USING (vec_id) JOIN qe ON c.q_id = qe.q_id),
+       |top AS (
+       |  SELECT * FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY q_id
+       |             ORDER BY cosine DESC, vec_id) AS rn FROM scored)
+       |  WHERE rn <= $k)""".stripMargin
+
+  /** For each key in `queries`, the DuckDB SQL twin that runs on the same
+    * parquet tables (the two key sets are equal; OracleTwinSpec pins
+    * that, and that the rendered map passes tools/lint_oracle.py). Most
+    * twins are hash-exact: row count, schema and every value match the
+    * Spark result. sim_ivf_auto, q_approx_distinct, q_approx_quantile
+    * and ad_isolation_forest compute engine-specific estimates, so their
+    * twins pin row count and schema only (see their entries). */
   def oracleSql: Map[String, String] = Map(
     "dd_minhash_lsh" -> minhashOracleSql,
     "dd_minhash_lsh_hub" -> minhashHubOracleSql,
     "dd_simhash" -> simhashOracleSql,
-    // bipartite twin of dedupAgainst over the persisted signature index
-    // (16 bands — saveSignatures' default): batch docs (doc_id%5=0) match
-    // corpus docs (%5<>0) sharing any band bucket with agreement >= 0.9;
-    // dup_of = smallest match, match_est = largest estimate, LEFT JOIN
-    // keeps unmatched batch docs with nulls — exactly the Spark output
     // the full IVF pipeline replayed in SQL (ivfCtes: Lehmer init + 8
-    // unrolled Lloyd's rounds + the probe) — query 0's top-10 from the
-    // nprobe best cells, the exact arithmetic the index/probe run
-    "sim_ivf" -> {
-      val qq = dotDoubleSql("qv.qe", "qv.qe")
-      val ee = dotDoubleSql("e.embedding", "e.embedding")
-      val eq = dotDoubleSql("e.embedding", "qv.qe")
-      s"""${ivfCtes(8)},
-         |qv AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-         |cr AS (
-         |  SELECT cell FROM (
-         |    SELECT c.cell,
-         |           row_number() OVER (ORDER BY
-         |             (list_sum(list_transform(generate_series(1, len(c.cd)),
-         |                j -> c.cd[j] * CAST(qv.qe[j] AS DOUBLE)))
-         |              / (sqrt(list_sum(list_transform(c.cd, x -> x * x)))
-         |                 * sqrt($qq))) DESC, c.cell) AS rn
-         |    FROM cent8 c CROSS JOIN qv)
-         |  WHERE rn <= (SELECT np FROM np))
-         |SELECT e.vec_id, e.label, $eq / (sqrt($ee) * sqrt($qq)) AS cosine
-         |FROM embeddings e
-         |JOIN afin USING (vec_id) CROSS JOIN qv
-         |WHERE afin.cell IN (SELECT cell FROM cr) AND e.vec_id <> 0
-         |ORDER BY cosine DESC, vec_id
-         |LIMIT 10""".stripMargin
-    },
+    // unrolled Lloyd's rounds), probed for query 0's top-10
+    "sim_ivf" ->
+      s"""${ivfProbeCtes(1, 10)}
+         |SELECT vec_id, label, cosine FROM top
+         |ORDER BY cosine DESC, vec_id""".stripMargin,
 
-    // batched twin: per-query cell ranks over the same learned centroids,
-    // probed cells fanned out through the final assignment, one top-5
-    // window per query — row-identical to 64 single probes by the same
+    // batched twin: row-identical to 64 single probes by the same
     // (cosine DESC, vec_id) total order
     "sim_ivf_batch" -> ivfBatchOracleSql,
 
@@ -1127,43 +1362,25 @@ object SparkEntry {
     // recursive-CTE transitive closure (Spark's propagation loop and the
     // closure both converge to min-id-in-component).
     //
-    // r20: the est stage is the narrow-row chunk form — the r18 shape
-    // (every banded candidate joined to `sigs` twice, list_filter over
-    // two 1 KB lists) died at a 57 GB spill wall at sf10, and the r19
-    // 4-position-chunk surgery was REVERTED because its pigeonhole bound
-    // is VACUOUS at this threshold: m >= 96 allows <= 32 mismatches,
-    // which can spoil all 32 4-chunks, so `HAVING cm >= 0` kept every
-    // banded pair down to est ~0.5 and the repair set dominated (69 GB,
-    // worse than the original). With 2-POSITION chunks there are 64, so
-    // <= 32 mismatches spoil <= 32 and `cm >= 32` is a LOSSLESS
-    // prefilter that actually cuts at est ~0.7 (a random-ish pair at
-    // est 0.5 expects 64 * 0.25 = 16 matching 2-chunks, well under 32).
-    // Each 2-chunk packs exactly into a BIGINT (2 x 31-bit sig values,
-    // 62 bits) — chunk equality iff both positions equal, no hashing —
-    // then survivors re-count their <= 32 spoiled chunks position-wise
-    // and the final est keeps 2*cm + repair >= 96, the same integer set
-    // as len(list_filter(...)) >= 96. Unlike dd_minhash_lsh, this key's
-    // OUTPUT never exposes the estimate — est is a pure filter — so
-    // pairs with cm >= 48 auto-pass (m >= 2*cm >= 96) and skip the
-    // repair join entirely; only the 32 <= cm < 48 margin is repaired,
-    // and true near-dup pairs (est ~1.0, cm ~64) never touch it.
+    // The estimate uses 2-POSITION chunks: m >= 96 allows <= 32
+    // mismatches, which could spoil all 32 4-chunks (a vacuous floor),
+    // but spoil at most 32 of the 64 2-chunks, so `cm >= 32` is a
+    // lossless prefilter that cuts at est ~0.7. This key's OUTPUT never
+    // exposes the estimate, so pairs with cm >= 48 pass on 2·cm alone
+    // and skip the repair join (repairBelow = 48); true near-dup pairs
+    // (cm ~64) never touch it.
     //
-    // The VERIFY stage got the same narrow-row surgery: the testdata
-    // corpus's est >= 0.75 graph is DENSE (sf0.1: 1.27M est-pass pairs
-    // over 3,935 reps, measured — 324 edges per rep), so the r18 form's
-    // list_intersect join dragged two full token LISTS through 1.27M
-    // (sf10: ~127M) pair rows — 60 GB RSS at sf0.1, the 57 GB sf10
-    // spill wall. `inter` instead counts the exact set intersection as
-    // a grouped join over the EXPLODED (doc_id, token) table (toks is
-    // list_distinct upstream, so count(*) == len(list_intersect));
-    // est pairs with zero overlap drop out of the inner join and could
-    // never pass the 0.9 threshold anyway. Only (pair, count) rows
-    // cross the aggregation. Validated hash-identical at
-    // sf0.01/sf0.1/sf1 against the r18 form's committed records.
+    // The verify counts the exact set intersection as a grouped join
+    // over the EXPLODED (doc_id, token) table (toks is list_distinct
+    // upstream, so count(*) == len(list_intersect)): the est >= 0.75
+    // graph is dense (sf0.1: 1.27M pairs over 3,935 reps), and dragging
+    // two token LISTS through every pair cost 60 GB RSS at sf0.1. Pairs
+    // with zero overlap drop out of the inner join and could never pass
+    // the 0.9 threshold anyway.
     "dd_cluster" -> {
       // t0/r0/reps are each read 2-3x downstream (the verify join reads
       // reps twice, the final projection reads r0 again) — MATERIALIZED
-      // keeps the token-sort pass single-evaluation (r18)
+      // keeps the token-sort pass single-evaluation
       val prelude =
         """t0 AS MATERIALIZED (
           |  SELECT doc_id, text,
@@ -1184,47 +1401,14 @@ object SparkEntry {
          |  FROM banded x JOIN banded y
          |    ON x.band = y.band AND x.bucket = y.bucket AND x.doc_id < y.doc_id
          |  GROUP BY 1, 2),
-         |chunks AS MATERIALIZED (
-         |  SELECT doc_id, ci, sig[ci*2+1]::BIGINT * 2147483648 + sig[ci*2+2] AS cv
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(64)) AS ci)),
-         |cm AS MATERIALIZED (
-         |  SELECT c.doc_a, c.doc_b, count(*) AS cm
-         |  FROM cand2 c
-         |  JOIN chunks ca ON ca.doc_id = c.doc_a
-         |  JOIN chunks cb ON cb.doc_id = c.doc_b
-         |    AND cb.ci = ca.ci AND cb.cv = ca.cv
-         |  GROUP BY 1, 2
-         |  HAVING count(*) >= 32),
-         |pos AS MATERIALIZED (
-         |  SELECT doc_id, (i-1)//2 AS ci, i, sig[i] AS v
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(1, 129)) AS i)),
-         |marginal AS MATERIALIZED (
-         |  SELECT doc_a, doc_b, cm FROM cm WHERE cm < 48),
-         |mm AS (
-         |  SELECT m.doc_a, m.doc_b, ca.ci
-         |  FROM marginal m
-         |  JOIN chunks ca ON ca.doc_id = m.doc_a
-         |  LEFT JOIN chunks cb ON cb.doc_id = m.doc_b
-         |    AND cb.ci = ca.ci AND cb.cv = ca.cv
-         |  WHERE cb.doc_id IS NULL),
-         |repair AS (
-         |  SELECT mm.doc_a, mm.doc_b, count(*) FILTER (WHERE pa.v = pb.v) AS r
-         |  FROM mm
-         |  JOIN pos pa ON pa.doc_id = mm.doc_a AND pa.ci = mm.ci
-         |  JOIN pos pb ON pb.doc_id = mm.doc_b AND pb.i = pa.i
-         |  GROUP BY 1, 2),
-         |est AS MATERIALIZED (
-         |  SELECT doc_a, doc_b FROM cm WHERE cm >= 48
-         |  UNION ALL
-         |  SELECT m.doc_a, m.doc_b
-         |  FROM marginal m
-         |  LEFT JOIN repair r ON r.doc_a = m.doc_a AND r.doc_b = m.doc_b
-         |  WHERE 2 * m.cm + coalesce(r.r, 0) >= 96),
+         |${chunkEstimateCtes(width = 2, floor = 32, "doc_a", "doc_b", repairBelow = 48)},
+         |estp AS MATERIALIZED (
+         |  SELECT doc_a, doc_b FROM est WHERE matches >= 96),
          |tokn AS MATERIALIZED (
          |  SELECT doc_id, unnest(toks) AS t FROM reps),
          |inter AS (
          |  SELECT e.doc_a, e.doc_b, count(*) AS c
-         |  FROM est e
+         |  FROM estp e
          |  JOIN tokn ta ON ta.doc_id = e.doc_a
          |  JOIN tokn tb ON tb.doc_id = e.doc_b AND tb.t = ta.t
          |  GROUP BY 1, 2),
@@ -1250,15 +1434,14 @@ object SparkEntry {
          |ORDER BY r0.doc_id""".stripMargin
     },
 
-    // narrow-row form (r19) — same pigeonhole surgery as
-    // minhashOracleSql (which see for the full derivation), adapted to
-    // this key's 16 bands x 8 rows and 0.9 threshold: est >= 0.9 means
-    // >= 116 of 128 positions match, so <= 12 mismatches, so >= 4 of
-    // the 16 bands collide in full (cand2 HAVING >= 4, lossless) and
-    // >= 20 of the 32 exact HUGEINT 4-chunks match (cm HAVING >= 20,
-    // lossless); the <= 12 spoiled chunks are re-counted position-wise.
-    // The r18 list-payload form spilled past 48 GB at sf10 on the
-    // bipartite 100k x 400k candidate stream.
+    // bipartite twin of dedupAgainst over the persisted signature index
+    // (16 bands — saveSignatures' default): batch docs (doc_id%5=0) match
+    // corpus docs (%5<>0) sharing any band bucket with agreement >= 0.9;
+    // dup_of = smallest match, match_est = largest estimate, LEFT JOIN
+    // keeps unmatched batch docs with nulls — exactly the Spark output.
+    // est >= 0.9 allows <= 12 mismatched positions, so >= 4 of the 16
+    // 8-row bands collide in full (cand2 HAVING >= 4, lossless) and
+    // >= 20 of the 32 4-chunks match.
     "dd_incremental" ->
       s"""${minhashCtes(16)},
          |cand2 AS MATERIALIZED (
@@ -1268,42 +1451,12 @@ object SparkEntry {
          |  WHERE x.doc_id % 5 = 0 AND y.doc_id % 5 <> 0
          |  GROUP BY 1, 2
          |  HAVING count(*) >= 4),
-         |chunks AS MATERIALIZED (
-         |  SELECT doc_id, ci,
-         |    ((sig[ci*4+1]::HUGEINT * 2147483648 + sig[ci*4+2]) * 2147483648
-         |      + sig[ci*4+3]) * 2147483648 + sig[ci*4+4] AS cv
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(32)) AS ci)),
-         |cm AS MATERIALIZED (
-         |  SELECT c.q_id, c.c_id, count(*) AS cm
-         |  FROM cand2 c
-         |  JOIN chunks ca ON ca.doc_id = c.q_id
-         |  JOIN chunks cb ON cb.doc_id = c.c_id
-         |    AND cb.ci = ca.ci AND cb.cv = ca.cv
-         |  GROUP BY 1, 2
-         |  HAVING count(*) >= 20),
-         |pos AS MATERIALIZED (
-         |  SELECT doc_id, (i-1)//4 AS ci, i, sig[i] AS v
-         |  FROM sigs CROSS JOIN (SELECT unnest(range(1, 129)) AS i)),
-         |mm AS (
-         |  SELECT m.q_id, m.c_id, ca.ci
-         |  FROM cm m
-         |  JOIN chunks ca ON ca.doc_id = m.q_id
-         |  LEFT JOIN chunks cb ON cb.doc_id = m.c_id
-         |    AND cb.ci = ca.ci AND cb.cv = ca.cv
-         |  WHERE cb.doc_id IS NULL),
-         |rep AS (
-         |  SELECT mm.q_id, mm.c_id, count(*) FILTER (WHERE pa.v = pb.v) AS r
-         |  FROM mm
-         |  JOIN pos pa ON pa.doc_id = mm.q_id AND pa.ci = mm.ci
-         |  JOIN pos pb ON pb.doc_id = mm.c_id AND pb.i = pa.i
-         |  GROUP BY 1, 2),
+         |${chunkEstimateCtes(width = 4, floor = 20, "q_id", "c_id", repairBelow = 33)},
          |f AS (
-         |  SELECT m.q_id, min(m.c_id) AS dup_of,
-         |         max((4 * m.cm + coalesce(r.r, 0))::DOUBLE / 128) AS match_est
-         |  FROM cm m
-         |  LEFT JOIN rep r ON r.q_id = m.q_id AND r.c_id = m.c_id
-         |  WHERE (4 * m.cm + coalesce(r.r, 0))::DOUBLE / 128 >= 0.9
-         |  GROUP BY m.q_id)
+         |  SELECT q_id, min(c_id) AS dup_of, max(matches::DOUBLE / 128) AS match_est
+         |  FROM est
+         |  WHERE matches::DOUBLE / 128 >= 0.9
+         |  GROUP BY q_id)
          |SELECT d.doc_id, f.dup_of IS NOT NULL AS is_duplicate,
          |       f.dup_of, f.match_est
          |FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
@@ -1360,8 +1513,7 @@ object SparkEntry {
          |ORDER BY user_id, ts_us, event_id""".stripMargin,
 
     "ts_rolling" ->
-      s"""$eventsCte,
-         |$rollingCte
+      s"""$featuresCtes
          |SELECT * FROM f ORDER BY user_id, ts_us, event_id""".stripMargin,
 
     "ts_lag_delta" ->
@@ -1387,14 +1539,11 @@ object SparkEntry {
          |GROUP BY bucket_us, event_type
          |ORDER BY bucket_us, event_type""".stripMargin,
 
+    // TimeSeries.sessionize opens a session after a gap of MORE than
+    // 12 h, i.e. at >= 12 h + 1 µs on the integer µs clock
     "ts_sessionize" ->
       s"""$eventsCte,
-         |l AS (SELECT e.*, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us FROM e),
-         |fl AS (SELECT l.*, CASE WHEN prev_us IS NULL OR ts_us - prev_us > 43200000000 THEN 1 ELSE 0 END AS new_sess FROM l),
-         |s AS (SELECT fl.*,
-         |             CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |                                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-         |      FROM fl)
+         |${sessionCtes(twelveHoursUs + 1)}
          |SELECT user_id, session_id,
          |       min(ts_us) AS session_start_us,
          |       max(ts_us) AS session_end_us,
@@ -1404,73 +1553,33 @@ object SparkEntry {
          |ORDER BY user_id, session_id""".stripMargin,
 
     "ad_threshold" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte
+      s"""$thresholdCtes
          |SELECT * FROM a ORDER BY user_id, ts_us, event_id""".stripMargin,
 
     "ad_consecutive" ->
       s"""$eventsCte,
          |$consecutiveCtes
-         |SELECT event_id, user_id, ts_us, value, run_len,
-         |       'consecutive_drift' AS rule_name,
-         |       CASE WHEN value > 200 THEN 'high' ELSE 'medium' END AS severity
-         |FROM k WHERE run_len >= 3
-         |ORDER BY user_id, ts_us, event_id""".stripMargin,
+         |SELECT event_id, user_id, ts_us, value, run_len, rule_name, severity
+         |FROM ak ORDER BY user_id, ts_us, event_id""".stripMargin,
 
     "ad_oscillation" ->
       s"""$eventsCte,
          |$oscillationCtes
-         |SELECT event_id, user_id, ts_us, value, n_changes,
-         |       'oscillating_control' AS rule_name, 'medium' AS severity
-         |FROM o WHERE n_changes > 8
-         |ORDER BY user_id, ts_us, event_id""".stripMargin,
+         |SELECT event_id, user_id, ts_us, value, n_changes, rule_name, severity
+         |FROM ao ORDER BY user_id, ts_us, event_id""".stripMargin,
 
     "ad_zscore" ->
       s"""$eventsCte,
          |$zscoreCtes
-         |SELECT event_id, e.user_id, ts_us, value,
-         |       (value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END) AS zscore,
-         |       'zscore' AS rule_name,
-         |       CASE WHEN abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 3.5
-         |            THEN 'high' ELSE 'medium' END AS severity
-         |FROM e JOIN z ON e.user_id = z.user_id
-         |WHERE abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 2.5
-         |ORDER BY e.user_id, ts_us, event_id""".stripMargin,
+         |SELECT event_id, user_id, ts_us, value, score AS zscore, rule_name, severity
+         |FROM az ORDER BY user_id, ts_us, event_id""".stripMargin,
 
     "ad_all_rules" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte,
-         |$consecutiveCtes,
-         |$oscillationCtes,
-         |$zscoreCtes
-         |SELECT * FROM (
-         |  SELECT event_id, user_id, ts_us, 'value' AS metric, score, rule_name, severity FROM a
-         |  UNION ALL
-         |  SELECT event_id, user_id, ts_us, 'value' AS metric,
-         |         CAST(run_len AS DOUBLE) AS score, 'consecutive_drift' AS rule_name,
-         |         CASE WHEN value > 200 THEN 'high' ELSE 'medium' END AS severity
-         |  FROM k WHERE run_len >= 3
-         |  UNION ALL
-         |  SELECT event_id, user_id, ts_us, 'value' AS metric,
-         |         CAST(n_changes AS DOUBLE) AS score, 'oscillating_control' AS rule_name,
-         |         'medium' AS severity
-         |  FROM o WHERE n_changes > 8
-         |  UNION ALL
-         |  SELECT event_id, e.user_id, ts_us, 'value' AS metric,
-         |         (value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END) AS score,
-         |         'zscore' AS rule_name,
-         |         CASE WHEN abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 3.5
-         |              THEN 'high' ELSE 'medium' END AS severity
-         |  FROM e JOIN z ON e.user_id = z.user_id
-         |  WHERE abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 2.5)
-         |ORDER BY rule_name, user_id, ts_us, event_id""".stripMargin,
+      s"""$allAlertsCtes
+         |SELECT * FROM au ORDER BY rule_name, user_id, ts_us, event_id""".stripMargin,
 
     "al_filter" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte
+      s"""$thresholdCtes
          |SELECT * FROM a
          |WHERE ts_us >= 1704844800000000 AND ts_us < 1705708800000000
          |  AND severity = 'high'
@@ -1478,39 +1587,27 @@ object SparkEntry {
          |LIMIT 100""".stripMargin,
 
     "al_summary" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte
+      s"""$thresholdCtes
          |SELECT severity, event_type, user_id, CAST(count(*) AS BIGINT) AS n
          |FROM a
          |GROUP BY GROUPING SETS ((severity), (event_type), (user_id))
          |ORDER BY severity NULLS FIRST, event_type NULLS FIRST, user_id NULLS FIRST""".stripMargin,
 
     "al_daily" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte
+      s"""$thresholdCtes
          |SELECT ts_us // 86400000000 AS epoch_day, CAST(count(*) AS BIGINT) AS n
          |FROM a GROUP BY 1 ORDER BY epoch_day""".stripMargin,
 
     "al_filter_rule" ->
-      s"""$eventsCte,
-         |$zscoreCtes
-         |SELECT event_id, e.user_id, ts_us, 'value' AS metric,
-         |       (value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END) AS score,
-         |       'zscore' AS rule_name,
-         |       CASE WHEN abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 3.5
-         |            THEN 'high' ELSE 'medium' END AS severity
-         |FROM e JOIN z ON e.user_id = z.user_id
-         |WHERE abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 2.5
+      s"""$allAlertsCtes
+         |SELECT * FROM au
+         |WHERE rule_name = 'zscore'
          |  AND ts_us >= 1704844800000000 AND ts_us < 1705708800000000
          |ORDER BY ts_us DESC, event_id
          |LIMIT 1000""".stripMargin,
 
     "al_summary_range" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte
+      s"""$thresholdCtes
          |SELECT severity, event_type, user_id, CAST(count(*) AS BIGINT) AS n
          |FROM a
          |WHERE ts_us >= 1704844800000000 AND ts_us < 1705708800000000
@@ -1518,59 +1615,22 @@ object SparkEntry {
          |ORDER BY severity NULLS FIRST, event_type NULLS FIRST, user_id NULLS FIRST""".stripMargin,
 
     "al_summary_rules" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte,
-         |$consecutiveCtes,
-         |$oscillationCtes,
-         |$zscoreCtes,
-         |u AS (
-         |  SELECT user_id, severity, rule_name FROM a
-         |  UNION ALL
-         |  SELECT user_id, CASE WHEN value > 200 THEN 'high' ELSE 'medium' END AS severity,
-         |         'consecutive_drift' AS rule_name
-         |  FROM k WHERE run_len >= 3
-         |  UNION ALL
-         |  SELECT user_id, 'medium' AS severity, 'oscillating_control' AS rule_name
-         |  FROM o WHERE n_changes > 8
-         |  UNION ALL
-         |  SELECT e.user_id,
-         |         CASE WHEN abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 3.5
-         |              THEN 'high' ELSE 'medium' END AS severity,
-         |         'zscore' AS rule_name
-         |  FROM e JOIN z ON e.user_id = z.user_id
-         |  WHERE abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 2.5)
+      s"""$allAlertsCtes
          |SELECT severity, rule_name, user_id, CAST(count(*) AS BIGINT) AS n
-         |FROM u
+         |FROM au
          |GROUP BY GROUPING SETS ((severity), (rule_name), (user_id))
          |ORDER BY severity NULLS FIRST, rule_name NULLS FIRST, user_id NULLS FIRST""".stripMargin,
 
     "al_summary_top" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte,
-         |$consecutiveCtes,
-         |$oscillationCtes,
-         |$zscoreCtes
+      s"""$allAlertsCtes
          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_alerts
-         |FROM (
-         |  SELECT user_id FROM a
-         |  UNION ALL
-         |  SELECT user_id FROM k WHERE run_len >= 3
-         |  UNION ALL
-         |  SELECT user_id FROM o WHERE n_changes > 8
-         |  UNION ALL
-         |  SELECT e.user_id
-         |  FROM e JOIN z ON e.user_id = z.user_id
-         |  WHERE abs((value - mean_v) / (CASE WHEN std_v > 0 THEN std_v END)) > 2.5)
+         |FROM au
          |GROUP BY user_id
          |ORDER BY n_alerts DESC, user_id
          |LIMIT 10""".stripMargin,
 
     "al_join_features" ->
-      s"""$eventsCte,
-         |$rollingCte,
-         |$alertsCte
+      s"""$thresholdCtes
          |SELECT a.event_id, a.user_id, f.ts_us, f.value, f.mean_12, f.std_12,
          |       a.severity, a.score
          |FROM a JOIN f ON a.event_id = f.event_id AND a.user_id = f.user_id
@@ -1587,61 +1647,18 @@ object SparkEntry {
         |       doc_id <> min(doc_id) OVER (PARTITION BY norm_hash) AS is_duplicate
         |FROM d ORDER BY doc_id""".stripMargin,
 
-
     "dd_embedding" -> embeddingTopMCappedOracleSql,
     "dd_embedding_uncapped" -> embeddingTopMOracleSql,
     "dd_embedding_anchor" -> embeddingTopMAnchorOracleSql,
 
-    // AnnLsh's plane family (tables 64..87; 5 planes — the r14
-    // recall-anchored default geometry, corpus-size-free by
-    // construction: anchorPlanes(24) = 5 at ANY corpus) and its double cosine
-    // re-rank are both bit-reproducible: buckets via the shared
-    // integer-LCG twin (lshBucketSql, as dd_embedding), cosine via the
-    // sequential-double twin (dotDoubleSql) in the kernel's exact op shape
     "sim_ann_lsh" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |           x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS iv
-         |  FROM embeddings),
-         |bk AS (
-         |  SELECT vec_id, t, ${lshBucketSql(5)} AS bucket
-         |  FROM (SELECT vec_id, iv, unnest(generate_series(64, 87)) AS t FROM base)),
-         |qb AS (SELECT t, bucket FROM bk WHERE vec_id = 0),
-         |cand AS (
-         |  SELECT DISTINCT b.vec_id FROM bk b JOIN qb ON b.t = qb.t AND b.bucket = qb.bucket
-         |  WHERE b.vec_id <> 0),
-         |q AS (SELECT embedding AS q_emb, ${dotDoubleSql("embedding", "embedding")} AS q_nrm
-         |      FROM embeddings WHERE vec_id = 0)
-         |SELECT e.vec_id, e.label,
-         |       ${dotDoubleSql("e.embedding", "q_emb")}
-         |         / (sqrt(${dotDoubleSql("e.embedding", "e.embedding")}) * sqrt(q_nrm)) AS cosine
-         |FROM embeddings e JOIN cand USING (vec_id) CROSS JOIN q
-         |ORDER BY cosine DESC, vec_id LIMIT 10""".stripMargin,
+      s"""${annProbeCtes(1, 10)}
+         |SELECT vec_id, label, cosine FROM top
+         |ORDER BY cosine DESC, vec_id""".stripMargin,
 
     "sim_ann_batch" ->
-      s"""WITH base AS (
-         |  SELECT vec_id, list_transform(embedding,
-         |           x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT)) AS iv
-         |  FROM embeddings),
-         |bk AS (
-         |  SELECT vec_id, t, ${lshBucketSql(5)} AS bucket
-         |  FROM (SELECT vec_id, iv, unnest(generate_series(64, 87)) AS t FROM base)),
-         |qb AS (SELECT vec_id AS q_id, t, bucket FROM bk WHERE vec_id BETWEEN 0 AND 63),
-         |cand AS (
-         |  SELECT DISTINCT qb.q_id, b.vec_id
-         |  FROM bk b JOIN qb ON b.t = qb.t AND b.bucket = qb.bucket
-         |  WHERE b.vec_id <> qb.q_id),
-         |qe AS (SELECT vec_id AS q_id, embedding AS q_emb,
-         |              ${dotDoubleSql("embedding", "embedding")} AS q_nrm
-         |       FROM embeddings WHERE vec_id BETWEEN 0 AND 63),
-         |scored AS (
-         |  SELECT c.q_id, e.vec_id, e.label,
-         |         ${dotDoubleSql("e.embedding", "q_emb")}
-         |           / (sqrt(${dotDoubleSql("e.embedding", "e.embedding")}) * sqrt(q_nrm)) AS cosine
-         |  FROM cand c JOIN embeddings e USING (vec_id) JOIN qe ON c.q_id = qe.q_id),
-         |rk AS (SELECT *, row_number() OVER (PARTITION BY q_id
-         |                                    ORDER BY cosine DESC, vec_id) AS rn FROM scored)
-         |SELECT q_id, vec_id, label, cosine FROM rk WHERE rn <= 5
+      s"""${annProbeCtes(64, 5)}
+         |SELECT q_id, vec_id, label, cosine FROM top
          |ORDER BY q_id, cosine DESC, vec_id""".stripMargin,
 
     "sim_topk" ->
@@ -1657,22 +1674,13 @@ object SparkEntry {
          |ORDER BY cosine DESC, vec_id
          |LIMIT 20""".stripMargin,
 
-    "tx_pack" ->
-      """WITH t AS (
-        |  SELECT doc_id, CAST(doc_id % 32 AS INT) AS shard,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, shard, n_tokens,
-        |         CAST(SUM(n_tokens) OVER (PARTITION BY shard ORDER BY doc_id)
-        |           - n_tokens AS BIGINT) AS start_tok
-        |  FROM t)
-        |SELECT doc_id, shard, n_tokens, start_tok,
-        |       CAST(start_tok // 2048 AS BIGINT) AS seq_id,
-        |       CAST(start_tok % 2048 AS BIGINT) AS seq_offset,
-        |       CAST((start_tok + n_tokens - 1) // 2048
-        |         - start_tok // 2048 + 1 AS BIGINT) AS n_seqs
-        |FROM c ORDER BY doc_id""".stripMargin,
+    "tx_pack" -> {
+      val docs = "(SELECT doc_id, CAST(doc_id % 32 AS INT) AS shard, " +
+        "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents)"
+      s"""WITH ${packCte(docs, "doc_id", 2048)}
+         |SELECT doc_id, shard, n_tokens, start_tok, seq_id, seq_offset, n_seqs
+         |FROM packd ORDER BY doc_id""".stripMargin
+    },
     // chunk count in the same INTEGER form as the Spark side
     // (⌈max(n−overlap,1)/step⌉ via (x + step−1) // step); list slices
     // are 1-based inclusive and clamp in both engines, and the re-join
@@ -1698,28 +1706,9 @@ object SparkEntry {
         |FROM documents ORDER BY doc_id""".stripMargin,
 
     "tx_quality" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |         CAST(length(text) AS BIGINT) AS n_chars_calc,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT) AS alpha,
-        |         CAST(len(list_filter(string_split(text, ' '),
-        |                  t -> t IN ('the','a','of','to','and','in'))) AS BIGINT) AS n_stop
-        |  FROM documents)
-        |SELECT doc_id, n_tokens,
-        |       CAST(alpha AS DOUBLE) / n_chars_calc AS alpha_ratio,
-        |       CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
-        |       0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |         + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |         + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) AS score,
-        |       CASE WHEN 0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |                 + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |                 + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) >= 0.8 THEN 'high'
-        |            WHEN 0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |                 + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |                 + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) >= 0.6 THEN 'medium'
-        |            ELSE 'low' END AS quality_band
-        |FROM b ORDER BY doc_id""".stripMargin,
+      s"""WITH $qualityCte
+         |SELECT doc_id, n_tokens, alpha_ratio, stop_ratio, score, quality_band
+         |FROM q ORDER BY doc_id""".stripMargin,
 
     "st_dedup" ->
       s"""$eventsCte
@@ -1729,15 +1718,11 @@ object SparkEntry {
          |ORDER BY user_id, event_type""".stripMargin,
 
     "tx_ngram_freq" ->
-      """WITH g AS (
-        |  SELECT unnest(list_transform(
-        |           generate_series(0, greatest(len(string_split(text, ' ')) - 2, 0)),
-        |           i -> array_to_string((string_split(text, ' '))[i+1:i+2], ' '))) AS ngram
-        |  FROM documents)
-        |SELECT ngram, CAST(count(*) AS BIGINT) AS n_occurrences
-        |FROM g GROUP BY ngram
-        |ORDER BY n_occurrences DESC, ngram
-        |LIMIT 50""".stripMargin,
+      s"""WITH g AS (SELECT unnest(${gramsSql(2)}) AS ngram FROM documents)
+         |SELECT ngram, CAST(count(*) AS BIGINT) AS n_occurrences
+         |FROM g GROUP BY ngram
+         |ORDER BY n_occurrences DESC, ngram
+         |LIMIT 50""".stripMargin,
 
     "tx_tokens_regex" ->
       """SELECT doc_id,
@@ -1773,7 +1758,7 @@ object SparkEntry {
         |  FROM customer WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey))
         |ORDER BY category""".stripMargin,
 
-    // --- rows+schema contracts for the sketch/model keys (round-11) ---
+    // --- rows+schema contracts for the sketch/model keys ---
     // These three keys compute engine-specific estimates (HLL sketch, KLL
     // sketch, isolation forest), so a bit-exact cross-engine hash is
     // impossible BY NATURE — the oracle instead pins the deterministic
@@ -1801,8 +1786,7 @@ object SparkEntry {
         |ORDER BY l_returnflag""".stripMargin,
 
     "ad_isolation_forest" ->
-      s"""$eventsCte,
-         |$rollingCte
+      s"""$featuresCtes
          |SELECT event_id, user_id, ts_us, value,
          |       0.0 AS if_score, FALSE AS is_anomaly, 'none' AS severity
          |FROM f ORDER BY user_id, ts_us, event_id""".stripMargin,
@@ -1833,18 +1817,13 @@ object SparkEntry {
     // (Spark merges only next < end); session_end = last event + gap
     "st_session" ->
       s"""$eventsCte,
-         |l AS (SELECT e.*, lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id) AS prev_us FROM e),
-         |fl AS (SELECT l.*, CASE WHEN prev_us IS NULL OR ts_us - prev_us >= 43200000000 THEN 1 ELSE 0 END AS new_sess FROM l),
-         |s AS (SELECT fl.*,
-         |             CAST(sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-         |                                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
-         |      FROM fl)
+         |${sessionCtes(twelveHoursUs)}
          |SELECT user_id,
          |       min(ts_us) AS session_start_us,
-         |       max(ts_us) + 43200000000 AS session_end_us,
+         |       max(ts_us) + $twelveHoursUs AS session_end_us,
          |       CAST(count(*) AS BIGINT) AS n_events,
          |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         |FROM s GROUP BY user_id, sess
+         |FROM s GROUP BY user_id, session_id
          |ORDER BY user_id, session_start_us""".stripMargin,
 
     "mm_binary" ->
@@ -1856,72 +1835,46 @@ object SparkEntry {
         |       CAST(CAST(octet_length(encode(text)) AS BIGINT) % 7 AS DOUBLE) / 7.0 AS fake_feature
         |FROM documents ORDER BY doc_id""".stripMargin,
 
-    // mm_features / mm_frames / mm_resize twins are BYTE-exact (r18):
-    // the Spark side operates on UTF-8 payload bytes, and the pre-r18
-    // character-based twins silently relied on the corpus being pure
-    // ASCII — which ScaleUp's salted sf1 corpus is NOT (every doc
-    // carries multi-byte salt; the r17 sf1 oracle run caught all four
-    // keys red). This DuckDB build has no blob-level md5/substring, so
-    // the byte view is reached through hex(encode(text)): two hex chars
-    // per byte, a byte's %16 bucket is its LOW NIBBLE (the pair's
-    // second hex char), and a frameLen-byte window at byte offset ob is
-    // the 2·frameLen-char hex slice at 2·ob+1 — matching the engine's
-    // hex-rendered frame digest (Multimodal.frameSample).
+    // mm_features / mm_frames / mm_resize twins are BYTE-exact: the
+    // Spark side operates on UTF-8 payload bytes, and ScaleUp's salted
+    // corpora carry multi-byte characters. This DuckDB build has no
+    // blob-level md5/substring, so the byte view is reached through
+    // hex(encode(text)): two hex chars per byte, a byte's %16 bucket is
+    // its LOW NIBBLE (the pair's second hex char), and a frameLen-byte
+    // window at byte offset ob is the 2·frameLen-char hex slice at
+    // 2·ob+1 — matching the engine's hex-rendered frame digest
+    // (Multimodal.frameSample).
     "mm_features" ->
-      """WITH c AS (
-        |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |         list_transform(generate_series(0, 15), b ->
-        |           len(list_filter(regexp_extract_all(hex(encode(text)), '..'),
-        |               p -> right(p, 1) = substring('0123456789ABCDEF', b + 1, 1)))) AS counts
-        |  FROM documents)
-        |SELECT doc_id, n_bytes,
-        |       md5(array_to_string(counts, ',')) AS feat_digest
-        |FROM c ORDER BY doc_id""".stripMargin,
+      s"""WITH $hexCountsCte
+         |SELECT doc_id, n_bytes,
+         |       md5(array_to_string(counts, ',')) AS feat_digest
+         |FROM c ORDER BY doc_id""".stripMargin,
 
     "mm_frames" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |         unnest(generate_series(0, greatest(octet_length(encode(text)) - 1, 0), 64)) AS ob,
-        |         hex(encode(text)) AS h
-        |  FROM documents)
-        |SELECT doc_id,
-        |       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY ob) - 1 AS INTEGER) AS frame_no,
-        |       CAST(ob AS BIGINT) AS off_bytes,
-        |       md5(substring(h, CAST(ob AS INTEGER) * 2 + 1, 32)) AS frame_md5
-        |FROM f ORDER BY doc_id, frame_no""".stripMargin,
+      s"""WITH $framesCte
+         |SELECT doc_id,
+         |       CAST(row_number() OVER (PARTITION BY doc_id ORDER BY ob) - 1 AS INTEGER) AS frame_no,
+         |       CAST(ob AS BIGINT) AS off_bytes,
+         |       frame_md5
+         |FROM f ORDER BY doc_id, frame_no""".stripMargin,
 
     "mm_frame_dedup" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |         unnest(generate_series(0, greatest(octet_length(encode(text)) - 1, 0), 64)) AS ob,
-        |         hex(encode(text)) AS h
-        |  FROM documents),
-        |d AS (
-        |  SELECT doc_id, md5(substring(h, CAST(ob AS INTEGER) * 2 + 1, 32)) AS frame_md5
-        |  FROM f)
-        |SELECT frame_md5,
-        |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS BIGINT) AS n_occurrences,
-        |       min(doc_id) AS first_doc
-        |FROM d GROUP BY frame_md5
-        |HAVING count(DISTINCT doc_id) >= 2
-        |ORDER BY frame_md5""".stripMargin,
+      s"""WITH $framesCte
+         |SELECT frame_md5,
+         |       CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
+         |       CAST(count(*) AS BIGINT) AS n_occurrences,
+         |       min(doc_id) AS first_doc
+         |FROM f GROUP BY frame_md5
+         |HAVING count(DISTINCT doc_id) >= 2
+         |ORDER BY frame_md5""".stripMargin,
 
     "mm_resize" ->
-      """WITH c AS (
-        |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |         list_transform(generate_series(0, 15), b ->
-        |           len(list_filter(regexp_extract_all(hex(encode(text)), '..'),
-        |               p -> right(p, 1) = substring('0123456789ABCDEF', b + 1, 1)))) AS counts
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, n_bytes,
-        |         list_transform(generate_series(0, 3), j ->
-        |           counts[4*j+1] + counts[4*j+2] + counts[4*j+3] + counts[4*j+4]) AS resized
-        |  FROM c)
-        |SELECT doc_id, md5(array_to_string(resized, ',')) AS resized_digest,
-        |       n_bytes AS total
-        |FROM r ORDER BY doc_id""".stripMargin,
+      s"""WITH $hexCountsCte
+         |SELECT doc_id,
+         |       md5(array_to_string(list_transform(generate_series(0, 3), j ->
+         |         counts[4*j+1] + counts[4*j+2] + counts[4*j+3] + counts[4*j+4]), ',')) AS resized_digest,
+         |       n_bytes AS total
+         |FROM c ORDER BY doc_id""".stripMargin,
 
     "tx_normalize" ->
       """WITH n AS (
@@ -1934,67 +1887,34 @@ object SparkEntry {
         |       CAST(len(string_split(norm_text, ' ')) AS BIGINT) AS n_tokens_norm
         |FROM n ORDER BY doc_id""".stripMargin,
 
-    // PII patterns restricted to the Java/RE2-agreeing subset; same
-    // match-then-redact order in both engines, so the redacted bytes (and
-    // their md5) are identical
-    "tx_pii" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |         CAST(len(regexp_extract_all(text,
-        |           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_email,
-        |         CAST(len(regexp_extract_all(text,
-        |           '[0-9]{3}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phone,
-        |         CAST(len(regexp_extract_all(text,
-        |           '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) AS BIGINT) AS n_ip,
-        |         CAST(len(regexp_extract_all(text, 'https?://[^ ]+')) AS BIGINT) AS n_url,
-        |         md5(regexp_replace(regexp_replace(regexp_replace(regexp_replace(text,
-        |           'https?://[^ ]+', '<URL>', 'g'),
-        |           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}', '<EMAIL>', 'g'),
-        |           '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g'),
-        |           '[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g')) AS redacted_md5
-        |  FROM documents)
-        |SELECT doc_id, n_email, n_phone, n_ip, n_url,
-        |       n_url + n_email + n_ip + n_phone AS n_pii, redacted_md5
-        |FROM c ORDER BY doc_id""".stripMargin,
+    // same match-then-redact order in both engines, so the redacted
+    // bytes (and their md5) are identical
+    "tx_pii" -> {
+      val redacted = piiPatterns.foldLeft("text") { case (t, (_, pat, rep)) =>
+        s"regexp_replace($t, '$pat', '$rep', 'g')"
+      }
+      s"""WITH ${piiCte("documents")}
+         |SELECT doc_id, n_email, n_phone, n_ip, n_url, n_pii, md5($redacted) AS redacted_md5
+         |FROM pii ORDER BY doc_id""".stripMargin
+    },
 
     // distinct-per-doc gram votes → count roll-up, same windows as the
     // contamination oracle
     "tx_boilerplate" ->
-      """WITH g AS (
-        |  SELECT doc_id, unnest(list_distinct(list_transform(
-        |    generate_series(0, greatest(len(string_split(text, ' ')) - 3, 0)),
-        |    i -> array_to_string((string_split(text, ' '))[i+1:i+3], ' ')))) AS gram
-        |  FROM documents)
-        |SELECT gram, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS first_doc
-        |FROM g GROUP BY gram
-        |HAVING count(*) >= 5
-        |ORDER BY n_docs DESC, gram
-        |LIMIT 1000""".stripMargin,
+      s"""WITH g AS (
+         |  SELECT doc_id, unnest(list_distinct(${gramsSql(3)})) AS gram FROM documents)
+         |SELECT gram, CAST(count(*) AS BIGINT) AS n_docs, min(doc_id) AS first_doc
+         |FROM g GROUP BY gram
+         |HAVING count(*) >= 5
+         |ORDER BY n_docs DESC, gram
+         |LIMIT 1000""".stripMargin,
 
-    // integer mode-counts + single divisions — bit-identical cross-engine
     "tx_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |g AS (
-        |  SELECT doc_id, toks,
-        |         list_transform(generate_series(0, greatest(len(toks) - 2, 0)),
-        |           i -> array_to_string(toks[i+1:i+2], ' ')) AS grams
-        |  FROM t),
-        |c AS (
-        |  SELECT doc_id,
-        |         CAST(len(toks) AS BIGINT) AS n_tokens,
-        |         CAST(len(grams) AS BIGINT) AS n_2grams,
-        |         CAST(list_max(list_transform(list_distinct(toks),
-        |           y -> len(list_filter(toks, x -> x = y)))) AS BIGINT) AS top_token_count,
-        |         CAST(list_max(list_transform(list_distinct(grams),
-        |           y -> len(list_filter(grams, x -> x = y)))) AS BIGINT) AS top_2gram_count
-        |  FROM g)
-        |SELECT doc_id, n_tokens, n_2grams, top_token_count, top_2gram_count,
-        |       CAST(top_token_count AS DOUBLE) / n_tokens AS top_token_fraction,
-        |       CAST(top_2gram_count AS DOUBLE) / n_2grams AS top_2gram_fraction,
-        |       (CAST(top_2gram_count AS DOUBLE) / n_2grams > 0.18
-        |        OR CAST(top_token_count AS DOUBLE) / n_tokens > 0.3) AS repetitive
-        |FROM c ORDER BY doc_id""".stripMargin,
+      s"""WITH ${repetitionCte("documents")}
+         |SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens, n_2grams,
+         |       top_token_count, top_2gram_count, top_token_fraction,
+         |       top_2gram_fraction, repetitive
+         |FROM rp ORDER BY doc_id""".stripMargin,
 
     "tx_corpus_stats" ->
       """WITH cells AS (
@@ -2006,118 +1926,70 @@ object SparkEntry {
         |       CAST(n_docs AS DOUBLE) / (SELECT sum(n_docs) FROM cells) AS doc_share
         |FROM cells ORDER BY source, lang""".stripMargin,
 
-    // the curation gate composes the three proven per-row fragments
-    // (quality formula, repetition mode counts, PII counts) in one pass
+    // the curation gate: TextAnalysis.curate's stage chain
+    // withPiiCounts ∘ withRepetition ∘ withQuality, in one pass
     "tx_curate" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |         CAST(length(text) AS BIGINT) AS n_chars_calc,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT) AS alpha,
-        |         CAST(len(list_filter(string_split(text, ' '),
-        |                  t -> t IN ('the','a','of','to','and','in'))) AS BIGINT) AS n_stop,
-        |         string_split(text, ' ') AS toks,
-        |         list_transform(generate_series(0, greatest(len(string_split(text, ' ')) - 2, 0)),
-        |           i -> array_to_string((string_split(text, ' '))[i+1:i+2], ' ')) AS grams,
-        |         CAST(len(regexp_extract_all(text, 'https?://[^ ]+')) AS BIGINT) AS n_url,
-        |         CAST(len(regexp_extract_all(text,
-        |           '[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\.[a-zA-Z]{2,}')) AS BIGINT) AS n_email,
-        |         CAST(len(regexp_extract_all(text,
-        |           '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}')) AS BIGINT) AS n_ip,
-        |         CAST(len(regexp_extract_all(text,
-        |           '[0-9]{3}-[0-9]{3}-[0-9]{4}')) AS BIGINT) AS n_phone
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id,
-        |         0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |           + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |           + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) AS score,
-        |         CASE WHEN 0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |                   + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |                   + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) >= 0.8 THEN 'high'
-        |              WHEN 0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |                   + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |                   + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) >= 0.6 THEN 'medium'
-        |              ELSE 'low' END AS quality_band,
-        |         (CAST(list_max(list_transform(list_distinct(grams),
-        |             y -> len(list_filter(grams, x -> x = y)))) AS DOUBLE) / len(grams) > 0.18
-        |          OR CAST(list_max(list_transform(list_distinct(toks),
-        |             y -> len(list_filter(toks, x -> x = y)))) AS DOUBLE) / len(toks) > 0.3)
-        |           AS repetitive,
-        |         n_url + n_email + n_ip + n_phone AS n_pii
-        |  FROM b)
-        |SELECT doc_id, score, quality_band, repetitive, n_pii,
-        |       (score >= 0.6 AND NOT repetitive) AS keep
-        |FROM c ORDER BY doc_id""".stripMargin,
+      s"""WITH $qualityCte,
+         |${repetitionCte("q")},
+         |${piiCte("rp")}
+         |SELECT doc_id, score, quality_band, repetitive, n_pii,
+         |       (score >= 0.6 AND NOT repetitive) AS keep
+         |FROM pii ORDER BY doc_id""".stripMargin,
 
-    // Lehmer/MINSTD key (doc_id * 48271 mod 2^31-1) — plain bigint
-    // arithmetic, so the sampled subset is bit-identical cross-engine
     "ds_sample" ->
-      """WITH k AS (
-        |  SELECT doc_id, source, n_chars,
-        |         (doc_id * 48271) % 2147483647 AS sample_key,
-        |         CASE WHEN source = 'src0' THEN 50
-        |              WHEN source = 'src1' THEN 0
-        |              ELSE 10 END AS sample_pct
-        |  FROM documents)
-        |SELECT doc_id, source, n_chars, sample_key, sample_pct
-        |FROM k WHERE sample_key % 100 < sample_pct
-        |ORDER BY doc_id""".stripMargin,
+      s"""WITH k AS (
+         |  SELECT doc_id, source, n_chars,
+         |         ${lehmerSql("doc_id")} AS sample_key,
+         |         CASE WHEN source = 'src0' THEN 50
+         |              WHEN source = 'src1' THEN 0
+         |              ELSE 10 END AS sample_pct
+         |  FROM documents)
+         |SELECT doc_id, source, n_chars, sample_key, sample_pct
+         |FROM k WHERE sample_key % 100 < sample_pct
+         |ORDER BY doc_id""".stripMargin,
 
-    // bigram build shared verbatim with tx_ngram_freq's twin (short docs
-    // yield one truncated gram in both engines — the word_ngrams
-    // contract); sum/count are integers, the mean one double division
+    // bigram build shared with tx_ngram_freq's twin; sum/count are
+    // integers, the mean one double division
     "tx_lm_score" ->
-      """WITH g AS (
-        |  SELECT doc_id, unnest(list_transform(
-        |           generate_series(0, greatest(len(string_split(text, ' ')) - 2, 0)),
-        |           i -> array_to_string((string_split(text, ' '))[i+1:i+2], ' '))) AS gram
-        |  FROM documents),
-        |m AS (SELECT gram, CAST(count(*) AS BIGINT) AS gram_freq FROM g GROUP BY gram)
-        |SELECT g.doc_id,
-        |       CAST(count(*) AS BIGINT) AS n_grams,
-        |       CAST(sum(m.gram_freq) AS BIGINT) AS sum_freq,
-        |       CAST(sum(m.gram_freq) AS DOUBLE) / count(*) AS avg_gram_freq
-        |FROM g JOIN m USING (gram)
-        |GROUP BY g.doc_id
-        |ORDER BY g.doc_id""".stripMargin,
+      s"""WITH g AS (SELECT doc_id, unnest(${gramsSql(2)}) AS gram FROM documents),
+         |m AS (SELECT gram, CAST(count(*) AS BIGINT) AS gram_freq FROM g GROUP BY gram)
+         |SELECT g.doc_id,
+         |       CAST(count(*) AS BIGINT) AS n_grams,
+         |       CAST(sum(m.gram_freq) AS BIGINT) AS sum_freq,
+         |       CAST(sum(m.gram_freq) AS DOUBLE) / count(*) AS avg_gram_freq
+         |FROM g JOIN m USING (gram)
+         |GROUP BY g.doc_id
+         |ORDER BY g.doc_id""".stripMargin,
 
     // exhaustive twin of the prefix-filtered containment join (the prefix
     // candidates have zero false negatives, so the full inverted-index
     // join is the same set); the threshold is the shared integer
-    // predicate, exact in both engines. r18: the twin pairs docs through
-    // an exploded (doc, shingle) self-join + group-count instead of the
-    // former all-pairs list_intersect — identical output (per-doc
-    // shingles are distinct, so the join count IS the intersection
-    // size, and zero-overlap pairs cannot pass n_common >= 0.8·n_a),
-    // but Σ df(shingle)² work instead of n²·|toks|: the all-pairs form
-    // ran 6+ hours at sf1 without finishing, this one takes minutes.
+    // predicate, exact in both engines. Docs pair through an exploded
+    // (doc, shingle) self-join + group-count: per-doc shingles are
+    // distinct, so the join count IS the intersection size, and
+    // zero-overlap pairs cannot pass n_common >= 0.8·n_a — Σ df(shingle)²
+    // work instead of the all-pairs n²·|toks|, which ran 6+ hours at sf1.
     // No prefix trick is used, so the oracle stays independent of the
     // engine's PPJoin candidate generation.
     "dd_containment" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |         list_sort(list_distinct(list_transform(
-        |           generate_series(0, greatest(len(string_split(text, ' ')) - 3, 0)),
-        |           i -> array_to_string((string_split(text, ' '))[i+1:i+3], ' ')))) AS toks
-        |  FROM documents),
-        |t AS MATERIALIZED (
-        |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n FROM g),
-        |x AS MATERIALIZED (
-        |  SELECT doc_id, unnest(toks) AS tok FROM t),
-        |p AS MATERIALIZED (
-        |  SELECT a.doc_id AS contained_id, b.doc_id AS container_id,
-        |         CAST(count(*) AS BIGINT) AS n_common
-        |  FROM x a JOIN x b ON a.tok = b.tok AND a.doc_id <> b.doc_id
-        |  GROUP BY 1, 2)
-        |SELECT p.contained_id, p.container_id,
-        |       ta.n AS n_a, tb.n AS n_b, p.n_common,
-        |       CAST(p.n_common AS DOUBLE) / ta.n AS containment
-        |FROM p
-        |JOIN t ta ON ta.doc_id = p.contained_id
-        |JOIN t tb ON tb.doc_id = p.container_id
-        |WHERE p.n_common * 100 >= 80 * ta.n
-        |ORDER BY contained_id, container_id""".stripMargin,
+      s"""WITH t AS MATERIALIZED (
+         |  SELECT doc_id, toks, CAST(len(toks) AS BIGINT) AS n
+         |  FROM (SELECT doc_id, list_sort(list_distinct(${gramsSql(3)})) AS toks FROM documents)),
+         |x AS MATERIALIZED (
+         |  SELECT doc_id, unnest(toks) AS tok FROM t),
+         |p AS MATERIALIZED (
+         |  SELECT a.doc_id AS contained_id, b.doc_id AS container_id,
+         |         CAST(count(*) AS BIGINT) AS n_common
+         |  FROM x a JOIN x b ON a.tok = b.tok AND a.doc_id <> b.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT p.contained_id, p.container_id,
+         |       ta.n AS n_a, tb.n AS n_b, p.n_common,
+         |       CAST(p.n_common AS DOUBLE) / ta.n AS containment
+         |FROM p
+         |JOIN t ta ON ta.doc_id = p.contained_id
+         |JOIN t tb ON tb.doc_id = p.container_id
+         |WHERE p.n_common * 100 >= 80 * ta.n
+         |ORDER BY contained_id, container_id""".stripMargin,
 
     // tf in-row over the token list, df via distinct (doc, term) counts,
     // linear idf N/df — score shape tf * (N / df) shared with the Spark
@@ -2139,112 +2011,41 @@ object SparkEntry {
         |FROM r WHERE rank <= 3
         |ORDER BY doc_id, rank""".stripMargin,
 
-    // the same Lehmer key walked through cumulative split thresholds:
+    // the Lehmer key walked through cumulative split thresholds:
     // test = residues 0-1, val = 2-3, train = the rest
     "ds_split" ->
-      """SELECT doc_id, source,
-        |       (doc_id * 48271) % 2147483647 AS sample_key,
-        |       CASE WHEN ((doc_id * 48271) % 2147483647) % 100 < 2 THEN 'test'
-        |            WHEN ((doc_id * 48271) % 2147483647) % 100 < 4 THEN 'val'
-        |            ELSE 'train' END AS split
-        |FROM documents ORDER BY doc_id""".stripMargin,
+      s"""WITH k AS (SELECT doc_id, source, ${lehmerSql("doc_id")} AS sample_key FROM documents)
+         |SELECT doc_id, source, sample_key,
+         |       CASE WHEN sample_key % 100 < 2 THEN 'test'
+         |            WHEN sample_key % 100 < 4 THEN 'val'
+         |            ELSE 'train' END AS split
+         |FROM k ORDER BY doc_id""".stripMargin,
 
-    // the Lehmer key is the permutation; row_number within shard ordered
-    // by (key, id) — the same total order the Spark window uses
     "ds_shuffle" ->
-      """WITH k AS (
-        |  SELECT doc_id, source,
-        |         (doc_id * 48271) % 2147483647 AS sample_key
-        |  FROM documents)
-        |SELECT doc_id, source, sample_key,
-        |       sample_key % 16 AS shard,
-        |       row_number() OVER (PARTITION BY sample_key % 16
-        |                          ORDER BY sample_key, doc_id) AS pos
-        |FROM k ORDER BY doc_id""".stripMargin,
+      s"""WITH ${shuffleCte("documents", "doc_id", 16)}
+         |SELECT doc_id, source, shuffle_key AS sample_key, shard, pos
+         |FROM shuf ORDER BY doc_id""".stripMargin,
 
-    // epoch plan in the same integer arithmetic as the Spark side:
-    // take = min(w*budget // W, n*maxEpochs), full epochs = take // n,
-    // partial-epoch rate = (take % n)*1e6 // n; generate_series(1, 0)
-    // is empty in DuckDB, matching the Spark side's n_ep >= 1 guard
     "ds_epochs" ->
-      """WITH w AS (
-        |  SELECT doc_id, source,
-        |         CASE WHEN source = 'src0' THEN CAST(50 AS BIGINT)
-        |              WHEN source = 'src2' THEN CAST(30 AS BIGINT)
-        |              WHEN source = 'src4' THEN CAST(20 AS BIGINT) END AS wgt
-        |  FROM documents),
-        |base AS (SELECT * FROM w WHERE wgt IS NOT NULL),
-        |counts AS (
-        |  SELECT source, wgt, CAST(count(*) AS BIGINT) AS n_source
-        |  FROM base GROUP BY source, wgt),
-        |plan AS (
-        |  SELECT source, n_source,
-        |         least(wgt * 150 // 100, n_source * 3) AS take_n
-        |  FROM counts),
-        |plan2 AS (
-        |  SELECT source, take_n // n_source AS full_ep,
-        |         (take_n % n_source) * 1000000 // n_source AS rate_ppm
-        |  FROM plan),
-        |d AS (
-        |  SELECT b.doc_id, b.source,
-        |         (b.doc_id * 48271) % 2147483647 AS sample_key,
-        |         p.full_ep + CASE WHEN ((b.doc_id * 48271) % 2147483647) % 1000000
-        |                               < p.rate_ppm THEN 1 ELSE 0 END AS n_ep
-        |  FROM base b JOIN plan2 p ON b.source = p.source)
-        |SELECT doc_id, source, sample_key,
-        |       unnest(generate_series(1, n_ep)) AS epoch
-        |FROM d WHERE n_ep >= 1 ORDER BY doc_id, epoch""".stripMargin,
+      s"""WITH ${weightedCte("documents")},
+         |${epochCtes("base", budget = 150, maxEpochs = 3)}
+         |SELECT doc_id, source, ${lehmerSql("doc_id")} AS sample_key, epoch
+         |FROM inst ORDER BY doc_id, epoch""".stripMargin,
 
-    // integer-exact mixture arithmetic (// is DuckDB integer division,
-    // matching Spark's `div` on positive longs): T* = min(n*W // w),
-    // take = w*T* // W, rate_ppm = take*1e6 // n
     "ds_mix" ->
-      """WITH w AS (
-        |  SELECT doc_id, source, n_chars,
-        |         CASE WHEN source = 'src0' THEN CAST(50 AS BIGINT)
-        |              WHEN source = 'src2' THEN CAST(30 AS BIGINT)
-        |              WHEN source = 'src4' THEN CAST(20 AS BIGINT) END AS wgt
-        |  FROM documents),
-        |base AS (SELECT * FROM w WHERE wgt IS NOT NULL),
-        |counts AS (
-        |  SELECT source, wgt, CAST(count(*) AS BIGINT) AS n_source
-        |  FROM base GROUP BY source, wgt),
-        |t AS (SELECT min(n_source * 100 // wgt) AS t_star FROM counts),
-        |rates AS (
-        |  SELECT source, ((wgt * t_star) // 100) * 1000000 // n_source AS rate_ppm
-        |  FROM counts, t)
-        |SELECT b.doc_id, b.source, b.n_chars,
-        |       (b.doc_id * 48271) % 2147483647 AS sample_key,
-        |       r.rate_ppm
-        |FROM base b JOIN rates r ON b.source = r.source
-        |WHERE ((b.doc_id * 48271) % 2147483647) % 1000000 < r.rate_ppm
-        |ORDER BY b.doc_id""".stripMargin,
+      s"""WITH ${weightedCte("documents")},
+         |${mixCtes("count(*)")}
+         |SELECT doc_id, source, n_chars, ${lehmerSql("doc_id")} AS sample_key, rate_ppm
+         |FROM mixed ORDER BY doc_id""".stripMargin,
 
     // the token-unit twin of ds_mix: per-source supply is the token sum
-    // (len(string_split) — the tokenCount twin), T*/take/rate the same
-    // integer //-arithmetic, membership the same Lehmer residue test
+    // (len(string_split) — the tokenCount twin)
     "ds_mix_tokens" ->
-      """WITH w AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CASE WHEN source = 'src0' THEN CAST(50 AS BIGINT)
-        |              WHEN source = 'src2' THEN CAST(30 AS BIGINT)
-        |              WHEN source = 'src4' THEN CAST(20 AS BIGINT) END AS wgt
-        |  FROM documents),
-        |base AS (SELECT * FROM w WHERE wgt IS NOT NULL),
-        |counts AS (
-        |  SELECT source, wgt, CAST(sum(n_tokens) AS BIGINT) AS tok_source
-        |  FROM base GROUP BY source, wgt),
-        |t AS (SELECT min(tok_source * 100 // wgt) AS t_star FROM counts),
-        |rates AS (
-        |  SELECT source, ((wgt * t_star) // 100) * 1000000 // tok_source AS rate_ppm
-        |  FROM counts, t)
-        |SELECT b.doc_id, b.source, b.n_tokens,
-        |       (b.doc_id * 48271) % 2147483647 AS sample_key,
-        |       r.rate_ppm
-        |FROM base b JOIN rates r ON b.source = r.source
-        |WHERE ((b.doc_id * 48271) % 2147483647) % 1000000 < r.rate_ppm
-        |ORDER BY b.doc_id""".stripMargin,
+      s"""WITH ${weightedCte(
+           "(SELECT *, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens FROM documents)")},
+         |${mixCtes("sum(n_tokens)")}
+         |SELECT doc_id, source, n_tokens, ${lehmerSql("doc_id")} AS sample_key, rate_ppm
+         |FROM mixed ORDER BY doc_id""".stripMargin,
 
     // the same positioned 5-gram windows as the Spark kernel (short docs
     // yield one truncated gram at pos 0), shared ⇔ min(doc)≠max(doc),
@@ -2276,113 +2077,41 @@ object SparkEntry {
         |       span_end - span_start + 1 AS span_tokens
         |FROM sp ORDER BY doc_id, span_start""".stripMargin,
 
-    // the full assembly recipe replayed in one CTE chain: the tx_curate
-    // gate (score/repetition expressions verbatim) selects keepers, the
-    // ds_mix integer arithmetic picks the proportioned subset, the
-    // ds_epochs plan explodes (doc, epoch) instances, the Lehmer key of
-    // instance_id = doc_id*4+epoch shuffles them into 8 shards, and the
-    // tx_pack prefix-sum assigns 64-token training sequences
+    // the full assembly recipe built from the staged twins' pieces, as
+    // Pipeline.assembleDataset is built from the staged operators: the
+    // curation gate keeps documents, the mixture picks the proportioned
+    // subset, the epoch plan explodes (doc, epoch) instances, the Lehmer
+    // key of instance_id = doc_id·(maxEpochs+1) + epoch shuffles them
+    // into 8 shards, and the prefix sum packs 64-token sequences
     "ds_assemble" ->
-      """WITH b AS (
-        |  SELECT doc_id, source,
-        |         CAST(length(text) AS BIGINT) AS n_chars_calc,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT) AS alpha,
-        |         CAST(len(list_filter(string_split(text, ' '),
-        |                  t -> t IN ('the','a','of','to','and','in'))) AS BIGINT) AS n_stop,
-        |         string_split(text, ' ') AS toks,
-        |         list_transform(generate_series(0, greatest(len(string_split(text, ' ')) - 2, 0)),
-        |           i -> array_to_string((string_split(text, ' '))[i+1:i+2], ' ')) AS grams
-        |  FROM documents),
-        |keepers AS (
-        |  SELECT doc_id, source, n_tokens
-        |  FROM b
-        |  WHERE 0.5 * (CAST(alpha AS DOUBLE) / n_chars_calc)
-        |          + 0.3 * (1.0 - CAST(n_stop AS DOUBLE) / n_tokens)
-        |          + 0.2 * least(CAST(n_tokens AS DOUBLE) / 100.0, 1.0) >= 0.6
-        |    AND NOT (CAST(list_max(list_transform(list_distinct(grams),
-        |               y -> len(list_filter(grams, x -> x = y)))) AS DOUBLE) / len(grams) > 0.18
-        |          OR CAST(list_max(list_transform(list_distinct(toks),
-        |               y -> len(list_filter(toks, x -> x = y)))) AS DOUBLE) / len(toks) > 0.3)),
-        |wj AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CASE WHEN source = 'src0' THEN CAST(50 AS BIGINT)
-        |              WHEN source = 'src2' THEN CAST(30 AS BIGINT)
-        |              WHEN source = 'src4' THEN CAST(20 AS BIGINT) END AS wgt
-        |  FROM keepers),
-        |base AS (SELECT * FROM wj WHERE wgt IS NOT NULL),
-        |mcounts AS (
-        |  SELECT source, wgt, CAST(count(*) AS BIGINT) AS n_source
-        |  FROM base GROUP BY source, wgt),
-        |t AS (SELECT min(n_source * 100 // wgt) AS t_star FROM mcounts),
-        |mrates AS (
-        |  SELECT source, ((wgt * t_star) // 100) * 1000000 // n_source AS rate_ppm
-        |  FROM mcounts, t),
-        |mixed AS (
-        |  SELECT bb.doc_id, bb.source, bb.n_tokens, bb.wgt
-        |  FROM base bb JOIN mrates r ON bb.source = r.source
-        |  WHERE ((bb.doc_id * 48271) % 2147483647) % 1000000 < r.rate_ppm),
-        |ecounts AS (
-        |  SELECT source, wgt, CAST(count(*) AS BIGINT) AS n_source
-        |  FROM mixed GROUP BY source, wgt),
-        |eplan AS (
-        |  SELECT source,
-        |         least(wgt * 150 // 100, n_source * 3) // n_source AS full_ep,
-        |         (least(wgt * 150 // 100, n_source * 3) % n_source) * 1000000 // n_source AS rate_ppm
-        |  FROM ecounts),
-        |eps AS (
-        |  SELECT m.doc_id, m.source, m.n_tokens,
-        |         p.full_ep + CASE WHEN ((m.doc_id * 48271) % 2147483647) % 1000000
-        |                               < p.rate_ppm THEN 1 ELSE 0 END AS n_ep
-        |  FROM mixed m JOIN eplan p ON m.source = p.source),
-        |inst AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         unnest(generate_series(1, n_ep)) AS epoch
-        |  FROM eps WHERE n_ep >= 1),
-        |inst2 AS (
-        |  SELECT *, doc_id * 4 + epoch AS instance_id,
-        |         ((doc_id * 4 + epoch) * 48271) % 2147483647 AS shuffle_key
-        |  FROM inst),
-        |shuf AS (
-        |  SELECT *, shuffle_key % 8 AS shard,
-        |         row_number() OVER (PARTITION BY shuffle_key % 8
-        |                            ORDER BY shuffle_key, instance_id) AS pos
-        |  FROM inst2),
-        |packd AS (
-        |  SELECT *,
-        |         CAST(sum(n_tokens) OVER (PARTITION BY shard ORDER BY pos)
-        |           - n_tokens AS BIGINT) AS start_tok
-        |  FROM shuf)
-        |SELECT doc_id, source, epoch, instance_id, shard, pos, n_tokens,
-        |       start_tok,
-        |       CAST(start_tok // 64 AS BIGINT) AS seq_id,
-        |       CAST(start_tok % 64 AS BIGINT) AS seq_offset,
-        |       CAST((start_tok + n_tokens - 1) // 64
-        |         - start_tok // 64 + 1 AS BIGINT) AS n_seqs
-        |FROM packd ORDER BY doc_id, epoch""".stripMargin,
+      s"""WITH $qualityCte,
+         |${repetitionCte("q")},
+         |${weightedCte("(SELECT doc_id, source, n_tokens FROM rp WHERE score >= 0.6 AND NOT repetitive)")},
+         |${mixCtes("count(*)")},
+         |${epochCtes("mixed", budget = 150, maxEpochs = 3)},
+         |${shuffleCte("(SELECT *, doc_id * 4 + epoch AS instance_id FROM inst)", "instance_id", 8)},
+         |${packCte("shuf", "pos", 64)}
+         |SELECT doc_id, source, epoch, instance_id, shard, pos, n_tokens,
+         |       start_tok, seq_id, seq_offset, n_seqs
+         |FROM packd ORDER BY doc_id, epoch""".stripMargin,
 
     // distinct 3-gram containment vs the benchmark docs (doc_id % 97 = 0):
-    // same token windows as the Spark side (short docs yield one short
-    // gram in both engines), LEFT JOIN + count(b.gram) = array_intersect
+    // same token windows as the Spark side, LEFT JOIN + count(b.gram) =
+    // array_intersect
     "dd_contamination" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |         list_distinct(list_transform(
-        |           generate_series(0, greatest(len(string_split(text, ' ')) - 3, 0)),
-        |           i -> array_to_string((string_split(text, ' '))[i+1:i+3], ' '))) AS grams
-        |  FROM documents),
-        |bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 97 = 0),
-        |corpus AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id % 97 <> 0),
-        |hits AS (
-        |  SELECT c.doc_id,
-        |         CAST(count(*) AS BIGINT) AS n_grams,
-        |         CAST(count(b.gram) AS BIGINT) AS n_overlap
-        |  FROM corpus c LEFT JOIN bench b ON c.gram = b.gram
-        |  GROUP BY c.doc_id)
-        |SELECT doc_id, n_grams, n_overlap,
-        |       CAST(n_overlap AS DOUBLE) / n_grams AS contamination,
-        |       CAST(n_overlap AS DOUBLE) / n_grams >= 0.5 AS contaminated
-        |FROM hits ORDER BY doc_id""".stripMargin,
+      s"""WITH g AS (SELECT doc_id, list_distinct(${gramsSql(3)}) AS grams FROM documents),
+         |bench AS (SELECT DISTINCT unnest(grams) AS gram FROM g WHERE doc_id % 97 = 0),
+         |corpus AS (SELECT doc_id, unnest(grams) AS gram FROM g WHERE doc_id % 97 <> 0),
+         |hits AS (
+         |  SELECT c.doc_id,
+         |         CAST(count(*) AS BIGINT) AS n_grams,
+         |         CAST(count(b.gram) AS BIGINT) AS n_overlap
+         |  FROM corpus c LEFT JOIN bench b ON c.gram = b.gram
+         |  GROUP BY c.doc_id)
+         |SELECT doc_id, n_grams, n_overlap,
+         |       CAST(n_overlap AS DOUBLE) / n_grams AS contamination,
+         |       CAST(n_overlap AS DOUBLE) / n_grams >= 0.5 AS contaminated
+         |FROM hits ORDER BY doc_id""".stripMargin,
 
     // languageId's stopword-hit scoring is pure integer counting + one
     // double division, and its struct-greatest argmax is exactly "highest

@@ -32,7 +32,7 @@ object Verify {
     spark.stop()
   }
 
-  private def writeOracleSql(outDir: String, only: Option[Set[String]]): Unit = {
+  private[graft] def writeOracleSql(outDir: String, only: Option[Set[String]]): Unit = {
     // every control char escaped: a tab or CR in builder-authored SQL
     // would otherwise make the reader's json.load fail and silently zero
     // the round's correctness
