@@ -84,9 +84,9 @@ object ScaleUp {
         "l_suppkey" -> suppOff)), "lineitem")
 
     // events: ts stays in its stored form (ns-as-long or µs TIMESTAMP —
-    // the adaptive eventsRaw read handles either) so the written table
+    // the stored-form table read handles either) so the written table
     // round-trips through Tables.events unchanged
-    val events = graft.sources.Tables.eventsRaw(spark, src)
+    val events = graft.sources.Tables.table(spark, src, "events")
     write(replicate(events, factor,
       Map("event_id" -> off(events, "event_id"),
         "user_id" -> off(events, "user_id"))), "events")

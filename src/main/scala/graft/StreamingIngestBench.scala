@@ -145,7 +145,7 @@ object StreamingIngestBench {
       // so the watermark advances monotonically, closed windows evict,
       // and the per-batch seconds + state rows/bytes CURVES are the
       // bounded-state evidence. ---
-      val evRaw = Tables.eventsRaw(spark, sfDir)
+      val evRaw = Tables.table(spark, sfDir, "events")
       // setup, not measured: time-ordered chunks (chunk i written before
       // i+1, so mtime order = time order)
       val chunked = timeChunks(

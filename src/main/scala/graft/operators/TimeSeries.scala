@@ -35,9 +35,8 @@ object TimeSeries {
 
   /** Events with comparable µs event time. */
   def base(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("ts_us", unix_micros(col("ts")))
-      .select("event_id", "user_id", "ts_us", "event_type", "value")
+    Tables.events(spark, dir).select(col("event_id"), col("user_id"),
+      unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
 
   /** [[base]] hash-partitioned on `user_id` across the session's shuffle
     * partitions: the exchange the per-key windows plan over a multi-split

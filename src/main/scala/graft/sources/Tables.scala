@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, BinaryType, ByteType, DataType,
   DateType, DoubleType, FloatType, IntegerType, LongType, ShortType,
-  StringType, TimestampNTZType, TimestampType}
+  StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.sql.graft.{FileRelations, ScopedConf}
 
 /** Typed access to the test-corpus tables (TPC-H-ish star schema plus
@@ -31,7 +31,9 @@ import org.apache.spark.sql.graft.{FileRelations, ScopedConf}
   * directory or a lowered `maxPartitionBytes` gets exactly the plain
   * read's plan. Dimension tables (region, nation, supplier, part,
   * customer) are small relative to the facts and should be broadcast at
-  * join sites — helpers here never force a shuffle.
+  * join sites — helpers here never force a shuffle. The loaders of
+  * tables with a data contract ([[Contract]]) convert the stored columns
+  * it names to canonical form over that same read.
   *
   * What [[parquet]] caches: a plain read lists the files and runs a
   * one-task Spark job to infer the schema from a footer (93–103 ms per
@@ -67,36 +69,62 @@ object Tables {
     * failed walk takes the plain read, so errors are those of
     * `spark.read.parquet`; a read that throws caches nothing. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    open(spark, path, onePartition = false)
+    open(spark, path, onePartition = false, nanos = false, canonical = None)
 
-  /** `<dir>/<name>.parquet` through the front door, as one partition when
-    * Spark would read it as one split (see Scale notes above). */
+  /** `<dir>/<name>.parquet` through the front door as stored, as one
+    * partition when Spark would read it as one split (see Scale notes
+    * above). A table whose contract declares an INT64-ns column takes the
+    * TIMESTAMP(NANOS) fallback (see [[Contract]]); no column is
+    * converted. */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    open(spark, s"$dir/$name.parquet", onePartition = true)
+    open(spark, s"$dir/$name.parquet", onePartition = true,
+      nanos = contracts.get(name).exists(_.nanos), canonical = None)
 
-  private def open(spark: SparkSession, path: String, onePartition: Boolean): DataFrame = {
+  /** [[table]] with every column its contract names in canonical form. */
+  private def canonical(spark: SparkSession, dir: String, name: String): DataFrame =
+    open(spark, s"$dir/$name.parquet", onePartition = true,
+      nanos = contracts(name).nanos, canonical = Some(contracts(name)))
+
+  private def open(spark: SparkSession, path: String, onePartition: Boolean,
+      nanos: Boolean, canonical: Option[Contract]): DataFrame = {
     val files = fingerprint(spark, path)
     val key = (path, spark.conf.getAll)
     val cache = resolved(spark)
-    files.flatMap(f => Option(cache.get(key)).filter(_.files == f)) match {
-      case Some(hit) => hit.open(spark, onePartition)
+    files.flatMap(f => Option(cache.get(key))
+        .filter(r => r.files == f && (nanos || (r.session eq spark)))) match {
+      case Some(hit) => hit.open(onePartition, canonical)
       case None =>
-        val df = spark.read.parquet(path)
-        val fresh = for (f <- files; r <- FileRelations.of(df)) yield Resolved(f, r)
+        def read(s: SparkSession) = (s, s.read.parquet(path))
+        val (session, df) =
+          try read(spark)
+          catch {
+            case e: Exception if nanos && e.getMessage != null &&
+                e.getMessage.contains("PARQUET_TYPE") =>
+              read(ScopedConf.session(spark, "spark.sql.legacy.parquet.nanosAsLong" -> "true"))
+          }
+        val fresh = for (f <- files; r <- FileRelations.of(df)) yield Resolved(f, r, session)
         fresh.foreach(cache.put(key, _))
-        fresh.filter(onePartition && _.oneSplit).fold(df)(_.open(spark, onePartition))
+        val plain = canonical.fold(df)(c => FileRelations.convert(df, c.conversions(df.schema)))
+        fresh.filter(onePartition && _.oneSplit).fold(plain)(_.open(onePartition, canonical))
     }
   }
 
-  /** A resolved relation and the fingerprint it was resolved under.
-    * Whether its scan is one split is decided once, at the first table
-    * read of it, under the conf its cache key holds. */
+  /** A resolved relation, the session it was resolved on (the caller's,
+    * or for a TIMESTAMP(NANOS) file the nanos-as-long clone of it) and the
+    * fingerprint it was resolved under. Whether its scan is one
+    * split, and which columns a contract converts, are decided once: at
+    * the first read that asks, under the conf its cache key holds. */
   private final case class Resolved(files: Vector[(String, Long, Long)],
-      relation: LogicalRelation) {
+      relation: LogicalRelation, session: SparkSession) {
     lazy val oneSplit: Boolean = FileRelations.oneSplit(relation)
 
-    def open(spark: SparkSession, onePartition: Boolean): DataFrame =
-      FileRelations.reopen(spark, relation, onePartition && oneSplit)
+    private val conversions =
+      new java.util.concurrent.ConcurrentHashMap[Contract, Map[String, Column => Column]]()
+
+    def open(onePartition: Boolean, contract: Option[Contract]): DataFrame =
+      FileRelations.reopen(session, relation, onePartition && oneSplit,
+        contract.fold(Map.empty[String, Column => Column])(c =>
+          conversions.computeIfAbsent(c, _.conversions(relation.schema))))
   }
 
   private val resolved = new SessionScoped(
@@ -118,176 +146,115 @@ object Tables {
         .toVector.sorted
     }.toOption
 
-  def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
-  def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
-  def customer(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "supplier")
-  def part(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "part")
-  def orders(spark: SparkSession, dir: String): DataFrame =
-    canonicalizeFactTs(tableAdaptive(spark, dir, "orders"), Seq("o_orderdate"))
-  def lineitem(spark: SparkSession, dir: String): DataFrame =
-    canonicalizeFactTs(tableAdaptive(spark, dir, "lineitem"), Seq("l_shipdate"))
-  def documents(spark: SparkSession, dir: String): DataFrame =
-    canonicalizeDocuments(table(spark, dir, "documents"))
-  def embeddings(spark: SparkSession, dir: String): DataFrame =
-    canonicalizeEmbeddings(table(spark, dir, "embeddings"))
+  def region(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "region")
+  def nation(spark: SparkSession, dir: String): DataFrame     = table(spark, dir, "nation")
+  def customer(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "customer")
+  def supplier(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "supplier")
+  def part(spark: SparkSession, dir: String): DataFrame       = table(spark, dir, "part")
+  def orders(spark: SparkSession, dir: String): DataFrame     = canonical(spark, dir, "orders")
+  def lineitem(spark: SparkSession, dir: String): DataFrame   = canonical(spark, dir, "lineitem")
+  def events(spark: SparkSession, dir: String): DataFrame     = canonical(spark, dir, "events")
+  def documents(spark: SparkSession, dir: String): DataFrame  = canonical(spark, dir, "documents")
+  def embeddings(spark: SparkSession, dir: String): DataFrame = canonical(spark, dir, "embeddings")
 
-  /** Data contract for `documents.parquet` (same drift-insurance class as
-    * the `events` ts contract — reference analog: src/pipeline_batch.py:13
-    * `load_raw_data`'s tolerant parse). The pandas/pyarrow writer may ship:
+  /** A table's data contract (docs/data-contract.md): for each stored
+    * (column, type) it accepts, the canonical expression the column maps
+    * to (None: stored canonical). A (column, type) it does not match is
+    * kept as stored; a case that throws rejects a stored type loudly.
+    * `required` columns must be present.
     *
-    *   - text columns (`text`, `lang`, `source`) as BYTE_ARRAY **without**
-    *     the UTF8 annotation (pyarrow `binary` / `large_binary`), which
-    *     Spark reads as `BinaryType` → canonicalized by a UTF-8-decoding
-    *     cast to `StringType` (Arrow `large_string` is physically the same
-    *     annotated BYTE_ARRAY as `string`, so it needs no branch);
-    *   - integral columns (`doc_id`, `n_chars`) as INT32/INT16 instead of
-    *     INT64 → widened to `LongType` (lossless).
-    *
-    * When the stored schema is already canonical the frame is returned
-    * untouched — no extra `Project`, so pushdown/pruning plan shapes are
-    * byte-identical to a bare scan (pinned by DocEmbSchemaDriftSpec). */
-  def canonicalizeDocuments(df: DataFrame): DataFrame = {
-    val fixes = df.schema.fields.flatMap { f =>
-      f.dataType match {
-        case BinaryType                       => Some(f.name -> col(f.name).cast(StringType))
-        case IntegerType | ShortType | ByteType => Some(f.name -> col(f.name).cast(LongType))
-        case _                                => None
-      }
+    * `nanos`: the table declares an INT64-ns column. Spark rejects a
+    * TIMESTAMP(NANOS) file outright ([ILLEGAL_PARQUET_TYPE]), so such a
+    * table's read retries it as nanos-as-long under a clone of the
+    * caller's session (same SparkContext, own SQLConf copy): the legacy
+    * conf holds for exactly that read's frames and never leaks into, or
+    * races with, other reads on the caller's session. The clone's
+    * relation is cached under the caller's key and fingerprint, so an
+    * unchanged file takes the fallback without re-running the failing
+    * read. Only the failing read touches conf; any readable file never
+    * does. */
+  private final class Contract(val required: Seq[String], val nanos: Boolean)(
+      canonical: PartialFunction[(String, DataType), Option[Column => Column]]) {
+
+    /** The canonical expression of a stored column; None when it is
+      * canonical as stored. */
+    def apply(name: String, dt: DataType): Option[Column => Column] =
+      canonical.lift((name, dt)).flatten
+
+    /** Column → canonical expression over `schema`: empty when the
+      * stored schema is canonical, so the read gains no `Project` and its
+      * pushdown/pruning plans are those of a bare scan. */
+    def conversions(schema: StructType): Map[String, Column => Column] = {
+      required.foreach(schema(_))
+      schema.fields.flatMap(f => apply(f.name, f.dataType).map(f.name -> _)).toMap
     }
-    fixes.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
   }
 
-  /** Data contract for `embeddings.parquet`. Canonical: `vec_id long,
-    * embedding array<float>, label int`. Tolerated writer drift:
-    *
-    *   - `embedding` as `list<double>` (pandas upcasts float32 → float64;
-    *     Arrow `fixed_size_list<float>` round-trips through parquet as a
-    *     plain LIST, so it arrives identically to the canonical form) →
-    *     cast back to `array<float>`. Exact when the doubles are promoted
-    *     float32 values, which is the only drift the writer can produce —
-    *     it never had more than float32 precision to begin with;
-    *   - `vec_id` narrowed to INT32 → widened to long (lossless);
-    *   - `label` widened to INT64 → cast to int (labels are small class
-    *     ids; the canonical type is the reference's int32).
-    *
-    * Canonical input returns the frame untouched (no added `Project`). */
-  def canonicalizeEmbeddings(df: DataFrame): DataFrame = {
-    var out = df
-    df.schema("embedding").dataType match {
-      case ArrayType(FloatType, _)  => ()
-      case ArrayType(DoubleType, _) =>
-        out = out.withColumn("embedding", col("embedding").cast("array<float>"))
-      case other => throw new IllegalArgumentException(
-        s"embeddings.embedding: unsupported stored type $other (expected array<float|double>)")
-    }
-    if (out.schema("vec_id").dataType != LongType)
-      out = out.withColumn("vec_id", col("vec_id").cast(LongType))
-    if (out.schema.fieldNames.contains("label") && out.schema("label").dataType != IntegerType)
-      out = out.withColumn("label", col("label").cast(IntegerType))
-    out
+  private def unsupported(what: String, dt: DataType, expected: String): Nothing =
+    throw new IllegalArgumentException(
+      s"$what: unsupported stored type $dt (expected $expected)")
+
+  /** ns since epoch → `TIMESTAMP` at µs, by integer `div`, NOT `/`:
+    * ns-since-epoch (~1.7e18) exceeds double's 2^53 exact-integer range,
+    * so float division would corrupt low bits. The truncation is the one
+    * DuckDB's µs-native timestamp applies, so both engines see identical
+    * instants. */
+  private def nsToMicros(ns: Column): Column =
+    timestamp_micros(call_function("div", ns, lit(1000L)))
+
+  /** The fact tables' date-valued column (the r9 outage class: a writer
+    * flipping a timestamp's physical form took down every dependent
+    * key). Canonical: TIMESTAMP_NTZ at µs, what the pyarrow writer has
+    * always shipped (isAdjustedToUTC=false) and every key and DuckDB
+    * twin was built against. A UTC-adjusted TIMESTAMP casts
+    * epoch-preserving under the UTC session pin; DATE promotes to
+    * midnight, as DuckDB's DATE → TIMESTAMP does. */
+  private def factDate(n: String): PartialFunction[(String, DataType), Option[Column => Column]] = {
+    case (`n`, TimestampNTZType)          => None
+    case (`n`, DateType | TimestampType) => Some(_.cast(TimestampNTZType))
+    case (`n`, LongType)                  => Some(nsToMicros(_).cast(TimestampNTZType))
+    case (`n`, dt) => unsupported(n, dt, "TIMESTAMP, DATE or INT64 ns")
   }
 
-  /** Data contract for `events.parquet` — the writer (a pandas/pyarrow
-    * pipeline, reference: src/pipeline_batch.py:36 `load_raw_data`'s
-    * tolerant timestamp parse) has shipped `ts` in three physical forms
-    * over time, and this loader accepts all of them, canonicalizing to a
-    * session-TZ `TIMESTAMP` holding the same µs instants in every case:
-    *
-    *   - INT64 / TIMESTAMP(NANOS): Spark's reader rejects NANOS outright
-    *     ([ILLEGAL_PARQUET_TYPE]), so on that failure we retry with the
-    *     legacy nanos-as-long read and truncate ns→µs — the truncation
-    *     DuckDB's µs-native timestamp applies, so both engines see
-    *     identical instants.
-    *   - plain INT64 (ns since epoch, no annotation): arrives as LongType;
-    *     same ns→µs truncation.
-    *   - INT64 / TIMESTAMP(MICROS): arrives as TIMESTAMP_NTZ (pyarrow
-    *     writes isAdjustedToUTC=false) or TIMESTAMP; the stored µs values
-    *     are exactly what the truncation produced, so a cast to the
-    *     canonical type is value-preserving (sessions here pin
-    *     spark.sql.session.timeZone=UTC, making NTZ→TZ epoch-preserving).
-    *
-    * The legacy conf is only touched on the NANOS fallback path — a µs or
-    * plain-long file never mutates session conf.
-    */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    canonicalizeTs(eventsRaw(spark, dir))
+  private val contracts: Map[String, Contract] = Map(
+    // events.ts has shipped as INT64 ns (plain or NANOS-annotated),
+    // TIMESTAMP_NTZ(µs) (pyarrow, isAdjustedToUTC=false) and
+    // TIMESTAMP(µs); canonical is a session-TZ TIMESTAMP holding the same
+    // µs instants (NTZ → TZ is epoch-preserving under the UTC session pin)
+    "events" -> new Contract(Seq("ts"), nanos = true)({
+      case ("ts", TimestampType)    => None
+      case ("ts", TimestampNTZType) => Some(_.cast(TimestampType))
+      case ("ts", LongType)         => Some(nsToMicros)
+      case ("ts", dt) => unsupported("events.ts", dt, "INT64 ns or TIMESTAMP")
+    }),
+    "orders" -> new Contract(Nil, nanos = true)(factDate("o_orderdate")),
+    "lineitem" -> new Contract(Nil, nanos = true)(factDate("l_shipdate")),
+    // every field: un-annotated BYTE_ARRAY text (pyarrow binary /
+    // large_binary) decodes as UTF-8; INT32/INT16 ids and counts widen
+    // losslessly (Arrow large_string is the same annotated BYTE_ARRAY as
+    // string, so it arrives canonical)
+    "documents" -> new Contract(Nil, nanos = false)({
+      case (_, BinaryType)                        => Some(_.cast(StringType))
+      case (_, IntegerType | ShortType | ByteType) => Some(_.cast(LongType))
+    }),
+    // list<double> (pandas' float32 → float64 promotion) casts back
+    // bit-exactly: the writer never had more than float32 precision;
+    // Arrow fixed_size_list<float> round-trips as a plain LIST. A
+    // narrowed vec_id widens; a widened label (a small class id) narrows
+    // to the reference's int32
+    "embeddings" -> new Contract(Seq("embedding", "vec_id"), nanos = false)({
+      case ("embedding", ArrayType(FloatType, _))  => None
+      case ("embedding", ArrayType(DoubleType, _)) => Some(_.cast(ArrayType(FloatType)))
+      case ("embedding", dt) =>
+        unsupported("embeddings.embedding", dt, "array<float|double>")
+      case ("vec_id", dt) if dt != LongType   => Some(_.cast(LongType))
+      case ("label", dt) if dt != IntegerType => Some(_.cast(IntegerType))
+    }))
 
-  /** The events table as stored — no ts canonicalization. Schema-adaptive:
-    * tries a plain read first; only a NANOS-annotated file (which Spark
-    * cannot read at all without the legacy conf) falls back to
-    * nanos-as-long. */
-  def eventsRaw(spark: SparkSession, dir: String): DataFrame =
-    tableAdaptive(spark, dir, "events")
-
-  /** [[table]] with the NANOS fallback: a file whose timestamp column
-    * carries the TIMESTAMP(NANOS) annotation is unreadable by Spark
-    * outright ([ILLEGAL_PARQUET_TYPE]); retry as nanos-as-long under a
-    * CLONED session (same SparkContext, own SQLConf copy), so the legacy
-    * conf is pinned for exactly this DataFrame's lifetime and never
-    * leaks into — or races with — other reads on the shared session.
-    * (Restoring the conf after building the lazy frame would not work:
-    * the parquet scan captures its hadoop conf at plan time, after this
-    * method returns.) Any readable file never touches conf anywhere. */
-  def tableAdaptive(spark: SparkSession, dir: String, name: String): DataFrame =
-    try table(spark, dir, name)
-    catch {
-      case e: Exception if e.getMessage != null &&
-          e.getMessage.contains("PARQUET_TYPE") =>
-        // the clone copies the caller's conf, so the fallback read plans
-        // under the same SQLConf as sibling frames plus the nanos flag
-        table(ScopedConf.session(spark,
-          "spark.sql.legacy.parquet.nanosAsLong" -> "true"), dir, name)
-    }
-
-  /** Data contract for the fact tables' date-valued columns
-    * (`l_shipdate`, `o_orderdate`) — the same drift-insurance class as
-    * `events.ts` (the r9 outage: the writer flipping a timestamp's
-    * physical form took down every dependent key). Accepted envelope per
-    * named column, canonical form `TIMESTAMP` (session-TZ, µs):
-    *
-    *   - TIMESTAMP_NTZ(µs) — the canonical form: the pyarrow writer has
-    *     always shipped these columns with isAdjustedToUTC=false, and
-    *     every key + DuckDB oracle was built against it;
-    *   - TIMESTAMP(MICROS, UTC-adjusted) — cast to NTZ is
-    *     epoch-preserving under the UTC session pin;
-    *   - INT64 ns-since-epoch (plain or NANOS-annotated via
-    *     [[tableAdaptive]]) — integer-div truncation to µs, the same
-    *     truncation DuckDB's µs-native reader applies;
-    *   - DATE32 (a date-typed writer) — midnight promotion, matching
-    *     DuckDB's DATE → TIMESTAMP semantics.
-    *
-    * A column already canonical is left untouched — no added `Project`,
-    * so scan pushdown/pruning plans stay byte-identical to a bare read
-    * (pinned by FactSchemaDriftSpec). */
-  def canonicalizeFactTs(df: DataFrame, tsCols: Seq[String]): DataFrame =
-    tsCols.filter(df.schema.fieldNames.contains).foldLeft(df) { (d, n) =>
-      d.schema(n).dataType match {
-        case TimestampNTZType => d
-        case DateType | TimestampType =>
-          d.withColumn(n, col(n).cast(TimestampNTZType))
-        case LongType => d.withColumn(n,
-          canonicalTs(LongType, col(n)).cast(TimestampNTZType))
-        case other => throw new IllegalArgumentException(
-          s"$n: unsupported stored type $other (expected TIMESTAMP, DATE " +
-            "or INT64 ns)")
-      }
-    }
-
-  /** Canonical form of a raw `ts` column: `TIMESTAMP` (session-TZ) at µs
-    * resolution. Branches on the stored type — see the `events` contract. */
-  def canonicalTs(dt: DataType, ts: Column): Column = dt match {
-    // integer `div`, NOT `/`: ns-since-epoch (~1.7e18) exceeds double's
-    // 2^53 exact-integer range, so float division would corrupt low bits
-    case LongType          => timestamp_micros(call_function("div", ts, lit(1000L)))
-    case TimestampNTZType  => ts.cast(TimestampType)
-    case TimestampType     => ts
-    case other => throw new IllegalArgumentException(
-      s"events.ts: unsupported stored type $other (expected INT64 ns or TIMESTAMP)")
-  }
-
-  def canonicalizeTs(df: DataFrame, colName: String = "ts"): DataFrame =
-    df.withColumn(colName, canonicalTs(df.schema(colName).dataType, col(colName)))
+  /** Canonical form of a stored events `ts` column: `TIMESTAMP`
+    * (session-TZ) at µs, by the events contract. */
+  def canonicalTs(dt: DataType, ts: Column): Column =
+    contracts("events")("ts", dt).fold(ts)(_(ts))
 
   /** CSV/JSON round-trip helpers (reference supports CSV + Parquet + JSON
     * sinks: generate_sample_data.py:104-112, benchmarking/model.py:110). */

@@ -38,9 +38,12 @@ object StreamingAlerts {
       graft.sources.Tables.canonicalTs(df.schema("ts").dataType, col("ts")))
 
   /** Open a streaming source over an events parquet directory. The stored
-    * ts type is discovered with a cheap batch schema peek (driver-side
-    * footer read; also flips the legacy nanos conf if — and only if — the
-    * file is NANOS-annotated, which the stream's own scan then needs).
+    * ts type is discovered with a batch schema peek through `Tables.table`
+    * (a cached footer read). A TIMESTAMP(NANOS) file peeks as `LongType`
+    * through the table read's nanos-as-long fallback, which sets that
+    * conf on a clone session only; the stream's own scan needs no conf,
+    * since it reads the column as the `LongType` schema it is given, so
+    * the caller's conf is never written.
     *
     * Handles BOTH table layouts: `events.parquet` as a single file (the
     * driver-generated sf dirs) is pinned via pathGlobFilter over the sf
@@ -51,7 +54,7 @@ object StreamingAlerts {
     * part-*.parquet, so the glob silently excluded them (caught by the
     * r16 streaming scale record's empty state leg at sf1). */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = graft.sources.Tables.eventsRaw(spark, dir).schema("ts").dataType
+    val tsType = graft.sources.Tables.table(spark, dir, "events").schema("ts").dataType
     val p = new org.apache.hadoop.fs.Path(dir, "events.parquet")
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     val src =
@@ -130,7 +133,7 @@ object StreamingAlerts {
 
   /** Batch twin of `sessionCounts` (query key st_session). */
   def sessionCountsBatch(spark: SparkSession, dir: String): DataFrame = {
-    val events = withEventTime(graft.sources.Tables.eventsRaw(spark, dir))
+    val events = withEventTime(graft.sources.Tables.table(spark, dir, "events"))
     events
       .groupBy(col("user_id"), session_window(col("event_time"), "12 hours"))
       .agg(count(lit(1)).as("n_events"),
@@ -145,7 +148,7 @@ object StreamingAlerts {
   /** Batch equivalent of `windowedCounts` on the same data — the
     * oracle-checkable query surface (st_window_agg). */
   def windowedCountsBatch(spark: SparkSession, dir: String): DataFrame = {
-    val events = withEventTime(graft.sources.Tables.eventsRaw(spark, dir))
+    val events = withEventTime(graft.sources.Tables.table(spark, dir, "events"))
     events
       .groupBy(window(col("event_time"), "10 minutes"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), max(col("value")).as("max_value"))

@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Repartition
-import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelation,
   LogicalRelation}
 
@@ -16,7 +17,8 @@ import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFsRelati
   * (`newInstance`), so each reopen is an independent read: a self-join
   * of two reopens resolves exactly as a self-join of two plain reads
   * does. Spark's own `SessionCatalog.tableRelationCache` reuses catalog
-  * tables' relations the same way.
+  * tables' relations the same way. A table contract's conversions are
+  * built over the copy's own attributes, in the same frame.
   */
 object FileRelations {
 
@@ -47,11 +49,32 @@ object FileRelations {
     * `onePartition`, the read is wrapped in `Repartition(1, shuffle =
     * false)` (a `coalesce(1)`), so it reports a single output partition
     * and `EnsureRequirements` plans no exchange above it. For a
-    * [[oneSplit]] relation that is the partitioning its scan has anyway. */
-  def reopen(spark: SparkSession, rel: LogicalRelation,
-      onePartition: Boolean): DataFrame = {
+    * [[oneSplit]] relation that is the partitioning its scan has anyway.
+    * The `conversions` (see [[frame]]) sit above that. */
+  def reopen(spark: SparkSession, rel: LogicalRelation, onePartition: Boolean,
+      conversions: Map[String, Column => Column] = Map.empty): DataFrame = {
     val read = rel.newInstance()
-    val plan = if (onePartition) Repartition(1, shuffle = false, read) else read
-    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+    frame(spark, if (onePartition) Repartition(1, shuffle = false, read) else read,
+      conversions)
+  }
+
+  /** `df` with `conversions` applied (see [[frame]]); `df` itself when
+    * there is nothing to convert. */
+  def convert(df: DataFrame, conversions: Map[String, Column => Column]): DataFrame =
+    if (conversions.isEmpty) df
+    else frame(df.sparkSession, df.queryExecution.analyzed, conversions)
+
+  /** One `Dataset.ofRows` over `plan`, under a `Project` that replaces
+    * each column `conversions` names, in place and under its own name,
+    * by its expression over the plan's own resolved attribute; no
+    * `Project` when `conversions` is empty. */
+  private def frame(spark: SparkSession, plan: LogicalPlan,
+      conversions: Map[String, Column => Column]): DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val projected = if (conversions.isEmpty) plan else Project(plan.output.map { a =>
+      conversions.get(a.name).fold[NamedExpression](a)(f =>
+        Alias(session.expression(f(ExpressionUtils.column(a))), a.name)())
+    }, plan)
+    Dataset.ofRows(session, projected)
   }
 }

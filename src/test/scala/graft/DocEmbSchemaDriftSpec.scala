@@ -100,7 +100,7 @@ class DocEmbSchemaDriftSpec extends AnyFunSuite {
   test("embeddings: unsupported element type fails loudly, not silently") {
     import spark.implicits._
     val bad = Seq((1L, Seq("a", "b"), 0)).toDF("vec_id", "embedding", "label")
-    val e = intercept[IllegalArgumentException](Tables.canonicalizeEmbeddings(bad))
+    val e = intercept[IllegalArgumentException](roundTripEmb(bad))
     assert(e.getMessage.contains("embeddings.embedding"))
   }
 }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -38,13 +39,14 @@ class EventsSchemaDriftSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
   }
 
-  private def raw: DataFrame =
-    Tables.eventsRaw(spark, TestSpark.sf).orderBy("event_id").limit(2000)
+  /** The live events, canonical, as a frame to write drifted forms of. */
+  private def live: DataFrame =
+    Tables.events(spark, TestSpark.sf).orderBy("event_id").limit(2000)
 
   test("ns-as-plain-INT64 events file loads to canonical µs instants") {
     // ts as raw ns longs, no parquet timestamp annotation — the legacy
     // writer shape (modulo the NANOS annotation Spark cannot itself write)
-    val nsLong = Tables.canonicalizeTs(raw)
+    val nsLong = live
       .withColumn("ts", (unix_micros(col("ts")) * lit(1000L)).cast(LongType))
     val prev = spark.conf.getOption(nanosKey)
     val got = roundTrip(nsLong)
@@ -55,7 +57,7 @@ class EventsSchemaDriftSpec extends AnyFunSuite {
 
   test("TIMESTAMP_NTZ(µs) events file loads to canonical µs instants") {
     // what pyarrow writes for timestamp[us] (isAdjustedToUTC=false)
-    val ntz = Tables.canonicalizeTs(raw)
+    val ntz = live
       .withColumn("ts", col("ts").cast(TimestampNTZType))
     val prev = spark.conf.getOption(nanosKey)
     val got = roundTrip(ntz)
@@ -65,9 +67,20 @@ class EventsSchemaDriftSpec extends AnyFunSuite {
   }
 
   test("TIMESTAMP(µs, UTC-adjusted) events file loads to canonical µs instants") {
-    val tz = Tables.canonicalizeTs(raw)
+    val tz = live
     assert(tz.schema("ts").dataType === TimestampType)
     assert(roundTrip(tz).sameElements(canonical))
+  }
+
+  test("a canonical TIMESTAMP ts loads as a bare scan; an unsupported type fails loudly") {
+    val dir = Files.createTempDirectory("events-drift").toString
+    live.write.parquet(s"$dir/events.parquet")
+    assert(Tables.events(spark, dir).queryExecution.analyzed
+      .collect { case p: Project => p }.isEmpty)
+    val bad = Files.createTempDirectory("events-drift").toString
+    live.withColumn("ts", col("ts").cast("string")).write.parquet(s"$bad/events.parquet")
+    val e = intercept[IllegalArgumentException](Tables.events(spark, bad))
+    assert(e.getMessage.contains("events.ts: unsupported stored type StringType"), e.getMessage)
   }
 
   test("canonical ts type is TIMESTAMP regardless of stored form") {

@@ -14,7 +14,7 @@ import graft.sources.Tables
   * `orders.o_orderdate`) — the same outage class as the round-9 events
   * break: the writer flipping a date column's physical form must not take
   * down the ~40 keys reading these tables. Pins the contract documented
-  * at Tables.canonicalizeFactTs: ns-as-INT64, TIMESTAMP_NTZ(µs), DATE32
+  * by the orders/lineitem contracts in Tables: ns-as-INT64, TIMESTAMP_NTZ(µs), DATE32
   * and canonical TIMESTAMP(µs) files all load to the SAME canonical
   * instants, the µs/DATE paths never touch the legacy nanos conf, and a
   * canonical file gains no extra Project over a bare scan. */
@@ -52,7 +52,7 @@ class FactSchemaDriftSpec extends AnyFunSuite
   }
 
   private def raw: DataFrame =
-    Tables.tableAdaptive(spark, TestSpark.sf, "orders")
+    Tables.table(spark, TestSpark.sf, "orders")
       .orderBy("o_orderkey").limit(2000)
 
   test("ns-as-plain-INT64 order dates load to canonical µs instants") {

@@ -6,17 +6,19 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, INT64}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.execution.FileSourceScanLike
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{JobProbe, ScopedConf}
+import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.AlertStore
+import graft.streaming.StreamingAlerts
 import graft.sources.Tables
 
 /** `Tables.parquet`, the front door of every parquet read in
@@ -205,10 +207,8 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
     val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = spark.conf.getOption(nanosKey)
-    // twice: the failing plain read caches nothing, so the second open
-    // takes the same fallback
-    (1 to 2).foreach { _ =>
-      val raw = Tables.eventsRaw(spark, dir)
+    def check(): Unit = {
+      val raw = Tables.table(spark, dir, "events")
       assert(raw.schema("ts").dataType === LongType)
       assert(raw.orderBy("event_id").collect().map(_.getLong(1)).toSeq === ns)
       val us = Tables.events(spark, dir).orderBy("event_id")
@@ -216,11 +216,56 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       assert(us === ns.map(_ / 1000L))
       assert(spark.conf.getOption(nanosKey) === prev)
     }
+    check()
+    // the fallback's relation is cached under the file's fingerprint: an
+    // unchanged file's next open re-runs neither the failing read nor the
+    // fallback's
+    assert(jobsOf(Tables.events(spark, dir)) === 0)
+    assert(jobsOf(Tables.table(spark, dir, "events")) === 0)
+    check()
+    // a read whose table declares no INT64-ns column takes no fallback,
+    // cached verdict or not
+    val e = intercept[Exception](Tables.parquet(spark, s"$dir/events.parquet"))
+    assert(e.getMessage.contains("PARQUET_TYPE"), e.getMessage)
+    assert(spark.conf.getOption(nanosKey) === prev)
+  }
+
+  test("a TIMESTAMP(NANOS) events file streams every row; the caller's conf is not written") {
+    val dir = tmp()
+    val ns = Seq(1704067200123456789L, 1704153600000000001L, 1704240000999999999L)
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .required(INT64).as(LogicalTypeAnnotation.timestampType(true,
+        LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .required(INT64).named("user_id")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("event_type")
+      .required(DOUBLE).named("value")
+      .required(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("events")
+    writeRaw(s"$dir/events.parquet", schema) { (f, b) =>
+      val w = b.build()
+      try ns.zipWithIndex.foreach { case (t, i) =>
+        w.write(f.newGroup().append("event_id", i.toLong).append("ts", t)
+          .append("user_id", 7L).append("event_type", "click")
+          .append("value", i * 1.5).append("props", "{}"))
+      } finally w.close()
+    }
+    val before = spark.conf.getAll
+    val q = StreamingAlerts.readEvents(spark, dir)
+      .select(col("event_id"), unix_micros(col("event_time")).as("us"))
+      .writeStream.format("memory").queryName("nanos_events")
+      .trigger(Trigger.AvailableNow()).start()
+    try assert(q.awaitTermination(120000))
+    finally q.stop()
+    val got = spark.table("nanos_events").orderBy("event_id")
+      .collect().map(_.getLong(1)).toSeq
+    assert(got === ns.map(_ / 1000L))
+    assert(spark.conf.getAll === before)
   }
 
   test("a repeated open of an unchanged file runs no Spark job") {
     val dir = tmp()
-    Tables.eventsRaw(spark, sf).write.parquet(s"$dir/events.parquet")
+    Tables.table(spark, sf, "events").write.parquet(s"$dir/events.parquet")
     // the first open resolves the relation: one schema-inference job
     assert(jobsOf(Tables.events(spark, dir)) === 1)
     assert(jobsOf(Tables.events(spark, dir)) === 0)
@@ -228,7 +273,7 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("a relation resolved before detectAllShared is reused after it") {
     val dir = tmp()
-    Tables.eventsRaw(spark, sf).write.parquet(s"$dir/events.parquet")
+    Tables.table(spark, sf, "events").write.parquet(s"$dir/events.parquet")
     assert(jobsOf(Tables.events(spark, dir)) === 1)
     graft.operators.Pipeline.detectAllShared(spark, dir)
     assert(jobsOf(Tables.events(spark, dir)) === 0)
@@ -315,7 +360,7 @@ class ParquetFrontDoorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   test("StreamingIngestBench writes no session conf and strands no resolved relation") {
     val dir = tmp()
-    Tables.eventsRaw(spark, sf).write.parquet(s"$dir/events.parquet")
+    Tables.table(spark, sf, "events").write.parquet(s"$dir/events.parquet")
     assert(jobsOf(Tables.events(spark, dir)) === 1)
     val before = spark.conf.getAll
     // the caller's conf as each of the run's jobs starts: never written,

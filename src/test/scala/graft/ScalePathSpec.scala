@@ -431,7 +431,7 @@ class ScalePathSpec extends AnyFunSuite {
     // matched ZERO of them (part-*.parquet), which the r16 streaming
     // scale record exposed as an empty state leg at sf1
     val dirSf = java.nio.file.Files.createTempDirectory("evdir").toString
-    graft.sources.Tables.eventsRaw(spark, sf)
+    graft.sources.Tables.table(spark, sf, "events")
       .repartition(3).write.parquet(s"$dirSf/events.parquet")
     val q = StreamingAlerts.windowedCounts(
         StreamingAlerts.readEvents(spark, dirSf))

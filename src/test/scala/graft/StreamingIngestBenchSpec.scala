@@ -11,7 +11,7 @@ class StreamingIngestBenchSpec extends AnyFunSuite {
   import TestSpark.{sf, spark}
 
   test("timeChunks cuts events into nBatches near-equal runs of the (ts, event_id) order") {
-    val events = Tables.eventsRaw(spark, sf).select("event_id", "ts", "value")
+    val events = Tables.table(spark, sf, "events").select("event_id", "ts", "value")
     val chunked = StreamingIngestBench.timeChunks(events, 8)
     val plan = chunked.queryExecution.executedPlan
     assert(plan.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }.isEmpty, plan)
