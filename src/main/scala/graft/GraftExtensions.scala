@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{DecimalQuantize7, EmbeddingLshBuckets, FloatDotProduct, LongArrayMatchCount, QuantizedCosine14, QuantizedDot14, SimHashBits, SortedStringArrayIntersectCount, WordNGrams}
+import org.apache.spark.sql.graft.{DecimalQuantize7, EmbeddingLshBuckets, FloatDotProduct, LongArrayMatchCountMin, QuantizedCosine14, QuantizedDot14, SimHashBits, SortedStringArrayIntersectCount, WordNGrams}
 
 /** Session extension installing the native kernels as SQL functions, so
   * `spark.sql("SELECT float_dot(a, b) ...")` works for SQL-first users —
@@ -41,7 +41,8 @@ object GraftExtensions {
   private val functions: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "float_dot" -> arity("float_dot", 2)(es => FloatDotProduct(es(0), es(1))),
     "long_array_match_count" ->
-      arity("long_array_match_count", 2)(es => LongArrayMatchCount(es(0), es(1))),
+      // the exact count: the early-exit kernel at floor 0 never exits
+      arity("long_array_match_count", 2)(es => LongArrayMatchCountMin(es(0), es(1), 0)),
     "simhash_bits" -> arity("simhash_bits", 1)(es => SimHashBits(es(0))),
     "decimal_quantize7" ->
       arity("decimal_quantize7", 1)(es => DecimalQuantize7(es(0))),

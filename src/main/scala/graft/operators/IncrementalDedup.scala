@@ -44,8 +44,10 @@ import graft.sources.Tables
   *     carries the count atomically with the layout it describes.
   *
   * Scale design:
-  *   - Three probe paths, routed by [[useStreamedProbe]] and the batch's
-  *     held size, all row-identical (specced, incl. against brute force).
+  *   - Three probe routes, chosen ONCE per batch in [[dedupAgainstSigned]]
+  *     from what the router already knows — the batch's row count, the
+  *     index's recorded corpus size ([[useStreamedProbe]]) and the batch's
+  *     held size — all row-identical (specced, incl. against brute force).
   *     Every one works on the bipartite candidate volume
   *     Σ_buckets |corpus ∩ bucket|·|batch ∩ bucket|, linear in bucket
   *     collisions (the self-join's m² hub blow-up cannot happen here).
@@ -59,14 +61,15 @@ import graft.sources.Tables
   *     relation. No explode, no bucket join, no shuffle.
   *   - Past that budget the streamed probe is one bipartite shuffle join
   *     on (band, bucket) with first-agree band dedup — the shape a batch
-  *     too big for one executor must take.
+  *     too big for one executor must take (held after all when the
+  *     bucket-Bloom gate leaves few enough rows).
   *   - Micro-batches against a LARGE index run the pruned probe: the
   *     partition-pruned bucket scan yields candidate pairs, collapsed
   *     with one `dropDuplicates` (candidates are collision-bounded, so
   *     this shuffle is tiny), then signatures are fetched for
   *     candidates only.
   *   - The duplicate decision is the k-minhash agreement estimate
-  *     (LongArrayMatchCount / k ≥ threshold): signatures alone decide, so
+  *     (LongArrayMatchCountMin / k ≥ threshold): signatures alone decide, so
   *     the index stores ~1 KB/doc and raw text is never read again.
   *     σ ≈ √(j(1−j)/k) ≈ 0.03 at k=128 near j=0.9; callers needing exact
   *     verification re-check flagged pairs against stored tokens.
@@ -198,8 +201,7 @@ object IncrementalDedup {
     * scale; folding deltas into the base is [[compact]]'s job). Reopen to
     * read the new rows. */
   def appendSignatures(index: SigIndex, newDocs: DataFrame): Unit =
-    appendSigned(index, signed(newDocs, index.k, index.bands),
-      alreadyMaterialized = false)
+    appendSigned(index, signed(newDocs, index.k, index.bands))
 
   /** [[appendSignatures]] over ALREADY-SIGNED rows — the ingest loop's
     * accept step: [[streamingIngest]] signs each micro-batch exactly
@@ -209,17 +211,15 @@ object IncrementalDedup {
     * former shape paid the k×tokens signing kernel — the dominant
     * per-batch compute — twice per batch). Same doc_id ⇒ same signature
     * under the index's parameters, so the appended rows are identical
-    * either way. `alreadyMaterialized` skips the defensive checkpoint
-    * when the caller's rows are (derived from) a checkpoint. */
-  private[graft] def appendSigned(index: SigIndex, batchSigned: DataFrame,
-      alreadyMaterialized: Boolean): Unit = {
+    * either way. */
+  private[graft] def appendSigned(index: SigIndex, batchSigned: DataFrame): Unit = {
     val spark = batchSigned.sparkSession
     val hasSidecar = readBucketBloom(spark, index.path).isDefined
-    // with a sidecar the signed batch is read TWICE (delta write + the
-    // sidecar-merge aggregate) — checkpoint so signing runs once; without
-    // one, stay single-job with signing fused into the write
-    val batch = if (hasSidecar && !alreadyMaterialized)
-      batchSigned.localCheckpoint(true) else batchSigned
+    // with a sidecar the rows are read TWICE (delta write + the
+    // sidecar-merge aggregate): a lazy checkpoint, materialized by the
+    // write and read back by the merge, computes them once; without one,
+    // stay single-job with the rows' lineage fused into the write
+    val batch = if (hasSidecar) batchSigned.localCheckpoint(false) else batchSigned
     batch.coalesce(1).write.mode("append").parquet(s"${index.path}/delta")
     // keep the optional bucket-Bloom sidecar consistent: a duplicate of
     // an APPENDED doc must still gate through on the next batch. Indexes
@@ -230,8 +230,8 @@ object IncrementalDedup {
   // ---- bucket-Bloom pre-gate (opt-in probe accelerator) -------------
   //
   // A probe can only flag a batch doc that SHARES a (band, bucket) key
-  // with some corpus doc — that is the candidate-pair condition both
-  // probe paths start from. A Bloom filter over the corpus's
+  // with some corpus doc — that is the candidate-pair condition every
+  // probe route starts from. A Bloom filter over the corpus's
   // (band, bucket) keys therefore gates the probe exactly: a batch doc
   // none of whose band buckets might be in the corpus can skip the
   // probe joins entirely (Bloom has no false negatives, so no flagged
@@ -239,7 +239,7 @@ object IncrementalDedup {
   // docs in the probe input, where the join finds nothing). For the
   // mostly-new batches a training-data ingest loop sees, the gate
   // shrinks the probe's batch footprint — and with it the pruned path's
-  // pb set — at the cost of one codegen'd per-row bitset test.
+  // pb set — at the cost of `bands` bitset tests per batch row.
   // The sidecar is opt-in ([[writeBucketBloom]] after build/compact);
   // appends merge their keys in so the gate stays exact.
 
@@ -359,19 +359,15 @@ object IncrementalDedup {
     }
   }
 
-  /** Batch-row bound under which the bucket-Bloom gate is evaluated on
-    * the driver (one narrow collect of (doc_id, bkts) — ≤ ~4 MB — plus
-    * microsecond mightContain evals) instead of as a distributed filter
-    * whose plan literal carries the whole sidecar into every task. Above
-    * it, the literal cost amortizes over the batch and the distributed
-    * form wins. */
-  private[graft] val GateDriverMaxBatchRows = 1L << 16
-
-  /** Driver-side per-row gate: true iff ANY of the row's band buckets
-    * might be in the corpus filter. Same keys as [[bucketBloomGate]]
+  /** The gate rule, per row: true iff ANY of the row's band buckets
+    * might be in the corpus filter. Evaluated on the driver wherever the
+    * probe already holds the rows (the held batch, the pruned route's
+    * narrow bucket collect) — microseconds per row, no plan literal, no
+    * job. Same keys as [[bucketBloomGate]], its in-plan form
     * (xxhash64(band_index, bucket), evaluated through the same catalyst
-    * expression so the bits agree), same no-false-negative contract. */
-  private def mightShareBucket(filter: org.apache.spark.util.sketch.BloomFilter,
+    * expression so the bits agree — specced), same no-false-negative
+    * contract. */
+  private[graft] def mightShareBucket(filter: org.apache.spark.util.sketch.BloomFilter,
       bkts: Array[Int]): Boolean = {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     bkts != null && bkts.indices.exists { i =>
@@ -380,28 +376,8 @@ object IncrementalDedup {
     }
   }
 
-  /** Driver-side twin of [[bucketBloomGate]] for a batch that is not
-    * held: one narrow collect of (doc_id, bkts). Returns the gated probe
-    * frame plus its row count — with the count known on the driver, the
-    * all-new short-circuit needs no extra job. The frame semi-joins on
-    * the kept ids, so it keeps EVERY row of a kept id; the count is of
-    * those rows, not of distinct ids, and stays exact when doc_ids
-    * repeat. */
-  private[graft] def driverGate(batch: DataFrame,
-      bytes: Array[Byte]): (DataFrame, Long) = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
-    val rows = batch.select("doc_id", "bkts").as[(Long, Array[Int])].collect()
-    val keep = rows.collect { case (id, b) if mightShareBucket(filter, b) => id }.toSet
-    if (keep.isEmpty) (batch.limit(0), 0L)
-    else (batch.join(broadcast(keep.toSeq.toDF("doc_id")), Seq("doc_id"), "left_semi"),
-      rows.count(r => keep(r._1)).toLong)
-  }
-
-  /** Distributed per-row gate: true iff ANY of the doc's band buckets
-    * might be in the corpus filter — a codegen'd bitset test per band,
-    * no join. */
+  /** The gate rule as a plan predicate, for a batch too big to hold
+    * on the driver: a codegen'd bitset test per band, no join. */
   private[graft] def bucketBloomGate(bytes: Array[Byte]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.types.BinaryType
@@ -576,7 +552,7 @@ object IncrementalDedup {
     * broadcast batch buckets on (band, bucket). Lazy. */
   private[graft] def candidates(spark: SparkSession, path: String,
       batchB: DataFrame, pbs: Seq[Int],
-      delta: Option[DataFrame] = None, batchBRows: Long = 0L): DataFrame = {
+      delta: Option[DataFrame], batchBRows: Long): DataFrame = {
     val base = Tables.parquet(spark, s"$path/buckets")
       .filter(col("pb").isin(pbs.map(Int.box): _*))
       .select("doc_id", "band", "bucket")
@@ -588,9 +564,8 @@ object IncrementalDedup {
     // micro-batch can still be millions of docs: broadcast under the
     // heap-derived budget, shuffle past it (same gate as every other
     // batch-side payload since r14). The row count arrives from the
-    // caller's instant checkpointed-batch count — no extra job on the
-    // pruned path's measured ~6-job floor; 0 (unknown) keeps the
-    // broadcast, preserving the micro-batch callers' shape.
+    // router's checkpointed-batch count — no extra job on the pruned
+    // path's measured ~6-job floor.
     val bb = batchB.select("q_id", "band", "bucket")
     all
       .join(MinHashLsh.maybeBroadcast(bb, batchBRows * 32L),
@@ -640,12 +615,12 @@ object IncrementalDedup {
     * stream when the index is below [[StreamedCorpusDocsFloor]] (small
     * enough that one scan undercuts the pruned path's fixed job floor)
     * OR the batch is a corpus-scale fraction of it. Batch SIZE does not
-    * gate the route: [[streamedMatches]] holds the batch on the driver
-    * only while it fits the heap-derived budget and shuffle-joins past
-    * it, so a corpus-scale batch too big to hold streams through one
-    * bipartite shuffle instead of falling back to the pruned path —
-    * whose materialized candidate set is exactly what a corpus-scale
-    * batch makes enormous (the r14 third-scale-point study measured the
+    * gate the route: the streamed probe holds the batch on the driver
+    * only while it fits the heap-derived budget ([[fitsHeld]]) and
+    * shuffle-joins past it, so a corpus-scale batch too big to hold
+    * streams through one bipartite shuffle instead of falling back to
+    * the pruned path — whose materialized candidate set is exactly what
+    * a corpus-scale batch makes enormous (the r14 third-scale-point study measured the
     * old cap routing a 100k-doc batch × 400k-doc index probe to the
     * pruned path at 139.6 s; the shuffle-streamed form runs the same
     * probe in one pass). */
@@ -653,18 +628,23 @@ object IncrementalDedup {
     corpusApprox <= StreamedCorpusDocsFloor ||
       batchN * StreamingBatchFraction >= corpusApprox
 
-  /** Flag each new document against the stored corpus. Micro-batches
-    * against a LARGE index run the PRUNED probe: one pruned bucket scan
-    * (batch side broadcast) yields candidate pairs, signatures are
-    * fetched for candidates only (pruned again, by doc-id partition),
-    * and the minhash agreement estimate ≥ `threshold` decides. Indexes
-    * below [[StreamedCorpusDocsFloor]], and batches within
-    * 1/[[StreamingBatchFraction]] of the corpus size, stream the whole
-    * index past the batch once instead ([[streamedMatches]]: the
-    * held-batch scan while the batch fits the broadcast budget, one
-    * bipartite shuffle join past it — no candidate materialization, no
-    * pruning jobs). Every path is row-identical (specced, incl. against
-    * brute force), and [[useStreamedProbe]] is the measured routing rule.
+  /** Flag each new document against the stored corpus. The route is
+    * chosen once, from the batch's row count, the index's recorded corpus
+    * size and the batch's held size:
+    *   - micro-batches against a LARGE index take the PRUNED probe: one
+    *     pruned bucket scan (batch side broadcast) yields candidate pairs,
+    *     signatures are fetched for candidates only (pruned again, by
+    *     doc-id partition), and the minhash agreement estimate
+    *     ≥ `threshold` decides;
+    *   - indexes below [[StreamedCorpusDocsFloor]], and batches within
+    *     1/[[StreamingBatchFraction]] of the corpus size, stream the whole
+    *     index past the batch once: the held-batch scan while the batch
+    *     fits the broadcast budget, one bipartite shuffle join past it —
+    *     no candidate materialization, no pruning jobs.
+    * Every route is row-identical (specced, incl. against brute force),
+    * and [[useStreamedProbe]] is the measured routing rule. An index with
+    * a bucket-Bloom sidecar gates the batch first (see
+    * [[dedupAgainstSigned]]).
     *
     * Returns one row per `newDocs` row:
     * (doc_id, is_duplicate, dup_of, match_est) where `dup_of` is the
@@ -685,7 +665,20 @@ object IncrementalDedup {
     * ingest loop signs once and shares the frame between the probe and
     * the survivor append ([[appendSigned]]). `batch` must be
     * materialized (the router counts and every probe path reads it).
-    * Repeated doc_ids are allowed: each row gets the answer of its id. */
+    * Repeated doc_ids are allowed: each row gets the answer of its id.
+    *
+    * The opt-in bucket-Bloom gate ([[mightShareBucket]]) drops the batch
+    * rows none of whose band buckets might be in the corpus. Exact by the
+    * candidate-pair condition (see the gate's comment): a gated-out row
+    * has no candidate pair on any route, so its match set is empty either
+    * way and it flags false. Each route gates where its rows already
+    * are — the held rows, the pruned route's bucket collect, or, for a
+    * batch too big to hold, an in-plan filter plus its count — and an
+    * empty kept set skips the corpus side entirely (the steady-state
+    * cost of a fully-new micro-batch is then the gate, never a corpus
+    * pass; build the sidecar with a small fpp — e.g. 1e-5 — if this
+    * regime matters: at the default 1%, a 500-doc batch leaks ~5 false
+    * positives and the short-circuit rarely fires). */
   private[graft] def dedupAgainstSigned(index: SigIndex, batch: DataFrame,
       threshold: Double): DataFrame = {
     val spark = index.sigs.sparkSession
@@ -710,67 +703,38 @@ object IncrementalDedup {
     // (metadata-only count; takedown-sized)
     val tombN = tombstoneIds(spark, index.path).map(_.count()).getOrElse(0L)
     val corpusApprox = math.max(0L, baseN + deltaN - tombN)
-    val streamed = useStreamedProbe(batchN, corpusApprox)
-    // opt-in bucket-Bloom gate: shrink the probe input to the docs that
-    // share at least one possibly-present band bucket with the corpus.
-    // Exact by the candidate-pair condition (see the gate's comment) —
-    // a gated-out doc has no candidate pair on any probe path, so its
-    // match set is empty either way and it flags false.
     val bloom = readBucketBloom(spark, index.path).map(_._1)
-    val matches = if (streamed && fitsHeld(index, batch, batchN)) {
-      // the held-batch route: ONE collect of the checkpointed batch feeds
-      // the gate and the scan — the gate runs per held row (no second
-      // collect), an all-gated-out batch skips the corpus scan, and the
-      // matches come back as a local relation
-      val held = holdBatch(batch)
-      val probe = bloom.fold(held) { bytes =>
-        val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(bytes)
-        held.filterRows(i => mightShareBucket(filter, held.bkts(i)))
-      }
-      matchesFrame(spark, heldMatches(index, probe, threshold))
-    } else {
-      val gated = bloom match {
-        case Some(bytes) if batchN <= GateDriverMaxBatchRows =>
-          // micro-batch gate runs ON THE DRIVER: the distributed form
-          // ships the filter bytes as a plan literal into every task and
-          // pays two scheduler jobs (filter + count) — measured SLOWER
-          // than the pruned probe it tries to skip once the sidecar grows
-          // past ~MB (46k-doc index: gated 0.85 s vs plain 0.35 s on an
-          // all-new batch). Collecting the batch's (doc_id, bkts) instead
-          // is one narrow batch-sized job (the same bound as
-          // prunedMatches' pb collect), and the ~batch×bands mightContain
-          // evals are microseconds.
-          Some(driverGate(batch, bytes))
-        case Some(bytes) =>
-          // one narrow count over the checkpointed batch decides the
-          // short-circuit below; it is the price of the all-new fast path
+    lazy val filter = bloom.map(b => org.apache.spark.util.sketch.BloomFilter.readFrom(b))
+    val matches =
+      if (!useStreamedProbe(batchN, corpusApprox)) {
+        // the pruned route: one narrow collect of the batch's bucket
+        // arrays (batch·bands ints) yields both the gate's kept rows and
+        // their pb set
+        val kept = batch.select("bkts").queryExecution.toRdd
+          .map(r => if (r.isNullAt(0)) Array.emptyIntArray else r.getArray(0).toIntArray)
+          .collect().filter(b => filter.forall(mightShareBucket(_, b)))
+        if (kept.isEmpty) matchesFrame(spark, Map.empty)
+        else prunedMatches(index, batch, batchN, kept, sp, threshold)
+      } else if (fitsHeld(index, batch, batchN)) {
+        // the held route: ONE collect of the checkpointed batch feeds the
+        // gate and the scan; an all-gated-out batch skips the corpus scan
+        // (heldMatches), and the matches come back as a local relation
+        val rows = holdBatch(batch)
+        matchesFrame(spark, heldMatches(index,
+          filter.fold(rows)(f => rows.filterRows(i => mightShareBucket(f, rows.bkts(i)))),
+          threshold))
+      } else {
+        // a batch too big to hold: the gate runs in-plan, and its count
+        // decides both the short-circuit and whether the survivors fit
+        val (probe, probeN) = bloom.fold((batch, batchN)) { bytes =>
           val p = batch.filter(bucketBloomGate(bytes))
-          Some(p -> p.count())
-        case None => None
+          (p, p.queryExecution.toRdd.count())
+        }
+        if (probeN == 0L) matchesFrame(spark, Map.empty)
+        else if (fitsHeld(index, probe, probeN))
+          matchesFrame(spark, heldMatches(index, holdBatch(probe), threshold))
+        else shuffledMatches(index, probe, threshold)
       }
-      val probeIn = gated.map(_._1).getOrElse(batch)
-      gated match {
-        // the ALL-NEW fast path: every batch doc gated out means no batch
-        // doc shares any band bucket with the corpus — the candidate-pair
-        // condition — so the probe's answer is already known to be empty.
-        // Skipping it skips the corpus-side scan entirely: the
-        // steady-state cost of a fully-new micro-batch is the gate's
-        // codegen bitset pass plus this count, never a corpus pass.
-        // (Build the sidecar with a small fpp — e.g. 1e-5 — if this
-        // regime matters: at the default 1%, a 500-doc batch leaks ~5
-        // false positives into the probe and the short-circuit rarely
-        // fires.)
-        case Some((_, 0L)) => matchesFrame(spark, Map.empty)
-        case _ =>
-          // r21: the probe-input row count is already known on every
-          // path (the ungated batch count, or the gate's own count) —
-          // pass it down so neither probe pays a per-invocation count()
-          // job for a number the router just computed
-          val probeN = gated.map(_._2).getOrElse(batchN)
-          if (streamed) streamedMatches(index, probeIn, threshold, probeN)
-          else prunedMatches(index, probeIn, sp, threshold, probeN)
-      }
-    }
     // matches is at most batch-sized (one row per flagged new doc), so
     // the flag join broadcasts too instead of shuffling the batch
     batch.select(col("doc_id")).join(broadcast(matches), Seq("doc_id"), "left")
@@ -782,22 +746,21 @@ object IncrementalDedup {
     * pb-pruned narrow scan, signature fetch pruned to the candidates' sp
     * dirs. Cost is O(batch-footprint + collisions) in rows read,
     * independent of corpus size once the partition counts exceed the
-    * batch footprint. */
-  private[graft] def prunedMatches(index: SigIndex, batch: DataFrame, sp: Int,
-      threshold: Double, knownBatchN: Long = -1L): DataFrame = {
+    * batch footprint. `batch` is the checkpointed signed batch of
+    * `batchN` rows; `kept` holds the bucket arrays of the rows the
+    * bucket-Bloom gate kept (all rows without a sidecar), and only their
+    * pb dirs are scanned — a gated-out row shares no (band, bucket) with
+    * the corpus, so its bucket rows would join nothing in any dir. */
+  private[graft] def prunedMatches(index: SigIndex, batch: DataFrame, batchN: Long,
+      kept: Seq[Array[Int]], sp: Int, threshold: Double): DataFrame = {
     val spark = index.sigs.sparkSession
     val p = IndexMeta.readDirMeta(spark, s"${index.path}/buckets")
     // derived lazily from the checkpointed batch — a recompute is a
     // per-row explode, cheaper than the eager-checkpoint job it replaces
     val batchB = batchBuckets(batch, p)
-    // the pb set (bounded by min(P, batch·bands)) comes from ONE narrow
-    // collect of the checkpointed batch's bucket arrays — batch·bands
-    // ints — with the pmod applied on the driver: the former
-    // explode→distinct→collect spent a shuffle plus an extra stage per
-    // probe on what is pure arithmetic over driver-tiny data
-    val pbs = batch.select("bkts").collect().iterator
-      .flatMap(_.getSeq[Int](0))
-      .map(b => ((b % p) + p) % p).toSet.toSeq
+    // the pb set (bounded by min(P, batch·bands)) is pure arithmetic over
+    // driver-tiny data: the pmod is applied on the driver
+    val pbs = kept.iterator.flatten.map(b => ((b % p) + p) % p).toSet.toSeq
     val delta = deltaSigs(spark, index.path)
     // lazily local-checkpointed: the spCounts job below materializes the
     // bounded candidate set (2 ints/row, collision-bounded) as its side
@@ -805,9 +768,6 @@ object IncrementalDedup {
     // re-running the pruned scan + bucket join — one scan execution per
     // probe, with no standalone checkpoint job (the r7 form re-executed
     // the scan; the recompute grew with corpus collision density)
-    // r21: callers that just counted the probe input pass it down; the
-    // fallback count stays for direct (spec) callers
-    val batchN = if (knownBatchN >= 0L) knownBatchN else batch.count()
     val cand = candidates(spark, index.path, batchB, pbs, delta,
         batchBRows = batchN * index.bands)
       .localCheckpoint(false)
@@ -848,37 +808,6 @@ object IncrementalDedup {
       .filter(col("est") >= threshold)
       .groupBy(col("q_id").as("doc_id"))
       .agg(min(col("c_id")).as("dup_of"), max(col("est")).as("match_est"))
-  }
-
-  /** The one-scan streaming probe: the logical index (base + delta,
-    * tombstones removed) is read once and every (corpus, batch) pair
-    * sharing a band bucket is estimated — no candidate materialization.
-    * Two forms, routed by the batch's held size ([[fitsHeld]]):
-    *   - while the batch fits the heap-derived broadcast budget
-    *     (MinHashLsh.maxBroadcastVerifyBytes), the HELD-BATCH SCAN
-    *     ([[heldMatches]]): the batch is collected to the driver once
-    *     and the corpus streams past it in one per-partition pass, with
-    *     no explode, no join and no shuffle;
-    *   - past the budget, one bipartite SHUFFLE join on (band, bucket)
-    *     ([[shuffledMatches]]) — the shape a probe whose batch is a
-    *     material fraction of a large corpus must take on a cluster
-    *     (neither side fits one executor, and the pruned path's
-    *     materialized candidate set is batch × collision density —
-    *     measured 139.6 s vs the streamed form at a 100k × 400k probe,
-    *     r14).
-    * Both forms return (doc_id, dup_of, match_est), one row per flagged
-    * batch doc, and are row-identical (specced, with the pruned path,
-    * against brute force). */
-  private[graft] def streamedMatches(index: SigIndex, batch: DataFrame,
-      threshold: Double, knownBatchN: Long = -1L): DataFrame = {
-    // r21: the count rides in from dedupAgainstSigned (it just computed
-    // it) — no per-probe count job; the fallback stays for direct (spec)
-    // callers, whose batches are checkpointed so it is near-instant
-    val batchN = if (knownBatchN >= 0L) knownBatchN else batch.count()
-    if (fitsHeld(index, batch, batchN))
-      matchesFrame(batch.sparkSession,
-        heldMatches(index, holdBatch(batch), threshold))
-    else shuffledMatches(index, batch, threshold)
   }
 
   /** Whether a batch of `batchN` docs is held for the scan: its driver
@@ -1137,8 +1066,7 @@ object IncrementalDedup {
           .localCheckpoint(true)
         flagged.write.mode("append").parquet(outPath)
         appendSigned(idx, signedBatch.join(
-          flagged.filter(!col("is_duplicate")).select("doc_id"), "doc_id"),
-          alreadyMaterialized = true)
+          flagged.filter(!col("is_duplicate")).select("doc_id"), "doc_id"))
         ()
       }
       .option("checkpointLocation", checkpoint)

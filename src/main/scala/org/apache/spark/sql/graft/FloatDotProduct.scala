@@ -93,9 +93,10 @@ object ColumnBridge {
     column(QuantizedCosine14(expression(qa), expression(qb),
       expression(sa), expression(sb)))
 
-  /** long_array_match_count(a, b) as a Column. */
-  def matchCount(a: Column, b: Column): Column =
-    column(LongArrayMatchCount(expression(a), expression(b)))
+  /** long_array_match_count(a, b) as a Column: the exact agreement
+    * count, i.e. the early-exit kernel at floor 0 (whose bail-out never
+    * fires there). */
+  def matchCount(a: Column, b: Column): Column = matchCountMin(a, b, 0)
 
   /** long_array_match_count_min(a, b) as a Column — the early-exit
     * estimate kernel. `minCount` is the smallest count that passes the
@@ -114,9 +115,11 @@ object ColumnBridge {
   def sortedIntersectCount(a: Column, b: Column): Column =
     column(SortedStringArrayIntersectCount(expression(a), expression(b)))
 
-  /** sorted_long_intersect_count(a, b) as a Column. */
+  /** sorted_long_intersect_count(a, b) as a Column: the exact
+    * intersection count, i.e. the early-exit kernel at need 0 (whose
+    * bail-out never fires there). */
   def sortedLongIntersectCount(a: Column, b: Column): Column =
-    column(SortedLongArrayIntersectCount(expression(a), expression(b)))
+    sortedLongIntersectCountMin(a, b, org.apache.spark.sql.functions.lit(0L))
 
   /** simhash_bits(hs) as a Column. */
   def simhashBits(hs: Column): Column =
@@ -211,62 +214,13 @@ object ColumnBridge {
   }
 }
 
-/** Native codegen expression: number of positions where two `array<long>`
-  * columns hold equal values — the MinHash signature-agreement kernel.
-  * The built-in form (`size(filter(zip_with(...)))`) allocates three
-  * intermediate arrays per row in interpreted lambdas; on a self-similar
-  * corpus the candidate-pair volume is millions, so this loop is the
-  * difference between seconds and minutes. */
-case class LongArrayMatchCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-
-  override def dataType: DataType = IntegerType
-
-  override def prettyName: String = "long_array_match_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var c = 0
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i) && x.getLong(i) == y.getLong(i)) c += 1
-      i += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val c = ctx.freshName("c")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $c = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)
-         |      && $a.getLong($i) == $b.getLong($i)) $c++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LongArrayMatchCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[LongArrayMatchCount]] with an EARLY EXIT below a caller-proved
-  * decision floor — the r21 optimization-round form of the estimate
-  * kernel (the VERDICT r20 "signature-prefix gate", generalized: instead
+/** Native codegen expression: number of positions where two
+  * `array<long>` columns hold equal values — the MinHash
+  * signature-agreement kernel (the built-in
+  * `size(filter(zip_with(...)))` allocates three intermediate arrays per
+  * row in interpreted lambdas) — with an EARLY EXIT below a
+  * caller-proved decision floor, the r21 optimization-round form of the
+  * estimate kernel (the VERDICT r20 "signature-prefix gate", generalized: instead
   * of gating on a fixed 32-hash prefix, the scan bails at the first
   * position where the remaining elements can no longer reach
   * `minCount` — the tightest zero-false-negative prefix there is).
@@ -281,8 +235,10 @@ case class LongArrayMatchCount(left: Expression, right: Expression)
   * c/k >= θ): survivors keep bit-identical estimates, non-survivors are
   * dropped either way. On a j≈0.6 background candidate at θ=0.95/k=128
   * (allowed mismatches: 6) the expected scan is ~18 of 128 positions.
-  * Equivalence to the full kernel under the filter is property-specced
-  * (KernelPropertySpec). */
+  * At minCount 0 the exit never fires, so the result is the exact count
+  * for every row: the `long_array_match_count` SQL function and
+  * ColumnBridge.matchCount are that form. Equivalence to the plain
+  * Scala count is property-specced (KernelPropertySpec). */
 case class LongArrayMatchCountMin(left: Expression, right: Expression,
     minCount: Int)
     extends BinaryExpression with ExpectsInputTypes {
@@ -522,66 +478,17 @@ case class SortedStringArrayIntersectCount(left: Expression, right: Expression)
 
 /** Native codegen expression: intersection size of two SORTED long
   * arrays — the [[SortedStringArrayIntersectCount]] merge on primitive
-  * 8-byte elements (no UTF8String dereference or byte-wise compare per
-  * step). The hashed-token twin of the string kernel: dedup verify
-  * stages shuffle `sort_array(token_hashes64(toks))` long arrays in
-  * place of the token strings and intersect those; on MULTISETS (a
+  * 8-byte elements, the hashed-token twin of the string kernel: dedup
+  * verify stages shuffle `sort_array(token_hashes64(toks))` long arrays
+  * in place of the token strings and intersect those. On MULTISETS (a
   * within-doc hash collision duplicates a value) the merge counts
   * min-multiplicity, so the hashed count can only meet or EXCEED the
   * true token intersection — never undercount — which makes it a safe
   * exact-threshold prefilter and, when the hash is injective over the
-  * corpus vocabulary (checked by callers), the exact count itself. */
-case class SortedLongArrayIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-  import org.apache.spark.sql.catalyst.util.ArrayData
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(LongType), ArrayType(LongType))
-
-  override def dataType: DataType = IntegerType
-
-  override def prettyName: String = "sorted_long_intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    var i = 0; var j = 0; var c = 0
-    while (i < x.numElements() && j < y.numElements()) {
-      val xv = x.getLong(i); val yv = y.getLong(j)
-      if (xv == yv) { c += 1; i += 1; j += 1 }
-      else if (xv < yv) i += 1
-      else j += 1
-    }
-    c
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val xv = ctx.freshName("xv"); val yv = ctx.freshName("yv")
-      s"""
-         |int $i = 0; int $j = 0; int $c = 0;
-         |while ($i < $a.numElements() && $j < $b.numElements()) {
-         |  long $xv = $a.getLong($i); long $yv = $b.getLong($j);
-         |  if ($xv == $yv) { $c++; $i++; $j++; }
-         |  else if ($xv < $yv) $i++;
-         |  else $j++;
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedLongArrayIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedLongArrayIntersectCount]] with an EARLY EXIT below a per-row
-  * decision floor `need` (third child, long) — the verify-stage twin of
-  * [[LongArrayMatchCountMin]]. The two-pointer merge bails at the first
+  * corpus vocabulary (checked by callers), the exact count itself.
+  *
+  * EARLY EXIT below a per-row decision floor `need` (third child,
+  * long) — the verify-stage twin of [[LongArrayMatchCountMin]]. The two-pointer merge bails at the first
   * mismatch step where `count-so-far + min(remaining_a, remaining_b)`
   * can no longer reach `need`.
   *
@@ -593,7 +500,8 @@ case class SortedLongArrayIntersectCount(left: Expression, right: Expression)
   * encodes: survivor counts are bit-identical, non-survivors are dropped
   * either way (property-specced in KernelPropertySpec). The bound check
   * runs only on mismatch steps, so fully-matching (survivor) rows pay
-  * the plain merge. */
+  * the plain merge. At need 0 the exit never fires (count + min(…) ≥ 0),
+  * so ColumnBridge.sortedLongIntersectCount is that form. */
 case class SortedLongArrayIntersectCountMin(first: Expression,
     second: Expression, third: Expression)
     extends TernaryExpression with ExpectsInputTypes {

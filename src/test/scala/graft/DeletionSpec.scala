@@ -95,13 +95,10 @@ class DeletionSpec extends AnyFunSuite {
     IncrementalDedup.deleteDocs(spark, path,
       corpus.filter(col("doc_id") % 3 === 0).select("doc_id"))
     val idx = IncrementalDedup.openSignatures(spark, path)
-    val sp = graft.operators.IndexMeta.readDirMeta(spark, s"$path/sigs")
     val signedBatch = IncrementalDedup.signed(batch, idx.k, idx.bands)
       .localCheckpoint(true)
-    val pruned = IncrementalDedup.prunedMatches(idx, signedBatch, sp, 0.8)
-      .collect().map(_.toSeq).toSet
-    val streamed = IncrementalDedup.streamedMatches(idx, signedBatch, 0.8)
-      .collect().map(_.toSeq).toSet
+    val pruned = IncrementalDedupSpec.prunedMatchSet(idx, signedBatch, 0.8)
+    val streamed = IncrementalDedupSpec.heldMatchSet(idx, signedBatch, 0.8)
     assert(pruned === streamed)
     val deletedIds = corpus.filter(col("doc_id") % 3 === 0)
       .select("doc_id").collect().map(_.getLong(0)).toSet

@@ -42,16 +42,17 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val passed = freshSigned
       .filter(IncrementalDedup.bucketBloomGate(bloom)).count()
     assert(passed < 500, s"gate passed all $passed/500 novel docs — prunes nothing")
-    // the driver-side gate (micro-batch fast path) keeps the EXACT same
-    // survivor set as the distributed filter — same keys, same bits
+    // the driver-side predicate (held and pruned routes) keeps the EXACT
+    // same survivor set as the in-plan gate — same keys, same bits
     val fs2 = freshSigned.localCheckpoint(true)
     val distSurv = fs2.filter(IncrementalDedup.bucketBloomGate(bloom))
       .select("doc_id").collect().map(_.getLong(0)).sorted
-    val (drvFrame, drvN) = IncrementalDedup.driverGate(fs2, bloom)
-    val drvSurv = drvFrame.select("doc_id").collect().map(_.getLong(0)).sorted
+    val filter = org.apache.spark.util.sketch.BloomFilter.readFrom(bloom)
+    val drvSurv = fs2.select("doc_id", "bkts").collect()
+      .filter(r => IncrementalDedup.mightShareBucket(filter, r.getSeq[Int](1).toArray))
+      .map(_.getLong(0)).sorted
     assert(drvSurv.sameElements(distSurv),
-      "driver gate and distributed gate disagree on survivors")
-    assert(drvN === drvSurv.length.toLong)
+      "driver-side and in-plan gate disagree on survivors")
     // append merges the batch's buckets in: a copy of an appended doc
     // must still gate through and flag on the NEXT probe
     IncrementalDedup.appendSignatures(idx, fresh)
@@ -152,8 +153,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .filter(arrays_overlap(
         zip_with(col("c_bkts"), col("q_bkts"), (a, b) => a === b),
         array(lit(true))))
-      .withColumn("est", org.apache.spark.sql.graft.ColumnBridge
-        .matchCount(col("c_sig"), col("q_sig")).cast("double") / lit(k))
+      .withColumn("est", agreement("c_sig", "q_sig").cast("double") / lit(k))
       .filter(col("est") >= 0.7)
       .groupBy(col("q_id"))
       .agg(min("c_id").as("dup_of"), max("est").as("match_est"))
@@ -414,7 +414,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .localCheckpoint(true)
     val pbs = batchB.select("pb").distinct().collect().map(_.getInt(0)).toSeq
     assert(pbs.size < p, "batch pb set must be a strict subset for this spec")
-    val cand = IncrementalDedup.candidates(spark, path, batchB, pbs)
+    val cand = IncrementalDedup.candidates(spark, path, batchB, pbs, None,
+      batchB.count())
     partitionFilter(cand, "pb")
     val sps = cand.select(pmod(col("c_id"), lit(sp.toLong)).cast("int").as("s"))
       .distinct().collect().map(_.getInt(0)).toSeq
@@ -456,15 +457,12 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val path = tmp()
     IncrementalDedup.saveSignatures(corpus, path)
     val idx = IncrementalDedup.openSignatures(spark, path)
-    val sp = graft.operators.IndexMeta.readDirMeta(spark, s"$path/sigs")
     val signedBatch = IncrementalDedup.signed(batch, idx.k, idx.bands)
       .localCheckpoint(true)
     // drive BOTH match paths on the identical signed batch: the path
     // dedupAgainst picks is a cost decision, never a semantic one
-    val pruned = IncrementalDedup.prunedMatches(idx, signedBatch, sp, 0.8)
-      .collect().map(_.toSeq).toSet
-    val streamed = IncrementalDedup.streamedMatches(idx, signedBatch, 0.8)
-      .collect().map(_.toSeq).toSet
+    val pruned = IncrementalDedupSpec.prunedMatchSet(idx, signedBatch, 0.8)
+    val streamed = IncrementalDedupSpec.heldMatchSet(idx, signedBatch, 0.8)
     assert(pruned.nonEmpty, "threshold 0.8 must flag something on this corpus")
     assert(pruned === streamed)
   }
@@ -623,6 +621,11 @@ class IncrementalDedupSpec extends AnyFunSuite {
     ids.map(id => (id, collidingText(id))).toDF("doc_id", "text")
   }
 
+  /** Agreement count of two signature columns by Spark built-ins, so the
+    * reference stays independent of the estimate kernel. */
+  private def agreement(a: String, b: String) =
+    size(filter(zip_with(col(a), col(b), (x, y) => x === y), m => m))
+
   /** (doc_id, dup_of, match_est) by brute force: every (corpus, batch)
     * pair sharing ANY band bucket, full agreement count, est ≥ θ. */
   private def bruteMatches(idx: IncrementalDedup.SigIndex,
@@ -633,39 +636,60 @@ class IncrementalDedupSpec extends AnyFunSuite {
         col("bkts").as("c_bkts")))
       .filter(arrays_overlap(
         zip_with(col("c_bkts"), col("q_bkts"), (a, b) => a === b), array(lit(true))))
-      .withColumn("est", org.apache.spark.sql.graft.ColumnBridge
-        .matchCount(col("c_sig"), col("q_sig")).cast("double") / lit(idx.k))
+      .withColumn("est", agreement("c_sig", "q_sig").cast("double") / lit(idx.k))
       .filter(col("est") >= threshold)
       .groupBy(col("q_id").as("doc_id"))
       .agg(min("c_id").as("dup_of"), max("est").as("match_est"))
       .collect().map(_.toSeq).toSet
 
-  /** The held-batch scan, the shuffle branch (forced through the
-    * broadcast-budget property) and the pruned probe on one signed
-    * batch, each checked against brute force. */
+  /** dedupAgainstSigned's flags as sorted "doc_id,is_dup,dup_of,est"
+    * lines, plus the analyzed plan that produced them. */
+  private def flagsOf(idx: IncrementalDedup.SigIndex,
+      signedBatch: org.apache.spark.sql.DataFrame, threshold: Double): (Seq[String], String) = {
+    val df = IncrementalDedup.dedupAgainstSigned(idx, signedBatch, threshold)
+    (df.collect().map(_.toSeq.mkString(",")).sorted.toSeq, df.queryExecution.analyzed.toString)
+  }
+
+  /** The flags brute-force matches imply, one line per batch row. */
+  private def flagsFrom(truth: Set[Seq[Any]],
+      signedBatch: org.apache.spark.sql.DataFrame): Seq[String] = {
+    val byId = truth.map(r => r.head -> r.tail).toMap
+    signedBatch.select("doc_id").collect().map { r =>
+      byId.get(r.get(0)).fold(s"${r.get(0)},false,null,null")(m =>
+        s"${r.get(0)},true,${m.mkString(",")}")
+    }.sorted.toSeq
+  }
+
+  /** The three routes of dedupAgainstSigned on one signed batch — the
+    * held-batch scan, the shuffle join (forced through the
+    * broadcast-budget property) and the pruned probe (forced through the
+    * recorded corpus size) — each checked against brute force. The
+    * route each one took shows in its plan: only the SQL forms carry the
+    * batch signature column, and only the shuffle join carries the
+    * batch's bucket array. Returns the brute-force matches. */
   private def assertAllPathsMatchBruteForce(idx: IncrementalDedup.SigIndex,
       signedBatch: org.apache.spark.sql.DataFrame, threshold: Double): Set[Seq[Any]] = {
-    val sp = graft.operators.IndexMeta.readDirMeta(spark, s"${idx.path}/sigs")
-    val heldDf = IncrementalDedup.streamedMatches(idx, signedBatch, threshold)
-    assert(heldDf.queryExecution.optimizedPlan.isInstanceOf[
-      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
-      "a budget-sized batch must take the held-batch scan")
-    val held = heldDf.collect().map(_.toSeq).toSet
-    val shuffledDf = {
+    val truth = bruteMatches(idx, signedBatch, threshold)
+    val want = flagsFrom(truth, signedBatch)
+    val (held, heldPlan) = flagsOf(idx, signedBatch, threshold)
+    val (shuffled, shuffledPlan) = {
       System.setProperty("graft.broadcastBudgetBytes", "1")
-      try IncrementalDedup.streamedMatches(idx, signedBatch, threshold)
+      try flagsOf(idx, signedBatch, threshold)
       finally System.clearProperty("graft.broadcastBudgetBytes")
     }
-    assert(shuffledDf.queryExecution.optimizedPlan.collect {
-      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j }.nonEmpty,
-      "the forced budget must take the shuffle-join branch")
-    val shuffled = shuffledDf.collect().map(_.toSeq).toSet
-    val pruned = IncrementalDedup.prunedMatches(idx, signedBatch, sp, threshold)
-      .collect().map(_.toSeq).toSet
-    val truth = bruteMatches(idx, signedBatch, threshold)
-    assert(held === truth, s"held-batch scan differs from brute force at θ=$threshold")
-    assert(shuffled === truth, s"shuffle branch differs from brute force at θ=$threshold")
-    assert(pruned === truth, s"pruned probe differs from brute force at θ=$threshold")
+    val (pruned, prunedPlan) = IncrementalDedupSpec.asPruned(spark, idx.path)(
+      flagsOf(idx, signedBatch, threshold))
+    assert(held === want, s"held-batch scan differs from brute force at θ=$threshold")
+    assert(shuffled === want, s"shuffle branch differs from brute force at θ=$threshold")
+    assert(pruned === want, s"pruned probe differs from brute force at θ=$threshold")
+    // a batch with matches reaches every route's probe (an empty kept
+    // set short-circuits all three to a local relation)
+    if (truth.nonEmpty) {
+      assert(!heldPlan.contains("q_sig"), "a budget-sized batch must take the held-batch scan")
+      assert(shuffledPlan.contains("q_bkts"), "the forced budget must take the shuffle join")
+      assert(prunedPlan.contains("q_sig") && !prunedPlan.contains("q_bkts"),
+        "a 10⁶-row corpus must route the micro-batch pruned")
+    }
     truth
   }
 
@@ -700,8 +724,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .crossJoin(idx.sigs.select(col("sig").as("c_sig"), col("bkts").as("c_bkts")))
       .filter(arrays_overlap(
         zip_with(col("c_bkts"), col("q_bkts"), (a, b) => a === b), array(lit(true))))
-      .select(org.apache.spark.sql.graft.ColumnBridge
-        .matchCount(col("c_sig"), col("q_sig")).as("c"))
+      .select(agreement("c_sig", "q_sig").as("c"))
       .distinct().collect().map(_.getInt(0)).toSet
     val c = counts.filter(c => c < k && counts(c - 1)).max
     val theta = c.toDouble / k
@@ -731,12 +754,9 @@ class IncrementalDedupSpec extends AnyFunSuite {
     val novelSigned = IncrementalDedup.signed(novel, idx.k, idx.bands)
       .localCheckpoint(true)
     val bloom = IncrementalDedup.readBucketBloom(spark, path).get._1
-    val passed = IncrementalDedup.driverGate(novelSigned, bloom)._1
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    val gatedOut = novelSigned.filter(!col("doc_id").isin(passed.toSeq: _*))
+    val gatedOut = novelSigned.filter(!IncrementalDedup.bucketBloomGate(bloom))
       .localCheckpoint(true)
     assert(gatedOut.count() > 0, "test premise: some novel docs must fail the gate")
-    assert(IncrementalDedup.driverGate(gatedOut, bloom)._2 === 0L)
     assert(assertAllPathsMatchBruteForce(idx, gatedOut, 0.9).isEmpty)
     val flagged = IncrementalDedup.dedupAgainstSigned(idx, gatedOut, 0.9).collect()
     assert(flagged.length.toLong === gatedOut.count())
@@ -780,6 +800,60 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(flagged.filter(col("is_duplicate")).count() === 200L)
   }
 
+  test("the router's pruned branch flags like the held route and brute force") {
+    import spark.implicits._
+    import IncrementalDedupSpec.asPruned
+    val path = tmp()
+    IncrementalDedup.saveSignatures(collidingDocs(1L to 240L), path)
+    IncrementalDedup.appendSignatures(IncrementalDedup.openSignatures(spark, path),
+      collidingDocs(1001L to 1040L))
+    val idx = IncrementalDedup.openSignatures(spark, path)
+    // near copies, fresh text, and id 900 twice: one row copies an
+    // indexed doc, the other is novel
+    val batch = IncrementalDedup.signed(collidingDocs(5001L to 5040L).unionByName(
+        Seq((5041L, "fresh words nobody indexed ever"), (900L, collidingText(3L)),
+          (900L, "novel words nobody indexed here")).toDF("doc_id", "text")),
+        idx.k, idx.bands).localCheckpoint(true)
+    val want = flagsFrom(bruteMatches(idx, batch, 0.9), batch)
+    assert(want.exists(_.contains(",true,")), "θ=0.9 must flag something on this corpus")
+    assert(flagsOf(idx, batch, 0.9)._1 === want, "held route differs from brute force")
+    def pruned(b: org.apache.spark.sql.DataFrame) = asPruned(spark, path) {
+      val (flags, plan) = flagsOf(idx, b, 0.9)
+      assert(!plan.contains("q_bkts"), "the pruned branch must not stream the index")
+      flags
+    }
+    def prunedJobs() = org.apache.spark.sql.graft.JobProbe(spark) {
+      asPruned(spark, path)(
+        IncrementalDedup.dedupAgainstSigned(idx, batch, 0.9).localCheckpoint(true))
+    }._2.count
+    assert(pruned(batch) === want, "pruned branch without a sidecar differs")
+    val plainJobs = prunedJobs()
+    // with a bucket-Bloom sidecar: the novel row of id 900 fails the gate,
+    // yet both rows of the id carry the id's answer
+    IncrementalDedup.writeBucketBloom(spark, path, fpp = 1e-6)
+    val bloom = IncrementalDedup.readBucketBloom(spark, path).get._1
+    val gatedOut = batch.filter(!IncrementalDedup.bucketBloomGate(bloom))
+      .localCheckpoint(true)
+    assert(gatedOut.filter(col("doc_id") === 900L).count() === 1L,
+      "test premise: exactly one row of id 900 fails the gate")
+    val gated = pruned(batch)
+    assert(gated === want, "pruned branch with a sidecar differs")
+    val repeated = gated.filter(_.startsWith("900,"))
+    assert(repeated.size === 2 && repeated.distinct.size === 1 &&
+      repeated.head.contains(",true,"),
+      s"both rows of a repeated id must carry the id's answer: $repeated")
+    val gatedJobs = prunedJobs()
+    // an all-gated-out batch short-circuits: every row flags false
+    assert(pruned(gatedOut) === flagsFrom(Set.empty, gatedOut))
+    // batch count, bucket collect, candidate materialization (its
+    // aggregate runs under AQE), the probe's broadcasts and the
+    // checkpoint: 12 on a 4-core local session. The gate adds none: it
+    // runs inside the bucket collect
+    val maxJobs = 12
+    assert(plainJobs <= maxJobs && gatedJobs <= maxJobs,
+      s"pruned probe ran $plainJobs jobs without and $gatedJobs with a sidecar (pinned at $maxJobs)")
+  }
+
   test("bucket-Bloom sidecar bytes equal the SQL aggregate's and no session conf is written") {
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
@@ -811,23 +885,37 @@ class IncrementalDedupSpec extends AnyFunSuite {
     assert(java.util.Arrays.equals(merged,
       aggBytes(IncrementalDedup.openSignatures(spark, path).sigs)))
   }
+}
 
-  test("driverGate counts probe rows, not distinct ids, when doc_ids repeat") {
-    import spark.implicits._
-    val path = tmp()
-    IncrementalDedup.saveSignatures(collidingDocs(1L to 60L), path)
-    IncrementalDedup.writeBucketBloom(spark, path, fpp = 1e-6)
-    val idx = IncrementalDedup.openSignatures(spark, path)
-    val bloom = IncrementalDedup.readBucketBloom(spark, path).get._1
-    // id 900 twice: one row copies an indexed doc (passes the gate), the
-    // other is novel; the semi-join keeps both rows of the kept id
-    val batch = IncrementalDedup.signed(Seq((900L, collidingText(3L)),
-        (900L, "novel words nobody indexed here"), (901L, collidingText(4L)))
-      .toDF("doc_id", "text"), idx.k, idx.bands).localCheckpoint(true)
-    assert(batch.filter(IncrementalDedup.bucketBloomGate(bloom)).count() === 2L,
-      "test premise: exactly the novel row fails the gate")
-    val (frame, n) = IncrementalDedup.driverGate(batch, bloom)
-    assert(frame.count() === 3L)
-    assert(n === 3L, s"driverGate reported $n probe rows for a 3-row probe frame")
+object IncrementalDedupSpec {
+  import graft.operators.IndexMeta
+
+  /** The held-batch scan's matches on a signed, checkpointed batch
+    * (ungated), as (doc_id, dup_of, match_est) rows. */
+  def heldMatchSet(idx: IncrementalDedup.SigIndex,
+      signedBatch: org.apache.spark.sql.DataFrame, threshold: Double): Set[Seq[Any]] =
+    IncrementalDedup.heldMatches(idx, IncrementalDedup.holdBatch(signedBatch), threshold)
+      .map { case (id, (dupOf, est)) => Seq[Any](id, dupOf, est) }.toSet
+
+  /** The pruned probe's matches on a signed, checkpointed batch
+    * (ungated: every row's pb dirs are scanned), in the same form. */
+  def prunedMatchSet(idx: IncrementalDedup.SigIndex,
+      signedBatch: org.apache.spark.sql.DataFrame, threshold: Double): Set[Seq[Any]] = {
+    val spark = signedBatch.sparkSession
+    val sp = IndexMeta.readDirMeta(spark, s"${idx.path}/sigs")
+    val bkts = signedBatch.select("bkts").collect().map(_.getSeq[Int](0).toArray).toSeq
+    IncrementalDedup.prunedMatches(idx, signedBatch, bkts.size.toLong, bkts, sp, threshold)
+      .collect().map(_.toSeq).toSet
+  }
+
+  /** Runs `body` with the index's recorded corpus size at 10⁶ rows, so
+    * dedupAgainstSigned routes micro-batches to the pruned probe; the
+    * recorded size is restored afterwards. */
+  def asPruned[T](spark: org.apache.spark.sql.SparkSession, path: String)(body: => T): T = {
+    val dir = s"$path/sigs"
+    val sp = IndexMeta.readDirMeta(spark, dir)
+    val rows = IndexMeta.readDirRows(spark, dir)
+    IndexMeta.writeDirMeta(spark, dir, sp, rows = 1000000L)
+    try body finally IndexMeta.writeDirMeta(spark, dir, sp, rows.getOrElse(-1L))
   }
 }
