@@ -3,18 +3,32 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graft.{DecimalQuantize7, EmbeddingLshBuckets, FloatDotProduct, LongArrayMatchCountMin, QuantizedCosine14, QuantizedDot14, SimHashBits, SortedStringArrayIntersectCount, WordNGrams}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
+import org.apache.spark.sql.graft.{BindFilterBounds, DecimalQuantize7, EmbeddingLshBuckets, FloatDotProduct, LongArrayMatchCountMin, QuantizedCosine14, QuantizedDot14, SimHashBits, SortedStringArrayIntersectCount, WordNGrams}
 
 /** Session extension installing the native kernels as SQL functions, so
   * `spark.sql("SELECT float_dot(a, b) ...")` works for SQL-first users —
   * the SparkSessionExtensions registration path from the preference-order
-  * guide (inject functions rather than shipping UDF jars).
+  * guide (inject functions rather than shipping UDF jars). It also
+  * installs three plan rules:
+  *   - the `TopKPerKey` planner strategy;
+  *   - the `AlertStorePruning` optimizer rule (`epoch_day` bounds from
+  *     `ts_us` ranges);
+  *   - the `BindFilterBounds` physical rule, which passes the numeric
+  *     bounds of filter comparisons to generated code as reference
+  *     objects, so a request that differs only in its bounds compiles no
+  *     new classes.
   *
   * Use either at build time:
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * or via config:
   *   spark.sql.extensions=graft.GraftExtensions
-  * or on a live session: `GraftExtensions.register(spark)`.
+  * or on a live session: `GraftExtensions.register(spark)`. A live
+  * session's physical rules are fixed when its state is built, so
+  * `register` installs the functions and `AlertStorePruning` but not
+  * `BindFilterBounds`; that one needs `withExtensions` or
+  * `spark.sql.extensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -26,6 +40,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.TopKPerKeyStrategy)
     ext.injectOptimizerRule(_ => graft.plans.AlertStorePruning)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = BindFilterBounds
+    })
   }
 }
 
@@ -106,7 +123,9 @@ object GraftExtensions {
     }
   }
 
-  /** Register on an already-running session. */
+  /** Register on an already-running session: the SQL functions and
+    * `AlertStorePruning`. `BindFilterBounds` cannot be added to a live
+    * session (see the class scaladoc). */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry.createOrReplaceTempFunction(

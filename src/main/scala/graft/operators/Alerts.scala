@@ -17,6 +17,15 @@ import org.apache.spark.sql.functions._
   * Scale: the summary is a single expand+aggregate over the alert stream
   * (3 grouped dimensions ⇒ 3× expand, map-side combined); the overlay join
   * keys on (user_id, event_id) and co-partitions with the feature stream.
+  *
+  * The grouped counts ([[summary]], [[summaryByRule]], [[daily]]) are
+  * sorted in one partition: `coalesce(1)` before the presentation
+  * `orderBy`. Their row count is bounded by the distinct severities plus
+  * rules (or event types) plus entities, or by the days in range, not by
+  * the alerts, and the client collects them whole anyway. A range
+  * exchange over a few hundred rows would only add a sampling job and a
+  * shuffle; in one partition the sort needs neither, and the rows and
+  * their order are the same.
   */
 object Alerts {
 
@@ -59,6 +68,7 @@ object Alerts {
         Seq(Seq(col("severity")), Seq(col("event_type")), Seq(col("user_id"))),
         col("severity"), col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("n"))
+      .coalesce(1)
       .orderBy("severity", "event_type", "user_id")
 
   /** The db.py-faithful summary over the STANDARD alert schema
@@ -74,6 +84,7 @@ object Alerts {
         Seq(Seq(col("severity")), Seq(col("rule_name")), Seq(col("user_id"))),
         col("severity"), col("rule_name"), col("user_id"))
       .agg(count(lit(1)).as("n"))
+      .coalesce(1)
       .orderBy("severity", "rule_name", "user_id")
 
   /** Hottest entities by alert count — the summary's "by zone (top N)"
@@ -92,6 +103,7 @@ object Alerts {
     alerts
       .groupBy(expr("ts_us div 86400000000").as("epoch_day"))
       .agg(count(lit(1)).as("n"))
+      .coalesce(1)
       .orderBy("epoch_day")
 
   /** Overlay join: alerts back onto the rolling-feature stream

@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
   Partitioning}
 import org.apache.spark.sql.classic.Dataset
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 
 /** Custom whole-operator: top-k rows per key WITHOUT sorting each group.
   *
@@ -25,6 +26,10 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   *
   * Output rows are the per-key top-k by `ord` descending; row order within
   * the output is unspecified (callers order for presentation).
+  *
+  * SQL metrics (in the UI and on the executed plan): `numInputRows`,
+  * `numOutputRows`, and `numEvictions`, the rows that entered a full heap
+  * and pushed out its weakest entry.
   */
 case class TopKPerKeyNode(k: Int, keys: Seq[Expression], ord: Expression,
     tie: Option[Expression], child: LogicalPlan) extends UnaryNode {
@@ -45,12 +50,20 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], ord: Expression,
   // every output row stays in its input partition
   override def outputPartitioning: Partitioning = child.outputPartitioning
 
+  override lazy val metrics: Map[String, SQLMetric] = Map(
+    "numInputRows" -> SQLMetrics.createMetric(sparkContext, "number of input rows"),
+    "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
+    "numEvictions" -> SQLMetrics.createMetric(sparkContext, "number of heap evictions"))
+
   override protected def doExecute(): RDD[InternalRow] = {
     val childOutput = child.output
     val kLocal = k
     val keysLocal = keys
     val ordLocal = ord
     val tieLocal = tie
+    val numInputRows = longMetric("numInputRows")
+    val numOutputRows = longMetric("numOutputRows")
+    val numEvictions = longMetric("numEvictions")
     child.execute().mapPartitionsInternal { iter =>
       val keyProj = UnsafeProjection.create(keysLocal, childOutput)
       val boundOrd = org.apache.spark.sql.catalyst.expressions.BindReferences
@@ -79,6 +92,7 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], ord: Expression,
       val tieExpr = boundTie.orNull
       val hasTie = tieExpr != null
       iter.foreach { row =>
+        numInputRows += 1
         val key = keyProj(row)
         var heap = heaps.get(key)
         if (heap == null) {
@@ -121,6 +135,7 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], ord: Expression,
             if (peek.score < score ||
                 (hasTie && peek.score == score && tieId < peek.tieId)) {
               heap.poll()
+              numEvictions += 1
               heap.add(new Entry(score, tieId, row.asInstanceOf[UnsafeRow].copy()))
             }
           }
@@ -128,6 +143,7 @@ case class TopKPerKeyExec(k: Int, keys: Seq[Expression], ord: Expression,
       }
       val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
       heaps.values().forEach { h => h.forEach { e => out += e.row } }
+      numOutputRows += out.size
       out.iterator
     }
   }

@@ -27,6 +27,20 @@ object TestSpark {
   lazy val multiSplit: SparkSession = org.apache.spark.sql.graft.ScopedConf.session(
     spark, "spark.sql.files.maxPartitionBytes" -> "4096")
 
+  /** A new session on [[spark]]'s SparkContext, built with
+    * `withExtensions(new GraftExtensions)`: the only way to get the
+    * extension's physical rule, which a live session cannot take. It has
+    * its own shared state (catalog, cache). [[spark]] stays the default
+    * and active session. */
+  lazy val extended: SparkSession = {
+    val s = spark
+    // create() finds the running SparkContext and leaves its conf as is
+    val e = SparkSession.builder().withExtensions(new GraftExtensions).create()
+    SparkSession.setDefaultSession(s)
+    SparkSession.setActiveSession(s)
+    e
+  }
+
   /** Drain an AvailableNow query that cannot self-terminate (stateful
     * ProcessingTimeTimeout keeps the drift detector alive waiting for its
     * 1-hour state-GC timeout; processAllAvailable never settles for the

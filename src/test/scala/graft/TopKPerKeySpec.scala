@@ -2,11 +2,12 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.TopKPerKeyApi
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.graft.{TopKPerKeyApi, TopKPerKeyExec}
 
 import graft.operators.Benchmarking
 
-class TopKPerKeySpec extends AnyFunSuite {
+class TopKPerKeySpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import TestSpark.{sf, spark}
   import spark.implicits._
 
@@ -127,5 +128,29 @@ class TopKPerKeySpec extends AnyFunSuite {
       .collect().map(_.getDouble(0)).sorted.reverse
     assert(hot.toSeq === Seq(996.0, 996.0, 996.0, 996.0))
     assert(out.filter(col("seg") === "cold").count() === 4)
+  }
+
+  /** The executed operator's SQL metrics, by name. */
+  private def topKMetrics(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+    collectFirst(df.queryExecution.executedPlan) { case t: TopKPerKeyExec => t }.get
+      .metrics.map { case (k, m) => k -> m.value }
+
+  test("TopKPerKeyExec reports rows in, rows out and heap evictions") {
+    val key = SparkEntry.queries("q_topk_custom")(spark, sf)
+    val out = key.collect()
+    val m = topKMetrics(key)
+    val input = Benchmarking.metricsFor(spark, sf).count()
+    assert(m("numInputRows") === input)
+    // the key projects and orders the operator's rows, keeping them all
+    assert(m("numOutputRows") === out.length.toLong)
+    assert(m("numEvictions") <= input - out.length, m)
+    // one partition in rising score order: each row past the first k
+    // enters a full heap and evicts its weakest entry
+    val rising = (1 to 6).map(i => ("a", i.toLong, i.toDouble))
+      .toDF("seg", "id", "score").coalesce(1)
+    val top2 = TopKPerKeyApi.topKPerKey(rising, Seq("seg"), "score", 2)
+    assert(top2.collect().map(_.getLong(1)).toSet === Set(5L, 6L))
+    assert(topKMetrics(top2) === Map(
+      "numInputRows" -> 6L, "numOutputRows" -> 2L, "numEvictions" -> 4L))
   }
 }

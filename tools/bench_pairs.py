@@ -16,12 +16,22 @@ within the pair) and whether the change's median is within the bound of
 the parent's: no worse than parent * (1 + bound) for lower-is-better,
 no worse than parent * (1 - bound) for higher-is-better. A run that
 fails or prints no summary is reported and left out of its pair.
+
+Below the metrics it prints each operation name's latency the same way:
+per run, the median over the timed, completed, untraced operations of
+that name in the run's record
+(`.bench_build/records/<workload>-seed<n>-trace0.json`), then across
+pairs the parent's median [q1, q3], the change's median and the pairs
+the change won. That shows which request kind (or sweep key) moved.
 """
 import argparse
 import json
 import os
 import subprocess
 import sys
+
+# perfbench's timed operation kinds (sweep key, ingest cycle, API request)
+TIMED_KINDS = ("key", "cycle", "read", "write")
 
 
 def quantile(values, q):
@@ -57,8 +67,26 @@ def summarize(pairs, better, bound):
             "won": won, "pairs": len(pairs), "within_bound": within}
 
 
+def op_medians(record):
+    """{operation name: median seconds} over a run record's timed operations
+    that completed and were not traced (the ones perfbench's end-to-end
+    metrics are computed from)."""
+    by_name = {}
+    for o in record["ops"]:
+        if o["kind"] in TIMED_KINDS and o["ok"] and not o["traced"]:
+            by_name.setdefault(o["name"], []).append(o["secs"])
+    return {name: quantile(secs, 0.5) for name, secs in by_name.items()}
+
+
+def add_op_pairs(acc, parent, change):
+    """Append (parent, change) to acc[name] for each name both runs have."""
+    for name in sorted(set(parent) & set(change)):
+        acc.setdefault(name, []).append((parent[name], change[name]))
+
+
 def run_once(checkout, workload, seed, seconds):
-    """perfbench's end-to-end metrics {name: value} for one run, or None."""
+    """(perfbench's end-to-end metrics {name: value}, op_medians of the
+    run's record) for one run, or None."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds)]
     res = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True)
@@ -69,7 +97,11 @@ def run_once(checkout, workload, seed, seconds):
               + " | ".join(tail), file=sys.stderr)
         return None
     out = json.loads(lines[-1])
-    return {k: v["value"] for k, v in out["metrics"].items()}
+    record = os.path.join(checkout, ".bench_build", "records",
+                          f"{workload}-seed{seed}-trace0.json")
+    with open(record) as fh:
+        ops = op_medians(json.load(fh))
+    return {k: v["value"] for k, v in out["metrics"].items()}, ops
 
 
 def main():
@@ -84,6 +116,7 @@ def main():
     spec = json.load(open(os.path.join(a.change, "BENCHMARK.json")))
     metrics = spec["end_to_end"]
     pairs = {m["name"]: [] for m in metrics}
+    op_pairs = {}
     for i in range(a.pairs):
         seed = a.seed_base + i
         order = [("parent", a.parent), ("change", a.change)]
@@ -94,8 +127,10 @@ def main():
               + json.dumps(got, sort_keys=True), flush=True)
         if got["parent"] is None or got["change"] is None:
             continue
+        (parent, parent_ops), (change, change_ops) = got["parent"], got["change"]
         for m in metrics:
-            pairs[m["name"]].append((got["parent"][m["name"]], got["change"][m["name"]]))
+            pairs[m["name"]].append((parent[m["name"]], change[m["name"]]))
+        add_op_pairs(op_pairs, parent_ops, change_ops)
     print(f"workload {a.workload}: {a.pairs} pairs requested")
     for m in metrics:
         if not pairs[m["name"]]:
@@ -107,6 +142,11 @@ def main():
               f"{s['parent_q3']:.6g}], change {s['change_median']:.6g}, "
               f"won {s['won']}/{s['pairs']}, "
               f"{'within' if s['within_bound'] else 'OUTSIDE'} bound")
+    for name, ps in sorted(op_pairs.items()):
+        s = summarize(ps, "lower", 0.0)
+        print(f"op {name} median s: parent {s['parent_median']:.6g} "
+              f"[{s['parent_q1']:.6g}, {s['parent_q3']:.6g}], "
+              f"change {s['change_median']:.6g}, won {s['won']}/{s['pairs']}")
 
 
 if __name__ == "__main__":

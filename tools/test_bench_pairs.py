@@ -1,4 +1,5 @@
-"""Unit tests of tools/bench_pairs.py's summary arithmetic.
+"""Unit tests of tools/bench_pairs.py's summary arithmetic and its
+per-operation aggregation.
 
     python3 -m unittest discover -s tools -p 'test_*.py'
 """
@@ -8,7 +9,7 @@ import unittest
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from bench_pairs import quantile, summarize  # noqa: E402
+from bench_pairs import add_op_pairs, op_medians, quantile, summarize  # noqa: E402
 
 
 class QuantileTest(unittest.TestCase):
@@ -57,6 +58,43 @@ class SummarizeTest(unittest.TestCase):
     def test_rejects_unknown_direction(self):
         with self.assertRaises(ValueError):
             summarize([(1.0, 1.0)], "smaller", 0.1)
+
+
+def op(name, secs, kind="read", ok=True, traced=False):
+    return {"kind": kind, "name": name, "secs": secs, "ok": ok, "traced": traced}
+
+
+class OpMediansTest(unittest.TestCase):
+    def test_median_per_name_over_timed_completed_untraced_ops(self):
+        record = {"ops": [
+            op("summary", 0.3), op("summary", 0.1), op("summary", 0.2),
+            op("summary", 9.0, traced=True),          # traced: left out
+            op("summary", 8.0, ok=False),             # failed: left out
+            op("summary", 7.0, kind="warmup"),        # not timed: left out
+            op("query", 0.05), op("query", 0.07),
+            op("append", 0.4, kind="write"),
+            op("q_topk", 0.2, kind="key"), op("q_topk", 0.4, kind="key"),
+            op("verify_only", 1.0, kind="verify"),    # not timed: left out
+        ]}
+        got = op_medians(record)
+        self.assertEqual(set(got), {"summary", "query", "append", "q_topk"})
+        self.assertAlmostEqual(got["summary"], 0.2)
+        self.assertAlmostEqual(got["query"], 0.06)
+        self.assertAlmostEqual(got["append"], 0.4)
+        self.assertAlmostEqual(got["q_topk"], 0.3)
+
+    def test_no_timed_ops(self):
+        self.assertEqual(op_medians({"ops": [op("x", 1.0, kind="warmup")]}), {})
+
+
+class AddOpPairsTest(unittest.TestCase):
+    def test_pairs_names_both_runs_have(self):
+        acc = {}
+        add_op_pairs(acc, {"a": 1.0, "b": 2.0}, {"a": 0.9, "c": 3.0})
+        add_op_pairs(acc, {"a": 1.1, "b": 2.1}, {"a": 1.0, "b": 2.2})
+        self.assertEqual(acc, {"a": [(1.0, 0.9), (1.1, 1.0)], "b": [(2.1, 2.2)]})
+        s = summarize(acc["a"], "lower", 0.0)
+        self.assertEqual((s["won"], s["pairs"]), (2, 2))
 
 
 if __name__ == "__main__":
